@@ -26,10 +26,9 @@ object SparkEntry {
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Semantically-equivalent SQL where the op is
-    * SQL-expressible; generated golden VALUES oracles (graft.queries.
-    * Golden) for the deterministic sketch/ANN/stub ops that aren't.
+    * SQL-expressible; for the sketch/ANN ops, SQL that replays the
+    * sketch or the brute-force ranking, or asserts an error bound.
     */
   def oracleSql: Map[String, String] =
-    Golden.sql ++
-      registry.collect { case Q(n, _, Some(sql)) => n -> sql }.toMap
+    registry.collect { case Q(n, _, Some(sql)) => n -> sql }.toMap
 }

@@ -16,17 +16,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_SESSION_CONF="k=v,k2=v2": extra session confs for
-    // alternate-path gate runs (e.g. spark.graft.stateApi=tws puts the
-    // stateful stream_* queries through the Spark 4 transformWithState
-    // cores under the SAME DuckDB oracles as the default path)
-    sys.env.get("SPARK_GRAFT_SESSION_CONF").foreach(
-      _.split(",").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        require(kv.contains("="),
-          s"bad SPARK_GRAFT_SESSION_CONF entry (expected k=v): '$kv'")
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_(name)) }

@@ -87,8 +87,7 @@ object GlobalRank {
     * the plan — so the cap keeps codegen method sizes sane when a
     * deployment runs tens of thousands of shuffle partitions.
     */
-  val MaxBucketsKey = "spark.graft.globalrank.maxBuckets"
-  val DefaultMaxBuckets = 1024
+  val MaxBuckets = 1024
 
   /** Cap on the number of hot lead-key VALUES that get their own
     * second-key sub-buckets per call (each costs one bounded filtered
@@ -219,8 +218,9 @@ object GlobalRank {
     require(groupCols.nonEmpty, "withGroupedRank needs group columns")
     val taken = df.columns.toSet
     require(!taken(rankCol), s"input already has a '$rankCol' column")
-    require(Seq("__gr_d", "__gr_b", "__gr_b2", "__gr_c", "__gr_off")
-      .forall(!taken(_)), "input uses GlobalRank's reserved __gr_* names")
+    require((Seq("__gr_d", "__gr_b", "__gr_b2", "__gr_c", "__gr_off") ++
+      groupCols.map(g => s"__gr_g_$g")).forall(!taken(_)),
+      "input uses GlobalRank's reserved __gr_* names")
     val spark = df.sparkSession
     val p =
       if (numPartitions > 0) numPartitions
@@ -230,8 +230,8 @@ object GlobalRank {
     embedKey(df, sortCols.head) match {
       case Some((keyed, nullsFirst, desc)) if deterministicLineage(df) &&
           hotGroupShare(df, groupCols) * math.max(1,
-            math.min(p, maxBuckets(spark))) > HotGroupFactor =>
-        val b = math.max(1, math.min(p, maxBuckets(spark)))
+            math.min(p, MaxBuckets)) > HotGroupFactor =>
+        val b = math.max(1, math.min(p, MaxBuckets))
         val keyedDf = df.withColumn("__gr_d", keyed)
         val bs: Array[Double] =
           if (b <= 1) Array.empty
@@ -374,18 +374,6 @@ object GlobalRank {
     }
   }
 
-  /** The parsed [[MaxBucketsKey]] (with the conf key named in the
-    * error when the value fails to parse — ADVICE r17).
-    */
-  private def maxBuckets(spark: SparkSession): Int = {
-    val raw = spark.conf.get(MaxBucketsKey, DefaultMaxBuckets.toString)
-    try raw.toInt
-    catch { case e: NumberFormatException =>
-      throw new IllegalArgumentException(
-        s"$MaxBucketsKey must be an integer, got '$raw'", e)
-    }
-  }
-
   /** Does every expression in `df`'s analyzed plan claim determinism?
     * (Catalyst's `Expression.deterministic` already folds children, so
     * a single sweep over node expressions suffices.)
@@ -429,7 +417,7 @@ object GlobalRank {
     val (keyed, nullsFirst, desc) = key
     val spark = df.sparkSession
     import spark.implicits._
-    val b = math.max(1, math.min(p, maxBuckets(spark)))
+    val b = math.max(1, math.min(p, MaxBuckets))
     val withV = value match {
       case Some(v) =>
         df.withColumn("__gr_v", coalesce(v.cast("long"), lit(0L)))

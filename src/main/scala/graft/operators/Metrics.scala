@@ -91,9 +91,9 @@ object Metrics {
     * series with repeated x values gets the median over its
     * distinct-x pairs only — callers whose series carry duplicate
     * timestamps should pre-aggregate per x (e.g. per-x mean) if they
-    * want every observation weighted. Pairs whose y is null are
-    * excluded on both paths' defined inputs (integral non-null y by
-    * contract).
+    * want every observation weighted. Pairs with a null y have a null
+    * slope and are excluded on both paths, so `n_pairs` counts only
+    * non-null slopes.
     *
     * @param series frame with `key`, integral `x`, integral `y`
     * @return (key, n_pairs, slope); series with < 2 distinct x yield
@@ -148,6 +148,7 @@ object Metrics {
       .select(col("key"),
         ((col("y2") - col("y1")).cast("double") /
           (col("x2") - col("x1")).cast("double")).as("sl"))
+      .filter(col("sl").isNotNull)
     val w = Window.partitionBy("key").orderBy("sl")
     pairs.withColumn("rn", row_number().over(w))
       .withColumn("n_pairs", count(lit(1)).over(Window.partitionBy("key")))
@@ -219,6 +220,7 @@ object Metrics {
       .select(col("key"),
         ((col("y2") - col("y1")).cast("double") /
           (col("x2") - col("x1")).cast("double")).as("sl"))
+      .filter(col("sl").isNotNull)
     val w = Window.partitionBy("key").orderBy("sl")
     pairs.withColumn("rn", row_number().over(w))
       .withColumn("n_pairs", count(lit(1)).over(Window.partitionBy("key")))

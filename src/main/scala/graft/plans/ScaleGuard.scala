@@ -56,9 +56,7 @@ final case class GuardViolation(rule: String, detail: String) {
   *     (id, signature) pairs per LSH bucket — bucket-bounded by
   *     construction) should be allowlisted AT THE CALL SITE with a
   *     written justification, which is exactly what surfacing the
-  *     violation forces. The `transformWithState` path declares its
-  *     state through runtime handles the logical plan cannot see;
-  *     spec-level discipline (StreamingSpec) covers it instead.
+  *     violation forces.
   *
   * The audit is injected pre-CBO (injectPreCBORule): it runs exactly
   * once per query, AFTER the fixed-point operator-optimization batches
@@ -147,12 +145,9 @@ object ScaleGuard extends PredicateHelper {
 
   /** Does a state schema hold a COLLECTION of records (array or map of
     * structs, at any nesting depth)? Scalars, binary sketches, fixed
-    * numeric arrays, and maps of scalars all pass. Shared with
-    * [[graft.streaming.StateApi]], whose handle-registration wrappers
-    * apply the same predicate to the `transformWithState` path the
-    * logical plan cannot show.
+    * numeric arrays, and maps of scalars all pass.
     */
-  private[graft] def retainsRecords(dt: DataType): Boolean = dt match {
+  private def retainsRecords(dt: DataType): Boolean = dt match {
     case ArrayType(et, _) => et.isInstanceOf[StructType] || retainsRecords(et)
     case MapType(k, v, _) => v.isInstanceOf[StructType] ||
       retainsRecords(k) || retainsRecords(v)

@@ -971,7 +971,7 @@ object IngestQ {
           Seq("species", "qty"),
           Seq("cod", "10"),
           Seq("tuna", "20")))
-        graft.sources.Spreadsheet.read(s, f.toString, skip = 1)
+        graft.sources.Xlsx.read(s, f.toString, skip = 1)
           .select(col("species"), col("qty").cast("int").as("qty"))
       },
       Some("SELECT * FROM (VALUES ('cod', 10), ('tuna', 20)) AS t(species, qty)")),

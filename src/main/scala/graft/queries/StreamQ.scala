@@ -1041,10 +1041,10 @@ object StreamQ {
     // stream_attrib [EXT, new r8]: the ONLINE twin of funnel_attrib —
     // per-user last-touch state (3 scalars: when, which event, what
     // channel) emits one attributed row per purchase as it arrives,
-    // through the real transformWithState/flatMapGroupsWithState
-    // operator (StateApi dual path). Batch execution sorts each user's
-    // rows once and replays the identical as-of semantics, so the
-    // per-purchase output hash-matches the window oracle; StreamingSpec
+    // through the real flatMapGroupsWithState operator. Batch
+    // execution sorts each user's rows once and replays the identical
+    // as-of semantics, so the per-purchase output hash-matches the
+    // window oracle; StreamingSpec
     // drives the cross-trigger incremental path. Null purchase values
     // attribute 0 cents — the count must not drop rows the batch twin
     // counts.

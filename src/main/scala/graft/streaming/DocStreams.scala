@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.Dedup
 
@@ -55,19 +55,17 @@ object DocStreams {
     if (n == 0) 0.0 else eq.toDouble / n
   }
 
-  /** Per-bucket incremental scan — the ONE step core both state APIs
-    * run: compares each arrival against the capped `seen` list (newest
-    * first), emits normalized matches lazily, and hands the caller a
-    * thunk-free way to persist the final list — the caller chains its
-    * state write behind the last emission, because BOTH state APIs
-    * commit only after the returned iterator drains.
+  /** Per-bucket incremental scan: compares each arrival against the
+    * capped `seen` list (newest first), emits normalized matches lazily,
+    * and writes the final list to `state` after the last emission —
+    * flatMapGroupsWithState commits state only after the returned
+    * iterator drains.
     */
   private def bucketScan(threshold: Double, maxBucketSize: Int,
-                         initial: List[(Long, Array[Long])],
-                         rows: Iterator[(Int, Long, Long, Array[Long])],
-                         persist: List[(Long, Array[Long])] => Unit)
+                         state: GroupState[List[(Long, Array[Long])]],
+                         rows: Iterator[(Int, Long, Long, Array[Long])])
       : Iterator[Match] = {
-    var seen = initial // newest first
+    var seen = state.getOption.getOrElse(Nil) // newest first
     val matches = rows.flatMap { case (_, _, id, sig) =>
       // ≤ maxBucketSize comparisons and emissions per arrival;
       // normalized labels == id-ordered-feed labels (see scaladoc)
@@ -83,28 +81,7 @@ object DocStreams {
       seen = ((id, sig) :: seen).take(maxBucketSize)
       hits
     }
-    matches ++ { persist(seen); Iterator.empty[Match] }
-  }
-
-  /** TWS twin: the bucket list is COMPOSITE state (ListState of
-    * (id, signature) entries) rather than one serialized blob — the
-    * Spark 4.x state API the fMGWS path cannot express.
-    */
-  private class NearDupProc(threshold: Double, maxBucketSize: Int)
-      extends StatefulProcessor[(Int, Long), (Int, Long, Long, Array[Long]), Match] {
-    @transient private var st: ListState[(Long, Array[Long])] = _
-    override def init(om: OutputMode, tm: TimeMode): Unit =
-      st = StateApi.listState[(Long, Array[Long])](getHandle, "bucket",
-        Encoders.product[(Long, Array[Long])],
-        boundedBy = "LSH band bucket: bucketScan evicts past " +
-          "maxBucketSize entries, so the list holds at most " +
-          "maxBucketSize (id, signature) pairs per bucket key",
-        TTLConfig.NONE)
-    override def handleInputRows(key: (Int, Long),
-                                 rows: Iterator[(Int, Long, Long, Array[Long])],
-                                 tv: TimerValues): Iterator[Match] =
-      bucketScan(threshold, maxBucketSize, st.get().toList, rows,
-        seen => st.put(seen.toArray))
+    matches ++ { state.update(seen); Iterator.empty[Match] }
   }
 
   def nearDupMatches(spark: SparkSession, docs: DataFrame,
@@ -126,15 +103,10 @@ object DocStreams {
       .as[(Int, Long, Long, Array[Long])]
 
     val keyed = banded.groupByKey { case (band, bucket, _, _) => (band, bucket) }
-    if (StateApi.useTws(spark))
-      keyed.transformWithState(new NearDupProc(threshold, maxBucketSize),
-        TimeMode.None(), OutputMode.Append(), Encoders.product[Match])
-    else keyed.flatMapGroupsWithState[List[(Long, Array[Long])], Match](
+    keyed.flatMapGroupsWithState[List[(Long, Array[Long])], Match](
       OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
       case (_, rows, state: GroupState[List[(Long, Array[Long])]]) =>
-        bucketScan(threshold, maxBucketSize,
-          state.getOption.getOrElse(Nil), rows,
-          seen => state.update(seen))
+        bucketScan(threshold, maxBucketSize, state, rows)
     }
   }
 

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming surface (SURVEY.md §2.9 [EXT]) — the true
   * streaming path. Every transform here is written against an unbounded
@@ -174,9 +174,8 @@ object EventStreams {
     * retention, no watermark needed for correctness (only for state
     * eviction policy if users are unbounded).
     */
-  /** Per-group funnel advance — the ONE step core both state APIs run
-    * (shared code is what makes the two paths equivalent by
-    * construction, not by parallel maintenance).
+  /** Per-group funnel advance: one trigger's rows folded into the
+    * carried state.
     */
   private def funnelStep(steps: Seq[String], prev: FunnelState,
                          rows: Iterator[(Long, Long, Long, String)]): FunnelState = {
@@ -191,22 +190,6 @@ object EventStreams {
     FunnelState(d, last)
   }
 
-  private class FunnelProc(steps: Seq[String])
-      extends StatefulProcessor[Long, (Long, Long, Long, String), FunnelProgress] {
-    @transient private var st: ValueState[FunnelState] = _
-    override def init(om: OutputMode, tm: TimeMode): Unit =
-      st = StateApi.valueState[FunnelState](getHandle, "funnel",
-        Encoders.product[FunnelState], TTLConfig.NONE)
-    override def handleInputRows(uid: Long,
-                                 rows: Iterator[(Long, Long, Long, String)],
-                                 tv: TimerValues): Iterator[FunnelProgress] = {
-      val prev = Option(st.get()).getOrElse(FunnelState(0, Long.MinValue))
-      val next = funnelStep(steps, prev, rows)
-      st.update(next)
-      Iterator(FunnelProgress(uid, next.depth))
-    }
-  }
-
   def funnelDepths(spark: SparkSession, events: DataFrame,
                    steps: Seq[String]): Dataset[FunnelProgress] = {
     import spark.implicits._
@@ -219,10 +202,7 @@ object EventStreams {
         col("event_id").cast("long"), col("event_type"))
       .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
-    if (StateApi.useTws(spark))
-      keyed.transformWithState(new FunnelProc(steps), TimeMode.None(),
-        OutputMode.Update(), Encoders.product[FunnelProgress])
-    else keyed.flatMapGroupsWithState[FunnelState, FunnelProgress](
+    keyed.flatMapGroupsWithState[FunnelState, FunnelProgress](
       OutputMode.Update, GroupStateTimeout.NoTimeout) {
       (uid: Long, rows: Iterator[(Long, Long, Long, String)],
        state: GroupState[FunnelState]) =>
@@ -316,9 +296,9 @@ object EventStreams {
           "MomentState to Decimal(38,0) for this corpus")
     }
 
-  /** Per-group prefix-moment scan — shared step core for both state
-    * APIs. Values quantize to integer cents on entry (the events.value
-    * sub-cent convention); the emitted `value` stays the raw double.
+  /** Per-group prefix-moment scan. Values quantize to integer cents on
+    * entry (the events.value sub-cent convention); the emitted `value`
+    * stays the raw double.
     */
   private def welfordStep(threshold: Double, minObs: Long, uid: Long,
                           prev: MomentState,
@@ -338,22 +318,6 @@ object EventStreams {
     (st, hits.result())
   }
 
-  private class AnomalyProc(threshold: Double, minObs: Long)
-      extends StatefulProcessor[Long, (Long, Long, Long, Double), AnomalyHit] {
-    @transient private var st: ValueState[MomentState] = _
-    override def init(om: OutputMode, tm: TimeMode): Unit =
-      st = StateApi.valueState[MomentState](getHandle, "welford",
-        Encoders.product[MomentState], TTLConfig.NONE)
-    override def handleInputRows(uid: Long,
-                                 rows: Iterator[(Long, Long, Long, Double)],
-                                 tv: TimerValues): Iterator[AnomalyHit] = {
-      val prev = Option(st.get()).getOrElse(MomentState(0L, 0L, 0L))
-      val (next, hits) = welfordStep(threshold, minObs, uid, prev, rows)
-      st.update(next)
-      hits.iterator
-    }
-  }
-
   def anomalies(spark: SparkSession, events: DataFrame,
                 threshold: Double = 3.0, minObs: Long = 12): Dataset[AnomalyHit] = {
     import spark.implicits._
@@ -367,10 +331,7 @@ object EventStreams {
         col("event_id").cast("long"), col("value").cast("double"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
-    if (StateApi.useTws(spark))
-      keyed.transformWithState(new AnomalyProc(threshold, minObs),
-        TimeMode.None(), OutputMode.Append(), Encoders.product[AnomalyHit])
-    else keyed.flatMapGroupsWithState[MomentState, AnomalyHit](
+    keyed.flatMapGroupsWithState[MomentState, AnomalyHit](
       OutputMode.Append, GroupStateTimeout.NoTimeout) {
       (uid: Long, rows: Iterator[(Long, Long, Long, Double)],
        state: GroupState[MomentState]) =>
@@ -420,10 +381,7 @@ object EventStreams {
         col("event_id").cast("long"), col("value").cast("double"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
-    if (StateApi.useTws(spark))
-      keyed.transformWithState(new CusumProc(k, h, minObs), TimeMode.None(),
-        OutputMode.Append(), Encoders.product[CusumUpdate])
-    else keyed.flatMapGroupsWithState[CusumState, CusumUpdate](
+    keyed.flatMapGroupsWithState[CusumState, CusumUpdate](
       OutputMode.Append, GroupStateTimeout.NoTimeout) {
       (uid: Long, rows: Iterator[(Long, Long, Long, Double)],
        state: GroupState[CusumState]) =>
@@ -435,7 +393,7 @@ object EventStreams {
     }
   }
 
-  /** Per-group CUSUM fold — shared step core for both state APIs. */
+  /** Per-group CUSUM fold. */
   private def cusumStep(k: Double, h: Double, minObs: Long, uid: Long,
                         prev: CusumState,
                         rows: Iterator[(Long, Long, Long, Double)])
@@ -458,48 +416,17 @@ object EventStreams {
       CusumUpdate(uid, mom.n, alarms, math.floor(maxS * 1e4 + 0.5) / 1e4))
   }
 
-  private class CusumProc(k: Double, h: Double, minObs: Long)
-      extends StatefulProcessor[Long, (Long, Long, Long, Double), CusumUpdate] {
-    @transient private var st: ValueState[CusumState] = _
-    override def init(om: OutputMode, tm: TimeMode): Unit =
-      st = StateApi.valueState[CusumState](getHandle, "cusum",
-        Encoders.product[CusumState], TTLConfig.NONE)
-    override def handleInputRows(uid: Long,
-                                 rows: Iterator[(Long, Long, Long, Double)],
-                                 tv: TimerValues): Iterator[CusumUpdate] = {
-      val prev = Option(st.get())
-        .getOrElse(CusumState(0L, 0L, 0L, 0.0, 0L, 0.0))
-      val (next, out) = cusumStep(k, h, minObs, uid, prev, rows)
-      st.update(next)
-      Iterator.single(out)
-    }
-  }
-
   /** Custom per-key state via flatMapGroupsWithState: maintains a running
     * (count, sum) per user and emits the updated totals each trigger. In
     * batch mode the state store is empty and this degenerates to a plain
     * per-user aggregate — which is exactly what the DuckDB oracle checks.
     */
-  /** Per-group (count, sum) fold — shared step core for both state APIs. */
+  /** Per-group (count, sum) fold. */
   private def userStep(prev: UserState, rows: Iterator[(Long, Double)]): UserState = {
     var n = prev.n
     var sum = prev.sum
     rows.foreach { case (_, v) => n += 1; sum += v }
     UserState(n, sum)
-  }
-
-  private class RunningUserProc
-      extends StatefulProcessor[Long, (Long, Double), UserUpdate] {
-    @transient private var st: ValueState[UserState] = _
-    override def init(om: OutputMode, tm: TimeMode): Unit =
-      st = StateApi.valueState[UserState](getHandle, "totals",
-        Encoders.product[UserState], TTLConfig.NONE)
-    override def handleInputRows(uid: Long, rows: Iterator[(Long, Double)],
-                                 tv: TimerValues): Iterator[UserUpdate] = {
-      val next = userStep(Option(st.get()).getOrElse(UserState(0L, 0.0)), rows)
-      st.update(next)
-      Iterator(UserUpdate(uid, next.n, math.rint(next.sum * 100) / 100))
-    }
   }
 
   def runningUserState(spark: SparkSession, events: DataFrame): Dataset[UserUpdate] = {
@@ -511,10 +438,7 @@ object EventStreams {
       .select(col("user_id").cast("long"), col("value").cast("double"))
       .as[(Long, Double)]
       .groupByKey(_._1)
-    if (StateApi.useTws(spark))
-      keyed.transformWithState(new RunningUserProc, TimeMode.None(),
-        OutputMode.Update(), Encoders.product[UserUpdate])
-    else keyed.flatMapGroupsWithState[UserState, UserUpdate](
+    keyed.flatMapGroupsWithState[UserState, UserUpdate](
       OutputMode.Update, GroupStateTimeout.NoTimeout) {
       (uid: Long, rows: Iterator[(Long, Double)], state: GroupState[UserState]) =>
         val next = userStep(state.getOption.getOrElse(UserState(0L, 0.0)), rows)
@@ -578,22 +502,6 @@ object EventStreams {
     (st, out.result())
   }
 
-  private class AttribProc
-      extends StatefulProcessor[Long, (Long, Long, Long, String, Long), AttributedPurchase] {
-    @transient private var st: ValueState[TouchState] = _
-    override def init(om: OutputMode, tm: TimeMode): Unit =
-      st = StateApi.valueState[TouchState](getHandle, "touch",
-        Encoders.product[TouchState], TTLConfig.NONE)
-    override def handleInputRows(uid: Long,
-        rows: Iterator[(Long, Long, Long, String, Long)],
-        tv: TimerValues): Iterator[AttributedPurchase] = {
-      val (next, hits) = attribStep(
-        Option(st.get()).getOrElse(TouchState(Long.MinValue, 0L, null)), rows)
-      st.update(next)
-      hits.iterator
-    }
-  }
-
   def lastTouchAttribution(spark: SparkSession,
                            events: DataFrame): Dataset[AttributedPurchase] = {
     import spark.implicits._
@@ -608,10 +516,7 @@ object EventStreams {
         coalesce(graft.functions.Cols.cents(col("value")), lit(0L)))
       .as[(Long, Long, Long, String, Long)]
       .groupByKey(_._1)
-    if (StateApi.useTws(spark))
-      keyed.transformWithState(new AttribProc, TimeMode.None(),
-        OutputMode.Append(), Encoders.product[AttributedPurchase])
-    else keyed.flatMapGroupsWithState[TouchState, AttributedPurchase](
+    keyed.flatMapGroupsWithState[TouchState, AttributedPurchase](
       OutputMode.Append, GroupStateTimeout.NoTimeout) {
       (uid: Long, rows: Iterator[(Long, Long, Long, String, Long)],
        state: GroupState[TouchState]) =>

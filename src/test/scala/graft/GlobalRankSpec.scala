@@ -159,6 +159,22 @@ class GlobalRankSpec extends SparkFunSuite {
     sameRows(got, want)
   }
 
+  test("withGroupedRank rejects a caller column named like a generated __gr_g_ key") {
+    // a hot group takes the bucketed path, whose offsets join renames
+    // each group column g to __gr_g_g; a caller column of that name
+    // must be refused up front, not surface as an ambiguous join
+    val df = spark.range(3000).select(col("id"),
+      when(pmod(col("id"), lit(10)) < 8, lit("hot"))
+        .otherwise(concat(lit("s"), pmod(col("id"), lit(4))))
+        .as("source"),
+      pmod(xxhash64(col("id"), lit(5)), lit(100L)).as("hk"),
+      lit(1).as("__gr_g_source"))
+    intercept[IllegalArgumentException] {
+      GlobalRank.withGroupedRank(df, Seq("source"),
+        Seq(col("hk"), col("id")), "r", numPartitions = 8).count()
+    }
+  }
+
   test("withGroupedRank with a string lead key falls back to the window") {
     val df = spark.range(400).select(col("id"),
       pmod(col("id"), lit(3)).cast("string").as("g"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** One-command scale gate (`sbt "runMain graft.ScaleGate"`): re-runs the
+/** One-command scale gate (`sbt "Test/runMain graft.ScaleGate"`): re-runs the
   * probes whose scaling behavior the 100 TB posture rests on — dedup
   * candidate generation, GlobalRank two-phase ranking, the RobustStats
   * iterative-histogram selections (median + weighted median), the

@@ -245,28 +245,4 @@ class ScaleGuardRuleSpec extends SparkFunSuite {
       smallCart.queryExecution.optimizedPlan, boundedMax = 10)
       .map(_.rule) === Seq("unbounded-cartesian"))
   }
-
-  test("tws handle registration enforces the bounded-state contract") {
-    import org.apache.spark.sql.Encoders
-    import graft.streaming.StateApi
-    // the plan-level rule can't see transformWithState's state (it is
-    // declared through runtime handles) — StateApi's wrappers apply the
-    // SAME retainsRecords predicate at registration, exposed directly
-    // as requireScalarShaped so both verdicts are assertable without a
-    // live handle.
-    val e1 = intercept[IllegalArgumentException] {
-      StateApi.requireScalarShaped("bad",
-        Encoders.product[Tuple1[Seq[(Long, String)]]])
-    }
-    assert(e1.getMessage.contains("collection of records"))
-    val e2 = intercept[IllegalArgumentException] {
-      StateApi.listState[(Long, Array[Long])](null, "bad2",
-        Encoders.product[(Long, Array[Long])], boundedBy = "  ")
-    }
-    assert(e2.getMessage.contains("written justification"))
-    // scalar-shaped value state passes the schema check — assert the
-    // accept path on the predicate itself (no exception), not via a
-    // downstream NPE from a null handle
-    StateApi.requireScalarShaped("ok", Encoders.product[(Long, Double)])
-  }
 }

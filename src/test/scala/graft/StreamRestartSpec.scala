@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -23,12 +23,6 @@ import org.apache.spark.sql.functions._
   * an LSH bucket holding the pre-restart signature...) — recovery
   * equality is non-vacuous by construction, and each case asserts
   * non-emptiness besides.
-  *
-  * The same harness runs the five fmgws-migrated operators a second
-  * time under `spark.graft.stateApi=tws` + the RocksDB state store —
-  * the Spark 4 path persists through an actual on-disk provider, so
-  * recovery there exercises RocksDB snapshot/replay, not just the
-  * in-memory map.
   */
 class StreamRestartSpec extends SparkFunSuite {
   import spark.implicits._
@@ -66,10 +60,9 @@ class StreamRestartSpec extends SparkFunSuite {
     * snapshots — each trigger re-emits the full result either way).
     */
   private def restartedVsStraight[T: Encoder](
-      session: SparkSession,
       transform: DataFrame => DataFrame, mode: String,
       batchA: Seq[T], batchB: Seq[T]): (Seq[String], Seq[String]) = {
-    implicit val sq = session.sqlContext
+    implicit val sq = spark.sqlContext
     def ckpt() = Files.createTempDirectory("graft_ckpt").toString
 
     val in1 = MemoryStream[T]
@@ -100,37 +93,35 @@ class StreamRestartSpec extends SparkFunSuite {
     (restarted, straight)
   }
 
-  private def assertRecovers[T: Encoder](session: SparkSession,
+  private def assertRecovers[T: Encoder](
       name: String, transform: DataFrame => DataFrame, mode: String,
       batchA: Seq[T], batchB: Seq[T]): Unit = {
     val (restarted, straight) =
-      restartedVsStraight(session, transform, mode, batchA, batchB)
+      restartedVsStraight(transform, mode, batchA, batchB)
     assert(straight.nonEmpty, s"$name: straight run emitted nothing — " +
       "recovery equality would be vacuous")
     assert(restarted === straight,
       s"$name: restart from checkpoint diverged from uninterrupted run")
   }
 
-  /** The five fmgws-migrated operators, parameterized by session so the
-    * tws/RocksDB pass reuses the identical cases.
-    */
-  private def eventCases(s: SparkSession)
+  /** The five flatMapGroupsWithState operators over events. */
+  private def eventCases
       : Seq[(String, DataFrame => DataFrame, String, Seq[Ev], Seq[Ev])] = Seq(
     ("runningUserState",
-      (df: DataFrame) => EventStreams.runningUserState(s, df).toDF(),
+      (df: DataFrame) => EventStreams.runningUserState(spark, df).toDF(),
       "update",
       Seq(Ev(ts(0), 1, 7, "click", 1.5)),
       // the restarted total must include batch A's 1.5
       Seq(Ev(ts(1), 2, 7, "click", 2.5))),
     ("funnelDepths",
-      (df: DataFrame) => EventStreams.funnelDepths(s, df,
+      (df: DataFrame) => EventStreams.funnelDepths(spark, df,
         Seq("view", "click", "purchase")).toDF(),
       "update",
       Seq(Ev(ts(0), 1, 7, "view", 1.0)),
       // click->purchase only advance depth if the view survived
       Seq(Ev(ts(1), 2, 7, "click", 1.0), Ev(ts(2), 3, 7, "purchase", 9.0))),
     ("anomalies",
-      (df: DataFrame) => EventStreams.anomalies(s, df, minObs = 12,
+      (df: DataFrame) => EventStreams.anomalies(spark, df, minObs = 12,
         threshold = 3.0).toDF(),
       "append",
       // baseline (mean 10, tight spread) built BEFORE the restart
@@ -139,14 +130,14 @@ class StreamRestartSpec extends SparkFunSuite {
       // the spike flags only against the recovered Welford state
       Seq(Ev(ts(20), 200, 7, "metric", 100.0))),
     ("cusumMonitor",
-      (df: DataFrame) => EventStreams.cusumMonitor(s, df, minObs = 12).toDF(),
+      (df: DataFrame) => EventStreams.cusumMonitor(spark, df, minObs = 12).toDF(),
       "append",
       (0 until 12).map(i =>
         Ev(ts(i), 100 + i, 7, "metric", 10.0 + 0.1 * (i % 3))),
       // sustained drift: alarms accumulate across the restart
       (0 until 8).map(i => Ev(ts(20 + i), 200 + i, 7, "metric", 30.0))),
     ("lastTouchAttribution",
-      (df: DataFrame) => EventStreams.lastTouchAttribution(s, df).toDF(),
+      (df: DataFrame) => EventStreams.lastTouchAttribution(spark, df).toDF(),
       "append",
       Seq(Ev(ts(0), 1, 7, "click", 1.0), Ev(ts(1), 2, 8, "purchase", 2.5)),
       // credit the pre-restart click; user 8 stays direct
@@ -154,8 +145,8 @@ class StreamRestartSpec extends SparkFunSuite {
         Ev(ts(6), 4, 8, "purchase", 1.0))))
 
   test("fmgws operators recover state from a checkpoint restart") {
-    eventCases(spark).foreach { case (name, tf, mode, a, b) =>
-      assertRecovers(spark, name, tf, mode, a, b)
+    eventCases.foreach { case (name, tf, mode, a, b) =>
+      assertRecovers(name, tf, mode, a, b)
     }
   }
 
@@ -163,14 +154,14 @@ class StreamRestartSpec extends SparkFunSuite {
     // built-in agg state rather than fmgws, but the recovery contract
     // is the same: the post-restart trigger must MERGE into window
     // state written before the stop
-    assertRecovers[Ev](spark, "windowTopTerms",
+    assertRecovers[Ev]("windowTopTerms",
       df => EventStreams.windowTopTerms(df, "event_type",
         watermark = "5 minutes", k = 2, capacity = 16),
       "complete",
       Seq(Ev(ts(0), 1, 1, "click", 1.0), Ev(ts(5), 2, 1, "click", 1.0),
         Ev(ts(10), 3, 2, "view", 1.0)),
       Seq(Ev(ts(15), 4, 2, "view", 1.0), Ev(ts(20), 5, 2, "view", 1.0)))
-    assertRecovers[Ev](spark, "windowDistinct",
+    assertRecovers[Ev]("windowDistinct",
       df => EventStreams.windowDistinct(df, watermark = "5 minutes"),
       "complete",
       Seq(Ev(ts(0), 1, 7, "view", 1.0), Ev(ts(5), 2, 8, "view", 1.0)),
@@ -183,29 +174,11 @@ class StreamRestartSpec extends SparkFunSuite {
       "away while the sun sets slowly behind the tall green hills tonight"
     val other = "completely different text about spark query engines and " +
       "distributed columnar execution at terabyte scale with shuffles"
-    assertRecovers[(Long, String)](spark, "nearDupMatches",
+    assertRecovers[(Long, String)]("nearDupMatches",
       df => DocStreams.nearDupMatches(spark, df.toDF("doc_id", "text")).toDF(),
       "append",
       Seq((1L, base), (2L, other)),
       // doc 3 only matches if doc 1's signature survived the restart
-      Seq((3L, base + " extra")))
-  }
-
-  test("tws + RocksDB: the same operators recover through the on-disk store") {
-    val tws = spark.newSession()
-    tws.conf.set("spark.graft.stateApi", "tws")
-    tws.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    eventCases(tws).foreach { case (name, tf, mode, a, b) =>
-      assertRecovers(tws, s"tws:$name", tf, mode, a, b)
-    }
-    val base = "the quick brown fox jumps over the lazy dog and runs far " +
-      "away while the sun sets slowly behind the tall green hills tonight"
-    assertRecovers[(Long, String)](tws, "tws:nearDupMatches",
-      df => DocStreams.nearDupMatches(tws, df.toDF("doc_id", "text")).toDF(),
-      "append",
-      Seq((1L, base), (2L, "unrelated corpus text about engines and " +
-        "columnar shuffles nothing shared with the first document here")),
       Seq((3L, base + " extra")))
   }
 }

@@ -404,90 +404,6 @@ class StreamingSpec extends SparkFunSuite {
     } finally q.stop()
   }
 
-  test("state APIs agree: all five stateful operators, batch mode") {
-    // The same step cores run under flatMapGroupsWithState (default)
-    // and transformWithState (spark.graft.stateApi=tws, the Spark 4.x
-    // StatefulProcessor path) — outputs must be identical row sets on
-    // the real gate inputs. Session conf is isolated via newSession so
-    // the shared suite session stays unmodified.
-    val fm = spark.newSession()
-    val tw = spark.newSession()
-    tw.conf.set("spark.graft.stateApi", "tws")
-    def both(name: String)(run: org.apache.spark.sql.SparkSession
-        => org.apache.spark.sql.DataFrame): Unit = {
-      val a = run(fm).collect().map(_.toString).sorted
-      val b = run(tw).collect().map(_.toString).sorted
-      assert(a.nonEmpty, s"$name produced no rows — equivalence is vacuous")
-      assert(a.sameElements(b), s"$name diverged between fmgws and tws")
-    }
-    both("runningUserState") { s =>
-      EventStreams.runningUserState(s, graft.queries.t(s, sfDir, "events")).toDF()
-    }
-    both("funnelDepths") { s =>
-      EventStreams.funnelDepths(s, graft.queries.t(s, sfDir, "events"),
-        Seq("view", "click", "purchase")).toDF()
-    }
-    both("anomalies") { s =>
-      EventStreams.anomalies(s, graft.queries.t(s, sfDir, "events"),
-        threshold = 2.0).toDF()
-    }
-    both("cusumMonitor") { s =>
-      EventStreams.cusumMonitor(s, graft.queries.t(s, sfDir, "events")).toDF()
-    }
-    both("nearDupMatches") { s =>
-      val docs = s.read.parquet(s"$sfDir/documents.parquet")
-        .select($"doc_id", $"text")
-      val planted = docs.unionByName(
-        docs.filter($"doc_id" % 50 === 0).select(
-          ($"doc_id" + 1000000L).as("doc_id"),
-          concat($"text", lit(" zz")).as("text")))
-      graft.streaming.DocStreams.firstNearDup(s, planted)
-    }
-  }
-
-  test("transformWithState carries state across triggers (RocksDB provider)") {
-    // The true streaming path of the TWS migration: per-user totals and
-    // the ListState near-dup bucket must survive trigger boundaries
-    // under the RocksDB state store the API requires.
-    val tws = spark.newSession()
-    tws.conf.set("spark.graft.stateApi", "tws")
-    tws.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val sq = tws.sqlContext
-    import sq.implicits._
-    val in = MemoryStream[Ev]
-    val name = nextTable()
-    val q = EventStreams.runningUserState(tws, in.toDF())
-      .writeStream.format("memory").queryName(name)
-      .outputMode("update").start()
-    try {
-      in.addData(Ev(ts(0), 1, 7, "click", 1.5))
-      q.processAllAvailable()
-      in.addData(Ev(ts(1), 2, 7, "click", 2.5))
-      q.processAllAvailable()
-      val updates = tws.table(name).as[(Long, Long, Double)].collect()
-      assert(updates.toSet === Set((7L, 1L, 1.5), (7L, 2L, 4.0)))
-    } finally q.stop()
-
-    val in2 = MemoryStream[(Long, String)]
-    val name2 = nextTable()
-    val q2 = graft.streaming.DocStreams.nearDupMatches(tws,
-        in2.toDF().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName(name2)
-      .outputMode("append").start()
-    try {
-      in2.addData((1L, "alpha beta gamma delta epsilon zeta eta theta"))
-      q2.processAllAvailable()
-      // the near-dup arrives a TRIGGER later — a match proves the
-      // bucket ListState persisted across the boundary
-      in2.addData((2L, "alpha beta gamma delta epsilon zeta eta theta iota"))
-      q2.processAllAvailable()
-      val pairs = tws.table(name2).select($"doc_id", $"dup_of")
-        .as[(Long, Long)].collect().toSet
-      assert(pairs === Set((2L, 1L)))
-    } finally q2.stop()
-  }
-
   test("windowed distinct-user sketch merges across triggers (no double count)") {
     implicit val sq = spark.sqlContext
     val in = MemoryStream[Ev]

@@ -153,6 +153,27 @@ class TimeSeriesSpec extends SparkFunSuite {
     assert(got.map(_._1) === Seq(0L, 1L, 2L, 3L, 5L)) // k=4 absent
   }
 
+  test("theilSen: null-y slopes are excluded on both the histogram and windowed forms") {
+    import spark.implicits._
+    // a null y gives a null slope; both forms must drop it, so n_pairs
+    // and the median do not flip at the groupedKeyLimit gate
+    val y: Long => java.lang.Long = v => java.lang.Long.valueOf(v)
+    val series = Seq[(Long, Long, java.lang.Long)](
+      (0L, 0L, y(0)), (0L, 1L, null), (0L, 2L, y(4)), (0L, 3L, y(9)),
+      (0L, 4L, null), (0L, 5L, y(10)),
+      // one non-null y: every pair's slope is null, so no row
+      (1L, 0L, y(3)), (1L, 1L, null), (1L, 2L, null)
+    ).toDF("key", "x", "y")
+    val got = graft.operators.Metrics.theilSen(series)
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    val want = graft.operators.Metrics.theilSenWindowed(series)
+      .as[(Long, Long, Double)].collect().sortBy(_._1).toSeq
+    assert(want === got)
+    // key 0 keeps the 4 non-null points: 6 pairs with slopes
+    // 0.5, 2, 2, 2, 3, 5 -> median (2 + 2) / 2
+    assert(got === Seq((0L, 6L, 2.0)))
+  }
+
   test("theilSenSampled: long-series slope converges to the exact slope") {
     import spark.implicits._
     // 3000 points/key = ~4.5M exact pairs; slope 2 plus a bounded
