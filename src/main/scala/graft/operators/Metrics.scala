@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 /** Exact distributed evaluation metrics.
   *
@@ -63,20 +67,20 @@ object Metrics {
     * by series LENGTH², not row count; for series beyond ~10⁴ points
     * use [[theilSenSampled]] (same shape, deterministic pair cap).
     *
-    * Median = the aggregate-only iterative-histogram selection
-    * ([[RobustStats.groupedMedianExact]], vectorized across keys):
-    * pair ENUMERATION stays O(len²) codegen'd compute per pass
-    * (2-4 passes), but no pair row ever shuffles or sorts — each pass
-    * feeds a map-side partial aggregate and only keys × 2048
-    * constant-size partials cross the wire, where the previous form
-    * exchanged and sorted the full O(len²) pair stream under a
-    * key-partitioned window. Selection is by rank over the slope
-    * VALUES (two-middle-rank average), so the result is bit-identical
-    * to the windowed form regardless of rank-tie ordering; each slope
-    * is one integer-diff IEEE division and the two-middle mean is the
-    * same (a + b) / 2 either way. Key cardinality is gated at
-    * [[groupedKeyLimit]] (count-then-choose — one countDistinct over
-    * the series); above it the windowed form runs unchanged.
+    * One pair generator ([[slopePairs]]) feeds one selector
+    * ([[slopeMedian]]). At or under [[groupedKeyLimit]] keys
+    * (count-then-choose — one countDistinct over the series) the
+    * median is [[RobustStats.groupedMedianExact]], the aggregate-only
+    * histogram selection vectorized across keys: pair ENUMERATION
+    * stays O(len²) codegen'd compute per pass (2-4 passes), but no
+    * pair row ever shuffles or sorts — each pass feeds a map-side
+    * partial aggregate and only keys × 2048 constant-size partials
+    * cross the wire. Above the limit the key-partitioned window form
+    * runs ([[theilSenWindowed]]). Both select by rank over the slope
+    * VALUES (two-middle-rank average), so they are bit-identical
+    * regardless of rank-tie ordering; each slope is one integer-diff
+    * IEEE division and the two-middle mean is the same (a + b) / 2
+    * either way.
     *
     * Lineage caveat (the GlobalRank convention): the selection
     * re-enumerates the pair stream per pass, so `series` should be
@@ -99,65 +103,17 @@ object Metrics {
     * @return (key, n_pairs, slope); series with < 2 distinct x yield
     *         no row
     */
-  def theilSen(series: DataFrame): DataFrame = {
-    val nKeys = series.agg(
-      org.apache.spark.sql.functions.countDistinct(col("key")))
-      .head().getLong(0)
-    if (nKeys > groupedKeyLimit) theilSenWindowed(series)
-    else {
-      val spark = series.sparkSession
-      val keyField = series.schema.apply(
-        series.schema.fieldIndex("key"))
-      val pairs = series.select(col("key"), col("x").as("x1"),
-          col("y").as("y1"))
-        .join(series.select(col("key"), col("x").as("x2"),
-          col("y").as("y2")), Seq("key"))
-        .filter(col("x2") > col("x1"))
-        .select(col("key").as("__rs_k"),
-          ((col("y2") - col("y1")).cast("double") /
-            (col("x2") - col("x1")).cast("double")).as("__rs_x"))
-        .filter(col("__rs_x").isNotNull)
-      val med = RobustStats.groupedMedianExact(pairs)
-      import scala.jdk.CollectionConverters._
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        med.map { case (ky, n, m) =>
-          org.apache.spark.sql.Row(ky, n, m)
-        }.asJava
-      spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          keyField.copy(name = "key"),
-          org.apache.spark.sql.types.StructField("n_pairs",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("slope",
-            org.apache.spark.sql.types.DoubleType, nullable = false))))
-    }
-  }
+  def theilSen(series: DataFrame): DataFrame =
+    slopeMedian(series, slopePairs(series, lit(true)))
 
-  /** The key-partitioned-window form of [[theilSen]] — the fallback
+  /** The key-partitioned-window form of [[theilSen]] — the selector
     * past [[groupedKeyLimit]] keys, where the O(len²) pair exchange
     * spreads across many keys and the driver must not hold
-    * keys × 2048 histogram partials. Bit-identical output (the
-    * two-middle-rank selection averages VALUES).
+    * keys × 2048 histogram partials; also the parity reference in
+    * TimeSeriesSpec.
     */
-  private[graft] def theilSenWindowed(series: DataFrame): DataFrame = {
-    val pairs = series.select(col("key"), col("x").as("x1"),
-        col("y").as("y1"))
-      .join(series.select(col("key"), col("x").as("x2"),
-        col("y").as("y2")), Seq("key"))
-      .filter(col("x2") > col("x1"))
-      .select(col("key"),
-        ((col("y2") - col("y1")).cast("double") /
-          (col("x2") - col("x1")).cast("double")).as("sl"))
-      .filter(col("sl").isNotNull)
-    val w = Window.partitionBy("key").orderBy("sl")
-    pairs.withColumn("rn", row_number().over(w))
-      .withColumn("n_pairs", count(lit(1)).over(Window.partitionBy("key")))
-      .filter(col("rn") === expr("(n_pairs + 1) div 2") ||
-        col("rn") === expr("n_pairs div 2 + 1"))
-      .groupBy("key", "n_pairs")
-      .agg(avg("sl").as("slope"))
-      .select(col("key"), col("n_pairs"), col("slope"))
-  }
+  private[graft] def theilSenWindowed(series: DataFrame): DataFrame =
+    windowMedian(slopePairs(series, lit(true)))
 
   /** [[theilSen]] with a deterministic per-key PAIR budget — the
     * documented "sample pairs upstream" form for long series, where
@@ -169,10 +125,13 @@ object Metrics {
     * totalPairs)` — content-addressed, so the SAME pairs are kept
     * across runs, retries, cluster sizes (a `rand()` sample is none of
     * those), and a fresh seed draws an independent sample. The hash
-    * predicate rides the self-join condition itself, so unsampled
-    * pairs never reach the slope-median exchange: the window sort is
-    * O(sampled) even though pair ENUMERATION stays O(len²) compute
-    * (cheap codegen'd hash per candidate, no shuffle, no sort).
+    * predicate is the `keep` of the one pair generator, riding the
+    * self-join condition itself, so unsampled pairs never reach the
+    * selector: the median is taken over O(sampled) pairs even though
+    * pair ENUMERATION stays O(len²) compute (cheap codegen'd hash per
+    * candidate, no shuffle, no sort). The selector is [[theilSen]]'s
+    * — the histogram kernel at or under [[groupedKeyLimit]] keys, the
+    * window form above.
     *
     * Series at or under the budget take frac = 1 and return the exact
     * [[theilSen]] answer bit-for-bit (TimeSeriesSpec asserts both the
@@ -197,30 +156,68 @@ object Metrics {
     // distinct-x pair count per key: with c_i rows at each distinct x,
     // retained pairs = (n² - Σc_i²) / 2 — the exact denominator the
     // x2 > x1 condition keeps (NOT n·(n-1)/2 when x values repeat)
-    val lens = series.groupBy("key", "x").agg(count(lit(1)).as("__ts_cx"))
+    val M = 1L << 32
+    val cuts = series.groupBy("key", "x").agg(count(lit(1)).as("__ts_cx"))
       .groupBy("key")
       .agg(((sum("__ts_cx") * sum("__ts_cx") -
         sum(col("__ts_cx") * col("__ts_cx"))) / lit(2L)).cast("long")
         .as("__ts_np"))
-    val M = 1L << 32
-    val left = series.join(lens, "key")
-      .select(col("key"), col("x").as("x1"), col("y").as("y1"),
+      .select(col("key"),
         when(col("__ts_np") <= lit(maxPairsPerKey), lit(M))
           .otherwise(least(lit(M),
             (lit(budget) * lit(M) /
               greatest(col("__ts_np"), lit(1L))).cast("long")))
           .as("__ts_cut"))
-    val pairs = left
+    slopeMedian(series, slopePairs(series,
+      pmod(xxhash64(col("key"), col("x1"), col("x2"), lit(seed)),
+        lit(M)) < col("__ts_cut"), Some(cuts)))
+  }
+
+  /** The one Theil-Sen pair generator: every (x1 < x2) pair of a
+    * key's rows that `keep` retains, as (key, sl) with null slopes
+    * dropped. `keep` reads `key`, `x1`, `y1`, `x2`, `y2` and any
+    * column of `perKey` (joined to the left side on `key`). The slope
+    * is a `try_divide`: the optimizer may push a filter on `sl` (the
+    * kernel's literal bounds) into the join condition, ahead of
+    * `x2 > x1`, where an equal-x pair would divide by zero under ANSI.
+    */
+  private def slopePairs(series: DataFrame, keep: Column,
+                         perKey: Option[DataFrame] = None): DataFrame = {
+    val left = series.select(col("key"), col("x").as("x1"),
+      col("y").as("y1"))
+    perKey.fold(left)(left.join(_, "key"))
       .join(series.select(col("key"), col("x").as("x2"),
-          col("y").as("y2")),
-        Seq("key"))
-      .filter(col("x2") > col("x1") &&
-        pmod(xxhash64(col("key"), col("x1"), col("x2"), lit(seed)),
-          lit(M)) < col("__ts_cut"))
+        col("y").as("y2")), Seq("key"))
+      .filter(col("x2") > col("x1") && keep)
       .select(col("key"),
-        ((col("y2") - col("y1")).cast("double") /
+        try_divide((col("y2") - col("y1")).cast("double"),
           (col("x2") - col("x1")).cast("double")).as("sl"))
       .filter(col("sl").isNotNull)
+  }
+
+  /** The one Theil-Sen selector: count-then-choose on `series`' key
+    * cardinality — the histogram kernel at or under
+    * [[groupedKeyLimit]] keys, the window median above.
+    */
+  private def slopeMedian(series: DataFrame, pairs: DataFrame): DataFrame = {
+    val nKeys = series.agg(countDistinct(col("key"))).head().getLong(0)
+    if (nKeys > groupedKeyLimit) windowMedian(pairs)
+    else {
+      val picks = RobustStats.groupedMedianExact(
+        pairs.select(col("key").as("__rs_k"), col("sl").as("__rs_x"),
+          lit(1L).as("__rs_w")))
+      val rows = picks.map(p => Row(p.key, p.n, RobustStats.midpoint(p)))
+      series.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+        series.schema("key"),
+        StructField("n_pairs", LongType, nullable = false),
+        StructField("slope", DoubleType, nullable = false))))
+    }
+  }
+
+  /** Two-middle-rank median of `sl` per key in a key-partitioned
+    * window: (key, n_pairs, slope).
+    */
+  private def windowMedian(pairs: DataFrame): DataFrame = {
     val w = Window.partitionBy("key").orderBy("sl")
     pairs.withColumn("rn", row_number().over(w))
       .withColumn("n_pairs", count(lit(1)).over(Window.partitionBy("key")))

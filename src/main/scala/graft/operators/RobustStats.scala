@@ -1,44 +1,47 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
-/** EXACT distributed median / MAD — robust outlier statistics without
-  * a global sort, a row-scale shuffle, or an approximation.
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+
+/** EXACT distributed order statistics — medians, weighted quantiles,
+  * MAD — without a global sort, a row-scale shuffle, or an
+  * approximation.
   *
   * `approxQuantile` is fuzzy at the cut (rank error ε·n) and a global
-  * `percentile_cont` plans a single-partition sort at 100 TB. Exact
-  * order statistics don't need either: a rank is a SELECTION problem,
-  * and selection narrows geometrically with aggregates alone — the
-  * classic iterative-histogram algorithm:
+  * `percentile_cont` plans a single-partition sort at 100 TB. A rank
+  * is a SELECTION problem, and selection narrows geometrically with
+  * aggregates alone. ONE kernel, [[groupedMedianExact]], runs the
+  * classic iterative-histogram algorithm for every key at once:
   *
-  *  1. one aggregate gives (n, min, max);
-  *  2. one aggregate per pass histograms the candidate interval into
-  *     B=2048 equi-width buckets, collecting per-bucket
-  *     (count, min, max) — only B constant-size partials cross the
-  *     wire, never rows;
-  *  3. the driver prefix-sums the B counts (metadata-scale), picks the
-  *     bucket holding the target rank, and recurses into that bucket's
-  *     EXACT [min, max] span (taking bounds from the aggregate, not
-  *     from bucket-edge arithmetic, makes float-boundary bucket
-  *     misplacement harmless — the bucket partition itself defines the
-  *     next candidate set);
-  *  4. each pass divides the candidate span by ~B, so even 10^13 rows
-  *     reach a driver-sized slice (≤ 64k values, ≤ 512 KB) in 2-3
-  *     passes; all-equal candidates collapse the interval and
-  *     terminate immediately.
+  *  1. one aggregate gives each key's (n, W = Σweights, min, max); the
+  *     caller turns (n, W) into a target weight rank (unit weights
+  *     make it the row rank);
+  *  2. each pass histograms every open key's interval into B=2048
+  *     equi-width buckets of (count, weight, min, max) — only keys × B
+  *     constant-size partials cross the wire, never rows;
+  *  3. the driver walks each key's bucket weights to the target and
+  *     recurses into that bucket's EXACT [min, max] (bounds from the
+  *     aggregate, not bucket-edge arithmetic, so float-boundary
+  *     misplacement is harmless);
+  *  4. each pass divides the span by ~B, so even 10^13 rows reach a
+  *     driver-sized slice (≤ 64k values) in 2-3 passes; a one-value
+  *     interval resolves without a collect, and a ULP-degenerate or
+  *     over-cap interval finishes by (value, weight) groups, bounded
+  *     by the DISTINCT count.
   *
-  * Unlike a range-shuffle ranking, NO row ever moves: every pass is a
-  * full-scan aggregate with constant-size partials — the cheapest
-  * distributed primitive there is. Driver memory is B triples per pass
-  * plus the final slice — the documented bounded-collect posture
-  * (SURVEY §2).
+  * NO row ever moves: every pass is a full-scan aggregate with
+  * constant-size partials. Driver memory is keys × B partials per pass
+  * plus the final slices — the documented bounded-collect posture
+  * (SURVEY §2). The scalar median and weighted quantile are the kernel
+  * over one key; [[Metrics.theilSen]] runs it over its slope pairs.
   *
-  * MAD (median absolute deviation) composes the same selection twice:
-  * med = median(x), mad = median(|x − med|). With the consistency
-  * constant 1.4826 (≈ 1/Φ⁻¹(3/4)), `|x − med| > k·1.4826·mad` is the
-  * robust z-score outlier rule — the standard data-quality screen
-  * that, unlike mean/stddev, a few wild rows cannot drag.
+  * MAD composes the median twice ([[medMad]]): med = median(x),
+  * mad = median(|x − med|). With the consistency constant 1.4826
+  * (≈ 1/Φ⁻¹(3/4)), `|x − med| > k·1.4826·mad` is the robust z-score
+  * outlier rule — the data-quality screen a few wild rows cannot drag.
   */
 object RobustStats {
 
@@ -50,11 +53,44 @@ object RobustStats {
   // on the input being deterministic between the counting job and the
   // collect job — a non-deterministic source (rand()-derived column,
   // a table rewritten mid-query) can hand the collect arbitrarily more
-  // rows than were counted. The cap collects through limit(cap + 1) —
-  // a single bounded job — and falls back to value-group selection
-  // (bounded by the DISTINCT count) when the slice fills the limit,
-  // instead of trusting the stale count.
+  // rows than were counted. Slices are collected through
+  // limit(cap + 1) — one bounded job per batch — and fall back to
+  // value-group selection (bounded by the DISTINCT count) when a batch
+  // fills the limit, instead of trusting the stale count.
   private val SliceHardCap = 1048576L
+  private val MaxValueGroups = 16L * 1024 * 1024
+  private val Unstable =
+    "non-deterministic input changed between passes?"
+
+  /** One key's selection: its row count `n`, weight total `w`, the
+    * value at the target rank and, when the target asked for it, the
+    * value at the next rank (else `value` again).
+    */
+  private[graft] final case class Pick(key: Any, n: Long, w: Long,
+                                       value: Double, next: Double)
+
+  /** The `percentile_cont(0.5)` target: rank ⌈n/2⌉, plus the next
+    * rank when n is even.
+    */
+  private[graft] val MedianRank: (Long, Long) => (Long, Boolean) =
+    (n, _) => ((n + 1) / 2, n % 2 == 0)
+
+  /** The lower weighted-quantile target at p = num/den: weight rank
+    * ceil(num·W / den) = (num·W + den − 1) / den, with no float. Via
+    * BigInt: num·W overflows a Long once W passes ~Long.Max/num
+    * (reachable — W is a corpus-wide weight sum), and the wrapped
+    * negative rank would silently select min(v); the RESULT ≤ W always
+    * fits a Long.
+    */
+  private[graft] def quantileRank(num: Long,
+                                  den: Long): (Long, Long) => (Long, Boolean) =
+    (_, w) => (((BigInt(num) * w + den - 1) / den).toLong, false)
+
+  /** The median of a [[MedianRank]] pick: the middle value, or the
+    * mean of the two middle values for even n.
+    */
+  private[graft] def midpoint(p: Pick): Double =
+    if (p.n % 2 == 0) (p.value + p.next) / 2.0 else p.value
 
   /** Exact median of `valueCol` (non-null rows) under the
     * `percentile_cont(0.5)` convention (average of the two middle
@@ -62,350 +98,25 @@ object RobustStats {
     * composes it as a literal.
     */
   def medianExact(df: DataFrame, valueCol: Column): Double =
-    medianExactImpl(df, valueCol, DriverSliceMax, SliceHardCap)
+    midpoint(single(df, valueCol, lit(1L), MedianRank,
+      "median of an empty input"))
 
-  /** [[medianExact]] with injectable collect bounds — package-private
-    * so RobustStatsSpec can drive the hard-cap fallback without a
-    * million-row fixture.
+  /** Exact median and median absolute deviation of `valueCol`:
+    * (med, median(|x − med|)), two [[medianExact]] selections.
     */
-  private[graft] def medianExactImpl(df: DataFrame, valueCol: Column,
-                                     sliceMax: Long, hardCap: Long): Double = {
-    val vals = df.select(valueCol.cast("double").as("__rs_x"))
-      .filter(col("__rs_x").isNotNull)
-    val head = vals.agg(count(lit(1)), min(col("__rs_x")),
-      max(col("__rs_x"))).head()
-    val n = head.getLong(0)
-    require(n > 0, "median of an empty input")
-    val (kLo, kHi) = ((n + 1) / 2, (n + 2) / 2)
-
-    var lo = head.getDouble(1)
-    var hi = head.getDouble(2)
-    var cnt = n
-    var k = kLo                     // rank of the first target within [lo, hi]
-    var hiVal: Option[Double] =     // second target once it leaves the interval
-      if (kHi == kLo) Some(Double.NaN) else None // NaN marker: same as loVal
-
-    while (cnt > sliceMax && lo < hi) {
-      val w = (hi - lo) / Buckets
-      val bucket = least(greatest(
-        floor((col("__rs_x") - lit(lo)) / lit(w)), lit(0.0)),
-        lit((Buckets - 1).toDouble)).cast("int")
-      val stats = vals
-        .filter(col("__rs_x") >= lo && col("__rs_x") <= hi)
-        .groupBy(bucket.as("__rs_b"))
-        .agg(count(lit(1)).as("c"), min(col("__rs_x")).as("mn"),
-          max(col("__rs_x")).as("mx"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getDouble(2),
-          r.getDouble(3)))
-        .sortBy(_._1)
-      var acc = 0L; var idx = -1; var below = 0L
-      stats.indices.foreach { i =>
-        if (idx < 0) {
-          if (acc + stats(i)._2 >= k) { idx = i; below = acc }
-          acc += stats(i)._2
-        }
-      }
-      val (_, c, mn, mx) = stats(idx)
-      // adjacent second target falling just past this bucket = the
-      // next non-empty bucket's exact minimum (already collected)
-      if (hiVal.isEmpty && k + 1 > below + c)
-        hiVal = Some(stats(idx + 1)._3)
-      if (mn == lo && mx == hi && c == cnt)
-        // no shrink: the interval is a few ULPs wide (equi-width
-        // bucketing degenerated) — the DISTINCT values inside are a
-        // handful of adjacent doubles, so select by value groups
-        return finishByValue(vals, lo, hi, k, hiVal)
-      lo = mn; hi = mx; k -= below; cnt = c
-    }
-    if (lo == hi)
-      // all remaining candidates hold ONE value (tie mass): no need to
-      // collect any of them, however many rows that is
-      (lo + hiVal.map(v => if (v.isNaN) lo else v).getOrElse(lo)) / 2.0
-    else finishSlice(vals, lo, hi, k, hiVal, hardCap)
-  }
-
-  private def finishSlice(vals: DataFrame, lo: Double, hi: Double,
-                          k: Long, hiVal: Option[Double],
-                          hardCap: Long): Double = {
-    val filtered = vals.filter(col("__rs_x") >= lo && col("__rs_x") <= hi)
-      .select(col("__rs_x"))
-    // hard cap in ONE pass (r14): collect through limit(hardCap + 1) —
-    // the driver materializes at most hardCap + 1 rows whatever the
-    // source does between jobs, and a full result means the slice
-    // overflowed the cap, so selection falls back to value groups.
-    // (r13 ran a separate count() job first — one extra full scan on
-    // the common well-under-cap path.)
-    val lim = math.min(hardCap + 1, Int.MaxValue.toLong).toInt
-    val capped = filtered.limit(lim).collect()
-    if (capped.length >= lim)
-      return finishByValue(vals, lo, hi, k, hiVal)
-    val slice = capped.map(_.getDouble(0))
-    java.util.Arrays.sort(slice)
-    val loVal = slice((k - 1).toInt)
-    val second = hiVal match {
-      case Some(v) if v.isNaN => loVal       // odd n: both ranks equal
-      case Some(v) => v                      // resolved during narrowing
-      case None => slice(k.toInt)            // both ranks in the slice
-    }
-    (loVal + second) / 2.0
-  }
-
-  /** Selection by (value, count) groups — bounded by the DISTINCT
-    * count, for tie-collapsed intervals where the row count is not.
-    */
-  private def finishByValue(vals: DataFrame, lo: Double, hi: Double,
-                            k: Long, hiVal: Option[Double]): Double = {
-    val grouped = vals.filter(col("__rs_x") >= lo && col("__rs_x") <= hi)
-      .groupBy(col("__rs_x")).agg(count(lit(1)).as("c"))
-    // last line of defense: value groups are bounded by the DISTINCT
-    // count — normally a handful (ULP-degenerate interval) or at most
-    // the capped slice's diversity. A group count only reachable via a
-    // source mutating between jobs fails loudly instead of OOMing.
-    val ng = grouped.count()
-    require(ng <= 16L * 1024 * 1024,
-      s"median selection degenerate: $ng distinct values in [$lo, $hi] " +
-        "— non-deterministic input changed between narrowing passes?")
-    val groups = grouped
-      .collect().map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
-    def rankValue(r: Long): Double = {
-      var acc = 0L
-      groups.foreach { case (v, c) =>
-        acc += c
-        if (acc >= r) return v
-      }
-      groups.last._1
-    }
-    val loVal = rankValue(k)
-    val second = hiVal match {
-      case Some(v) if v.isNaN => loVal
-      case Some(v) => v
-      case None => rankValue(k + 1)
-    }
-    (loVal + second) / 2.0
-  }
-
-  /** Per-KEY exact median under the same `percentile_cont(0.5)`
-    * convention as [[medianExact]], vectorized across keys with the
-    * identical aggregate-only iterative-histogram selection — one
-    * histogram pass narrows EVERY active key's candidate interval at
-    * once, so K keys cost the same 2-4 full-scan aggregate passes one
-    * key does, and NO row ever shuffles or sorts (the input feeds a
-    * map-side partial aggregate; only activeKeys × B constant-size
-    * partials cross the wire per pass).
-    *
-    * The input frame is RE-EVALUATED once per pass (head + 1-3
-    * histogram passes + the final slice/value collect), so callers
-    * pass a cheap-to-recompute lineage — a staged scan, or a
-    * generated stream whose enumeration is map-side compute (the
-    * Theil-Sen pair stream). Driver memory is O(activeKeys × B) per
-    * pass plus the final per-key slices (batched under `hardCap` rows
-    * per collect) — callers must bound the KEY cardinality
-    * (count-then-choose; [[Metrics.theilSen]] gates on
-    * [[Metrics.groupedKeyLimit]]).
-    *
-    * @param gen frame with columns `__rs_k` (any type, the key) and
-    *            `__rs_x` (double, non-null)
-    * @return per key: (n, median); keys with no rows yield no entry
-    */
-  private[operators] def groupedMedianExact(gen: DataFrame,
-      sliceMax: Long = DriverSliceMax,
-      hardCap: Long = SliceHardCap): Seq[(Any, Long, Double)] = {
-    val spark = gen.sparkSession
-    val keyType = gen.schema.apply("__rs_k").dataType
-    val keyNullable = gen.schema.apply("__rs_k").nullable
-
-    final class St(var lo: Double, var hi: Double, var cnt: Long,
-                   var k: Long, var hiVal: Option[Double], val n: Long,
-                   var byValue: Boolean = false, var done: Boolean = false,
-                   var med: Double = 0.0)
-    val st = scala.collection.mutable.LinkedHashMap.empty[Any, St]
-    gen.groupBy("__rs_k")
-      .agg(count(lit(1)).as("n"), min("__rs_x").as("mn"),
-        max("__rs_x").as("mx"))
-      .collect()
-      .foreach { r =>
-        val n = r.getLong(1)
-        val (kLo, kHi) = ((n + 1) / 2, (n + 2) / 2)
-        st(r.get(0)) = new St(r.getDouble(2), r.getDouble(3), n, kLo,
-          if (kHi == kLo) Some(Double.NaN) else None, n)
-      }
-
-    def boundsDf(keys: Seq[Any]): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        keys.map { ky =>
-          org.apache.spark.sql.Row(ky, st(ky).lo, st(ky).hi)
-        }.asJava
-      broadcast(spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__rs_k", keyType,
-            keyNullable),
-          org.apache.spark.sql.types.StructField("__rs_lo",
-            org.apache.spark.sql.types.DoubleType, nullable = false),
-          org.apache.spark.sql.types.StructField("__rs_hi",
-            org.apache.spark.sql.types.DoubleType, nullable = false)))))
-    }
-    def inRange = col("__rs_x") >= col("__rs_lo") &&
-      col("__rs_x") <= col("__rs_hi")
-
-    var active = st.collect {
-      case (ky, s) if s.cnt > sliceMax && s.lo < s.hi => ky
-    }.toSeq
-    var guard = 0
-    while (active.nonEmpty && guard < 64) {
-      guard += 1
-      val w = (col("__rs_hi") - col("__rs_lo")) / lit(Buckets.toDouble)
-      val bucket = least(greatest(
-        floor((col("__rs_x") - col("__rs_lo")) / w), lit(0.0)),
-        lit((Buckets - 1).toDouble)).cast("int")
-      val stats = gen.join(boundsDf(active), "__rs_k")
-        .filter(inRange)
-        .groupBy(col("__rs_k"), bucket.as("__rs_b"))
-        .agg(count(lit(1)).as("c"), min("__rs_x").as("mn"),
-          max("__rs_x").as("mx"))
-        .collect()
-        .groupBy(_.get(0))
-      val next = Seq.newBuilder[Any]
-      active.foreach { ky =>
-        val s = st(ky)
-        stats.get(ky) match {
-          case None =>
-            // a deterministic source always re-yields the counted rows;
-            // an empty pass means it changed between jobs — fall back
-            // to value-group selection rather than trusting stale state
-            s.byValue = true
-          case Some(rs) =>
-            val rows = rs.map(r => (r.getInt(1), r.getLong(2),
-              r.getDouble(3), r.getDouble(4))).sortBy(_._1)
-            var acc = 0L; var idx = -1; var below = 0L
-            rows.indices.foreach { i =>
-              if (idx < 0) {
-                if (acc + rows(i)._2 >= s.k) { idx = i; below = acc }
-                acc += rows(i)._2
-              }
-            }
-            if (idx < 0) { s.byValue = true }
-            else {
-              val (_, c, mn, mx) = rows(idx)
-              if (s.hiVal.isEmpty && s.k + 1 > below + c)
-                s.hiVal = Some(rows(idx + 1)._3)
-              if (mn == s.lo && mx == s.hi && c == s.cnt) s.byValue = true
-              else {
-                s.lo = mn; s.hi = mx; s.k -= below; s.cnt = c
-                if (s.cnt > sliceMax && s.lo < s.hi) next += ky
-              }
-            }
-        }
-      }
-      active = next.result()
-    }
-
-    def resolve(loVal: Double, s: St, second: => Double): Double = {
-      val hi2 = s.hiVal match {
-        case Some(v) if v.isNaN => loVal
-        case Some(v) => v
-        case None => second
-      }
-      (loVal + hi2) / 2.0
-    }
-
-    // collapsed intervals: one value holds both target ranks
-    st.values.foreach { s =>
-      if (!s.done && !s.byValue && s.lo >= s.hi) {
-        s.med = resolve(s.lo, s, s.lo); s.done = true
-      }
-    }
-
-    // slice finish, batched so one collect never materializes more
-    // than hardCap rows (the medianExact limit(cap + 1) discipline —
-    // a source mutating between jobs overflows the limit and falls
-    // back to value groups instead of flooding the driver)
-    val sliceKeys = st.collect {
-      case (ky, s) if !s.done && !s.byValue => ky
-    }.toSeq
-    val batches = Seq.newBuilder[Seq[Any]]
-    var cur = Seq.newBuilder[Any]; var curRows = 0L
-    sliceKeys.foreach { ky =>
-      val c = st(ky).cnt
-      if (c > hardCap) st(ky).byValue = true
-      else {
-        if (curRows + c > hardCap) {
-          batches += cur.result(); cur = Seq.newBuilder[Any]; curRows = 0L
-        }
-        cur += ky; curRows += c
-      }
-    }
-    val lastB = cur.result(); if (lastB.nonEmpty) batches += lastB
-    batches.result().foreach { batch =>
-      val expect = batch.map(st(_).cnt).sum
-      val lim = math.min(expect + 1, Int.MaxValue.toLong).toInt
-      val capped = gen.join(boundsDf(batch), "__rs_k").filter(inRange)
-        .select(col("__rs_k"), col("__rs_x"))
-        .limit(lim).collect()
-      if (capped.length >= lim) batch.foreach(st(_).byValue = true)
-      else {
-        val byKey = capped.groupBy(_.get(0))
-        batch.foreach { ky =>
-          val s = st(ky)
-          byKey.get(ky) match {
-            case None => s.byValue = true
-            case Some(rs) =>
-              val slice = rs.map(_.getDouble(1))
-              java.util.Arrays.sort(slice)
-              if (s.k > slice.length) s.byValue = true
-              else {
-                val loVal = slice((s.k - 1).toInt)
-                s.med = resolve(loVal, s,
-                  if (s.k < slice.length) slice(s.k.toInt) else loVal)
-                s.done = true
-              }
-          }
-        }
-      }
-    }
-
-    // value-group finish (ULP-degenerate intervals + every fallback):
-    // bounded by the DISTINCT count inside each key's interval
-    val bvKeys = st.collect {
-      case (ky, s) if !s.done && s.byValue => ky
-    }.toSeq
-    if (bvKeys.nonEmpty) {
-      val grouped = gen.join(boundsDf(bvKeys), "__rs_k").filter(inRange)
-        .groupBy(col("__rs_k"), col("__rs_x"))
-        .agg(count(lit(1)).as("c"))
-      val ng = grouped.count()
-      require(ng <= 16L * 1024 * 1024,
-        s"grouped median selection degenerate: $ng distinct (key, value) " +
-          "groups — non-deterministic input changed between passes?")
-      val byKey = grouped.collect().groupBy(_.get(0))
-      bvKeys.foreach { ky =>
-        val s = st(ky)
-        val groups = byKey(ky).map(r => (r.getDouble(1), r.getLong(2)))
-          .sortBy(_._1)
-        def rankValue(r: Long): Double = {
-          var acc = 0L
-          groups.foreach { case (v, c) =>
-            acc += c
-            if (acc >= r) return v
-          }
-          groups.last._1
-        }
-        val loVal = rankValue(s.k)
-        s.med = resolve(loVal, s, rankValue(s.k + 1))
-        s.done = true
-      }
-    }
-    st.toSeq.map { case (ky, s) => (ky, s.n, s.med) }
+  def medMad(df: DataFrame, valueCol: Column): (Double, Double) = {
+    val med = medianExact(df, valueCol)
+    val mad = medianExact(
+      df.select(abs(valueCol.cast("double") - lit(med)).as("__rs_d")),
+      col("__rs_d"))
+    (med, mad)
   }
 
   /** EXACT lower weighted median: the smallest value v whose
     * cumulative weight (in value order) reaches ⌈W/2⌉, W = Σweights.
-    * Same iterative-histogram selection as [[medianExact]] — the rank
-    * is a WEIGHT rank instead of a row rank, so each pass histograms
-    * per-bucket (row count, weight sum, min, max) and the driver walks
-    * the B weight sums to pick the bucket holding the target. Still
-    * aggregate-only: no row ever moves, no range shuffle, no
+    * The kernel's selection with a WEIGHT rank — each pass histograms
+    * per-bucket weight sums and the driver walks them to the target.
+    * Still aggregate-only: no row ever moves, no range shuffle, no
     * materialized ranking — strictly cheaper than a running-total
     * ranking when only the scalar is needed (the GlobalRank
     * running-total shape remains the right tool when every row needs
@@ -421,112 +132,250 @@ object RobustStats {
 
   /** Exact lower weighted quantile at p = num/den: the smallest value
     * whose cumulative weight reaches ceil(p * W). The fraction arrives
-    * as INTEGERS so the threshold ceil(num*W / den) =
-    * (num*W + den - 1) / den is computed without a single float —
-    * p = 0.9 as (9, 10) can never land on the wrong side of an exact
-    * multiple the way ceil(0.9 * W) in doubles can.
+    * as INTEGERS so the threshold ([[quantileRank]]) is computed
+    * without a single float — p = 0.9 as (9, 10) can never land on
+    * the wrong side of an exact multiple the way ceil(0.9 * W) in
+    * doubles can.
     */
   def weightedQuantileExact(df: DataFrame, valueCol: Column,
                             weightCol: Column,
-                            num: Long, den: Long): (Double, Long) =
-    weightedQuantileImpl(df, valueCol, weightCol, num, den,
-      DriverSliceMax, SliceHardCap)
-
-  /** [[weightedQuantileExact]] with injectable collect bounds (see
-    * [[medianExactImpl]]).
-    */
-  private[graft] def weightedQuantileImpl(df: DataFrame, valueCol: Column,
-                                          weightCol: Column,
-                                          num: Long, den: Long,
-                                          sliceMax: Long,
-                                          hardCap: Long): (Double, Long) = {
+                            num: Long, den: Long): (Double, Long) = {
     require(num >= 1 && den >= 1 && num <= den,
       s"quantile fraction must satisfy 1 <= num <= den (got $num/$den)")
-    val vals = df.select(valueCol.cast("double").as("__rs_x"),
-        weightCol.cast("long").as("__rs_w"))
-      .filter(col("__rs_x").isNotNull && col("__rs_w").isNotNull)
-    val head = vals.agg(count(lit(1)), sum(col("__rs_w")),
-      min(col("__rs_w")), min(col("__rs_x")), max(col("__rs_x"))).head()
-    val n = head.getLong(0)
-    require(n > 0, "weighted quantile of an empty input")
-    require(head.getLong(2) > 0,
-      s"weights must be positive (min = ${head.getLong(2)})")
-    val totalW = head.getLong(1)
-
-    var lo = head.getDouble(3)
-    var hi = head.getDouble(4)
-    var cnt = n
-    // threshold via BigInt: num * W overflows a Long once W passes
-    // ~Long.Max/num (reachable — W is a corpus-wide weight sum), and
-    // the wrapped-negative k would silently select min(v); the
-    // RESULT k <= W always fits a Long
-    var k = ((BigInt(num) * totalW + den - 1) / den).toLong
-
-    while (cnt > sliceMax && lo < hi) {
-      val w = (hi - lo) / Buckets
-      val bucket = least(greatest(
-        floor((col("__rs_x") - lit(lo)) / lit(w)), lit(0.0)),
-        lit((Buckets - 1).toDouble)).cast("int")
-      val stats = vals
-        .filter(col("__rs_x") >= lo && col("__rs_x") <= hi)
-        .groupBy(bucket.as("__rs_b"))
-        .agg(count(lit(1)).as("c"), sum(col("__rs_w")).as("ws"),
-          min(col("__rs_x")).as("mn"), max(col("__rs_x")).as("mx"))
-        .collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
-          r.getDouble(3), r.getDouble(4)))
-        .sortBy(_._1)
-      var acc = 0L; var idx = -1; var below = 0L
-      stats.indices.foreach { i =>
-        if (idx < 0) {
-          if (acc + stats(i)._3 >= k) { idx = i; below = acc }
-          acc += stats(i)._3
-        }
-      }
-      val (_, c, _, mn, mx) = stats(idx)
-      if (mn == lo && mx == hi && c == cnt)
-        // ULP-degenerate interval: select among the few distinct
-        // values by weight groups (bounded by the distinct count)
-        return (weightedByValue(vals, lo, hi, k), totalW)
-      lo = mn; hi = mx; k -= below; cnt = c
-    }
-    if (lo == hi) return (lo, totalW)
-    val filtered = vals.filter(col("__rs_x") >= lo && col("__rs_x") <= hi)
-    // same single-pass hard cap as finishSlice: limit(hardCap + 1)
-    // bounds the driver materialization; a full result = overflow
-    val lim = math.min(hardCap + 1, Int.MaxValue.toLong).toInt
-    val capped = filtered.limit(lim).collect()
-    if (capped.length >= lim)
-      return (weightedByValue(vals, lo, hi, k), totalW)
-    val slice = capped.map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
-    var a = 0L
-    slice.foreach { case (v, sw) =>
-      a += sw
-      if (a >= k) return (v, totalW)
-    }
-    (slice.last._1, totalW)
+    val p = single(df, valueCol, weightCol, quantileRank(num, den),
+      "weighted quantile of an empty input")
+    (p.value, p.w)
   }
 
-  /** Weight-rank selection by (value, weight-sum) groups — bounded by
-    * the DISTINCT count, shared by the ULP-degenerate branch and the
-    * hard-cap fallback of [[weightedQuantileImpl]].
+  /** The kernel over one key: rows need both a value and a weight. */
+  private def single(df: DataFrame, valueCol: Column, weightCol: Column,
+                     target: (Long, Long) => (Long, Boolean),
+                     empty: String): Pick = {
+    val gen = df.select(valueCol.cast("double").as("__rs_x"),
+        weightCol.cast("long").as("__rs_w"))
+      .filter(col("__rs_x").isNotNull && col("__rs_w").isNotNull)
+    val picks = groupedMedianExact(gen, target)
+    require(picks.nonEmpty, empty)
+    picks.head
+  }
+
+  /** The rank-selection kernel: per KEY, the value at the target rank
+    * `target(n, W)` (and at the next rank when the target's flag asks
+    * for it), vectorized across keys — one histogram pass narrows
+    * EVERY open key's candidate interval at once, so K keys cost the
+    * same 2-4 full-scan aggregate passes one key does, and NO row ever
+    * shuffles or sorts (the input feeds a map-side partial aggregate;
+    * only activeKeys × B constant-size partials cross the wire per
+    * pass). The default target is the median ([[MedianRank]]; compose
+    * with [[midpoint]]).
+    *
+    * The input frame is RE-EVALUATED once per pass (head + 1-3
+    * histogram passes + the final slice/value collect), so callers
+    * pass a cheap-to-recompute lineage — a staged scan, or a
+    * generated stream whose enumeration is map-side compute (the
+    * Theil-Sen pair stream). Driver memory is O(activeKeys × B) per
+    * pass plus the final per-key slices (batched under `hardCap` rows
+    * per collect) — callers must bound the KEY cardinality
+    * (count-then-choose; [[Metrics.theilSen]] gates on
+    * [[Metrics.groupedKeyLimit]]).
+    *
+    * A source that yields fewer rows than the first aggregate counted
+    * (it changed between jobs) never indexes past what a pass
+    * returned: the key falls back to value-group selection, and fails
+    * there by name if the ranks still cannot be reached.
+    *
+    * @param gen frame with columns `__rs_x` (double, non-null),
+    *            `__rs_w` (long, positive; unit weights for a row rank)
+    *            and `__rs_k` (any type, the key); without `__rs_k` the
+    *            frame is one key (reported as 0), aggregated globally
+    * @param sliceMax,hardCap collect bounds, injectable for tests
+    * @return one [[Pick]] per key; keys with no rows yield none
     */
-  private def weightedByValue(vals: DataFrame, lo: Double, hi: Double,
-                              k: Long): Double = {
-    val grouped = vals.filter(col("__rs_x") >= lo && col("__rs_x") <= hi)
-      .groupBy(col("__rs_x")).agg(sum(col("__rs_w")).as("ws"))
-    val ng = grouped.count()
-    require(ng <= 16L * 1024 * 1024,
-      s"weighted selection degenerate: $ng distinct values in [$lo, $hi] " +
-        "— non-deterministic input changed between narrowing passes?")
-    val groups = grouped
-      .collect().map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._1)
-    var a = 0L
-    groups.foreach { case (v, gw) =>
-      a += gw
-      if (a >= k) return v
+  private[graft] def groupedMedianExact(gen: DataFrame,
+      target: (Long, Long) => (Long, Boolean) = MedianRank,
+      sliceMax: Long = DriverSliceMax,
+      hardCap: Long = SliceHardCap): Seq[Pick] = {
+    // no key column: one key, aggregated globally (cheaper than
+    // grouping every row under one literal key)
+    val keyed = gen.columns.contains("__rs_k")
+    val keyCols = if (keyed) Seq(col("__rs_k")) else Nil
+    def keyOf(r: Row): Any = if (keyed) r.getAs[Any]("__rs_k") else 0
+
+    // per key: candidate interval [lo, hi] holding cnt rows, k = the
+    // target's weight rank within it; `next` = the value at rank k + 1
+    // once it is known (it may leave the interval during narrowing)
+    final class St(val n: Long, val w: Long, var lo: Double,
+                   var hi: Double, var cnt: Long, var k: Long,
+                   val wantNext: Boolean) {
+      var next: Option[Double] = None
+      var value: Option[Double] = None
+      var byValue = false
+      def needNext: Boolean = wantNext && next.isEmpty
     }
-    groups.last._1
+    val st = scala.collection.mutable.LinkedHashMap.empty[Any, St]
+    gen.groupBy(keyCols: _*)
+      .agg(count(lit(1)).as("n"), sum("__rs_w").as("w"),
+        min("__rs_w").as("wmin"), min("__rs_x").as("mn"),
+        max("__rs_x").as("mx"))
+      .collect()
+      .filter(_.getAs[Long]("n") > 0) // a global aggregate of no rows
+      .foreach { r =>
+        val wmin = r.getAs[Long]("wmin")
+        require(wmin > 0, s"weights must be positive (min = $wmin)")
+        val (n, w) = (r.getAs[Long]("n"), r.getAs[Long]("w"))
+        val (k, wantNext) = target(n, w)
+        st(keyOf(r)) = new St(n, w, r.getAs[Double]("mn"),
+          r.getAs[Double]("mx"), n, k, wantNext)
+      }
+
+    // the rows of `keys` inside their current intervals, with the
+    // interval as (__rs_lo, __rs_hi): literals for a one-key input (no
+    // broadcast job per pass), else a broadcast join on the key (null
+    // keys match, <=>)
+    def bounded(keys: Seq[Any]): DataFrame = {
+      val withBounds =
+        if (st.size == 1)
+          gen.withColumn("__rs_lo", lit(st(keys.head).lo))
+            .withColumn("__rs_hi", lit(st(keys.head).hi))
+        else {
+          val rows = keys.map { ky => Row(ky, st(ky).lo, st(ky).hi) }.asJava
+          val bounds = gen.sparkSession.createDataFrame(rows,
+            StructType(Seq(gen.schema("__rs_k").copy(name = "__rs_bk"),
+              StructField("__rs_lo", DoubleType, nullable = false),
+              StructField("__rs_hi", DoubleType, nullable = false))))
+          gen.join(broadcast(bounds), col("__rs_k") <=> col("__rs_bk"))
+        }
+      withBounds.filter(col("__rs_x") >= col("__rs_lo") &&
+        col("__rs_x") <= col("__rs_hi"))
+    }
+    // first index whose cumulative weight reaches r (-1 if none), and
+    // the weight before it
+    def reach(ws: Array[Long], r: Long): (Int, Long) = {
+      var acc = 0L; var i = 0
+      while (i < ws.length && acc + ws(i) < r) { acc += ws(i); i += 1 }
+      if (i < ws.length) (i, acc) else (-1, acc)
+    }
+    // settle k (and k + 1 while needed) from the value-sorted (x, w)
+    // run of the key's interval; false when the run holds less weight
+    // than the ranks need (the source changed between jobs)
+    def settle(s: St, run: Array[(Double, Long)]): Boolean = {
+      val ws = run.map(_._2)
+      val i = reach(ws, s.k)._1
+      val j = if (s.needNext) reach(ws, s.k + 1)._1 else i
+      if (i < 0 || j < 0) false
+      else {
+        s.value = Some(run(i)._1)
+        if (s.needNext) s.next = Some(run(j)._1)
+        true
+      }
+    }
+    def xw(r: Row): (Double, Long) =
+      (r.getAs[Double]("__rs_x"), r.getAs[Long]("__rs_w"))
+    def open(s: St): Boolean = !s.byValue && s.cnt > sliceMax && s.lo < s.hi
+
+    // narrowing: one histogram pass per round over every open key
+    var active = st.collect { case (ky, s) if open(s) => ky }.toSeq
+    var guard = 0
+    while (active.nonEmpty && guard < 64) {
+      guard += 1
+      val width = (col("__rs_hi") - col("__rs_lo")) / lit(Buckets.toDouble)
+      val bucket = least(greatest(
+        floor((col("__rs_x") - col("__rs_lo")) / width), lit(0.0)),
+        lit((Buckets - 1).toDouble)).cast("int")
+      val stats = bounded(active)
+        .groupBy(keyCols :+ bucket.as("__rs_b"): _*)
+        .agg(count(lit(1)).as("c"), sum("__rs_w").as("ws"),
+          min("__rs_x").as("mn"), max("__rs_x").as("mx"))
+        .collect()
+        .groupBy(keyOf)
+      active.foreach { ky =>
+        val s = st(ky)
+        val bs = stats.getOrElse(ky, Array.empty[Row])
+          .sortBy(_.getAs[Int]("__rs_b"))
+        val ws = bs.map(_.getAs[Long]("ws"))
+        val (i, below) = reach(ws, s.k)
+        // rank k + 1 falls past bucket i: it is the next bucket's min
+        val nextOut = i >= 0 && s.needNext && s.k + 1 > below + ws(i)
+        if (i < 0 || (nextOut && i + 1 == bs.length))
+          // fewer rows than counted: the source changed between jobs
+          s.byValue = true
+        else {
+          if (nextOut) s.next = Some(bs(i + 1).getAs[Double]("mn"))
+          val (c, mn, mx) = (bs(i).getAs[Long]("c"),
+            bs(i).getAs[Double]("mn"), bs(i).getAs[Double]("mx"))
+          // no shrink: the interval is a few ULPs wide (equi-width
+          // bucketing degenerated) — select by value groups
+          if (mn == s.lo && mx == s.hi && c == s.cnt) s.byValue = true
+          else { s.lo = mn; s.hi = mx; s.k -= below; s.cnt = c }
+        }
+      }
+      active = active.filter(ky => open(st(ky)))
+    }
+
+    // tie mass: a one-value interval holds both ranks, however many
+    // rows that is — no collect
+    st.values.foreach { s =>
+      if (!s.byValue && s.lo >= s.hi) {
+        s.value = Some(s.lo)
+        if (s.needNext) s.next = Some(s.lo)
+      }
+    }
+
+    // slice finish, batched so one collect never materializes more
+    // than hardCap rows: a batch that fills limit(rows + 1) (a source
+    // mutating between jobs) falls back to value groups instead of
+    // flooding the driver
+    val batches = Seq.newBuilder[Seq[Any]]
+    var cur = Seq.newBuilder[Any]; var curRows = 0L
+    st.foreach { case (ky, s) =>
+      if (!s.byValue && s.value.isEmpty) {
+        if (s.cnt > hardCap) s.byValue = true
+        else {
+          if (curRows + s.cnt > hardCap) {
+            batches += cur.result(); cur = Seq.newBuilder[Any]; curRows = 0L
+          }
+          cur += ky; curRows += s.cnt
+        }
+      }
+    }
+    batches += cur.result()
+    batches.result().filter(_.nonEmpty).foreach { batch =>
+      val lim = math.min(batch.map(st(_).cnt).sum + 1,
+        Int.MaxValue.toLong).toInt
+      val capped = bounded(batch)
+        .select(keyCols :+ col("__rs_x") :+ col("__rs_w"): _*)
+        .limit(lim).collect()
+      val byKey = capped.groupBy(keyOf)
+      batch.foreach { ky =>
+        val run = byKey.getOrElse(ky, Array.empty[Row]).map(xw).sortBy(_._1)
+        if (capped.length >= lim || !settle(st(ky), run))
+          st(ky).byValue = true
+      }
+    }
+
+    // value-group finish (ULP-degenerate intervals and every
+    // fallback): bounded by the DISTINCT count inside each interval
+    val bvKeys = st.collect { case (ky, s) if s.value.isEmpty => ky }.toSeq
+    if (bvKeys.nonEmpty) {
+      val grouped = bounded(bvKeys)
+        .groupBy(keyCols :+ col("__rs_x"): _*)
+        .agg(sum("__rs_w").as("__rs_w"))
+      val ng = grouped.count()
+      require(ng <= MaxValueGroups,
+        s"rank selection degenerate: $ng distinct (key, value) groups " +
+          s"— $Unstable")
+      val byKey = grouped.collect().groupBy(keyOf)
+      bvKeys.foreach { ky =>
+        val run = byKey.getOrElse(ky, Array.empty[Row]).map(xw).sortBy(_._1)
+        require(settle(st(ky), run),
+          s"rank selection: key $ky holds less weight than its target " +
+            s"rank — $Unstable")
+      }
+    }
+    st.toSeq.map { case (ky, s) =>
+      Pick(ky, s.n, s.w, s.value.get,
+        if (s.wantNext) s.next.get else s.value.get)
+    }
   }
 
   /** One-row robust summary of `valueCol`:
@@ -538,10 +387,7 @@ object RobustStats {
                         k: Double = 3.0): DataFrame = {
     val vals = df.select(valueCol.cast("double").as("__rs_x"))
       .filter(col("__rs_x").isNotNull)
-    val med = medianExact(vals, col("__rs_x"))
-    val mad = medianExact(
-      vals.select(abs(col("__rs_x") - lit(med)).as("__rs_x")),
-      col("__rs_x"))
+    val (med, mad) = medMad(vals, col("__rs_x"))
     def r4(c: Column): Column =
       floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
     vals.agg(

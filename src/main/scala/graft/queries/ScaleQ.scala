@@ -580,10 +580,8 @@ object ScaleQ {
         val days = graft.operators.Stage.materialize(
           planted.groupBy("day").agg(count(lit(1)).as("n_events")),
           "dq_vol_days")
-        val med = graft.operators.RobustStats.medianExact(
+        val (med, mad) = graft.operators.RobustStats.medMad(
           days, col("n_events"))
-        val mad = graft.operators.RobustStats.medianExact(
-          days.select(abs(col("n_events") - lit(med)).as("dv")), col("dv"))
         days.filter(abs(col("n_events") - lit(med)) >
             lit(3.0) * lit(1.4826) * lit(mad))
           .select(col("day"), col("n_events"),

@@ -1132,12 +1132,13 @@ object StreamQ {
     // fit chases (29% breakdown point). Pairs are bounded by series
     // LENGTH² (720 h → ~259k pairs/type), not row count — the series
     // aggregate is the only full scan; for multi-year series the
-    // standard move is pair sampling, same shape. Median = explicit
-    // two-middle-rank selection inside a type-partitioned window
-    // (PlanGuard: partitioned), averaging the two middle slope VALUES
-    // — each slope is one integer-diff division and the mean of two
-    // identical doubles, so the result is bit-identical cross-engine
-    // regardless of how rank ties order rows.
+    // standard move is pair sampling, same shape. Median = exact
+    // two-middle-rank selection by RobustStats' aggregate-only
+    // histogram kernel at build time (no pair exchange, no window),
+    // averaging the two middle slope VALUES — each slope is one
+    // integer-diff division and the mean of two identical doubles, so
+    // the result is bit-identical cross-engine regardless of how rank
+    // ties order rows.
     Q("ts_theilsen",
       (s, d) => graft.operators.Metrics.theilSen(
           typeHourly(s, d).select(col("event_type").as("key"),

@@ -289,27 +289,6 @@ class FuzzSpec extends SparkFunSuite {
     }
   }
 
-  test("RobustStats: 15 random distributions match the sorted-array median") {
-    val rnd = new Random(1007)
-    for (trial <- 1 to 15) {
-      val n = 1 + rnd.nextInt(5000)
-      val shape = rnd.nextInt(4)
-      val xs = Array.fill(n)(shape match {
-        case 0 => rnd.nextDouble() * 1e6 - 5e5          // uniform wide
-        case 1 => rnd.nextGaussian()                    // tight cluster
-        case 2 => math.exp(rnd.nextGaussian() * 5)      // heavy tail
-        case 3 => rnd.nextInt(7).toDouble               // massive ties
-      })
-      val sorted = xs.sorted
-      val want =
-        if (n % 2 == 1) sorted(n / 2)
-        else (sorted(n / 2 - 1) + sorted(n / 2)) / 2.0
-      val got = graft.operators.RobustStats.medianExact(
-        xs.toSeq.toDF("x"), col("x"))
-      assert(got === want, s"trial $trial (n=$n shape=$shape)")
-    }
-  }
-
   test("GraphSim: 10 random graphs match brute-force neighbor-set Jaccard") {
     val rnd = new Random(2029)
     for (trial <- 1 to 10) {

@@ -67,25 +67,6 @@ class R8FuzzSpec extends SparkFunSuite {
     }
   }
 
-  test("weightedQuantileExact: 25 random (data, fraction) match brute") {
-    val rnd = new Random(8)
-    for (trial <- 1 to 25) {
-      val rows = Seq.fill(1 + rnd.nextInt(200))(
-        (rnd.nextInt(50).toDouble / 4.0, 1L + rnd.nextInt(20).toLong))
-      val den = 1L + rnd.nextInt(20)
-      val num = 1L + rnd.nextInt(den.toInt)
-      val (got, tw) = graft.operators.RobustStats.weightedQuantileExact(
-        rows.toDF("v", "w"), col("v"), col("w"), num, den)
-      val sorted = rows.sortBy(_._1)
-      val total = rows.map(_._2).sum
-      val thr = (BigInt(num) * total + den - 1) / den
-      var acc = BigInt(0)
-      val want = sorted.find { case (_, w) => acc += w; acc >= thr }.get._1
-      assert(tw == total && got == want,
-        s"trial $trial p=$num/$den n=${rows.size}")
-    }
-  }
-
   test("exactAuc: 25 random tied-score sets match O(n²) pair counting") {
     val rnd = new Random(8)
     for (trial <- 1 to 25) {
@@ -104,29 +85,6 @@ class R8FuzzSpec extends SparkFunSuite {
         val want = u2.toDouble / (2L * p * n).toDouble
         assert(got === ((p, n, want)), s"trial $trial n=${rows.size}")
       }
-    }
-  }
-
-  test("theilSen: 20 random multi-key series match local pairwise median") {
-    val rnd = new Random(8)
-    for (trial <- 1 to 20) {
-      val series = (0 until 1 + rnd.nextInt(3)).flatMap { k =>
-        val xs = rnd.shuffle((0 until 40).toList).take(2 + rnd.nextInt(18))
-        xs.map(x => (k.toLong, x.toLong, rnd.nextInt(100).toLong))
-      }
-      val got = graft.operators.Metrics.theilSen(series.toDF("key", "x", "y"))
-        .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3))
-        .toMap
-      val want = series.groupBy(_._1).map { case (k, rows) =>
-        val sl = (for {
-          (_, x1, y1) <- rows; (_, x2, y2) <- rows if x2 > x1
-        } yield (y2 - y1).toDouble / (x2 - x1).toDouble).sorted
-        val m =
-          if (sl.size % 2 == 1) sl(sl.size / 2)
-          else (sl(sl.size / 2 - 1) + sl(sl.size / 2)) / 2
-        k -> ((sl.size.toLong, m))
-      }
-      assert(got === want, s"trial $trial")
     }
   }
 

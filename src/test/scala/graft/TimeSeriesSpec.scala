@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Random
+
 import org.apache.spark.sql.functions._
 import graft.operators.TimeSeries
 
@@ -195,5 +197,43 @@ class TimeSeriesSpec extends SparkFunSuite {
       assert(math.abs(sl - exact(k)) < 0.01,
         s"key $k sampled slope $sl vs exact ${exact(k)}")
     }
+  }
+
+  test("theilSen: 20 random multi-key series match local pairwise median") {
+    val rnd = new Random(8)
+    for (trial <- 1 to 20) {
+      val series = (0 until 1 + rnd.nextInt(3)).flatMap { k =>
+        val xs = rnd.shuffle((0 until 40).toList).take(2 + rnd.nextInt(18))
+        xs.map(x => (k.toLong, x.toLong, rnd.nextInt(100).toLong))
+      }
+      val got = graft.operators.Metrics.theilSen(series.toDF("key", "x", "y"))
+        .as[(Long, Long, Double)].collect().map(r => r._1 -> (r._2, r._3))
+        .toMap
+      val want = series.groupBy(_._1).map { case (k, rows) =>
+        val sl = (for {
+          (_, x1, y1) <- rows; (_, x2, y2) <- rows if x2 > x1
+        } yield (y2 - y1).toDouble / (x2 - x1).toDouble).sorted
+        val m =
+          if (sl.size % 2 == 1) sl(sl.size / 2)
+          else (sl(sl.size / 2 - 1) + sl(sl.size / 2)) / 2
+        k -> ((sl.size.toLong, m))
+      }
+      assert(got === want, s"trial $trial")
+    }
+  }
+
+  test("theilSenSampled: an over-2^31 budget is clamped, not overflowed") {
+    // budget * 2^32 would wrap Long for maxPairsPerKey > 2^31-ish —
+    // the clamp keeps the product positive, and any clamped budget is
+    // still >= every real pair count, so the result is the EXACT slope
+    val series = (1 to 12).map(i => ("s", i.toLong, (3 * i + 7).toLong))
+      .toDF("key", "x", "y")
+    val exact = graft.operators.Metrics.theilSen(series)
+      .as[(String, Long, Double)].collect().toSeq
+    val huge = graft.operators.Metrics
+      .theilSenSampled(series, maxPairsPerKey = Long.MaxValue)
+      .as[(String, Long, Double)].collect().toSeq
+    assert(huge === exact)
+    assert(exact.head._3 === 3.0)
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Random
+
 import org.apache.spark.sql.functions._
 
 /** Boundary pins for exact weighted-median selection. The oracle gate
@@ -14,6 +16,7 @@ import org.apache.spark.sql.functions._
   * its driver-slice threshold.
   */
 class WeightedMedianSpec extends SparkFunSuite {
+  import spark.implicits._
 
   private def brute(rows: Seq[(Double, Long)]): Double = {
     val sorted = rows.sortBy(_._1)
@@ -127,5 +130,24 @@ class WeightedMedianSpec extends SparkFunSuite {
     val local = df.as[(Double, Long)].collect().toSeq
     assert(totalW == local.map(_._2).sum)
     assert(got == brute(local))
+  }
+
+  test("weightedQuantileExact: 25 random (data, fraction) match brute") {
+    val rnd = new Random(8)
+    for (trial <- 1 to 25) {
+      val rows = Seq.fill(1 + rnd.nextInt(200))(
+        (rnd.nextInt(50).toDouble / 4.0, 1L + rnd.nextInt(20).toLong))
+      val den = 1L + rnd.nextInt(20)
+      val num = 1L + rnd.nextInt(den.toInt)
+      val (got, tw) = graft.operators.RobustStats.weightedQuantileExact(
+        rows.toDF("v", "w"), col("v"), col("w"), num, den)
+      val sorted = rows.sortBy(_._1)
+      val total = rows.map(_._2).sum
+      val thr = (BigInt(num) * total + den - 1) / den
+      var acc = BigInt(0)
+      val want = sorted.find { case (_, w) => acc += w; acc >= thr }.get._1
+      assert(tw == total && got == want,
+        s"trial $trial p=$num/$den n=${rows.size}")
+    }
   }
 }
