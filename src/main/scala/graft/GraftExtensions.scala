@@ -43,6 +43,8 @@ object GraftExtensions {
     e.eval(null).asInstanceOf[Number].intValue
   private def longLit(e: Expression): Long =
     e.eval(null).asInstanceOf[Number].longValue
+  private def doubleLit(e: Expression): Double =
+    e.eval(null).asInstanceOf[Number].doubleValue
 
   /** name → (args => Expression) for every SQL-exposed kernel. */
   val registrations: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -59,6 +61,10 @@ object GraftExtensions {
     "graft_hyperplane_buckets" -> (a => HyperplaneBuckets(
       a(0), intLit(a(1)), intLit(a(2)), intLit(a(3)), longLit(a(4)))),
     "graft_first_agree" -> (a => FirstAgreeIndex(a(0), a(1))),
+    "graft_grid_quantize" -> (a => GridQuantize(a(0), doubleLit(a(1)))),
+    // the centroid model is a column argument (e.g. a broadcast
+    // one-row aggregate), unlike the matrix-carrying kernels below
+    "graft_nearest_grid_centroid" -> (a => NearestGridCentroid(a(0), a(1))),
     "graft_text_signals" -> (a => TextSignals(a(0))),
     "graft_normalize_alnum" -> (a => NormalizeAlnum(a(0))),
     "graft_repetition_signals" -> (a => RepetitionSignals(a(0))),

@@ -1,8 +1,11 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, RowOrdering, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for embedding math (SURVEY.md §2 [EXT]
@@ -12,7 +15,9 @@ import org.apache.spark.sql.types._
   * lambda call per vector element.
   *
   * Inputs accept both array<float> and array<double>; accumulation is in
-  * double so results are stable against a double-precision oracle.
+  * double so results are stable against a double-precision oracle —
+  * except the integer-grid pair (GridQuantize, NearestGridCentroid),
+  * which is exact in long.
   */
 private object VecUtil {
   /** Read element i of a numeric ArrayData as double. */
@@ -249,6 +254,172 @@ case class NearestCentroid(child: Expression, centers: Array[Array[Float]])
 
   override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
     copy(child = newChild)
+}
+
+/** Integer-grid quantizer: output element i is exactly
+  * `CAST(round(CAST(v[i] AS DOUBLE) * scale) AS BIGINT)` — the snap of
+  * the quantize-then-accumulate family (embed_covar, embed_drift,
+  * class_centroid), whose integer sums are order-free under any
+  * partitioning. Spark's `round(double)` goes through a `BigDecimal`
+  * per value; here |v·scale| < 2^52 rounds HALF_UP (away from zero) on
+  * the exact double, which equals the shortest-decimal rounding there
+  * (a value that is not exactly k + 0.5 has no round-tripping decimal
+  * string at or across k + 0.5), and anything larger, NaN or infinite
+  * takes Spark's own rounding. The bigint cast follows the session's
+  * ANSI setting like `Cast`: NaN, ±Inf and overflow raise CAST_OVERFLOW
+  * with it on and saturate (NaN → 0) with it off. A null element gives
+  * a null element; a null array gives null.
+  */
+case class GridQuantize(child: Expression, scale: Double,
+    ansi: Boolean = SQLConf.get.ansiEnabled)
+    extends UnaryExpression {
+
+  override def dataType: DataType = ArrayType(LongType, containsNull = true)
+  override def prettyName: String = "graft_grid_quantize"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs array<float> or array<double>, got ${t.simpleString}")
+  }
+
+  @transient private lazy val isFloat = VecUtil.isFloatArray(child.dataType)
+
+  def compute(in: ArrayData): ArrayData = {
+    val n = in.numElements()
+    val out = UnsafeArrayData.createFreshArray(n, 8)
+    var i = 0
+    while (i < n) {
+      if (in.isNullAt(i)) out.setNullAt(i)
+      else out.setLong(i,
+        GridQuantize.toGrid(VecUtil.get(in, i, isFloat) * scale, ansi))
+      i += 1
+    }
+    out
+  }
+
+  override def nullSafeEval(input: Any): Any =
+    compute(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("gq", this, classOf[GridQuantize].getName)
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.compute($c);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): GridQuantize =
+    copy(child = newChild)
+}
+
+object GridQuantize {
+  private val Exact = 4503599627370496.0 // 2^52: every double above is an integer
+
+  /** `CAST(round(v) AS BIGINT)` with Spark's semantics. */
+  def toGrid(v: Double, ansi: Boolean): Long = {
+    val a = math.abs(v)
+    val r =
+      if (a < Exact) {
+        val f = math.floor(a) // a - f is exact below 2^52
+        val m = if (a - f >= 0.5) f + 1.0 else f
+        if (v < 0) -m else m
+      } else if (v.isNaN || v.isInfinite) v
+      else BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble
+    if (ansi) Shim.ansiDoubleToLong(r) else r.toLong
+  }
+}
+
+/** Exact nearest centroid on the integer grid: `q` is a quantized
+  * vector (array<bigint>), `model` an array<struct<cand, cv:
+  * array<bigint>>>; returns the `cand` with the smallest Σ(q_i − cv_i)²
+  * over the shared dimensions. Distances are longs, so the argmin is
+  * order-free and exact (overflow fails instead of wrapping). The order
+  * is a window's `dist ASC NULLS FIRST, cand ASC`: a term with a null
+  * side is skipped the way `sum` skips it, a candidate whose every term
+  * is null has a null distance and sorts first, and equal distances go
+  * to the lowest `cand`. Model entries that are null or have a null
+  * `cand` are not candidates; with none left the result is null. The
+  * model is a column, not an instance field, so it rides the plan
+  * (typically one broadcast row) and the expression is SQL-callable.
+  */
+case class NearestGridCentroid(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  @transient private lazy val candType: DataType = right.dataType match {
+    case ArrayType(st: StructType, _) => st.fields(0).dataType
+    case _ => NullType
+  }
+
+  override def dataType: DataType = candType
+  override def nullable: Boolean = true
+  override def prettyName: String = "graft_nearest_grid_centroid"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(LongType, _), ArrayType(StructType(Array(c,
+          StructField(_, ArrayType(LongType, _), _, _))), _))
+          if RowOrdering.isOrderable(c.dataType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName needs (array<bigint>, array<struct<cand, " +
+          s"cv: array<bigint>>>) with an orderable cand, got " +
+          s"(${l.simpleString}, ${r.simpleString})")
+    }
+
+  @transient private lazy val ordering = TypeUtils.getInterpretedOrdering(candType)
+
+  def compute(q: ArrayData, model: ArrayData): Any = {
+    val nq = q.numElements()
+    var best: Any = null
+    var bestNull = false
+    var bestD = 0L
+    var m = 0
+    while (m < model.numElements()) {
+      if (!model.isNullAt(m)) {
+        val e = model.getStruct(m, 2)
+        if (!e.isNullAt(0)) {
+          val cand = e.get(0, candType)
+          var dNull = true
+          var d = 0L
+          if (!e.isNullAt(1)) {
+            val cv = e.getArray(1)
+            val n = math.min(nq, cv.numElements())
+            var i = 0
+            while (i < n) {
+              if (!q.isNullAt(i) && !cv.isNullAt(i)) {
+                val diff = Math.subtractExact(q.getLong(i), cv.getLong(i))
+                d = Math.addExact(d, Math.multiplyExact(diff, diff))
+                dNull = false
+              }
+              i += 1
+            }
+          }
+          val better = best == null || (
+            if (dNull != bestNull) dNull
+            else if (!dNull && d != bestD) d < bestD
+            else ordering.lt(cand, best))
+          if (better) { best = cand; bestNull = dNull; bestD = d }
+        }
+      }
+      m += 1
+    }
+    best
+  }
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("ngc", this, classOf[NearestGridCentroid].getName)
+    val o = ctx.freshName("cand")
+    nullSafeCodeGen(ctx, ev, (l, r) =>
+      s"""Object $o = $ref.compute($l, $r);
+         |if ($o == null) { ${ev.isNull} = true; }
+         |else { ${ev.value} = (${CodeGenerator.boxedType(dataType)}) $o; }
+         |""".stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression,
+      newRight: Expression): NearestGridCentroid =
+    copy(left = newLeft, right = newRight)
 }
 
 /** Product-quantization encode: L2-NORMALIZE the vector (the index

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftshim.Shim
-import graft.expressions.{CosineSim, DotProduct, FirstAgreeIndex, HyperplaneBuckets, RandomProjection}
+import graft.expressions.{CosineSim, DotProduct, FirstAgreeIndex, GridQuantize, HyperplaneBuckets, NearestGridCentroid, RandomProjection}
 
 /** Vector math over `ArrayType` embedding columns, backed by native
   * Catalyst expressions (graft.expressions.VectorExprs): one primitive
@@ -43,4 +43,18 @@ object VecFns {
     */
   def randomProjection(v: Column, dim: Int, outDim: Int, seed: Long): Column =
     Shim.column(RandomProjection(Shim.expression(v), dim, outDim, seed))
+
+  /** Snap every element to the integer grid:
+    * `CAST(round(CAST(x AS DOUBLE) * scale) AS BIGINT)` exactly
+    * (expressions.GridQuantize), array<bigint> out.
+    */
+  def gridQuantize(v: Column, scale: Double): Column =
+    Shim.column(GridQuantize(Shim.expression(v), scale))
+
+  /** The `cand` of `model` (array<struct<cand, cv: array<bigint>>>)
+    * nearest to the quantized vector `q` by exact integer squared
+    * distance; ties to the lowest cand (expressions.NearestGridCentroid).
+    */
+  def nearestGridCentroid(q: Column, model: Column): Column =
+    Shim.column(NearestGridCentroid(Shim.expression(q), Shim.expression(model)))
 }

@@ -2,8 +2,13 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.VecFns
 
-/** Distributed multinomial Naive Bayes document classifier — the
+/** Distributed classifiers: multinomial Naive Bayes over text and
+  * nearest-centroid (Rocchio) over embeddings on an integer grid
+  * (`fitGridCentroids` / `scoreGridCentroids`, documented there).
+  *
+  * Naive Bayes is the document classifier of the
   * fastText/CCNet-style quality- and domain-filter stage of a training
   * -data pipeline (label a small curated set, score the whole corpus,
   * keep what classifies as "high quality").
@@ -131,4 +136,52 @@ object Classify {
       col("n_tok"),
       round(best.getField("score") / col("n_tok"), 4).as("score"))
   }
+
+  /** Nearest-centroid model: `model` is one row with one column `model`
+    * = array<struct<cand, cv: array<bigint>>> (cv in dimension order),
+    * on the integer grid of `scale`; no row when nothing trained.
+    */
+  final case class GridCentroids(scale: Double, model: DataFrame)
+
+  /** Fit nearest-centroid on the integer grid. Each coordinate snaps to
+    * `CAST(round(x * scale) AS BIGINT)` (VecFns.gridQuantize), and each
+    * centroid cell is `CAST(round(Σq / n) AS BIGINT)` over one class's
+    * rows, where n also counts null elements (the count(1) of the
+    * exploded form). The sums are longs, so every cell is the same
+    * integer under any partitioning: the centroid is part of the model
+    * definition, not an approximation. Null class = unlabeled, null
+    * vector = unscorable (r15 null contract); neither trains. The model
+    * is a keyless aggregate (maxRows 1) that stays in the plan: no
+    * driver collect, and building runs no job.
+    */
+  def fitGridCentroids(train: DataFrame, classCol: String, vecCol: String,
+                       scale: Double): GridCentroids = {
+    val cells = train.filter(col(classCol).isNotNull && col(vecCol).isNotNull)
+      .select(col(classCol).as("cand"),
+        posexplode(VecFns.gridQuantize(col(vecCol), scale)).as(Seq("i", "qv")))
+      .groupBy("cand", "i")
+      .agg(round(sum("qv").cast("double") / count(lit(1)).cast("double"))
+        .cast("long").as("c"))
+    GridCentroids(scale, cells.groupBy("cand")
+      .agg(transform(sort_array(collect_list(struct(col("i"), col("c")))),
+        _.getField("c")).as("cv"))
+      .agg(collect_list(struct(col("cand"), col("cv"))).as("model"))
+      .filter(size(col("model")) > 0))
+  }
+
+  /** Score `docs`: adds `pred`, the class whose centroid is nearest
+    * by exact integer squared distance over the shared dimensions (null
+    * terms skipped, all-null distances first, ties to the lowest class —
+    * VecFns.nearestGridCentroid). One narrow projection over `docs`
+    * against the broadcast model row: no explode, no shuffle, no
+    * window. Null vectors are unscorable and drop; an empty model
+    * scores nothing.
+    */
+  def scoreGridCentroids(docs: DataFrame, model: GridCentroids,
+                         vecCol: String): DataFrame =
+    docs.filter(col(vecCol).isNotNull)
+      .crossJoin(broadcast(model.model.select(col("model").as("__gc_model"))))
+      .withColumn("pred", VecFns.nearestGridCentroid(
+        VecFns.gridQuantize(col(vecCol), model.scale), col("__gc_model")))
+      .drop("__gc_model")
 }

@@ -547,43 +547,26 @@ object CorpusQ {
     // order-free INTEGER sum of squares (≤ 2^50: 64 dims × (2^22)²)
     // and the argmin with label-asc tie-break cannot flip on a float
     // ulp — a double distance would make near-ties
-    // partition-order-dependent. Centroids broadcast (labels × dims
-    // rows); one vec-keyed aggregate + vec-partitioned rank pick.
+    // partition-order-dependent. The model is one keyless-aggregate
+    // row broadcast to the odd half, which is scored row-locally in
+    // one codegen'd projection (Classify.scoreGridCentroids: the grid
+    // quantizer feeding the exact nearest-centroid kernel), so nothing
+    // explodes, fans out by label or shuffles before the confusion-
+    // matrix count. vec_id is the table key: the oracle's per-vec_id
+    // pick is the per-row pick.
     Q("class_centroid",
       (s, d) => {
-        import org.apache.spark.sql.expressions.Window
+        import graft.operators.Classify
         // r15 null contract (classifier family, same as class_nb /
         // cluster_kmeans): null label = unlabeled (no training row,
         // no confusion-matrix row), null embedding = unscorable
-        // r17: NOT staged — the exploded frame feeds exactly two
-        // passes (centroid aggregate, scoring join), and re-running
-        // the cheap scan+quantize+explode twice beats writing a
-        // 64x-corpus staged copy and reading it back twice (the
-        // centroid_coords stage write was the query's largest stage
-        // cost; the quantized values are integers, so both passes
-        // agree bit-for-bit by value, not by pinning)
-        val q = t(s, d, "embeddings")
+        val e = t(s, d, "embeddings")
           .filter(col("label").isNotNull && col("embedding").isNotNull)
-          .select(col("vec_id"), col("label"), explode(expr(
-            "transform(sequence(1, 64), i -> struct(i AS i, " +
-              "CAST(round(CAST(element_at(embedding, i) AS DOUBLE) " +
-              "* 2097152.0) AS BIGINT) AS qv))")).as("e"))
-          .select(col("vec_id"), col("label"),
-            col("e.i").as("i"), col("e.qv").as("qv"))
-        val tr = q.filter(col("vec_id") % 2 === 0)
-          .groupBy(col("label").as("cand"), col("i"))
-          .agg(expr("CAST(round(CAST(sum(qv) AS DOUBLE) " +
-            "/ CAST(count(1) AS DOUBLE)) AS BIGINT)").as("c"))
-        val ds = q.filter(col("vec_id") % 2 === 1)
-          .withColumnRenamed("label", "true_label")
-          .join(broadcast(tr), Seq("i"))
-          .groupBy("vec_id", "true_label", "cand")
-          .agg(sum((col("qv") - col("c")) * (col("qv") - col("c")))
-            .as("dist"))
-        val w = Window.partitionBy("vec_id")
-          .orderBy(col("dist"), col("cand"))
-        ds.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .groupBy(col("true_label"), col("cand").as("pred"))
+        val model = Classify.fitGridCentroids(e.filter(col("vec_id") % 2 === 0),
+          "label", "embedding", scale = 2097152.0)
+        Classify.scoreGridCentroids(e.filter(col("vec_id") % 2 === 1),
+            model, "embedding")
+          .groupBy(col("label").as("true_label"), col("pred"))
           .agg(count(lit(1)).as("n"))
       },
       Some("""WITH q AS (SELECT vec_id, label, g.i AS i,
@@ -623,12 +606,15 @@ object CorpusQ {
     // exactly, so the differing fold inits agree bit-for-bit).
     Q("embed_drift",
       (s, d) => {
+        // the embedding quantizes once per row; the 64 rows per vector
+        // stay (a null embedding still yields 64 null-qv rows that
+        // count in n, as in the oracle — posexplode would drop them)
         val q = t(s, d, "embeddings")
-          .select(col("vec_id"), col("label"),
-            (col("vec_id") % 2).as("half"), explode(expr(
+          .select((col("vec_id") % 2).as("half"), col("label"),
+            VecFns.gridQuantize(col("embedding"), 2097152.0).as("qa"))
+          .select(col("half"), col("label"), explode(expr(
               "transform(sequence(1, 64), i -> struct(i AS i, " +
-                "CAST(round(CAST(element_at(embedding, i) AS DOUBLE) " +
-                "* 2097152.0) AS BIGINT) AS qv))")).as("e"))
+                "element_at(qa, i) AS qv))")).as("e"))
           .select(col("half"), col("label"),
             col("e.i").as("i"), col("e.qv").as("qv"))
         val cent = q.groupBy("half", "label", "i")
@@ -688,14 +674,17 @@ object CorpusQ {
     // by labels × 36 cells.
     Q("embed_covar",
       (s, d) => {
-        // staged: the self-join consumes this frame TWICE (class_centroid
-        // discipline — without it both branches rescan + re-explode)
+        // staged: the self-join consumes this frame TWICE (without it
+        // both branches rescan + re-explode). Dims 1-8 quantize once per
+        // row; a null embedding still yields 8 null-qv rows that count
+        // in n, as in the oracle (posexplode would drop them)
         val q = graft.operators.Stage.materialize(
           t(s, d, "embeddings").filter(col("label") < 3)
+            .select(col("vec_id"), col("label"), VecFns.gridQuantize(
+              slice(col("embedding"), 1, 8), 2097152.0).as("qa"))
             .select(col("vec_id"), col("label"), explode(expr(
               "transform(sequence(1, 8), i -> struct(i AS i, " +
-                "CAST(round(CAST(element_at(embedding, i) AS DOUBLE) " +
-                "* 2097152.0) AS BIGINT) AS qv))")).as("e"))
+                "element_at(qa, i) AS qv))")).as("e"))
             .select(col("vec_id"), col("label"),
               col("e.i").as("i"), col("e.qv").as("qv")),
           "covar_coords")

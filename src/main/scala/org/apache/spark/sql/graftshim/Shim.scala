@@ -33,6 +33,13 @@ object Shim {
     case _ => (c, false, true)
   }
 
+  /** `CAST(d AS BIGINT)` under ANSI: CAST_OVERFLOW on NaN, ±Inf or a
+    * value outside the long range (`DoubleExactNumeric` is
+    * `private[sql]`).
+    */
+  def ansiDoubleToLong(d: Double): Long =
+    org.apache.spark.sql.types.DoubleExactNumeric.toLong(d)
+
   /** Register a temp SQL function on an EXISTING session (the
     * config-driven `spark.sql.extensions` path only applies at session
     * construction; `sessionState` is likewise `private[sql]`).

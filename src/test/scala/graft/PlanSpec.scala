@@ -366,4 +366,36 @@ class PlanSpec extends SparkFunSuite {
     assert(exchanges <= 2,
       s"as-of carry re-shuffling ($exchanges exchanges)")
   }
+
+  test("class_centroid: the scored half is one narrow projection — no " +
+       "Generate, no Window, model broadcast") {
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val p: SparkPlan =
+      SparkEntry.queries("class_centroid")(spark, sfDir)
+        .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan // with exchanges
+        case other => other
+      }
+    assert(p.collect { case w: WindowExec => w }.isEmpty,
+      "a per-vector rank window is back:\n" + p)
+    val joins = p.collect { case j: BroadcastNestedLoopJoinExec => j }
+    assert(joins.size == 1, "expected one broadcast model join:\n" + p)
+    val j = joins.head
+    assert(j.right.isInstanceOf[BroadcastExchangeExec],
+      "the model row is not the broadcast side:\n" + p)
+    // the scored half: scan → filter, nothing exploded or shuffled
+    val scored = j.left
+    assert(scored.collect { case g: GenerateExec => g }.isEmpty &&
+      scored.collect { case e: Exchange => e }.isEmpty,
+      "the scored half explodes or shuffles before the kernel:\n" + p)
+    // the kernel runs in the projection right above the join
+    assert(p.collect { case n if n.children.contains(j) => n }
+      .exists(_.expressions.exists(_.toString.contains(
+        "graft_nearest_grid_centroid"))),
+      "nearest-centroid kernel not in the projection over the join:\n" + p)
+  }
 }

@@ -67,4 +67,22 @@ class SqlFunctionsSpec extends SparkFunSuite {
     // x=011, y=101 -> interleaved (y2 x2 y1 x1 y0 x0) = 100111b = 39
     assert(z === 39L)
   }
+
+  test("grid quantizer and nearest-grid-centroid kernel from SQL") {
+    GraftExtensions.register(spark)
+    val r = spark.sql(
+      """SELECT
+        graft_grid_quantize(array(0.5F, -0.5F, 1.25F, CAST(NULL AS FLOAT)),
+          2.0D) AS q,
+        graft_nearest_grid_centroid(
+          graft_grid_quantize(array(0.5D, 0.5D), 2.0D),
+          array(named_struct('cand', 7, 'cv', array(0L, 0L)),
+                named_struct('cand', 3, 'cv', array(2L, 2L)),
+                named_struct('cand', 5, 'cv', array(5L, 5L)))) AS pred
+      """).head()
+    // ×2 then HALF_UP away from zero: 1, -1, 2.5 → 3, null stays null
+    assert(r.getSeq[java.lang.Long](0) === Seq(1L, -1L, 3L, null))
+    // q = (1, 1): distances 2, 2, 32 — the tie goes to the lower cand
+    assert(r.getInt(1) === 3)
+  }
 }
