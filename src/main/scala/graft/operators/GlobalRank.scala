@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit,
+  Sample, Sort}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
@@ -50,9 +52,10 @@ import org.apache.spark.sql.types.{BooleanType, DateType, NumericType,
   * monotone embedding into DOUBLE (numeric, date, timestamp, boolean)
   * AND a deterministic input lineage — the fast path re-evaluates the
   * input per pass, so a non-deterministic source (rand()-derived
-  * columns, samples, monotonically_increasing_id) could disagree
-  * between passes; such lineages are detected and routed to the staged
-  * fallback, which pins the frame once and is immune.
+  * columns, samples, unordered limits, monotonically_increasing_id)
+  * could disagree between passes; such lineages are detected and
+  * routed to the staged fallback, which pins the frame once and is
+  * immune.
   * Anything else (string/binary/struct leads) falls back to the
   * pinned-partition-id form: range-shuffle, stage the frame once
   * ([[Stage.materialize]] — boundaries come from sampling, so ids must
@@ -359,13 +362,15 @@ object GlobalRank {
     embedKey(df, sortCols.head) match {
       // determinism gate (r18, advisor item): the bucketed fast path
       // evaluates the input lineage up to three times (boundary sample,
-      // counts, ranking) — a non-deterministic input (rand(), sample,
-      // monotonically_increasing_id, order-dependent first()) could
-      // disagree across those passes and silently duplicate/skip ranks.
-      // The staged fallback pins the frame once and is immune, so
-      // non-deterministic lineage routes there. Every registered caller
-      // is deterministic (PlanGuardSpec bans the rand() family
-      // repo-wide), so this is a latent-hazard gate, not a plan change.
+      // counts, ranking) — a non-deterministic input (the rand()
+      // family, monotonically_increasing_id, a Sample node, a limit over
+      // unordered rows) could disagree across those passes and silently
+      // duplicate/skip ranks. The staged fallback pins the frame once
+      // and is immune, so such lineage routes there. Not caught: an
+      // order-dependent first()/last(), which Catalyst marks
+      // deterministic. Every registered caller is deterministic
+      // (PlanGuardSpec bans the rand() family repo-wide), so this is a
+      // latent-hazard gate, not a plan change.
       case Some(key) if deterministicLineage(df) =>
         rankedBucketed(df, sortCols, key, rankCol, p, value, totalCol,
           needCount)
@@ -374,14 +379,21 @@ object GlobalRank {
     }
   }
 
-  /** Does every expression in `df`'s analyzed plan claim determinism?
-    * (Catalyst's `Expression.deterministic` already folds children, so
-    * a single sweep over node expressions suffices.)
+  /** Would every evaluation of `df`'s analyzed plan yield the same
+    * rows? One sweep over the nodes: any expression that does not claim
+    * determinism (Catalyst's `Expression.deterministic` already folds
+    * children), any `Sample` node (the rows drawn depend on the input's
+    * partitioning and order, which a re-run may not reproduce), and any
+    * `GlobalLimit` not directly over a global `Sort` (which n rows it
+    * keeps depends on task completion order).
     */
   private def deterministicLineage(df: DataFrame): Boolean =
-    df.queryExecution.analyzed
-      .find(p => p.expressions.exists(e => !e.deterministic))
-      .isEmpty
+    df.queryExecution.analyzed.find {
+      case _: Sample => true
+      case GlobalLimit(_, LocalLimit(_, s: Sort)) if s.global => false
+      case _: GlobalLimit => true
+      case p => p.expressions.exists(e => !e.deterministic)
+    }.isEmpty
 
   /** Monotone DOUBLE embedding of the leading sort key, pre-negated
     * for descending order so downstream bucketing is always

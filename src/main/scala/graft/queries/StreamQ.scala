@@ -72,8 +72,9 @@ object StreamQ {
       |    ON grid.user_id = hourly.user_id AND grid.hs = hourly.hs)""".stripMargin
 
   /** Dense per-type hourly count series (event_type, hb, v) — silent
-    * hours participate as zeros (from driver-bounded min/max scalars,
-    * the ts_cross_corr convention). Staged once per (session, sf-dir)
+    * hours participate as zeros (each type crossed with a broadcast
+    * one-row (lo, hi) span and exploded over sequence(lo, hi), no
+    * driver action). Staged once per (session, sf-dir)
     * and shared by ts_decompose / ts_theilsen (the plantedDocs
     * discipline: two consumers must not rebuild the grid per
     * invocation). The matching oracle prefix is [[typeHourlySql]].
@@ -345,36 +346,40 @@ object StreamQ {
     // ts_cross_corr [EXT, new r8]: lagged cross-correlation between
     // the view and purchase HOURLY series at lags 0–3 — "does view
     // traffic lead purchase traffic, and by how many hours?", the
-    // standard leading-indicator screen. The hourly grid is DENSE
-    // (driver-bounded min/max scalars → spark.range), so silent-hour
-    // zeros participate instead of being dropped; the lag alignment is
-    // a self-JOIN on hb + lag after an explode over the lag list —
-    // never a single-partition window over the global series (the
-    // PlanGuard rule holds even when the series is small). Counts are
-    // exact integers; corr rounds at 4 per the agg_corr convention.
+    // standard leading-indicator screen. One lazy plan, one events
+    // scan: partial-aggregated hourly (vc, pc) counts fold into ONE
+    // keyless-aggregate row (lo, hi, hb → (vc, pc) map, one entry per
+    // event hour); each lag explodes the DENSE grid sequence(lo,
+    // hi − lag) off that row and looks both series up in the map, so
+    // silent hours count as zeros. Not a grid join + self-join over a
+    // lazy hourly frame: column pruning gives each consumer its own
+    // aggregate, exchange reuse misses, and events is scanned per
+    // consumer. Never a single-partition window over the global series
+    // (the PlanGuard rule). No event with a ts → null span → no rows,
+    // as in the oracle. Counts are exact integers; corr rounds at 4 per
+    // the agg_corr convention.
     Q("ts_cross_corr",
       (s, d) => {
-        val e = graft.operators.Stage.materialize(
-          t(s, d, "events")
-            .select(expr("unix_micros(ts) div 3600000000").as("hb"),
-              col("event_type")),
-          "xcorr_hours")
-        val bounds = e.agg(min("hb"), max("hb")).head()
-        val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-        val grid = s.range(lo, hi + 1).select(col("id").as("hb"))
-        def cnt(tpe: String, as: String) =
-          e.filter(col("event_type") === tpe)
-            .groupBy("hb").agg(count(lit(1)).as(as))
-        val series = grid
-          .join(cnt("view", "vc"), Seq("hb"), "left")
-          .join(cnt("purchase", "pc"), Seq("hb"), "left")
-          .select(col("hb"), coalesce(col("vc"), lit(0L)).as("vc"),
-            coalesce(col("pc"), lit(0L)).as("pc"))
-        val a = series.withColumn("lag",
-            explode(array((0 to 3).map(lit): _*)))
-          .select(col("hb"), col("vc"), col("lag"))
-        val b = series.select(col("hb").as("hb2"), col("pc"))
-        a.join(b, col("hb2") === col("hb") + col("lag"))
+        val hourly = t(s, d, "events")
+          .select(expr("unix_micros(ts) div 3600000000").as("hb"),
+            col("event_type"))
+          .filter(col("hb").isNotNull)
+          .groupBy("hb")
+          .agg(count(when(col("event_type") === "view", 1)).as("vc"),
+            count(when(col("event_type") === "purchase", 1)).as("pc"))
+        val series = hourly.agg(min("hb").as("lo"), max("hb").as("hi"),
+          map_from_entries(collect_list(struct(col("hb"),
+            struct(col("vc"), col("pc"))))).as("m"))
+        val m = col("m")
+        series
+          .withColumn("lag", explode(array((0 to 3).map(lit): _*)))
+          .filter(col("hi") - col("lag") >= col("lo"))
+          .select(col("lag"), m,
+            explode(sequence(col("lo"), col("hi") - col("lag"))).as("h"))
+          .select(col("lag"),
+            coalesce(m(col("h")).getField("vc"), lit(0L)).as("vc"),
+            coalesce(m(col("h") + col("lag")).getField("pc"), lit(0L))
+              .as("pc"))
           .groupBy("lag")
           .agg(count(lit(1)).as("n"),
             round(corr(col("vc").cast("double"),
@@ -1207,11 +1212,11 @@ object StreamQ {
     // lags {1,2,3,6,12,24} per type series — the diagnostic that picks
     // model structure (tall lag-24 spike → daily seasonality, slow
     // decay → trend, nothing → white noise) and the multi-lag
-    // completion of ts_autocorr's single lag-1 point. Alignment is a
-    // self-join on hb+lag after an explode over the lag list (the
-    // ts_cross_corr convention — never a global-series window), off
-    // the shared staged grid; integer counts, corr at the 4-decimal
-    // convention.
+    // completion of ts_autocorr's single lag-1 point. Alignment is an
+    // equi self-join on (event_type, hb + lag) after an explode over
+    // the lag list, off the shared staged grid — the join keys keep
+    // every type's series partitioned, never one global-series window;
+    // integer counts, corr at the 4-decimal convention.
     Q("ts_acf_profile",
       (s, d) => {
         val g = typeHourly(s, d)

@@ -310,4 +310,28 @@ class GlobalRankSpec extends SparkFunSuite {
         df.withColumn("__gr_pid", lit(1)), Seq(col("id")), col("v"))
     }
   }
+
+  test("sampled or unordered-limit lineage takes the staged fallback") {
+    // the bucketed path evaluates its input up to three times; a Sample
+    // node or a limit over unordered rows may keep different rows on
+    // each pass, so both route to the staged fallback, which pins the
+    // frame once. A limit over a global sort keeps the fast path.
+    def staged(df: org.apache.spark.sql.DataFrame): Boolean = {
+      val got = GlobalRank.withGlobalRank(df, Seq(col("k"), col("id")), "r",
+        numPartitions = 4)
+      // whichever rows were pinned, their ranks are exactly 1..n
+      val r = got.select(col("r")).collect().map(_.getLong(0)).sorted
+      assert(r.toSeq === (1L to r.length.toLong))
+      got.queryExecution.executedPlan.toString.toLowerCase
+        .contains("graft_stage")
+    }
+    val df = data(400).repartition(3)
+    assert(staged(df.sample(0.5, seed = 7)), "sample took the fast path")
+    assert(staged(df.limit(100)), "unordered limit took the fast path")
+    assert(staged(df.select(col("id"), (col("k") + rand(3)).as("k"))),
+      "rand() took the fast path")
+    assert(!staged(df.orderBy(col("id")).limit(100)),
+      "a limit over a global sort left the fast path")
+    assert(!staged(df), "deterministic lineage left the fast path")
+  }
 }

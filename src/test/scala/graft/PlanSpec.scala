@@ -398,4 +398,51 @@ class PlanSpec extends SparkFunSuite {
         "graft_nearest_grid_centroid"))),
       "nearest-centroid kernel not in the projection over the join:\n" + p)
   }
+
+  // `f`'s result and the Spark jobs it submitted (from this thread and
+  // the futures it starts)
+  private def withJobCount[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.jobs") == tag))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.spec.jobs", tag)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, n.get)
+    } finally {
+      sc.setLocalProperty("graft.spec.jobs", null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  test("ts_cross_corr: one events scan; build runs no job beyond the schema read") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    graft.operators.Stage.drainTimings()
+    val (df, buildJobs) =
+      withJobCount(SparkEntry.queries("ts_cross_corr")(spark, sfDir))
+    val staged = graft.operators.Stage.drainTimings()
+    assert(staged.isEmpty, s"the build wrote stages: $staged")
+    val (_, schemaJobs) =
+      withJobCount(graft.queries.t(spark, sfDir, "events"))
+    assert(buildJobs === schemaJobs,
+      "the build runs jobs beyond the events schema read (a bounds " +
+        "collect or a stage write is back)")
+    val p = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val scans = p.collect { case f: FileSourceScanExec => f }
+    assert(scans.size === 1 && scans.head.relation.location.rootPaths
+      .forall(_.toString.endsWith("events.parquet")),
+      "expected exactly one events scan and no stage scan:\n" + p)
+  }
 }

@@ -236,4 +236,97 @@ class TimeSeriesSpec extends SparkFunSuite {
     assert(huge === exact)
     assert(exact.head._3 === 3.0)
   }
+
+  // ts_cross_corr over a small written events table: (lag, n, xcorr)
+  // rows by lag, xcorr None for SQL NULL
+  private def crossCorr(
+      rows: Seq[(Option[Long], Option[String])]): Map[Int, (Long, Option[Double])] = {
+    val dir = java.nio.file.Files.createTempDirectory("xcorr").toString
+    rows.map { case (h, tpe) =>
+      (h.map(x => new java.sql.Timestamp(x * 3600000L + 1234567L)).orNull,
+        tpe.orNull)
+    }.toDF("ts", "event_type")
+      .write.parquet(s"$dir/events.parquet")
+    SparkEntry.queries("ts_cross_corr")(spark, dir)
+      .select(col("lag"), col("n"), col("xcorr"))
+      .as[(Int, Long, Option[Double])].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+  }
+
+  // the dense-grid definition, brute force: every hour in [lo, hi]
+  // counts (silent hours are zeros); lag l pairs view(h) with
+  // purchase(h + l) for h in [lo, hi − l]; corr is NULL at n = 1;
+  // round(_, 4) is HALF_UP
+  private def denseCrossCorr(
+      rows: Seq[(Option[Long], Option[String])]): Map[Int, (Long, Option[Double])] = {
+    val hbs = rows.flatMap(_._1)
+    if (hbs.isEmpty) Map.empty
+    else {
+      val (lo, hi) = (hbs.min, hbs.max)
+      def cnt(tpe: String)(h: Long) =
+        rows.count(r => r._1.contains(h) && r._2.contains(tpe)).toDouble
+      (0 to 3).filter(l => hi - l >= lo).map { l =>
+        val hs = lo to hi - l
+        val (x, y) = (hs.map(cnt("view")), hs.map(h => cnt("purchase")(h + l)))
+        val n = hs.size
+        val r =
+          if (n == 1) None
+          else {
+            val (mx, my) = (x.sum / n, y.sum / n)
+            val sxy = x.zip(y).map { case (a, b) => (a - mx) * (b - my) }.sum
+            val sxx = x.map(a => (a - mx) * (a - mx)).sum
+            val syy = y.map(b => (b - my) * (b - my)).sum
+            Some(BigDecimal(sxy / math.sqrt(sxx * syy))
+              .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
+          }
+        l -> ((n.toLong, r))
+      }.toMap
+    }
+  }
+
+  private def assertCrossCorr(
+      rows: Seq[(Option[Long], Option[String])], clue: String): Unit = {
+    val (got, want) = (crossCorr(rows), denseCrossCorr(rows))
+    assert(got.keySet === want.keySet, clue)
+    for ((l, (n, r)) <- want) {
+      val (gn, gr) = got(l)
+      assert(gn === n, s"$clue lag $l")
+      // the two sides sum in different orders; allow one rounding step
+      assert((gr, r) match {
+        case (None, None) => true
+        case (Some(a), Some(b)) => math.abs(a - b) <= 1.0001e-4
+        case _ => false
+      }, s"$clue lag $l: got $gr want $r")
+    }
+  }
+
+  test("ts_cross_corr matches a brute-force dense-grid correlation") {
+    val base = 473000L // an hour index in 2023
+    val rnd = new Random(17)
+    val types = Seq(Some("view"), Some("purchase"), Some("click"), None)
+    // 41-hour span with silent hours (most hours ≢ 0 mod 3 have no
+    // events), plus null-ts rows and null / other event types
+    val spread = (0 until 400).map { _ =>
+      val h = rnd.nextInt(14) * 3 + (if (rnd.nextInt(5) == 0) 1 else 0)
+      (Some(base + h), types(rnd.nextInt(types.size)))
+    } ++ Seq((None, Some("view")), (None, Some("purchase")), (None, None))
+    assert(denseCrossCorr(spread).size === 4)
+    assertCrossCorr(spread, "silent hours, nulls, other types")
+    // 2-hour span: lags 2 and 3 have no pairs and give no row
+    val short = Seq(base, base, base, base + 1, base + 1, base + 1, base)
+      .zip(Seq("view", "view", "purchase", "view", "purchase", "purchase",
+        "click"))
+      .map { case (h, t) => (Some(h), Some(t)) }
+    assert(crossCorr(short).keySet === Set(0, 1))
+    assertCrossCorr(short, "2-hour span")
+    // 1-hour span: lag 0 alone, one pair, NULL correlation
+    val one = Seq((Some(base), Some("view")), (Some(base), Some("click")))
+    assert(crossCorr(one) === Map(0 -> ((1L, None))))
+  }
+
+  test("ts_cross_corr: empty events and all-null ts give no rows") {
+    assert(crossCorr(Nil).isEmpty)
+    assert(crossCorr(Seq((None, Some("view")), (None, Some("purchase"))))
+      .isEmpty)
+  }
 }
