@@ -90,6 +90,10 @@ object Bench {
     // query index at which canaries(i) was taken (segment boundaries)
     val canaryAt = scala.collection.mutable.ArrayBuffer(0)
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    // why each failed query failed (its first failure): exception class
+    // and the first line of its message, for bench_full.json
+    val failures =
+      scala.collection.mutable.LinkedHashMap.empty[String, (String, String)]
     // per-query Stage.materialize write seconds (summed per tag across
     // reps, divided by reps → per-rep stage cost): turns the next
     // "same code, N× slower" bench round into a one-look diagnosis
@@ -104,7 +108,11 @@ object Bench {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() }
-        catch { case _: Throwable => failed += name }
+        catch { case scala.util.control.NonFatal(e) =>
+          failed += name
+          failures.getOrElseUpdate(name, (e.getClass.getName,
+            String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")))
+        }
         (System.nanoTime() - t0) / 1e9
       }.sorted
       val st = graft.operators.Stage.drainTimings()
@@ -147,6 +155,11 @@ object Bench {
       .mkString("{", ",", "}")
     val minJson = results.map { case (k, _, m) => s"\"$k\":${r4(m)}" }
       .mkString("{", ",", "}")
+    def jsonStr(v: String): String = "\"" + new String(
+      com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(v)) + "\""
+    val failuresJson = failures.map { case (q, (cls, msg)) =>
+      s"${jsonStr(q)}:{\"class\":${jsonStr(cls)},\"message\":${jsonStr(msg)}}"
+    }.mkString("{", ",", "}")
     val stagesJson = stageCost.map { case (q, tags) =>
       s"\"$q\":" + tags.map { case (t, v) => s"\"$t\":${r4(v)}" }
         .mkString("{", ",", "}")
@@ -164,7 +177,7 @@ object Bench {
         Some(s"""{"from":"${sortedQs(from)._1}","to":"${sortedQs(until - 1)._1}","index":${r2(idx)}}""")
       }
     }.mkString("[", ",", "]")
-    val fullLine = s"""{"metric":"total","value":${r4(total)},"unit":"sec","reps":$reps,$canaryFields,"failed":$errJson,"queries":$fullJson,"queries_min":$minJson,"stages":$stagesJson,"segments":$segmentsJson,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${r4(total)},"unit":"sec","reps":$reps,$canaryFields,"failed":$errJson,"failures":$failuresJson,"queries":$fullJson,"queries_min":$minJson,"stages":$stagesJson,"segments":$segmentsJson,"sf":"$sfDir"}"""
     try {
       var root = new java.io.File(sys.props.getOrElse("user.dir", ".")).getAbsoluteFile
       while (root != null && !new java.io.File(root, "build.sbt").exists())

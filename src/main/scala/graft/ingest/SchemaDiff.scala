@@ -1,8 +1,14 @@
 package graft.ingest
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, NullType, StringType, StructField, StructType}
 
 /** Schema-introspection operators — the reference's signature capability
   * (SURVEY.md §2.8): reify a StructType into data, diff two schemas, diff
@@ -47,37 +53,132 @@ object SchemaDiff {
       when(size(col("r")) > 0, col("r")).as("removed_cols"))
   }
 
-  /** Row-count drift for one matched pair (`assess_changes.qmd:145-147`). */
-  def rowDiff(oldDf: DataFrame, newDf: DataFrame): (Long, Long, Long) = {
-    val (o, n) = (oldDf.count(), newDf.count())
-    (o, n, n - o)
+  /** The CSV options [[pairCompare]] reads with unless told otherwise. */
+  val DefaultCsvOptions: Map[String, String] =
+    Map("header" -> "true", "inferSchema" -> "true")
+
+  /** Schema and row count of every CSV file in `paths`: what a per-file
+    * `spark.read.options(csvOptions).csv(path)` gives as `.schema` and
+    * `.count()`, in one Spark job for all files instead of a header job,
+    * an inference job and a count job per file.
+    *
+    * Each file's first non-empty, non-comment line is read on the driver
+    * (`CSVUtils.readHeaderLine`). One line read of every file carries
+    * `_metadata.file_path`; each task folds the lines of each file it
+    * holds into a line count and Spark's `CSVInferSchema.inferRowType`
+    * row types, skipping lines equal to the file's header in the fold as
+    * Spark's inference does (`CSVUtils.filterHeaderLine`). The driver
+    * merges a file's partial results with `mergeRowTypes` (a file split
+    * across tasks sums the same), then names the columns with
+    * `makeSafeHeader` and types them with `toStructFields`. A file has
+    * its non-empty, non-comment lines as rows, less its header. A file
+    * with no such line profiles as no columns and 0 rows, where the
+    * per-file read fails for want of a schema.
+    *
+    * Line-based by construction: `multiLine=true`, a non-UTF-8
+    * `encoding` and a `samplingRatio` below 1 are refused by name.
+    */
+  def csvProfiles(spark: SparkSession, paths: Seq[String],
+      csvOptions: Map[String, String]): Map[String, (StructType, Long)] = {
+    import spark.implicits._
+    val opts = new CSVOptions(csvOptions, columnPruning = true,
+      defaultTimeZoneId = spark.conf.get("spark.sql.session.timeZone"))
+    require(!opts.multiLine,
+      "csvProfiles reads CSV line by line: multiLine=true is not supported")
+    require(java.nio.charset.Charset.forName(opts.charset) == UTF_8,
+      s"csvProfiles reads UTF-8 lines: encoding=${opts.charset} is not supported")
+    require(opts.samplingRatio == 1.0, "csvProfiles folds every line: " +
+      s"samplingRatio=${opts.samplingRatio} is not supported")
+    if (paths.isEmpty) return Map.empty
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = paths.distinct.map { p =>
+      val path = new Path(p)
+      p -> path.getFileSystem(conf).makeQualified(path)
+    }
+    val headers: Map[Path, String] = files.flatMap { case (_, q) =>
+      CSVUtils.readHeaderLine(q, opts, conf).map(q -> _)
+    }.toMap
+    def tokens(line: String) = new CsvParser(opts.asParserSettings).parseLine(line)
+    val width = headers.map { case (q, h) => q -> tokens(h).length }
+    val infer = new CSVInferSchema(opts)
+    // Read in groups the file index lists on the driver: a read of more
+    // root paths than the discovery threshold lists them in a Spark job.
+    val group =
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    val text = files.map(_._2.toString).grouped(group).map { g =>
+      spark.read.options(opts.lineSeparator.map("lineSep" -> _).toMap).text(g: _*)
+        .select(col("_metadata.file_path"), col("value"))
+    }.reduce(_ union _)
+    // one (file, lines, row types) per file per task; the rows of one
+    // file are contiguous within a task
+    val partial = text.as[(String, String)]
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        val parser = new CsvParser(opts.asParserSettings)
+        Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+          val fp = it.head._1
+          val file = new Path(new java.net.URI(fp))
+          val run = new Iterator[String] {
+            def hasNext: Boolean = it.hasNext && it.head._1 == fp
+            def next(): String = it.next()._2
+          }
+          var n = 0L
+          var types = Array.fill[DataType](width.getOrElse(file, 0))(NullType)
+          CSVUtils.filterHeaderLine(
+            CSVUtils.filterCommentAndEmpty(run, opts).map { l => n += 1; l },
+            headers.getOrElse(file, ""), opts)
+            .foreach { l =>
+              if (opts.inferSchemaFlag)
+                types = infer.inferRowType(types, parser.parseLine(l))
+            }
+          (file.toString, n, types.map(_.json).toSeq)
+        }
+      }.collect()
+    val byFile = partial.groupBy(_._1).map { case (f, xs) =>
+      f -> (xs.map(_._2).sum,
+        xs.map(_._3.map(DataType.fromJson).toArray).reduce(infer.mergeRowTypes))
+    }
+    val caseSensitive = spark.conf.get("spark.sql.caseSensitive").toBoolean
+    files.map { case (p, q) =>
+      p -> (headers.get(q) match {
+        case None => (new StructType(), 0L)
+        case Some(h) =>
+          val names = CSVUtils.makeSafeHeader(tokens(h), caseSensitive, opts)
+          val (lines, types) = byFile(q.toString)
+          val fields =
+            if (opts.inferSchemaFlag) infer.toStructFields(types, names)
+            else names.map(StructField(_, StringType))
+          (StructType(fields), if (opts.headerFlag) lines - 1 else lines)
+      })
+    }.toMap
   }
 
-  /** Per-pair compare orchestration (`pair_compare`,
-    * `assess_changes.qmd:127-179`): a driver loop over matched (old, new)
-    * path pairs — metadata-scale by design (the loop iterates file pairs,
-    * each iteration launches distributed reads; no data is collected).
-    * `readFn` opens a path as a DataFrame (csv/parquet/...).
-    *
-    * Schema drift is computed directly on the driver-side StructTypes —
-    * schemas are metadata already resident on the driver, so round 2's
-    * three filter+collect Spark jobs per pair were pure overhead. The
-    * only cluster work per pair is the two row counts.
+  /** Per-pair compare (`pair_compare`, `assess_changes.qmd:127-179`):
+    * row counts and column drift of each matched (std_name, old path,
+    * new path). Every CSV file of every pair is profiled in one pass
+    * ([[csvProfiles]], read with `csvOptions`); each `.xlsx` file is read
+    * on its own as the reference's `read_xlsx(skip = 1)` (`:132,138`).
+    * Schema drift is computed on the driver-side StructTypes.
     */
   def pairCompare(spark: SparkSession, pairs: Seq[(String, String, String)],
-                  readFn: String => DataFrame): DataFrame = {
+                  csvOptions: Map[String, String] = DefaultCsvOptions): DataFrame = {
     import spark.implicits._
+    val (xlsx, csv) = pairs.flatMap(p => Seq(p._2, p._3)).distinct
+      .partition(_.toLowerCase.endsWith(".xlsx"))
+    val profiles = csvProfiles(spark, csv, csvOptions) ++ xlsx.map { p =>
+      val df = graft.sources.Xlsx.read(spark, p, skip = 1)
+      p -> (df.schema, df.count())
+    }
     val rows = pairs.map { case (stdName, oldPath, newPath) =>
-      val (oldDf, newDf) = (readFn(oldPath), readFn(newPath))
-      val (oc, nc, delta) = rowDiff(oldDf, newDf)
+      val ((oldS, oc), (newS, nc)) = (profiles(oldPath), profiles(newPath))
       def types(s: StructType) =
         s.fields.map(f => f.name -> f.dataType.simpleString).toMap
-      val (o, n) = (types(oldDf.schema), types(newDf.schema))
+      val (o, n) = (types(oldS), types(newS))
       val added = (n.keySet -- o.keySet).toArray.sorted
       val removed = (o.keySet -- n.keySet).toArray.sorted
       val typeChanged = o.keySet.intersect(n.keySet)
         .filter(c => o(c) != n(c)).toArray.sorted
-      (stdName, oc, nc, delta,
+      (stdName, oc, nc, nc - oc,
         if (added.isEmpty) null else added,
         if (removed.isEmpty) null else removed,
         if (typeChanged.isEmpty) null else typeChanged)

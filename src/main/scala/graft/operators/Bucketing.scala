@@ -14,8 +14,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Bucketing {
 
-  /** Write `df` as a bucketed managed table (sorted within buckets, so
-    * merge joins skip the per-partition sort too). Drops any previous
+  /** Write `df` as a bucketed managed table, sorted within each bucket
+    * file. The sort does not spare a merge join its own sort: a bucket
+    * may hold several files, so under Spark's default
+    * `spark.sql.legacy.bucketedTableScan.outputOrdering=false` a bucketed
+    * scan reports no output ordering and the plan sorts above both
+    * scans; only the shuffle is saved. Drops any previous
     * incarnation AND its warehouse location first — a location left by
     * an earlier session isn't in the new session's catalog, and
     * saveAsTable refuses to overwrite an unregistered directory

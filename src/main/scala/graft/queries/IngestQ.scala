@@ -61,7 +61,7 @@ object IngestQ {
     */
   private def changelogLines(s: org.apache.spark.sql.SparkSession): Seq[String] =
     // rendered ONCE per session (prunedCache convention): the fixture
-    // writes + four inferSchema CSV reads + a fresh tracked scratch dir
+    // writes + the assess pipeline's jobs + a fresh tracked scratch dir
     // otherwise repeat on every gate rep of BOTH report sinks, and the
     // gated time measures fixture setup instead of the render
     changelogCache.getOrFit(s, "-", renderChangelog(s))
@@ -82,10 +82,8 @@ object IngestQ {
       "z\n0\n")
     java.nio.file.Files.writeString(newD.resolve("Born_V202401.csv"),
       "q\n9\n")
-    def read(p: String) = s.read.option("header", "true")
-      .option("inferSchema", "true").csv(p)
     val (fd, pc) = graft.ingest.Pipelines.assessChanges(s,
-      oldD.toString, newD.toString, read)
+      oldD.toString, newD.toString)
     val cs = Seq(("country", "added", "CHL"),
       ("species", "removed", "herring"))
       .toDF("entity", "direction", "value")
@@ -1046,7 +1044,7 @@ object IngestQ {
             .write.mode("overwrite").partitionBy("lang").parquet(p)
           p
         })
-        s.read.parquet(out)
+        parquet(s, out)
           .filter(col("lang") === "en")
           .groupBy("source")
           .agg(count(lit(1)).as("n"), sum("n_chars").as("chars"))
@@ -1162,9 +1160,9 @@ object IngestQ {
     // branch: `trade` drifts rows AND columns, `mix` drifts a column TYPE
     // (int→string) with a row loss, `notes` matches by std_name but
     // mismatches extensions (must be excluded), and `gone`/`born` are
-    // unmatched (excluded by the non-null-pair filter). Driver-side
-    // per-pair reads are metadata-scale by design — one read per matched
-    // FILE, not per record (the reference reads each pair the same way).
+    // unmatched (excluded by the non-null-pair filter). Every matched
+    // CSV file is profiled (header, inferred types, row count) in one
+    // Spark job however many pairs match (`SchemaDiff.csvProfiles`).
     // Oracle: DuckDB replays the composite relationally over the REIFIED
     // manifests — join on std_name + extension gate, per-column
     // anti-join set diffs, ordered string_agg — rather than hashing a
@@ -1192,10 +1190,8 @@ object IngestQ {
           "z\n0\n")
         java.nio.file.Files.writeString(newD.resolve("Born_V202401.csv"),
           "q\n9\n")
-        def read(p: String) = s.read.option("header", "true")
-          .option("inferSchema", "true").csv(p)
         val (_, pc) = graft.ingest.Pipelines.assessChanges(s,
-          oldD.toString, newD.toString, read)
+          oldD.toString, newD.toString)
         // arrays → sorted comma-joined strings (null stays null) so the
         // cross-engine compare is a plain varchar
         def joined(c: String) =

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.GraftFooters
+import org.apache.spark.sql.types.StructType
 
 package object queries {
 
@@ -16,6 +18,10 @@ package object queries {
 
   /** Read one driver table from a scale-factor directory.
     *
+    * The schema comes from the parquet footer, read on the driver
+    * ([[parquet]]), so building a query over driver tables runs no
+    * Spark job.
+    *
     * `events.parquet` has shipped with two different physical types for
     * `ts` across test-data generations: parquet INT64 TIMESTAMP(MICROS)
     * (reads natively as a timestamp) and INT64 TIMESTAMP(NANOS) (which
@@ -29,13 +35,13 @@ package object queries {
     * naming what was found, so a future data-contract drift surfaces as
     * one clear message instead of 22 downstream analysis errors.
     */
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
     if (name == "events") {
       import org.apache.spark.sql.functions.{expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-      val path = s"$dir/$name.parquet"
       val raw =
-        try spark.read.parquet(path)
+        try parquet(spark, path)
         catch {
           // TIMESTAMP(NANOS) footer without the legacy flag: enable the
           // flag (needed at execution time too, so it must stay set for
@@ -44,7 +50,7 @@ package object queries {
               if e.getMessage.contains("PARQUET_TYPE_ILLEGAL") ||
                 e.getMessage.toLowerCase.contains("nanos") =>
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            spark.read.parquet(path)
+            parquet(spark, path)
         }
       raw.schema("ts").dataType match {
         case TimestampType => raw
@@ -62,7 +68,48 @@ package object queries {
               "(TIMESTAMP(NANOS) data under nanosAsLong). Update " +
               "graft.queries.t for the new data contract.")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else parquet(spark, path)
+  }
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema is read from the footer(s) on the driver ([[parquetSchema]])
+    * and handed to the reader. With no footer to read (a missing path,
+    * an empty directory) Spark's own read raises its error.
+    */
+  private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
+    parquetSchema(spark, path) match {
+      case Some(s) => spark.read.schema(s).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The schema `spark.read.parquet(path)` infers, from the footers
+    * Spark's inference (`ParquetUtils.inferSchema`) touches: a summary
+    * file if there is one, else the first data file by path; every file
+    * when `spark.sql.parquet.mergeSchema` is on. `path` is a file or
+    * a writer directory, listed the way Spark's file index lists it.
+    * `None` when there is no footer to read.
+    */
+  private[graft] def parquetSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => GraftFooters.hidden(c.getPath.getName)).flatMap(leaves)
+    val files =
+      if (fs.exists(root)) leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+      else Nil
+    def named(n: String) = files.filter(_.getPath.getName == n)
+    val (common, meta) = (named(PARQUET_COMMON_METADATA_FILE), named(PARQUET_METADATA_FILE))
+    val data = files.diff(common ++ meta)
+    GraftFooters.schema(spark,
+      if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean)
+        data ++ meta ++ common
+      else (common ++ meta ++ data).take(1))
+  }
 
   /** Create a local scratch directory that is TRACKED for shutdown-hook
     * deletion (the [[graft.operators.Stage]] lifecycle). Every query

@@ -332,11 +332,12 @@ object Xlsx {
       .load(path)
       .select("path", "content")
       .as[(String, Array[Byte])]
-    // schema peek: first file only, driver-side — through the Hadoop
+    // schema peek: first file only, driver-side — its path from the
+    // file index's listing (no Spark job), its bytes through the Hadoop
     // FileSystem API so the same code reads file:, hdfs: and s3a: URIs
     // (java.nio Path.of(URI) only resolves file: and would throw
     // FileSystemNotFoundException on the cluster deployment shape)
-    val firstPath = files.select("path").as[String].orderBy("path").head()
+    val firstPath = files.inputFiles.min
     val hp = new org.apache.hadoop.fs.Path(java.net.URI.create(firstPath))
     val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(hp)

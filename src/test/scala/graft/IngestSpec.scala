@@ -124,11 +124,10 @@ class IngestSpec extends SparkFunSuite {
 
   test("pairCompare produces per-pair drift rows without collecting data") {
     val (oldD, newD) = mkFixture()
-    def read(p: String) = spark.read.option("header", "true")
-      .option("inferSchema", "true").csv(p)
     val r = SchemaDiff.pairCompare(spark, Seq(
       ("trade", oldD.resolve("filtered_Trade_V202301a.csv").toString,
-        newD.resolve("filtered_Trade_V202401b.csv").toString)), read)
+        newD.resolve("filtered_Trade_V202401b.csv").toString)),
+      Map("header" -> "true", "inferSchema" -> "true"))
       .as[(String, Long, Long, Long, Option[Seq[String]], Option[Seq[String]], Option[Seq[String]])]
       .head()
     assert(r._1 === "trade" && r._2 === 2L && r._3 === 3L && r._4 === 1L)

@@ -76,10 +76,8 @@ class PipelinesSpec extends SparkFunSuite {
     Files.writeString(oldD.resolve("Trade_V202301.csv"), "a,b\n1,2\n")
     Files.writeString(newD.resolve("Trade_V202401.csv"), "a,c\n1,x\n2,y\n")
     Files.writeString(oldD.resolve("Gone_V202301.csv"), "z\n0\n")
-    def read(p: String) = spark.read.option("header", "true")
-      .option("inferSchema", "true").csv(p)
     val (fd, pc) = Pipelines.assessChanges(spark, oldD.toString,
-      newD.toString, read)
+      newD.toString, Map("header" -> "true", "inferSchema" -> "true"))
     val files = fd.select("std_name", "exists_in_old", "exists_in_new")
       .as[(String, Boolean, Boolean)].collect().toSet
     assert(files === Set(("trade", true, true), ("gone", true, false)))
@@ -87,6 +85,25 @@ class PipelinesSpec extends SparkFunSuite {
       Option[Seq[String]], Option[Seq[String]])].head()
     assert(pair._1 === "trade" && pair._4 === 1L)
     assert(pair._5 === Some(Seq("c")) && pair._6 === Some(Seq("b")))
+  }
+
+  test("EP2 assessChanges: a matched .xlsx pair is read as a workbook, not as CSV") {
+    val root = Files.createTempDirectory("ep2x")
+    val oldD = root.resolve("old"); val newD = root.resolve("new")
+    Files.createDirectories(oldD); Files.createDirectories(newD)
+    // read_xlsx(skip = 1): a title row above the header
+    sources.Xlsx.write(oldD.resolve("Fish_V202301.xlsx"),
+      Seq(Seq("FAO fish"), Seq("a", "b"), Seq("1", "x"), Seq("2", "y")))
+    sources.Xlsx.write(newD.resolve("Fish_V202401.xlsx"),
+      Seq(Seq("FAO fish"), Seq("a", "c"), Seq("1", "p"), Seq("2", "q"),
+        Seq("3", "r")))
+    Files.writeString(oldD.resolve("Trade_V202301.csv"), "a,b\n1,2\n")
+    Files.writeString(newD.resolve("Trade_V202401.csv"), "a,b\n1,2\n3,4\n")
+    val (_, pc) = Pipelines.assessChanges(spark, oldD.toString, newD.toString)
+    val rows = pc.as[(String, Long, Long, Long, Option[Seq[String]],
+      Option[Seq[String]], Option[Seq[String]])].collect().map(r => r._1 -> r).toMap
+    assert(rows("fish") === (("fish", 2L, 3L, 1L, Some(Seq("c")), Some(Seq("b")), None)))
+    assert(rows("trade") === (("trade", 1L, 2L, 1L, None, None, None)))
   }
 
   test("sink_report: markdown changelog over the EP2+EP3 frames") {
@@ -97,10 +114,8 @@ class PipelinesSpec extends SparkFunSuite {
     Files.writeString(newD.resolve("Trade_V202401.csv"), "a,c\n1,x\n2,y\n")
     Files.writeString(oldD.resolve("Gone_V202301.csv"), "z\n0\n")
     Files.writeString(newD.resolve("Born_V202401.csv"), "q\n9\n")
-    def read(p: String) = spark.read.option("header", "true")
-      .option("inferSchema", "true").csv(p)
     val (fd, pc) = Pipelines.assessChanges(spark, oldD.toString,
-      newD.toString, read)
+      newD.toString, Map("header" -> "true", "inferSchema" -> "true"))
     val cs = Seq(("country", "added", "CHL"), ("species", "removed", "x"))
       .toDF("entity", "direction", "value")
     val md = ingest.Report.changelog(fd, pc, cs)

@@ -399,30 +399,6 @@ class PlanSpec extends SparkFunSuite {
       "nearest-centroid kernel not in the projection over the join:\n" + p)
   }
 
-  // `f`'s result and the Spark jobs it submitted (from this thread and
-  // the futures it starts)
-  private def withJobCount[T](f: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.spec.jobs") == tag))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty("graft.spec.jobs", tag)
-    try {
-      val out = f
-      org.apache.spark.ListenerBusDrain(sc)
-      (out, n.get)
-    } finally {
-      sc.setLocalProperty("graft.spec.jobs", null)
-      sc.removeSparkListener(l)
-    }
-  }
-
   test("ts_cross_corr: one events scan; build runs no job beyond the schema read") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

@@ -26,4 +26,28 @@ object SparkSpec {
 abstract class SparkFunSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.Sf0001
+
+  // `f`'s result and the Spark jobs it submitted (from this thread and
+  // the futures it starts)
+  def withJobCount[T](f: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.jobs") == tag))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty("graft.spec.jobs", tag)
+    try {
+      val out = f
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, n.get)
+    } finally {
+      sc.setLocalProperty("graft.spec.jobs", null)
+      sc.removeSparkListener(l)
+    }
+  }
 }
