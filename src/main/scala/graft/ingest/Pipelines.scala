@@ -77,12 +77,11 @@ object Pipelines {
   /** EP2 — the changelog report (`assess_changes.qmd:47-188`): manifest
     * both version trees, file-level drift, then per-matched-pair row/
     * schema drift for pairs whose extensions agree (csv-csv or
-    * xlsx-xlsx, `:120-122`). CSV files are read with `csvOptions`
-    * ([[SchemaDiff.pairCompare]]). Returns (file_diff, pair_report).
+    * xlsx-xlsx, `:120-122`), through [[SchemaDiff.pairCompare]].
+    * Returns (file_diff, pair_report).
     */
-  def assessChanges(spark: SparkSession, oldDir: String, newDir: String,
-                    csvOptions: Map[String, String] = SchemaDiff.DefaultCsvOptions)
-      : (DataFrame, DataFrame) = {
+  def assessChanges(spark: SparkSession, oldDir: String,
+                    newDir: String): (DataFrame, DataFrame) = {
     val o = FileManifest.list(spark, oldDir, "old")
     val n = FileManifest.list(spark, newDir, "new")
     val fileDiff = FileManifest.fileDiff(o, n)
@@ -96,7 +95,7 @@ object Pipelines {
       .select("std_name", "old_path", "new_path")
       .collect() // metadata-scale: one row per matched FILE, not per record
       .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
-    (fileDiff, SchemaDiff.pairCompare(spark, pairs, csvOptions))
+    (fileDiff, SchemaDiff.pairCompare(spark, pairs))
   }
 
   /** EP3 — the country/species diff (`assess_changes.qmd:265-353`):

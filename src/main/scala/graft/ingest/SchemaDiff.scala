@@ -1,14 +1,12 @@
 package graft.ingest
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, NullType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
 /** Schema-introspection operators — the reference's signature capability
   * (SURVEY.md §2.8): reify a StructType into data, diff two schemas, diff
@@ -53,16 +51,13 @@ object SchemaDiff {
       when(size(col("r")) > 0, col("r")).as("removed_cols"))
   }
 
-  /** The CSV options [[pairCompare]] reads with unless told otherwise. */
-  val DefaultCsvOptions: Map[String, String] =
-    Map("header" -> "true", "inferSchema" -> "true")
-
   /** Schema and row count of every CSV file in `paths`: what a per-file
-    * `spark.read.options(csvOptions).csv(path)` gives as `.schema` and
-    * `.count()`, in one Spark job for all files instead of a header job,
-    * an inference job and a count job per file.
+    * `spark.read.option("header", "true").option("inferSchema", "true")
+    * .csv(path)` gives as `.schema` and `.count()`, in one Spark job for
+    * all files instead of a header job, an inference job and a count job
+    * per file.
     *
-    * Each file's first non-empty, non-comment line is read on the driver
+    * Each file's first non-empty line is read on the driver
     * (`CSVUtils.readHeaderLine`). One line read of every file carries
     * `_metadata.file_path`; each task folds the lines of each file it
     * holds into a line count and Spark's `CSVInferSchema.inferRowType`
@@ -71,25 +66,16 @@ object SchemaDiff {
     * merges a file's partial results with `mergeRowTypes` (a file split
     * across tasks sums the same), then names the columns with
     * `makeSafeHeader` and types them with `toStructFields`. A file has
-    * its non-empty, non-comment lines as rows, less its header. A file
-    * with no such line profiles as no columns and 0 rows, where the
-    * per-file read fails for want of a schema.
-    *
-    * Line-based by construction: `multiLine=true`, a non-UTF-8
-    * `encoding` and a `samplingRatio` below 1 are refused by name.
+    * its non-empty lines as rows, less its header. A file with no such
+    * line profiles as no columns and 0 rows, where the per-file read
+    * fails for want of a schema.
     */
-  def csvProfiles(spark: SparkSession, paths: Seq[String],
-      csvOptions: Map[String, String]): Map[String, (StructType, Long)] = {
+  def csvProfiles(spark: SparkSession,
+      paths: Seq[String]): Map[String, (StructType, Long)] = {
     import spark.implicits._
-    val opts = new CSVOptions(csvOptions, columnPruning = true,
-      defaultTimeZoneId = spark.conf.get("spark.sql.session.timeZone"))
-    require(!opts.multiLine,
-      "csvProfiles reads CSV line by line: multiLine=true is not supported")
-    require(java.nio.charset.Charset.forName(opts.charset) == UTF_8,
-      s"csvProfiles reads UTF-8 lines: encoding=${opts.charset} is not supported")
-    require(opts.samplingRatio == 1.0, "csvProfiles folds every line: " +
-      s"samplingRatio=${opts.samplingRatio} is not supported")
     if (paths.isEmpty) return Map.empty
+    val opts = new CSVOptions(Map("header" -> "true", "inferSchema" -> "true"),
+      columnPruning = true, defaultTimeZoneId = spark.conf.get("spark.sql.session.timeZone"))
     val conf = spark.sparkContext.hadoopConfiguration
     val files = paths.distinct.map { p =>
       val path = new Path(p)
@@ -106,8 +92,7 @@ object SchemaDiff {
     val group =
       spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
     val text = files.map(_._2.toString).grouped(group).map { g =>
-      spark.read.options(opts.lineSeparator.map("lineSep" -> _).toMap).text(g: _*)
-        .select(col("_metadata.file_path"), col("value"))
+      spark.read.text(g: _*).select(col("_metadata.file_path"), col("value"))
     }.reduce(_ union _)
     // one (file, lines, row types) per file per task; the rows of one
     // file are contiguous within a task
@@ -127,10 +112,7 @@ object SchemaDiff {
           CSVUtils.filterHeaderLine(
             CSVUtils.filterCommentAndEmpty(run, opts).map { l => n += 1; l },
             headers.getOrElse(file, ""), opts)
-            .foreach { l =>
-              if (opts.inferSchemaFlag)
-                types = infer.inferRowType(types, parser.parseLine(l))
-            }
+            .foreach(l => types = infer.inferRowType(types, parser.parseLine(l)))
           (file.toString, n, types.map(_.json).toSeq)
         }
       }.collect()
@@ -145,10 +127,7 @@ object SchemaDiff {
         case Some(h) =>
           val names = CSVUtils.makeSafeHeader(tokens(h), caseSensitive, opts)
           val (lines, types) = byFile(q.toString)
-          val fields =
-            if (opts.inferSchemaFlag) infer.toStructFields(types, names)
-            else names.map(StructField(_, StringType))
-          (StructType(fields), if (opts.headerFlag) lines - 1 else lines)
+          (StructType(infer.toStructFields(types, names)), lines - 1)
       })
     }.toMap
   }
@@ -156,16 +135,15 @@ object SchemaDiff {
   /** Per-pair compare (`pair_compare`, `assess_changes.qmd:127-179`):
     * row counts and column drift of each matched (std_name, old path,
     * new path). Every CSV file of every pair is profiled in one pass
-    * ([[csvProfiles]], read with `csvOptions`); each `.xlsx` file is read
+    * ([[csvProfiles]], header and inferred types); each `.xlsx` file is read
     * on its own as the reference's `read_xlsx(skip = 1)` (`:132,138`).
     * Schema drift is computed on the driver-side StructTypes.
     */
-  def pairCompare(spark: SparkSession, pairs: Seq[(String, String, String)],
-                  csvOptions: Map[String, String] = DefaultCsvOptions): DataFrame = {
+  def pairCompare(spark: SparkSession, pairs: Seq[(String, String, String)]): DataFrame = {
     import spark.implicits._
     val (xlsx, csv) = pairs.flatMap(p => Seq(p._2, p._3)).distinct
       .partition(_.toLowerCase.endsWith(".xlsx"))
-    val profiles = csvProfiles(spark, csv, csvOptions) ++ xlsx.map { p =>
+    val profiles = csvProfiles(spark, csv) ++ xlsx.map { p =>
       val df = graft.sources.Xlsx.read(spark, p, skip = 1)
       p -> (df.schema, df.count())
     }

@@ -73,8 +73,9 @@ package object queries {
 
   /** `spark.read.parquet(path)` without its schema-inference job: the
     * schema is read from the footer(s) on the driver ([[parquetSchema]])
-    * and handed to the reader. With no footer to read (a missing path,
-    * an empty directory) Spark's own read raises its error.
+    * and handed to the reader. Where [[parquetSchema]] gives none (a
+    * missing path, an empty directory, a tree too large to list on the
+    * driver) it is Spark's own read, with its inference and its errors.
     */
   private[graft] def parquet(spark: SparkSession, path: String): DataFrame =
     parquetSchema(spark, path) match {
@@ -84,31 +85,55 @@ package object queries {
 
   /** The schema `spark.read.parquet(path)` infers, from the footers
     * Spark's inference (`ParquetUtils.inferSchema`) touches: a summary
-    * file if there is one, else the first data file by path; every file
-    * when `spark.sql.parquet.mergeSchema` is on. `path` is a file or
-    * a writer directory, listed the way Spark's file index lists it.
-    * `None` when there is no footer to read.
+    * file if there is one, else the first data file by path. Under
+    * `spark.sql.parquet.mergeSchema`, every summary file and, unless
+    * `spark.sql.parquet.respectSummaryFiles` is on, every data file.
+    * `path` is a file or a directory, listed the way Spark's file index
+    * lists it. `None` when there is no footer to read, and when the tree
+    * holds more directories than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`: a large
+    * partitioned table is then listed once, by Spark's own read (which
+    * spreads a wide listing over a job), not also here one directory at a
+    * time.
     */
   private[graft] def parquetSchema(spark: SparkSession,
       path: String): Option[StructType] = {
     import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+    def flag(key: String) = spark.conf.get(key).toBoolean
+    val limit =
+      spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def leaves(st: FileStatus): Seq[FileStatus] =
-      if (!st.isDirectory) Seq(st)
-      else fs.listStatus(st.getPath).toSeq
-        .filterNot(c => GraftFooters.hidden(c.getPath.getName)).flatMap(leaves)
-    val files =
-      if (fs.exists(root)) leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
-      else Nil
-    def named(n: String) = files.filter(_.getPath.getName == n)
-    val (common, meta) = (named(PARQUET_COMMON_METADATA_FILE), named(PARQUET_METADATA_FILE))
-    val data = files.diff(common ++ meta)
-    GraftFooters.schema(spark,
-      if (spark.conf.get("spark.sql.parquet.mergeSchema").toBoolean)
-        data ++ meta ++ common
-      else (common ++ meta ++ data).take(1))
+    // breadth first, one listStatus per directory, up to `limit` of them
+    @scala.annotation.tailrec
+    def walk(dirs: Seq[Path], files: Seq[FileStatus],
+        listed: Int): Option[Seq[FileStatus]] =
+      if (dirs.isEmpty) Some(files)
+      else if (listed + dirs.size > limit) None
+      else {
+        val (sub, leaf) = dirs.flatMap(fs.listStatus(_).toSeq)
+          .filterNot(c => GraftFooters.hidden(c.getPath.getName))
+          .partition(_.isDirectory)
+        walk(sub.map(_.getPath), files ++ leaf, listed + dirs.size)
+      }
+    val listing =
+      if (!fs.exists(root)) None
+      else {
+        val st = fs.getFileStatus(root)
+        if (st.isDirectory) walk(Seq(root), Nil, 0) else Some(Seq(st))
+      }
+    listing.flatMap { found =>
+      val files = found.sortBy(_.getPath.toString)
+      def named(n: String) = files.filter(_.getPath.getName == n)
+      val (common, meta) =
+        (named(PARQUET_COMMON_METADATA_FILE), named(PARQUET_METADATA_FILE))
+      val data = files.diff(common ++ meta)
+      GraftFooters.schema(spark,
+        if (!flag("spark.sql.parquet.mergeSchema")) (common ++ meta ++ data).take(1)
+        else if (flag("spark.sql.parquet.respectSummaryFiles")) meta ++ common
+        else data ++ meta ++ common)
+    }
   }
 
   /** Create a local scratch directory that is TRACKED for shutdown-hook

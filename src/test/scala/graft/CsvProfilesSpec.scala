@@ -8,7 +8,8 @@ import graft.ingest.{Pipelines, SchemaDiff}
 import org.apache.spark.sql.types.StructType
 
 /** `SchemaDiff.csvProfiles` against what it replaces: a per-file
-  * `spark.read.options(o).csv(path)` read, its `.schema` and `.count()`.
+  * `header`+`inferSchema` `spark.read.csv(path)` read, its `.schema` and
+  * `.count()`.
   * The generated version tree covers quoted fields holding the
   * separator, empty and whitespace lines, header-only files, a data line
   * equal to its header, duplicate and empty header names, type drift
@@ -77,9 +78,11 @@ class CsvProfilesSpec extends SparkFunSuite {
     }
   }
 
-  private def perFileReads(paths: Seq[String], opts: Map[String, String]) =
+  private val headerInfer = Map("header" -> "true", "inferSchema" -> "true")
+
+  private def perFileReads(paths: Seq[String]) =
     paths.map { p =>
-      val df = spark.read.options(opts).csv(p)
+      val df = spark.read.options(headerInfer).csv(p)
       p -> (df.schema, df.count())
     }.toMap
 
@@ -96,9 +99,8 @@ class CsvProfilesSpec extends SparkFunSuite {
     val pairs = tree(Files.createTempDirectory("graft_csvp"), 50, 11)
     val paths = pairs.flatMap(p => Seq(p._2, p._3))
     withConf(splitFiles: _*) {
-      val opts = SchemaDiff.DefaultCsvOptions
-      val got = SchemaDiff.csvProfiles(spark, paths, opts)
-      val want = perFileReads(paths, opts)
+      val got = SchemaDiff.csvProfiles(spark, paths)
+      val want = perFileReads(paths)
       val diffs = paths.filter(p => got(p) != want(p))
         .map(p => s"$p:\n  profile ${got(p)}\n  read    ${want(p)}")
       assert(diffs.isEmpty, diffs.mkString("\n"))
@@ -110,28 +112,6 @@ class CsvProfilesSpec extends SparkFunSuite {
     }
   }
 
-  test("other CSV options: comment lines, no header, no inference") {
-    val root = Files.createTempDirectory("graft_csvo")
-    val pairs = tree(root, 6, 5)
-    val commented = root.resolve("commented.csv")
-    Files.writeString(commented, "# note\nk,v\n1,2\n# 3,4\n\n5,x\n")
-    val paths = pairs.flatMap(p => Seq(p._2, p._3)) :+ commented.toString
-    Seq(
-      Map("header" -> "true", "inferSchema" -> "true", "comment" -> "#"),
-      Map("header" -> "false", "inferSchema" -> "true"),
-      Map("header" -> "true"),
-      Map("header" -> "true", "inferSchema" -> "true", "sep" -> ";")
-    ).foreach { opts =>
-      // default split size: when leading comment lines push a header out
-      // of a file's first read split, Spark's reader counts that header
-      // as a data row (the profile does not), so a split read is no
-      // baseline here
-      val got = SchemaDiff.csvProfiles(spark, paths, opts)
-      val want = perFileReads(paths, opts)
-      paths.foreach(p => assert(got(p) === want(p), s"$opts $p"))
-    }
-  }
-
   test("a tab-only line before the header: the profile takes the header Spark's reader takes") {
     // Spark's schema inference picks the first line whose SQL trim (spaces
     // only) is non-empty, so it names one column after "\t"; its reader
@@ -140,23 +120,12 @@ class CsvProfilesSpec extends SparkFunSuite {
     val f = Files.createTempFile("graft_csvt", ".csv")
     Files.writeString(f, "\t\nk,v\n1,2\n3,x\n")
     val (schema, rows) =
-      SchemaDiff.csvProfiles(spark, Seq(f.toString), SchemaDiff.DefaultCsvOptions)(f.toString)
+      SchemaDiff.csvProfiles(spark, Seq(f.toString))(f.toString)
     assert(schema.map(f => f.name -> f.dataType.simpleString) ===
       Seq("k" -> "int", "v" -> "string"))
-    val read = spark.read.options(SchemaDiff.DefaultCsvOptions).csv(f.toString)
+    val read = spark.read.options(headerInfer).csv(f.toString)
     assert(rows === 2L && read.count() === 2L)
     assert(read.schema.fieldNames.toSeq === Seq("\t"))
-  }
-
-  test("options a line pass cannot honour fail by name") {
-    val f = Files.createTempFile("graft_csvx", ".csv")
-    Files.writeString(f, "a\n1\n")
-    Seq("multiLine" -> "true", "encoding" -> "UTF-16", "samplingRatio" -> "0.5")
-      .foreach { case (k, v) =>
-        val e = intercept[IllegalArgumentException](
-          SchemaDiff.csvProfiles(spark, Seq(f.toString), Map(k -> v)))
-        assert(e.getMessage.contains(s"$k=") , e.getMessage)
-      }
   }
 
   test("assessChanges: the pair report equals per-file reads; jobs do not grow with pairs") {
@@ -169,8 +138,7 @@ class CsvProfilesSpec extends SparkFunSuite {
     val (_, jobs5) = withJobCount(assess(five))
     val (pc, jobs50) = withJobCount(assess(fifty))
     assert(jobs5 === jobs50, s"build jobs: $jobs5 at 5 pairs, $jobs50 at 50")
-    val want = perFileReads(pairs.flatMap(p => Seq(p._2, p._3)),
-      SchemaDiff.DefaultCsvOptions)
+    val want = perFileReads(pairs.flatMap(p => Seq(p._2, p._3)))
     def types(s: StructType) = s.fields.map(f => f.name -> f.dataType.simpleString).toMap
     val expected = pairs.map { case (std, o, n) =>
       val ((os, oc), (ns, nc)) = (want(o), want(n))

@@ -104,6 +104,44 @@ class DataContractSpec extends SparkFunSuite {
     } finally spark.conf.unset("spark.sql.parquet.mergeSchema")
   }
 
+  test("footer schema follows spark.sql.parquet.respectSummaryFiles") {
+    import spark.implicits._
+    val p = java.nio.file.Files.createTempDirectory("graft_summary").resolve("t").toString
+    // summary files hold (k, x); a later data file without them adds y
+    Seq((1, "a")).toDF("k", "x").write
+      .option("parquet.summary.metadata.level", "ALL").parquet(p)
+    Seq((2, "b", 2.5)).toDF("k", "x", "y").write.mode("append").parquet(p)
+    assert(java.nio.file.Files.exists(java.nio.file.Path.of(p, "_common_metadata")))
+    def fields = {
+      val got = queries.parquet(spark, p).schema
+      assert(got === spark.read.parquet(p).schema)
+      got.fieldNames.toSeq
+    }
+    assert(fields === Seq("k", "x"))
+    val keys = Seq("spark.sql.parquet.mergeSchema", "spark.sql.parquet.respectSummaryFiles")
+    try {
+      spark.conf.set(keys(0), "true")
+      assert(fields === Seq("k", "x", "y"))
+      spark.conf.set(keys(1), "true")
+      assert(fields === Seq("k", "x"))
+    } finally keys.foreach(spark.conf.unset)
+  }
+
+  test("a tree of more directories than the discovery threshold is left to Spark's read") {
+    import spark.implicits._
+    val p = java.nio.file.Files.createTempDirectory("graft_wide").resolve("t").toString
+    Seq((1, "a"), (2, "b"), (3, "c")).toDF("k", "part").write.partitionBy("part").parquet(p)
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    // the root and its three partition directories
+    assert(queries.parquetSchema(spark, p).isDefined)
+    spark.conf.set(key, "3")
+    try {
+      assert(queries.parquetSchema(spark, p) === None)
+      assert(queries.parquet(spark, p).schema === spark.read.parquet(p).schema)
+      assert(queries.parquet(spark, p).count() === 3L)
+    } finally spark.conf.unset(key)
+  }
+
   test("building over a driver table runs no Spark job") {
     val jobs = tables.map(n => n -> withJobCount(queries.t(spark, sfDir, n))._2)
     assert(jobs.forall(_._2 == 0), s"schema reads ran jobs: $jobs")

@@ -126,8 +126,7 @@ class IngestSpec extends SparkFunSuite {
     val (oldD, newD) = mkFixture()
     val r = SchemaDiff.pairCompare(spark, Seq(
       ("trade", oldD.resolve("filtered_Trade_V202301a.csv").toString,
-        newD.resolve("filtered_Trade_V202401b.csv").toString)),
-      Map("header" -> "true", "inferSchema" -> "true"))
+        newD.resolve("filtered_Trade_V202401b.csv").toString)))
       .as[(String, Long, Long, Long, Option[Seq[String]], Option[Seq[String]], Option[Seq[String]])]
       .head()
     assert(r._1 === "trade" && r._2 === 2L && r._3 === 3L && r._4 === 1L)

@@ -77,7 +77,7 @@ class PipelinesSpec extends SparkFunSuite {
     Files.writeString(newD.resolve("Trade_V202401.csv"), "a,c\n1,x\n2,y\n")
     Files.writeString(oldD.resolve("Gone_V202301.csv"), "z\n0\n")
     val (fd, pc) = Pipelines.assessChanges(spark, oldD.toString,
-      newD.toString, Map("header" -> "true", "inferSchema" -> "true"))
+      newD.toString)
     val files = fd.select("std_name", "exists_in_old", "exists_in_new")
       .as[(String, Boolean, Boolean)].collect().toSet
     assert(files === Set(("trade", true, true), ("gone", true, false)))
@@ -115,7 +115,7 @@ class PipelinesSpec extends SparkFunSuite {
     Files.writeString(oldD.resolve("Gone_V202301.csv"), "z\n0\n")
     Files.writeString(newD.resolve("Born_V202401.csv"), "q\n9\n")
     val (fd, pc) = Pipelines.assessChanges(spark, oldD.toString,
-      newD.toString, Map("header" -> "true", "inferSchema" -> "true"))
+      newD.toString)
     val cs = Seq(("country", "added", "CHL"), ("species", "removed", "x"))
       .toDF("entity", "direction", "value")
     val md = ingest.Report.changelog(fd, pc, cs)
