@@ -12,9 +12,8 @@ import java.nio.charset.StandardCharsets
   * principles: a hand-written PDF 1.4 document — catalog, page tree,
   * one base-14 Courier font, one uncompressed content stream per page,
   * a byte-exact xref table — is a few hundred lines of the public PDF
-  * spec and needs no library at all, the same approach the repo's
-  * multimodal codecs (`multimodal/Jpeg.scala` etc.) already take for
-  * images.
+  * spec and needs no library at all (the JDK, which covers the image
+  * and audio formats in `multimodal.Media`, has no PDF codec).
   *
   * Determinism is a design requirement, not an accident: no
   * CreationDate, no document ID, no timestamps — the same lines always

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-/** Format rejection for the dependency-free codecs.
+/** A payload that does not decode, named by format and cause.
   *
   * In a bulk extraction pipeline a payload that merely SNIFFS as a
   * format (2-8 magic bytes — arbitrary data qualifies constantly) is
@@ -10,9 +10,10 @@ package graft.multimodal
   * per rejected row — at corpus scale that was ~40% of the
   * multimodal_features query (tens of thousands of throws per
   * partition batch, all caught two frames up). [[FormatException]]
-  * suppresses the stack capture; it still IS-A
-  * `IllegalArgumentException`, so caller contracts (and specs
-  * asserting rejection) are unchanged.
+  * suppresses the stack capture; the JDK codec's own exception (an
+  * `IIOException`, say), which [[Media]] wraps by message, still pays
+  * one. It IS-A `IllegalArgumentException`, so caller contracts (and
+  * specs asserting rejection) are unchanged.
   */
 final class FormatException(msg: String)
     extends IllegalArgumentException(msg) {

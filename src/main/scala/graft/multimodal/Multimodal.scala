@@ -7,12 +7,11 @@ import org.apache.spark.sql.functions._
   * video payloads ride as opaque `binary` columns with typed metadata;
   * decode / feature-extraction runs batched per partition.
   *
-  * The container has no image/audio codecs, so `decodeStub` is a
-  * clearly-marked deterministic FAKE standing in for a real decoder —
-  * everything around it (schema, batch shape, partition-parallel
-  * execution, feature-vector typing) is the real Spark plumbing a
-  * production decoder would plug into: swap `decodeStub`'s body for
-  * JPEG/PNG/ffmpeg bindings and nothing else changes.
+  * BMP, PNG, GIF and JPEG payloads decode to pixels and WAV payloads to
+  * 16-bit samples through the JDK's own codecs ([[Media]]); features
+  * are histograms over what decoded. `decodeStub` (a histogram of the
+  * raw bytes) covers unknown kinds and is the per-row degradation
+  * target for a payload that sniffs as a format but does not decode.
   *
   * Scale notes: payload bytes stay in the partition where they were read
   * (`mapPartitions` is narrow — no shuffle of blobs); only the fixed-size
@@ -42,7 +41,7 @@ object Multimodal {
       .when(h8 === "89504E47", "png")
       .when(h8 === "52494646", "riff") // wav/avi container
       .when(h8 === "47494638", "gif")
-      .when(h8.startsWith("424D"), "bmp") // the REAL-decode path (Bmp)
+      .when(h8.startsWith("424D"), "bmp")
       .otherwise("unknown")
   }
 
@@ -57,121 +56,57 @@ object Multimodal {
   final case class Feature(id: Long, kind: String, n_bytes: Long,
                            feature: Array[Float])
 
-  /** STUB decoder — deterministic fake features (a 16-bin byte histogram,
-    * L1-normalized). A real implementation decodes pixels/samples here;
-    * signature and batch shape are what production code would use.
-    */
-  def decodeStub(id: Long, kind: String, bytes: Array[Byte]): Feature = {
+  /** 16-bin histogram of `n` bin indices, L1-normalized. */
+  private def histFeature(id: Long, kind: String, nBytes: Long, n: Int)(
+      bin: Int => Int): Feature = {
     val hist = new Array[Float](16)
     var i = 0
-    while (i < bytes.length) {
-      hist((bytes(i) & 0xf0) >>> 4) += 1f
-      i += 1
-    }
-    val total = math.max(1f, bytes.length.toFloat)
-    var j = 0
-    while (j < 16) { hist(j) /= total; j += 1 }
-    Feature(id, kind, bytes.length.toLong, hist)
-  }
-
-  /** 16-bin LUMINANCE histogram (Rec.601 luma, L1-normalized) over
-    * decoded top-down RGB — the shared real-decode feature for the BMP
-    * and PNG paths; pixel-derived, unlike decodeStub's raw-byte
-    * histogram. Same Feature shape, so the pipeline downstream of the
-    * dispatch is identical for real and stubbed kinds.
-    */
-  private def lumaFeature(id: Long, kind: String, nBytes: Long,
-                          w: Int, h: Int, rgb: Array[Byte]): Feature = {
-    val hist = new Array[Float](16)
-    val n = w * h
-    var i = 0
-    while (i < n) {
-      val r = rgb(3 * i) & 0xff
-      val g = rgb(3 * i + 1) & 0xff
-      val b = rgb(3 * i + 2) & 0xff
-      val lum = (r * 299 + g * 587 + b * 114) / 1000
-      hist(lum >> 4) += 1f
-      i += 1
-    }
+    while (i < n) { hist(bin(i)) += 1f; i += 1 }
     val total = math.max(1, n).toFloat
     var j = 0
     while (j < 16) { hist(j) /= total; j += 1 }
     Feature(id, kind, nBytes, hist)
   }
 
-  /** REAL decode for BMP payloads (see [[lumaFeature]]). */
-  def decodeBmpFeature(id: Long, bytes: Array[Byte]): Feature = {
-    val img = Bmp.decode(bytes)
-    lumaFeature(id, "bmp", bytes.length.toLong, img.width, img.height, img.rgb)
-  }
-
-  /** REAL decode for RGB8 PNG payloads (see [[lumaFeature]]): full
-    * chunk/CRC framing, DEFLATE via the JDK, all five scanline filters
-    * unfiltered (multimodal.Png).
+  /** Byte-level feature: a 16-bin histogram of the payload's raw bytes
+    * (high nibble). Same Feature shape as the decoded kinds, so the
+    * pipeline downstream of the dispatch is identical.
     */
-  def decodePngFeature(id: Long, bytes: Array[Byte]): Feature = {
-    val img = Png.decode(bytes)
-    lumaFeature(id, "png", bytes.length.toLong, img.width, img.height, img.rgb)
-  }
+  def decodeStub(id: Long, kind: String, bytes: Array[Byte]): Feature =
+    histFeature(id, kind, bytes.length.toLong, bytes.length)(i =>
+      (bytes(i) & 0xf0) >>> 4)
 
-  /** REAL decode for single-frame non-interlaced GIF payloads (see
-    * [[lumaFeature]]): full LZW with variable code widths, palette
-    * mapping (multimodal.Gif).
+  /** Decoded image → 16-bin LUMINANCE histogram (Rec.601 luma over
+    * decoded top-down RGB; gray images decode with r = g = b, so their
+    * luma is the gray level itself).
     */
-  def decodeGifFeature(id: Long, bytes: Array[Byte]): Feature = {
-    val img = Gif.decode(bytes)
-    lumaFeature(id, "gif", bytes.length.toLong, img.width, img.height, img.rgb)
+  def decodeImageFeature(id: Long, kind: String, bytes: Array[Byte]): Feature = {
+    val img = Media.decodeImage(bytes)
+    val rgb = img.rgb
+    histFeature(id, kind, bytes.length.toLong, img.width * img.height) { i =>
+      ((rgb(3 * i) & 0xff) * 299 + (rgb(3 * i + 1) & 0xff) * 587 +
+        (rgb(3 * i + 2) & 0xff) * 114) / 1000 >> 4
+    }
   }
 
-  /** REAL decode for RIFF/WAVE 16-bit PCM payloads: 16-bin AMPLITUDE
-    * histogram over the decoded samples (bin = (s + 32768) >> 12,
-    * L1-normalized) — sample-derived, the audio analog of
-    * `decodeBmpFeature`'s luminance histogram. Kind is reported as
-    * "wav" (the parse proved it; "riff" is only the sniff).
+  /** Decoded 16-bit PCM WAV → 16-bin AMPLITUDE histogram over the
+    * samples (bin = (s + 32768) >> 12). Kind is reported as "wav" (the
+    * decode proved it; "riff" is only the sniff).
     */
   def decodeWavFeature(id: Long, bytes: Array[Byte]): Feature = {
-    val pcm = Wav.decode(bytes)
-    val hist = new Array[Float](16)
-    var i = 0
-    while (i < pcm.samples.length) {
-      hist((pcm.samples(i) + 32768) >> 12) += 1f
-      i += 1
-    }
-    val total = math.max(1, pcm.samples.length).toFloat
-    var j = 0
-    while (j < 16) { hist(j) /= total; j += 1 }
-    Feature(id, "wav", bytes.length.toLong, hist)
-  }
-
-  /** REAL decode for baseline JFIF payloads (multimodal.Jpeg: marker
-    * parse, table-driven Huffman, dequant + IDCT, 4:4:4 or grayscale).
-    * Gray planes feed the luminance histogram directly; color goes
-    * through [[lumaFeature]] like the other image kinds.
-    */
-  def decodeJpegFeature(id: Long, bytes: Array[Byte]): Feature = {
-    val img = Jpeg.decode(bytes)
-    if (img.comps == 3)
-      lumaFeature(id, "jpeg", bytes.length.toLong, img.width, img.height,
-        img.data)
-    else {
-      val hist = new Array[Float](16)
-      val n = img.width * img.height
-      var i = 0
-      while (i < n) { hist((img.data(i) & 0xff) >> 4) += 1f; i += 1 }
-      val total = math.max(1, n).toFloat
-      var j = 0
-      while (j < 16) { hist(j) /= total; j += 1 }
-      Feature(id, "jpeg", bytes.length.toLong, hist)
-    }
+    val samples = Media.decodeWav(bytes).samples
+    histFeature(id, "wav", bytes.length.toLong, samples.length)(i =>
+      (samples(i) + 32768) >> 12)
   }
 
   /** Partition-parallel feature extraction over (id, kind, payload) rows.
     * Batched per partition (the decoder amortizes any model/codec init
     * across the partition's rows — same shape as mapInPandas batches).
-    * BMP, RGB8 PNG, single-frame GIF, RIFF/WAVE-PCM, and baseline-JFIF
-    * JPEG payloads all take REAL decode paths (`Bmp`, `Png`, `Gif`,
-    * `Wav`, `Jpeg`); the stub remains only as the per-row degradation
-    * target for unsupported flavors and unknown kinds.
+    * BMP, PNG, GIF and JPEG payloads decode to pixels, RIFF payloads to
+    * WAV samples; a payload that sniffs as one of them but does not
+    * decode ([[FormatException]]: arbitrary data behind 2-8 magic
+    * bytes, truncation, an unsupported sample format) degrades that
+    * ROW to the byte stub under its sniffed kind, never the batch.
     */
   def extractFeatures(spark: SparkSession, df: DataFrame,
                       idCol: String = "id", binCol: String = "payload"): Dataset[Feature] = {
@@ -183,72 +118,19 @@ object Multimodal {
       .select(col(idCol).cast("long"), sniffKind(col(binCol)), col(binCol))
       .as[(Long, String, Array[Byte])]
       .mapPartitions { it =>
-        // per-partition decoder init would happen here (once, not per row)
-        it.map {
-          case (id, "bmp", bytes) =>
-            // a malformed/unsupported-flavor payload that merely sniffs
-            // as BMP ('BM' is 2 bytes — arbitrary data can start with
-            // it) must not kill the whole extraction job: fall back to
-            // the byte-level stub for that ROW, keep kind honest
-            try decodeBmpFeature(id, bytes)
-            catch {
-              case _: IllegalArgumentException |
-                   _: IndexOutOfBoundsException =>
-                decodeStub(id, "bmp", bytes)
-            }
-          case (id, "png", bytes) =>
-            // same row-level degradation as bmp: the 8-byte signature
-            // can prefix a payload that is not a decodable RGB8 PNG
-            // (palette/alpha flavors, or arbitrary data behind the
-            // magic); only a well-formed truecolor stream decodes
-            try decodePngFeature(id, bytes)
-            catch {
-              case _: IllegalArgumentException |
-                   _: IndexOutOfBoundsException =>
-                decodeStub(id, "png", bytes)
-            }
-          case (id, "gif", bytes) =>
-            // same row-level degradation: 'GIF89a' can prefix arbitrary
-            // data, and interlaced/local-table/animated flavors are
-            // outside the decode subset
-            try decodeGifFeature(id, bytes)
-            catch {
-              case _: IllegalArgumentException |
-                   _: IndexOutOfBoundsException =>
-                decodeStub(id, "gif", bytes)
-            }
-          case (id, "jpeg", bytes) =>
-            // same row-level degradation: FFD8FF prefixes progressive,
-            // subsampled, and arithmetic-coded flavors outside the
-            // baseline 4:4:4/grayscale decode subset
-            try decodeJpegFeature(id, bytes)
-            catch {
-              case _: IllegalArgumentException |
-                   _: IndexOutOfBoundsException =>
-                decodeStub(id, "jpeg", bytes)
-            }
-          case (id, "riff", bytes) =>
-            // same row-level degradation: 'RIFF' is 4 arbitrary bytes —
-            // AVI, non-PCM WAV, or plain text starting with RIFF all
-            // sniff here; only a parseable 16-bit PCM WAVE decodes
-            try decodeWavFeature(id, bytes)
-            catch {
-              case _: IllegalArgumentException |
-                   _: IndexOutOfBoundsException |
-                   _: java.nio.BufferUnderflowException =>
-                decodeStub(id, "riff", bytes)
-            }
-          case (id, kind, bytes) => decodeStub(id, kind, bytes)
+        it.map { case (id, kind, bytes) =>
+          try kind match {
+            case "bmp" | "png" | "gif" | "jpeg" =>
+              decodeImageFeature(id, kind, bytes)
+            case "riff" => decodeWavFeature(id, bytes)
+            case _ => decodeStub(id, kind, bytes)
+          } catch {
+            case _: FormatException => decodeStub(id, kind, bytes)
+          }
         }
       }
   }
 
-  /** STUB resize — a real implementation decodes pixels and rescales;
-    * the fake is deterministic (strided byte sample of the payload to
-    * exactly w·h bytes), so the plumbing is testable. Output payloads
-    * are fixed-size regardless of input size — the property downstream
-    * batch-inference relies on.
-    */
   /** REAL pixel-space box resample over decoded RGB (the downscale
     * step of a thumbnail/feature pipeline): every source pixel lands
     * in output cell `(x·ow/w, y·oh/h)` (integer division — uneven box
@@ -316,6 +198,11 @@ object Multimodal {
     sb.toString
   }
 
+  /** STUB resize — deterministic strided byte sample of the payload to
+    * exactly w·h bytes, so the plumbing is testable. Output payloads
+    * are fixed-size regardless of input size — the property downstream
+    * batch-inference relies on.
+    */
   def resizeStub(bytes: Array[Byte], w: Int, h: Int): Array[Byte] = {
     val out = new Array[Byte](w * h)
     if (bytes.nonEmpty) {

@@ -27,10 +27,12 @@ object Scd {
     *  - closed history rows pass through untouched
     *
     * Plan shape at scale: ONE key-keyed shuffle join (open rows ⋈
-    * snapshot, full-outer — broadcastable when the snapshot is a small
-    * dimension) staged once because it feeds both output branches;
-    * history is a pure union pass-through. Keys must be non-null on
-    * both sides (enforced by the full-outer classification).
+    * snapshot, full-outer), lazy: each joined row emits its zero, one
+    * or two output rows through one `inline` generator, so the join
+    * feeds both fates without a stage write and without Catalyst
+    * planning a second join per fate. History is a pure union
+    * pass-through. Keys must be non-null on both sides (enforced by
+    * the full-outer classification).
     *
     * @return the new versioned table, same schema as `current`
     */
@@ -40,38 +42,28 @@ object Scd {
     val cols = keys ++ attrs
     val history = current.filter(col("valid_to").isNotNull)
     val open = current.filter(col("valid_to").isNull)
-    val joined = Stage.materialize(
-      open.select((cols :+ "valid_from").map(col): _*).as("c")
-        .join(updates.select(cols.map(col): _*).as("u"),
-          keys.map(k => col(s"c.$k") === col(s"u.$k")).reduce(_ && _),
-          "full_outer")
-        .select(
-          keys.map(k => col(s"c.$k").as(s"ck_$k")) ++
-          attrs.map(a => col(s"c.$a").as(s"ca_$a")) ++
-          Seq(col("c.valid_from").as("c_valid_from")) ++
-          keys.map(k => col(s"u.$k").as(s"uk_$k")) ++
-          attrs.map(a => col(s"u.$a").as(s"ua_$a")): _*),
-      "scd2_join")
-    val inCur = col(s"ck_${keys.head}").isNotNull
-    val inUpd = col(s"uk_${keys.head}").isNotNull
-    val changed = attrs.map(a => !(col(s"ca_$a") <=> col(s"ua_$a")))
+    val joined = open.select((cols :+ "valid_from").map(col): _*).as("c")
+      .join(updates.select(cols.map(col): _*).as("u"),
+        keys.map(k => col(s"c.$k") === col(s"u.$k")).reduce(_ && _),
+        "full_outer")
+    val inCur = col(s"c.${keys.head}").isNotNull
+    val inUpd = col(s"u.${keys.head}").isNotNull
+    val changed = attrs.map(a => !(col(s"c.$a") <=> col(s"u.$a")))
       .reduce(_ || _)
-    // current-side rows: keep open if unchanged, else close
-    val fromCur = joined.filter(inCur).select(
-      keys.map(k => col(s"ck_$k").as(k)) ++
-      attrs.map(a => col(s"ca_$a").as(a)) ++
-      Seq(col("c_valid_from").as("valid_from"),
-        when(!inUpd || changed, effective).as("valid_to")): _*)
-    // update-side rows needing a fresh open version
-    val fromUpd = joined.filter(inUpd && (!inCur || changed)).select(
-      keys.map(k => col(s"uk_$k").as(k)) ++
-      attrs.map(a => col(s"ua_$a").as(a)) ++
-      Seq(effective.as("valid_from"),
-        lit(null).cast(current.schema("valid_to").dataType)
-          .as("valid_to")): _*)
+    val vfType = current.schema("valid_from").dataType
+    val vtType = current.schema("valid_to").dataType
+    // current-side row: kept open if unchanged, else closed
+    val curRow = struct(cols.map(c => col(s"c.$c").as(c)) ++ Seq(
+      col("c.valid_from").as("valid_from"),
+      when(!inUpd || changed, effective).cast(vtType).as("valid_to")): _*)
+    // update-side row: a fresh open version for a new or changed key
+    val updRow = struct(cols.map(c => col(s"u.$c").as(c)) ++ Seq(
+      effective.cast(vfType).as("valid_from"),
+      lit(null).cast(vtType).as("valid_to")): _*)
     history.select((cols ++ Seq("valid_from", "valid_to")).map(col): _*)
-      .unionByName(fromCur)
-      .unionByName(fromUpd)
+      .unionByName(joined.select(inline(filter(
+        array(when(inCur, curRow), when(inUpd && (!inCur || changed), updRow)),
+        _.isNotNull))))
   }
 
   /** Time-travel read over an SCD2 history: the rows valid AT `asOf`

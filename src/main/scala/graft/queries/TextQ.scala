@@ -228,6 +228,46 @@ object TextQ {
        |FROM norm n LEFT JOIN rem r ON n.doc_id = r.doc_id
        |LEFT JOIN scr s ON n.doc_id = s.doc_id""".stripMargin
 
+  /** A w×h top-down RGB fixture: pixel (x, y) takes `px(x, y)`'s
+    * channel values mod 256 — the formula each multimodal oracle
+    * replays in SQL, so the gate checks the codec round-trip.
+    */
+  private def fixtureImage(w: Int, h: Int)(
+      px: (Int, Int) => (Long, Long, Long)): graft.multimodal.Media.Image = {
+    val rgb = new Array[Byte](w * h * 3)
+    for (y <- 0 until h; x <- 0 until w) {
+      val (r, g, b) = px(x, y)
+      val i = (y * w + x) * 3
+      rgb(i) = (r % 256).toByte; rgb(i + 1) = (g % 256).toByte
+      rgb(i + 2) = (b % 256).toByte
+    }
+    graft.multimodal.Media.Image(w, h, rgb)
+  }
+
+  /** Sniff and decode (id, payload) images on the executors; per image
+    * its kind, size and per-channel means rounded to 4 places.
+    */
+  private def decodedMeans(s: org.apache.spark.sql.SparkSession,
+                           imgs: DataFrame): DataFrame = {
+    import s.implicits._
+    import graft.multimodal.{Media, Multimodal}
+    imgs.select(col("id"),
+        Multimodal.sniffKind(col("payload")).as("kind"), col("payload"))
+      .as[(Long, String, Array[Byte])]
+      .mapPartitions(_.map { case (id, kind, bytes) =>
+        val img = Media.decodeImage(bytes)
+        val n = img.width * img.height
+        def mean(c: Int): Double =
+          (0 until n).map(i => img.rgb(3 * i + c) & 0xff).sum.toDouble / n
+        (id, kind, img.width, img.height, mean(0), mean(1), mean(2))
+      })
+      .toDF("id", "kind", "w", "h", "mean_r", "mean_g", "mean_b")
+      .select(col("id"), col("kind"), col("w"), col("h"),
+        round(col("mean_r"), 4).as("mean_r"),
+        round(col("mean_g"), 4).as("mean_g"),
+        round(col("mean_b"), 4).as("mean_b"))
+  }
+
   val all: Seq[Q] = Seq(
 
     // text_tokens: whitespace + BPE-ish token counting.
@@ -1545,56 +1585,23 @@ object TextQ {
 
     // multimodal_decode [EXT]: REAL image decode — deterministic 5x3
     // 24-bit BMPs are encoded from a pixel formula, ride as binary
-    // payloads, and are decoded back by the dependency-free Bmp codec
-    // (bottom-up rows, 4-byte row padding, BGR order all exercised:
-    // width 5 forces a non-trivial pad). The oracle recomputes each
-    // channel mean STRAIGHT FROM THE PIXEL FORMULA in SQL — if decode
-    // mangles padding, row order, or channel order, the gate fails.
+    // payloads, and are decoded back on the executors through the JDK's
+    // BMP codec (bottom-up rows, 4-byte row padding, BGR order all
+    // exercised: width 5 forces a non-trivial pad). The oracle
+    // recomputes each channel mean STRAIGHT FROM THE PIXEL FORMULA in
+    // SQL — if decode mangles padding, row order, or channel order,
+    // the gate fails.
     Q("multimodal_decode",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.{Bmp, Multimodal}
-        val imgs = t(s, d, "documents").filter(col("doc_id") < 40)
+        import graft.multimodal.Media
+        decodedMeans(s, t(s, d, "documents").filter(col("doc_id") < 40)
           .select(col("doc_id").as("id")).as[Long]
           .map { id =>
-            val (w, h) = (5, 3)
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val i = (y * w + x) * 3
-                rgb(i) = ((id * 31 + x * 7 + y * 13) % 256).toByte
-                rgb(i + 1) = ((id * 17 + x * 5 + y * 3) % 256).toByte
-                rgb(i + 2) = ((id * 29 + x * 11 + y * 19) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            (id, Bmp.encode(Bmp.Image(w, h, rgb)))
-          }.toDF("id", "payload")
-        imgs.select(col("id"),
-            Multimodal.sniffKind(col("payload")).as("kind"), col("payload"))
-          .as[(Long, String, Array[Byte])]
-          .mapPartitions(_.map { case (id, kind, bytes) =>
-            val img = Bmp.decode(bytes)
-            val n = img.width * img.height
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var i = 0
-            while (i < n) {
-              sr += img.rgb(3 * i) & 0xff
-              sg += img.rgb(3 * i + 1) & 0xff
-              sb += img.rgb(3 * i + 2) & 0xff
-              i += 1
-            }
-            (id, kind, img.width, img.height,
-              sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
-          })
-          .toDF("id", "kind", "w", "h", "mean_r", "mean_g", "mean_b")
-          .select(col("id"), col("kind"), col("w"), col("h"),
-            round(col("mean_r"), 4).as("mean_r"),
-            round(col("mean_g"), 4).as("mean_g"),
-            round(col("mean_b"), 4).as("mean_b"))
+            (id, Media.encodeImage(fixtureImage(5, 3)((x, y) =>
+              (id * 31 + x * 7 + y * 13, id * 17 + x * 5 + y * 3,
+                id * 29 + x * 11 + y * 19)), "bmp"))
+          }.toDF("id", "payload"))
       },
       Some("""WITH ids AS (SELECT doc_id AS id FROM documents
                WHERE doc_id < 40),
@@ -1608,57 +1615,23 @@ object TextQ {
              FROM px GROUP BY id""")),
 
     // multimodal_png [EXT]: REAL PNG round-trip — deterministic 6x4
-    // truecolor pixels from a formula, encoded by the dependency-free
-    // Png codec (chunk framing + CRC32 + DEFLATE via the JDK), sniffed,
-    // decoded back (all-filter unfiltering path), channel means out.
-    // The oracle recomputes each mean STRAIGHT FROM THE PIXEL FORMULA
-    // in SQL — any framing/CRC/inflate/unfilter defect breaks the gate.
+    // truecolor pixels from a formula, encoded and decoded back through
+    // the JDK's PNG codec (chunk framing, DEFLATE, scanline filters),
+    // channel means out. The oracle recomputes each mean STRAIGHT FROM
+    // THE PIXEL FORMULA in SQL — any framing/inflate/unfilter defect
+    // breaks the gate.
     Q("multimodal_png",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.{Multimodal, Png}
-        val imgs = t(s, d, "documents")
+        import graft.multimodal.Media
+        decodedMeans(s, t(s, d, "documents")
           .filter(col("doc_id") >= 40 && col("doc_id") < 80)
           .select(col("doc_id").as("id")).as[Long]
           .map { id =>
-            val (w, h) = (6, 4)
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val i = (y * w + x) * 3
-                rgb(i) = ((id * 37 + x * 11 + y * 5) % 256).toByte
-                rgb(i + 1) = ((id * 23 + x * 3 + y * 17) % 256).toByte
-                rgb(i + 2) = ((id * 41 + x * 13 + y * 7) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            (id, Png.encode(Png.Image(w, h, rgb)))
-          }.toDF("id", "payload")
-        imgs.select(col("id"),
-            Multimodal.sniffKind(col("payload")).as("kind"), col("payload"))
-          .as[(Long, String, Array[Byte])]
-          .mapPartitions(_.map { case (id, kind, bytes) =>
-            val img = graft.multimodal.Png.decode(bytes)
-            val n = img.width * img.height
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var i = 0
-            while (i < n) {
-              sr += img.rgb(3 * i) & 0xff
-              sg += img.rgb(3 * i + 1) & 0xff
-              sb += img.rgb(3 * i + 2) & 0xff
-              i += 1
-            }
-            (id, kind, img.width, img.height,
-              sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
-          })
-          .toDF("id", "kind", "w", "h", "mean_r", "mean_g", "mean_b")
-          .select(col("id"), col("kind"), col("w"), col("h"),
-            round(col("mean_r"), 4).as("mean_r"),
-            round(col("mean_g"), 4).as("mean_g"),
-            round(col("mean_b"), 4).as("mean_b"))
+            (id, Media.encodeImage(fixtureImage(6, 4)((x, y) =>
+              (id * 37 + x * 11 + y * 5, id * 23 + x * 3 + y * 17,
+                id * 41 + x * 13 + y * 7)), "png"))
+          }.toDF("id", "payload"))
       },
       Some("""WITH ids AS (SELECT doc_id AS id FROM documents
              WHERE doc_id >= 40 AND doc_id < 80),
@@ -1672,57 +1645,22 @@ object TextQ {
              FROM px GROUP BY id""")),
 
     // multimodal_gif [EXT]: REAL GIF round-trip — deterministic 7x3
-    // pixels from a formula, paletted and LZW-compressed by the
-    // dependency-free Gif codec, sniffed, decoded back (variable-width
-    // LZW + palette mapping), channel means out. Same formula-oracle
-    // gating as the BMP/PNG legs: any palette/LZW/framing defect
-    // breaks the gate.
+    // pixels from a formula, written by the JDK's GIF codec from their
+    // exact palette (not interlaced), decoded back (LZW + palette
+    // mapping), channel means out. Same formula-oracle gating as the
+    // BMP/PNG legs: any palette/LZW/framing defect breaks the gate.
     Q("multimodal_gif",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.{Gif, Multimodal}
-        val imgs = t(s, d, "documents")
+        import graft.multimodal.Media
+        decodedMeans(s, t(s, d, "documents")
           .filter(col("doc_id") >= 80 && col("doc_id") < 120)
           .select(col("doc_id").as("id")).as[Long]
           .map { id =>
-            val (w, h) = (7, 3)
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val i = (y * w + x) * 3
-                rgb(i) = ((id * 43 + x * 9 + y * 21) % 256).toByte
-                rgb(i + 1) = ((id * 19 + x * 7 + y * 11) % 256).toByte
-                rgb(i + 2) = ((id * 53 + x * 17 + y * 3) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            (id, Gif.encode(Gif.Image(w, h, rgb)))
-          }.toDF("id", "payload")
-        imgs.select(col("id"),
-            Multimodal.sniffKind(col("payload")).as("kind"), col("payload"))
-          .as[(Long, String, Array[Byte])]
-          .mapPartitions(_.map { case (id, kind, bytes) =>
-            val img = graft.multimodal.Gif.decode(bytes)
-            val n = img.width * img.height
-            var sr = 0L; var sg = 0L; var sb = 0L
-            var i = 0
-            while (i < n) {
-              sr += img.rgb(3 * i) & 0xff
-              sg += img.rgb(3 * i + 1) & 0xff
-              sb += img.rgb(3 * i + 2) & 0xff
-              i += 1
-            }
-            (id, kind, img.width, img.height,
-              sr.toDouble / n, sg.toDouble / n, sb.toDouble / n)
-          })
-          .toDF("id", "kind", "w", "h", "mean_r", "mean_g", "mean_b")
-          .select(col("id"), col("kind"), col("w"), col("h"),
-            round(col("mean_r"), 4).as("mean_r"),
-            round(col("mean_g"), 4).as("mean_g"),
-            round(col("mean_b"), 4).as("mean_b"))
+            (id, Media.encodeImage(fixtureImage(7, 3)((x, y) =>
+              (id * 43 + x * 9 + y * 21, id * 19 + x * 7 + y * 11,
+                id * 53 + x * 17 + y * 3)), "gif"))
+          }.toDF("id", "payload"))
       },
       Some("""WITH ids AS (SELECT doc_id AS id FROM documents
              WHERE doc_id >= 80 AND doc_id < 120),
@@ -1735,48 +1673,27 @@ object TextQ {
                round(avg((id*53 + x*17 + y*3) % 256), 4) AS mean_b
              FROM px GROUP BY id""")),
 
-    // multimodal_jpeg [EXT]: REAL baseline-JPEG round-trip. The fixture
-    // is quality-100 GRAYSCALE with pixels constant per 8x8 block, the
-    // one regime where lossy JPEG is provably exact (DC-only blocks,
-    // unit quant — Jpeg scaladoc), so the full marker/Huffman/
-    // bitstream/IDCT machinery gates against the pixel formula like the
-    // lossless BMP/PNG/GIF legs; general content is spec-gated by PSNR.
+    // multimodal_jpeg [EXT]: REAL JPEG round-trip. The fixture is
+    // gray (r = g = b) with pixels constant per 8x8 block, written at
+    // quality 1.0: the one regime where lossy JPEG is exact (DC-only
+    // blocks, unit quantizers, zero chroma), so the JDK's encode/decode
+    // gates against the pixel formula like the lossless BMP/PNG/GIF
+    // legs; general content is spec-gated by PSNR.
     Q("multimodal_jpeg",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.{Jpeg, Multimodal}
-        val imgs = t(s, d, "documents")
+        import graft.multimodal.Media
+        decodedMeans(s, t(s, d, "documents")
           .filter(col("doc_id") >= 120 && col("doc_id") < 160)
           .select(col("doc_id").as("id")).as[Long]
           .map { id =>
-            val (w, h) = (16, 16) // four 8x8 blocks
-            val px = new Array[Byte](w * h)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val (bx, by) = (x / 8, y / 8)
-                px(y * w + x) = ((id * 47 + bx * 31 + by * 13) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            (id, Jpeg.encode(Jpeg.Image(w, h, 1, px), quality = 100))
-          }.toDF("id", "payload")
-        imgs.select(col("id"),
-            Multimodal.sniffKind(col("payload")).as("kind"), col("payload"))
-          .as[(Long, String, Array[Byte])]
-          .mapPartitions(_.map { case (id, kind, bytes) =>
-            val img = graft.multimodal.Jpeg.decode(bytes)
-            val n = img.width * img.height
-            var sum = 0L
-            var i = 0
-            while (i < n) { sum += img.data(i) & 0xff; i += 1 }
-            (id, kind, img.width, img.height, sum.toDouble / n)
-          })
-          .toDF("id", "kind", "w", "h", "mean_lum")
+            (id, Media.encodeImage(fixtureImage(16, 16) { (x, y) =>
+              val v = id * 47 + (x / 8) * 31 + (y / 8) * 13
+              (v, v, v)
+            }, "jpeg"))
+          }.toDF("id", "payload"))
           .select(col("id"), col("kind"), col("w"), col("h"),
-            round(col("mean_lum"), 4).as("mean_lum"))
+            col("mean_r").as("mean_lum"))
       },
       Some("""WITH ids AS (SELECT doc_id AS id FROM documents
              WHERE doc_id >= 120 AND doc_id < 160),
@@ -1810,29 +1727,16 @@ object TextQ {
     Q("multimodal_thumb",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.{Bmp, Multimodal}
-        val imgs = t(s, d, "documents").filter(col("doc_id") < 40)
+        import graft.multimodal.{Media, Multimodal}
+        t(s, d, "documents").filter(col("doc_id") < 40)
           .select(col("doc_id").as("id")).as[Long]
           .map { id =>
-            val (w, h) = (5, 3)
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val i = (y * w + x) * 3
-                rgb(i) = ((id * 31 + x * 7 + y * 13) % 256).toByte
-                rgb(i + 1) = ((id * 17 + x * 5 + y * 3) % 256).toByte
-                rgb(i + 2) = ((id * 29 + x * 11 + y * 19) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            (id, Bmp.encode(Bmp.Image(w, h, rgb)))
-          }.toDF("id", "payload")
-        imgs.as[(Long, Array[Byte])]
+            (id, Media.encodeImage(fixtureImage(5, 3)((x, y) =>
+              (id * 31 + x * 7 + y * 13, id * 17 + x * 5 + y * 3,
+                id * 29 + x * 11 + y * 19)), "bmp"))
+          }
           .mapPartitions(_.flatMap { case (id, bytes) =>
-            val img = Bmp.decode(bytes)
+            val img = Media.decodeImage(bytes)
             val t = Multimodal.boxResize(img.width, img.height, img.rgb, 2, 2)
             for (oy <- 0 until 2; ox <- 0 until 2) yield {
               val i = (oy * 2 + ox) * 3
@@ -1871,8 +1775,8 @@ object TextQ {
     // per-16-sample-frame RMS energy and zero-crossing counts, the
     // first stage of every speech/audio curation pipeline (silence
     // trimming, music-vs-speech screens). The signal path is REAL:
-    // synthetic PCM (deterministic per doc_id) encodes through
-    // Wav.encode and decodes back through Wav.decode on the executors
+    // synthetic PCM (deterministic per doc_id) encodes to WAV and
+    // decodes back through the JDK's AudioSystem on the executors
     // (partition-parallel, the multimodal plumbing contract), then the
     // exploded samples take ONE id-keyed exchange serving both the lag
     // window (crossings) and the frame aggregate. Cross-engine
@@ -1885,13 +1789,14 @@ object TextQ {
       (s, d) => {
         import s.implicits._
         import org.apache.spark.sql.expressions.Window
-        import graft.multimodal.Wav
+        import graft.multimodal.Media
         val pcmRows = t(s, d, "documents").select(col("doc_id")).as[Long]
           .flatMap { id =>
             val samples = Array.tabulate(64) { i =>
               (((id * 31 + i * 7) % 4096 - 2048) * 16).toShort
             }
-            val decoded = Wav.decode(Wav.encode(Wav.Pcm(8000, 1, samples)))
+            val decoded =
+              Media.decodeWav(Media.encodeWav(Media.Pcm(8000, 1, samples)))
             decoded.samples.iterator.zipWithIndex
               .map { case (smp, idx) => (id, idx, smp.toLong) }
           }
@@ -1923,31 +1828,18 @@ object TextQ {
     Q("multimodal_phash",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.{Bmp, Multimodal}
+        import graft.multimodal.{Media, Multimodal}
         val hashes = t(s, d, "documents")
           .filter(col("doc_id") >= 160 && col("doc_id") < 200)
           .select(col("doc_id").as("id")).as[Long]
           .map { id =>
             val gid = if (id % 4 == 3) id - 3 else id
-            val (w, h) = (9, 8)
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val i = (y * w + x) * 3
-                rgb(i) = ((gid * 31 + x * 7 + y * 13) % 256).toByte
-                rgb(i + 1) = ((gid * 17 + x * 5 + y * 3) % 256).toByte
-                rgb(i + 2) = ((gid * 29 + x * 11 + y * 19) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            (id, Bmp.encode(Bmp.Image(w, h, rgb)))
-          }.toDF("id", "payload")
-          .as[(Long, Array[Byte])]
+            (id, Media.encodeImage(fixtureImage(9, 8)((x, y) =>
+              (gid * 31 + x * 7 + y * 13, gid * 17 + x * 5 + y * 3,
+                gid * 29 + x * 11 + y * 19)), "bmp"))
+          }
           .map { case (id, bytes) =>
-            val img = Bmp.decode(bytes)
+            val img = Media.decodeImage(bytes)
             (id, Multimodal.dhash(img.width, img.height, img.rgb))
           }.toDF("id", "phash")
         hashes.as("x")
@@ -1996,36 +1888,21 @@ object TextQ {
     Q("multimodal_neardup",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.{Bmp, Multimodal}
+        import graft.multimodal.{Media, Multimodal}
         val hashes = t(s, d, "documents")
           .filter(col("doc_id") >= 200 && col("doc_id") < 240)
           .select(col("doc_id").as("id")).as[Long]
           .map { id =>
             val gid = if (id % 4 == 3) id - 3 else id
-            val (w, h) = (9, 8)
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val i = (y * w + x) * 3
-                rgb(i) = ((gid * 31 + x * 7 + y * 13) % 256).toByte
-                rgb(i + 1) = ((gid * 17 + x * 5 + y * 3) % 256).toByte
-                rgb(i + 2) = ((gid * 29 + x * 11 + y * 19) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            if (id % 4 == 3) { // perturb one pixel of the re-encode
-              val i = (3 * w + 4) * 3
-              rgb(i) = 255.toByte; rgb(i + 1) = 255.toByte
-              rgb(i + 2) = 255.toByte
-            }
-            (id, Bmp.encode(Bmp.Image(w, h, rgb)))
-          }.toDF("id", "payload")
-          .as[(Long, Array[Byte])]
+            // the re-encode of id - 3 has its (4, 3) pixel forced white
+            val img = fixtureImage(9, 8)((x, y) =>
+              if (id % 4 == 3 && x == 4 && y == 3) (255L, 255L, 255L)
+              else (gid * 31 + x * 7 + y * 13, gid * 17 + x * 5 + y * 3,
+                gid * 29 + x * 11 + y * 19))
+            (id, Media.encodeImage(img, "bmp"))
+          }
           .map { case (id, bytes) =>
-            val img = Bmp.decode(bytes)
+            val img = Media.decodeImage(bytes)
             val hex = Multimodal.dhash(img.width, img.height, img.rgb)
             val rb = Array.tabulate(8)(y =>
               Integer.parseInt(hex.substring(2 * y, 2 * y + 2), 16))
@@ -2083,7 +1960,7 @@ object TextQ {
 
     // multimodal_features [EXT]: partition-parallel decode/feature-extract
     // over opaque binary payloads. The RIFF/WAVE branch is REAL — the
-    // dependency-free 16-bit-PCM codec (multimodal.Wav) decodes planted
+    // JDK's WAV reader (through multimodal.Media) decodes planted
     // WAV files generated from a sample formula, and the oracle
     // recomputes the amplitude-histogram feature STRAIGHT FROM THAT
     // FORMULA in SQL (the audio analog of multimodal_decode's BMP
@@ -2096,12 +1973,12 @@ object TextQ {
     // counts + the control-char count of the raw text — every payload
     // byte < 0x10 is a single-byte UTF-8 char), with the stub's FLOAT
     // division replayed via DuckDB REAL division (bit-exact; verified
-    // by probe). The REAL decode paths for all five codecs are gated by
+    // by probe). The REAL decode paths for all five formats are gated by
     // multimodal_decode/_png/_gif/_jpeg and the WAV branch here.
     Q("multimodal_features",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.{Multimodal, Wav}
+        import graft.multimodal.{Media, Multimodal}
         import graft.multimodal.Multimodal.{GifHeader, JpegHeader, PngHeader}
         // r15 null contract: a doc with no text has no media payload
         // in this synthetic fixture — skipped on both engines
@@ -2111,7 +1988,7 @@ object TextQ {
           .map { case (id, text) =>
             val payload: Array[Byte] =
               if (id % 5 == 2)
-                Wav.encode(Wav.Pcm(8000, 1, Array.tabulate(64) { i =>
+                Media.encodeWav(Media.Pcm(8000, 1, Array.tabulate(64) { i =>
                   (((id * 31 + i * 7) % 4096 - 2048) * 16).toShort
                 }))
               else {
@@ -2171,39 +2048,21 @@ object TextQ {
     Q("multimodal_hist",
       (s, d) => {
         import s.implicits._
-        import graft.multimodal.Bmp
+        import graft.multimodal.Media
         t(s, d, "documents")
           .filter(col("doc_id") >= 80 && col("doc_id") < 120)
           .select(col("doc_id").as("id")).as[Long]
           .map { id =>
-            val (w, h) = (8, 4)
-            val rgb = new Array[Byte](w * h * 3)
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val i = (y * w + x) * 3
-                rgb(i) = ((id * 19 + x * 7 + y * 3) % 256).toByte
-                rgb(i + 1) = ((id * 29 + x * 5 + y * 13) % 256).toByte
-                rgb(i + 2) = ((id * 31 + x * 17 + y * 11) % 256).toByte
-                x += 1
-              }
-              y += 1
-            }
-            (id, Bmp.encode(Bmp.Image(w, h, rgb)))
+            (id, Media.encodeImage(fixtureImage(8, 4)((x, y) =>
+              (id * 19 + x * 7 + y * 3, id * 29 + x * 5 + y * 13,
+                id * 31 + x * 17 + y * 11)), "bmp"))
           }
           .flatMap { case (id, bytes) =>
-            val img = Bmp.decode(bytes)
-            val n = img.width * img.height
+            val img = Media.decodeImage(bytes)
             val buckets = new Array[Long](4)
-            var i = 0
-            while (i < n) {
-              val lum = ((img.rgb(3 * i) & 0xff) +
-                (img.rgb(3 * i + 1) & 0xff) +
-                (img.rgb(3 * i + 2) & 0xff)) / 3
-              buckets(lum / 64) += 1
-              i += 1
-            }
+            for (i <- 0 until img.width * img.height)
+              buckets(((img.rgb(3 * i) & 0xff) + (img.rgb(3 * i + 1) & 0xff) +
+                (img.rgb(3 * i + 2) & 0xff)) / 3 / 64) += 1
             buckets.zipWithIndex.collect {
               case (cnt, b) if cnt > 0 => (id, b.toLong, cnt)
             }

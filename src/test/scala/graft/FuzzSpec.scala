@@ -3,7 +3,7 @@ package graft
 import scala.util.Random
 
 import org.apache.spark.sql.functions._
-import graft.multimodal.Jpeg
+import graft.multimodal.{FormatException, Media}
 import graft.operators.FuzzyJoin
 
 /** Seeded randomized fuzzing of the round-5 operators: many small
@@ -24,17 +24,19 @@ class FuzzSpec extends SparkFunSuite {
       val subsample = comps == 3 && rnd.nextBoolean()
       val restart = rnd.nextInt(4) // 0 = off
       val data = Array.fill(w * h * comps)(rnd.nextInt(256).toByte)
-      val img = Jpeg.Image(w, h, comps, data)
-      val bytes = Jpeg.encode(img, quality, subsample, restart)
-      assert(Jpeg.isJpeg(bytes), s"trial $trial: bad magic")
-      val back = Jpeg.decode(bytes)
-      assert(back.width === w && back.height === h && back.comps === comps,
-        s"trial $trial: dims ${w}x$h/$comps -> ${back.width}x${back.height}/${back.comps}")
+      val bytes = JpegFixtures.encode(w, h, comps, data, quality / 100f,
+        subsample, restart)
+      assert((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8,
+        s"trial $trial: bad magic")
+      val img = Media.decodeImage(bytes)
+      assert(img.width === w && img.height === h,
+        s"trial $trial: dims ${w}x$h -> ${img.width}x${img.height}")
+      val back = JpegFixtures.samples(img, comps)
       // random noise is JPEG's worst case — the bound is sanity (the
       // decode is reading the coefficients we wrote), not fidelity
       var se = 0.0
       for (i <- data.indices) {
-        val d = (back.data(i) & 0xff) - (data(i) & 0xff)
+        val d = (back(i) & 0xff) - (data(i) & 0xff)
         se += d.toDouble * d
       }
       val psnr = 10 * math.log10(255.0 * 255.0 / math.max(1e-9, se / data.length))
@@ -213,14 +215,10 @@ class FuzzSpec extends SparkFunSuite {
     // random offsets; (c) pure noise. NO row may kill the job: the
     // per-row degradation contract says every payload yields a Feature.
     val realOnes: Seq[Array[Byte]] = {
-      val rgb = Array.tabulate(6 * 4 * 3)(i => (i * 7).toByte)
-      Seq(
-        graft.multimodal.Bmp.encode(graft.multimodal.Bmp.Image(6, 4, rgb)),
-        graft.multimodal.Png.encode(graft.multimodal.Png.Image(6, 4, rgb)),
-        graft.multimodal.Gif.encode(graft.multimodal.Gif.Image(6, 4, rgb)),
-        graft.multimodal.Jpeg.encode(
-          graft.multimodal.Jpeg.Image(6, 4, 3, rgb), 90, false, 0),
-        graft.multimodal.Wav.encode(graft.multimodal.Wav.Pcm(8000, 1,
+      val img = Media.Image(6, 4, Array.tabulate(6 * 4 * 3)(i => (i * 7).toByte))
+      Seq("bmp", "png", "gif").map(Media.encodeImage(img, _)) ++ Seq(
+        Media.encodeImage(img, "jpeg", 0.9f),
+        Media.encodeWav(Media.Pcm(8000, 1,
           Array.tabulate(32)(i => (i * 512).toShort))))
     }
     val payloads: Seq[(Long, Array[Byte])] =
@@ -243,26 +241,25 @@ class FuzzSpec extends SparkFunSuite {
 
   test("Jpeg.decode rejects out-of-range table ids, never AIOOBE") {
     // T.81 table ids are 4-bit fields but only slots 0-3 exist; a
-    // crafted header with id 4-15 must hit the codec's honest-rejection
-    // contract (FormatException IS-A IllegalArgumentException), not an
-    // ArrayIndexOutOfBoundsException from the fixed 4-slot arrays
+    // crafted header with id 4-15 must hit the adapter's named
+    // rejection (FormatException IS-A IllegalArgumentException), not an
+    // index error from the decoder's fixed 4-slot tables
     val rgb = Array.tabulate(6 * 4 * 3)(i => (i * 7).toByte)
-    val good = graft.multimodal.Jpeg.encode(
-      graft.multimodal.Jpeg.Image(6, 4, 3, rgb), 90, false, 0)
+    val good = Media.encodeImage(Media.Image(6, 4, rgb), "jpeg", 0.9f)
     // corrupt the first DQT (0xffdb) table-id byte: len(2) then Pq|Tq
     val dqt = good.indexOfSlice(Seq(0xff.toByte, 0xdb.toByte))
     assert(dqt >= 0, "no DQT marker in encoder output")
     val bad = good.clone(); bad(dqt + 4) = 0x0f // Pq=0, Tq=15
-    val e = intercept[IllegalArgumentException](
-      graft.multimodal.Jpeg.decode(bad))
-    assert(e.getMessage.contains("quant table id"), e.getMessage)
+    val e = intercept[FormatException](Media.decodeImage(bad))
+    assert(e.getMessage.startsWith("jpeg:") && e.getMessage.contains("DQT"),
+      e.getMessage)
     // same for a DHT (0xffc4) Tc|Th byte: Th=15
     val dht = good.indexOfSlice(Seq(0xff.toByte, 0xc4.toByte))
     assert(dht >= 0, "no DHT marker in encoder output")
     val bad2 = good.clone(); bad2(dht + 4) = 0x0f
-    val e2 = intercept[IllegalArgumentException](
-      graft.multimodal.Jpeg.decode(bad2))
-    assert(e2.getMessage.contains("Huffman table"), e2.getMessage)
+    val e2 = intercept[FormatException](Media.decodeImage(bad2))
+    assert(e2.getMessage.startsWith("jpeg:") && e2.getMessage.contains("DHT"),
+      e2.getMessage)
   }
 
   test("ZOrder: random dims/bits agree with the SQL twin and stay injective") {

@@ -1,6 +1,8 @@
 package graft
 
 import java.sql.Date
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import graft.operators.Scd
 
@@ -49,5 +51,24 @@ class ScdSpec extends SparkFunSuite {
     val twice = Scd.merge2(once, upd, Seq("k"), Seq("name", "bal"), lit(eff))
     assert(twice.collect().toSet === once.collect().toSet)
     assert(once.count() === 1L) // nothing changed, nothing versioned
+  }
+
+  test("merge2: building runs no job and the plan has one full-outer join") {
+    val cur = Seq(
+      (1L, "a", 1.0, d25, None: Option[Date]),
+      (2L, "b", 2.0, d25, None: Option[Date]),
+      (3L, "c", 3.0, d24, Option(d25)))
+      .toDF("k", "name", "bal", "valid_from", "valid_to")
+    val upd = Seq((1L, "a", 1.5), (4L, "d", 4.0)).toDF("k", "name", "bal")
+    val (out, jobs) = withJobCount(
+      Scd.merge2(cur, upd, Seq("k"), Seq("name", "bal"), lit(eff)))
+    assert(jobs === 0, "merge2 must stay lazy: no stage write at build")
+    // one join feeds both row fates; two would scan both inputs twice
+    val joins = out.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.map(_.joinType) === Seq(FullOuter))
+    assert(out.as[(Long, String, Double, Date, Option[Date])].collect().toSet ===
+      Set((3L, "c", 3.0, d24, Some(d25)), (1L, "a", 1.0, d25, Some(eff)),
+        (1L, "a", 1.5, eff, None), (2L, "b", 2.0, d25, Some(eff)),
+        (4L, "d", 4.0, eff, None)))
   }
 }
