@@ -4,9 +4,14 @@ import java.awt.color.ColorSpace
 import java.awt.image.{BufferedImage, IndexColorModel}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, IOException}
 import java.nio.{ByteBuffer, ByteOrder}
+import java.util.ServiceLoader
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
+import javax.imageio.spi.ImageReaderSpi
+import javax.imageio.stream.MemoryCacheImageInputStream
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream,
-  AudioSystem, UnsupportedAudioFileException}
+  UnsupportedAudioFileException}
+import javax.sound.sampled.spi.{AudioFileReader, AudioFileWriter}
+import scala.jdk.CollectionConverters._
 
 /** Image and audio payloads through the JDK's own codecs
   * (`javax.imageio` for BMP/PNG/GIF/JPEG, `javax.sound.sampled` for
@@ -17,7 +22,8 @@ import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream,
   */
 object Media {
 
-  // executors decode from byte arrays: no temp files for stream caches
+  // no temp files on executors: reads stream from a memory cache by
+  // construction, and ImageIO's output streams are told to do the same
   ImageIO.setUseCache(false)
 
   /** Decoded pixels: RGB interleaved, row-major, top-down. */
@@ -26,31 +32,46 @@ object Media {
   /** Decoded 16-bit PCM: interleaved samples, all channels. */
   final case class Pcm(sampleRate: Int, channels: Int, samples: Array[Short])
 
-  /** Decode any image the JDK reads. The declared size is read from the
-    * header and refused before anything is allocated when the decoded
-    * RGB would not fit one array; a reader warning (e.g. a truncated
-    * JPEG scan, which the JDK fills with gray) is a rejection too.
+  /** The JDK reader provider of each image kind `Multimodal.sniffKind`
+    * names, looked up once: a payload is handed to its kind's reader
+    * alone, with no probe of every registered reader.
     */
-  def decodeImage(bytes: Array[Byte]): Image = {
-    val in = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
-    val readers = ImageIO.getImageReaders(in)
-    Codec.check(readers.hasNext, "no image reader recognizes the payload")
-    val reader = readers.next()
-    val fmt = reader.getFormatName.toLowerCase
+  private lazy val readerSpis: Map[String, ImageReaderSpi] =
+    Seq("bmp", "png", "gif", "jpeg").map(k => k ->
+      ImageIO.getImageReadersByFormatName(k).next().getOriginatingProvider
+    ).toMap
+
+  /** Pixels one payload may declare. No JDK raster takes more than 8
+    * bytes a pixel (16-bit RGBA), so a decode stays within 1 GiB of
+    * raster plus 384 MiB of RGB, well under one array.
+    */
+  private val MaxPixels: Long = 1L << 27
+
+  /** Decode a payload of image `kind` ("bmp", "png", "gif", "jpeg").
+    * The declared size is read from the header and refused past
+    * [[MaxPixels]] before anything is allocated; a reader warning (e.g.
+    * a truncated JPEG scan, which the JDK fills with gray) is a
+    * rejection too.
+    */
+  def decodeImage(kind: String, bytes: Array[Byte]): Image = {
+    val spi = readerSpis.getOrElse(kind,
+      throw new FormatException(s"$kind: not an image kind"))
+    val reader = spi.createReaderInstance()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
     try {
       var warning: String = null
       reader.addIIOReadWarningListener((_, msg) => warning = msg)
       reader.setInput(in, true, true)
       val (w, h) = (reader.getWidth(0), reader.getHeight(0))
-      Codec.check(w > 0 && h > 0 && w.toLong * h * 3 <= Int.MaxValue,
-        s"$fmt: implausible dimensions ${w}x$h")
+      Codec.check(w > 0 && h > 0 && w.toLong * h <= MaxPixels,
+        s"$kind: implausible dimensions ${w}x$h")
       val img = reader.read(0)
-      Codec.check(warning == null, s"$fmt: $warning")
+      Codec.check(warning == null, s"$kind: $warning")
       toImage(img)
     } catch {
       case e: FormatException => throw e
       case e @ (_: IOException | _: RuntimeException) =>
-        throw new FormatException(s"$fmt: $e")
+        throw new FormatException(s"$kind: $e")
     } finally {
       reader.dispose()
       in.close()
@@ -90,12 +111,12 @@ object Media {
     Image(w, h, rgb)
   }
 
-  /** Encode as `format` ("bmp", "png", "gif", "jpeg"); `quality` in
-    * (0, 1] is the JPEG compression quality. GIF is written from an
-    * exact palette (at most 256 colors) and not interlaced, so it
-    * round-trips exactly like BMP and PNG.
+  /** Encode as `format` ("bmp", "png", "gif", "jpeg"); JPEG is written
+    * at quality 1.0. GIF is written from an exact palette (at most 256
+    * colors) and not interlaced, so it round-trips exactly like BMP and
+    * PNG.
     */
-  def encodeImage(img: Image, format: String, quality: Float = 1f): Array[Byte] = {
+  def encodeImage(img: Image, format: String): Array[Byte] = {
     require(img.width > 0 && img.height > 0 &&
       img.rgb.length == img.width * img.height * 3,
       s"rgb length ${img.rgb.length} != ${img.width}x${img.height}x3")
@@ -111,7 +132,7 @@ object Media {
       case _ =>
         if (format == "jpeg") {
           param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
-          param.setCompressionQuality(quality)
+          param.setCompressionQuality(1f)
         }
         val b = new BufferedImage(img.width, img.height,
           BufferedImage.TYPE_3BYTE_BGR)
@@ -154,13 +175,37 @@ object Media {
     b
   }
 
+  // AudioSystem finds its readers and writers with a service-loader
+  // scan of the whole class path on every call, which on an executor's
+  // class path of a few hundred jars costs more than the decode. The
+  // JDK's own providers are listed once instead, with a fresh instance
+  // per call as AudioSystem makes. The reader of the canonical WAV that
+  // encodeWav writes goes first, so such a file decodes without the
+  // other readers' failed attempts (the MIDI reader's attempt scans the
+  // class path itself); the rest keep the JDK's order, for the WAV
+  // flavors that reader does not read.
+  private lazy val audioReaders = {
+    val all = ServiceLoader.loadInstalled(classOf[AudioFileReader])
+      .stream().toList.asScala.toSeq
+    val canonical = encodeWav(Pcm(8000, 1, Array[Short](0)))
+    val (wav, rest) = all.partition(p => scala.util.Try(p.get()
+      .getAudioFileFormat(new ByteArrayInputStream(canonical))).isSuccess)
+    wav ++ rest
+  }
+  private lazy val audioWriters =
+    ServiceLoader.loadInstalled(classOf[AudioFileWriter]).stream().toList.asScala
+
   /** Decode a 16-bit signed PCM WAV. The declared data size is checked
     * against the bytes present: a short data chunk is a rejection, not a
     * silently shorter signal.
     */
   def decodeWav(bytes: Array[Byte]): Pcm =
     try {
-      val in = AudioSystem.getAudioInputStream(new ByteArrayInputStream(bytes))
+      val in = audioReaders.iterator.flatMap { p =>
+        try Some(p.get().getAudioInputStream(new ByteArrayInputStream(bytes)))
+        catch { case _: UnsupportedAudioFileException => None }
+      }.nextOption().getOrElse(
+        throw new FormatException("wav: no audio reader recognizes the payload"))
       val f = in.getFormat
       Codec.check(f.getEncoding == AudioFormat.Encoding.PCM_SIGNED &&
         f.getSampleSizeInBits == 16 && !f.isBigEndian,
@@ -175,8 +220,7 @@ object Media {
       Pcm(f.getSampleRate.toInt, f.getChannels, samples)
     } catch {
       case e: FormatException => throw e
-      case e @ (_: UnsupportedAudioFileException | _: IOException |
-                _: RuntimeException) =>
+      case e @ (_: IOException | _: RuntimeException) =>
         throw new FormatException(s"wav: $e")
     }
 
@@ -188,9 +232,13 @@ object Media {
     ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN).asShortBuffer
       .put(p.samples)
     val fmt = new AudioFormat(p.sampleRate.toFloat, 16, p.channels, true, false)
+    val in = new AudioInputStream(new ByteArrayInputStream(data), fmt,
+      p.samples.length / p.channels)
+    val writer = audioWriters.iterator.map(_.get())
+      .find(_.isFileTypeSupported(AudioFileFormat.Type.WAVE, in))
+      .getOrElse(throw new IllegalStateException("no WAV writer for " + fmt))
     val out = new ByteArrayOutputStream()
-    AudioSystem.write(new AudioInputStream(new ByteArrayInputStream(data),
-      fmt, p.samples.length / p.channels), AudioFileFormat.Type.WAVE, out)
+    writer.write(in, AudioFileFormat.Type.WAVE, out)
     out.toByteArray
   }
 }

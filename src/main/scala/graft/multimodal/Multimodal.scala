@@ -36,7 +36,7 @@ object Multimodal {
     * expressions (hex of a binary prefix), codegen'd.
     */
   def sniffKind(bin: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val h8 = upper(hex(substring(bin, 1, 4)))
+    val h8 = hex(substring(bin, 1, 4)) // upper-case digits already
     when(h8.startsWith("FFD8FF"), "jpeg")
       .when(h8 === "89504E47", "png")
       .when(h8 === "52494646", "riff") // wav/avi container
@@ -81,7 +81,7 @@ object Multimodal {
     * luma is the gray level itself).
     */
   def decodeImageFeature(id: Long, kind: String, bytes: Array[Byte]): Feature = {
-    val img = Media.decodeImage(bytes)
+    val img = Media.decodeImage(kind, bytes)
     val rgb = img.rgb
     histFeature(id, kind, bytes.length.toLong, img.width * img.height) { i =>
       ((rgb(3 * i) & 0xff) * 299 + (rgb(3 * i + 1) & 0xff) * 587 +

@@ -255,7 +255,7 @@ object TextQ {
         Multimodal.sniffKind(col("payload")).as("kind"), col("payload"))
       .as[(Long, String, Array[Byte])]
       .mapPartitions(_.map { case (id, kind, bytes) =>
-        val img = Media.decodeImage(bytes)
+        val img = Media.decodeImage(kind, bytes)
         val n = img.width * img.height
         def mean(c: Int): Double =
           (0 until n).map(i => img.rgb(3 * i + c) & 0xff).sum.toDouble / n
@@ -1736,7 +1736,7 @@ object TextQ {
                 id * 29 + x * 11 + y * 19)), "bmp"))
           }
           .mapPartitions(_.flatMap { case (id, bytes) =>
-            val img = Media.decodeImage(bytes)
+            val img = Media.decodeImage("bmp", bytes)
             val t = Multimodal.boxResize(img.width, img.height, img.rgb, 2, 2)
             for (oy <- 0 until 2; ox <- 0 until 2) yield {
               val i = (oy * 2 + ox) * 3
@@ -1839,7 +1839,7 @@ object TextQ {
                 gid * 29 + x * 11 + y * 19)), "bmp"))
           }
           .map { case (id, bytes) =>
-            val img = Media.decodeImage(bytes)
+            val img = Media.decodeImage("bmp", bytes)
             (id, Multimodal.dhash(img.width, img.height, img.rgb))
           }.toDF("id", "phash")
         hashes.as("x")
@@ -1902,7 +1902,7 @@ object TextQ {
             (id, Media.encodeImage(img, "bmp"))
           }
           .map { case (id, bytes) =>
-            val img = Media.decodeImage(bytes)
+            val img = Media.decodeImage("bmp", bytes)
             val hex = Multimodal.dhash(img.width, img.height, img.rgb)
             val rb = Array.tabulate(8)(y =>
               Integer.parseInt(hex.substring(2 * y, 2 * y + 2), 16))
@@ -2058,7 +2058,7 @@ object TextQ {
                 id * 31 + x * 17 + y * 11)), "bmp"))
           }
           .flatMap { case (id, bytes) =>
-            val img = Media.decodeImage(bytes)
+            val img = Media.decodeImage("bmp", bytes)
             val buckets = new Array[Long](4)
             for (i <- 0 until img.width * img.height)
               buckets(((img.rgb(3 * i) & 0xff) + (img.rgb(3 * i + 1) & 0xff) +

@@ -28,7 +28,7 @@ class FuzzSpec extends SparkFunSuite {
         subsample, restart)
       assert((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8,
         s"trial $trial: bad magic")
-      val img = Media.decodeImage(bytes)
+      val img = Media.decodeImage("jpeg", bytes)
       assert(img.width === w && img.height === h,
         s"trial $trial: dims ${w}x$h -> ${img.width}x${img.height}")
       val back = JpegFixtures.samples(img, comps)
@@ -217,7 +217,7 @@ class FuzzSpec extends SparkFunSuite {
     val realOnes: Seq[Array[Byte]] = {
       val img = Media.Image(6, 4, Array.tabulate(6 * 4 * 3)(i => (i * 7).toByte))
       Seq("bmp", "png", "gif").map(Media.encodeImage(img, _)) ++ Seq(
-        Media.encodeImage(img, "jpeg", 0.9f),
+        JpegFixtures.encode(6, 4, 3, img.rgb, 0.9f, subsample = true),
         Media.encodeWav(Media.Pcm(8000, 1,
           Array.tabulate(32)(i => (i * 512).toShort))))
     }
@@ -245,19 +245,19 @@ class FuzzSpec extends SparkFunSuite {
     // rejection (FormatException IS-A IllegalArgumentException), not an
     // index error from the decoder's fixed 4-slot tables
     val rgb = Array.tabulate(6 * 4 * 3)(i => (i * 7).toByte)
-    val good = Media.encodeImage(Media.Image(6, 4, rgb), "jpeg", 0.9f)
+    val good = JpegFixtures.encode(6, 4, 3, rgb, 0.9f, subsample = true)
     // corrupt the first DQT (0xffdb) table-id byte: len(2) then Pq|Tq
     val dqt = good.indexOfSlice(Seq(0xff.toByte, 0xdb.toByte))
     assert(dqt >= 0, "no DQT marker in encoder output")
     val bad = good.clone(); bad(dqt + 4) = 0x0f // Pq=0, Tq=15
-    val e = intercept[FormatException](Media.decodeImage(bad))
+    val e = intercept[FormatException](Media.decodeImage("jpeg", bad))
     assert(e.getMessage.startsWith("jpeg:") && e.getMessage.contains("DQT"),
       e.getMessage)
     // same for a DHT (0xffc4) Tc|Th byte: Th=15
     val dht = good.indexOfSlice(Seq(0xff.toByte, 0xc4.toByte))
     assert(dht >= 0, "no DHT marker in encoder output")
     val bad2 = good.clone(); bad2(dht + 4) = 0x0f
-    val e2 = intercept[FormatException](Media.decodeImage(bad2))
+    val e2 = intercept[FormatException](Media.decodeImage("jpeg", bad2))
     assert(e2.getMessage.startsWith("jpeg:") && e2.getMessage.contains("DHT"),
       e2.getMessage)
   }

@@ -5,8 +5,9 @@ import java.io.ByteArrayOutputStream
 import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
 import javax.imageio.metadata.IIOMetadataNode
 
-/** JPEG test inputs in the layouts `Media.encodeImage` does not write —
-  * grayscale, 4:4:4 color, restart intervals, progressive — written
+/** JPEG test inputs in the qualities and layouts `Media.encodeImage`
+  * does not write — quality below 1.0, grayscale, 4:4:4 color, restart
+  * intervals, progressive — written
   * through the JDK writer's own metadata tree, so the specs can check
   * that `Media.decodeImage` reads every layout real files use.
   */

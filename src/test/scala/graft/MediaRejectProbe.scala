@@ -30,7 +30,7 @@ object MediaRejectProbe {
       val payloads = Array.tabulate(rows)(i =>
         hdr ++ text.take(64 + i % 256))
       def reject(): Unit = payloads.foreach { p =>
-        try { Media.decodeImage(p); sys.error(s"$fmt fake decoded") }
+        try { Media.decodeImage(fmt, p); sys.error(s"$fmt fake decoded") }
         catch { case _: FormatException => }
       }
       def stub(): Unit = payloads.zipWithIndex.foreach { case (p, i) =>

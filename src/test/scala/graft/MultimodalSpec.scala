@@ -94,8 +94,25 @@ class MultimodalSpec extends SparkFunSuite {
   }
 
   private def rejects(bytes: Array[Byte], fmt: String): FormatException = {
-    val e = intercept[FormatException](Media.decodeImage(bytes))
+    val e = intercept[FormatException](Media.decodeImage(fmt, bytes))
     assert(e.getMessage.startsWith(s"$fmt:"), e.getMessage)
+    e
+  }
+
+  /** [[rejects]], and the rejection allocates under 16 MB on the
+    * calling thread (after a warm-up decode of a valid `warm` payload):
+    * a header declaring gigabytes is refused before any pixel buffer.
+    */
+  private def rejectsUnallocated(bytes: Array[Byte], fmt: String,
+                                 warm: Array[Byte]): FormatException = {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    Media.decodeImage(fmt, warm)
+    val before = mx.getThreadAllocatedBytes(tid)
+    val e = rejects(bytes, fmt)
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    assert(allocated < (16L << 20), s"$fmt rejection allocated $allocated bytes")
     e
   }
 
@@ -108,7 +125,7 @@ class MultimodalSpec extends SparkFunSuite {
     assert(((bytes(18) & 0xff): Int) === 5 && ((bytes(22) & 0xff): Int) === 3)
     // bottom-up rows, B,G,R: the file's first pixel is the last row's first
     assert(bytes.slice(54, 57).toSeq === Seq(rgb(32), rgb(31), rgb(30)))
-    val back = Media.decodeImage(bytes)
+    val back = Media.decodeImage("bmp", bytes)
     assert(back.width === 5 && back.height === 3)
     assert(back.rgb.toSeq === rgb.toSeq)
   }
@@ -125,21 +142,22 @@ class MultimodalSpec extends SparkFunSuite {
     val row0 = bytes.slice(54, 54 + rowBytes)
     Array.copy(bytes, 54 + rowBytes, bytes, 54, rowBytes)
     Array.copy(row0, 0, bytes, 54 + rowBytes, rowBytes)
-    assert(Media.decodeImage(bytes).rgb.toSeq === rgb.toSeq)
+    assert(Media.decodeImage("bmp", bytes).rgb.toSeq === rgb.toSeq)
   }
 
   test("Bmp round-trips every width 1..9 (all pad remainders) and height 1..4") {
     val rnd = new java.util.Random(7)
     for (w <- 1 to 9; h <- 1 to 4) {
       val rgb = Array.fill(w * h * 3)(rnd.nextInt(256).toByte)
-      val back = Media.decodeImage(Media.encodeImage(Image(w, h, rgb), "bmp"))
+      val back = Media.decodeImage("bmp", Media.encodeImage(Image(w, h, rgb), "bmp"))
       assert(back.width === w && back.height === h)
       assert(back.rgb.toSeq === rgb.toSeq, s"mismatch at ${w}x$h")
     }
   }
 
   test("Bmp.decode rejects non-BMP and unsupported flavors loudly") {
-    intercept[FormatException](Media.decodeImage("nope".getBytes))
+    rejects("nope".getBytes, "bmp")
+    rejects(Multimodal.RiffWaveHeader, "riff") // not an image kind
     val ok = Media.encodeImage(Image(2, 2, new Array[Byte](12)), "bmp")
     val badHeader = ok.clone(); badHeader(14) = 52 // no such info-header size
     rejects(badHeader, "bmp")
@@ -229,19 +247,11 @@ class MultimodalSpec extends SparkFunSuite {
     val crc = new java.util.zip.CRC32()
     crc.update(png, 12, 4 + 13)
     putBe(png, 12 + 4 + 13, crc.getValue.toInt)
-    val mx = java.lang.management.ManagementFactory.getThreadMXBean
-      .asInstanceOf[com.sun.management.ThreadMXBean]
-    val tid = Thread.currentThread().getId
-    for ((bytes, fmt) <- Seq(bmp -> "bmp", png -> "png")) {
-      Media.decodeImage(Media.encodeImage(small, fmt)) // warm the reader
-      val before = mx.getThreadAllocatedBytes(tid)
-      val e = rejects(bytes, fmt)
-      val allocated = mx.getThreadAllocatedBytes(tid) - before
-      // the JDK's BMP header check refuses first; PNG reaches the bound
-      if (fmt == "png") assert(e.getMessage.contains("50000x50000"), e.getMessage)
-      // 7.5 GB decoded: refused from the header, before any pixel buffer
-      assert(allocated < (16L << 20), s"$fmt rejection allocated $allocated bytes")
-    }
+    // 7.5 GB decoded: refused from the header, before any pixel buffer;
+    // the JDK's BMP header check refuses first, PNG reaches the bound
+    rejectsUnallocated(bmp, "bmp", Media.encodeImage(small, "bmp"))
+    val e = rejectsUnallocated(png, "png", Media.encodeImage(small, "png"))
+    assert(e.getMessage.contains("implausible dimensions 50000x50000"), e.getMessage)
     val fs = Multimodal.extractFeatures(spark,
       Seq((1L, bmp), (2L, png)).toDF("id", "payload")).collect()
       .map(f => f.id -> f).toMap
@@ -253,7 +263,7 @@ class MultimodalSpec extends SparkFunSuite {
   test("Png round-trips arbitrary RGB for every size 1..6 x 1..4") {
     for (w <- 1 to 6; h <- 1 to 4) {
       val rgb = Array.tabulate(w * h * 3)(i => ((i * 131 + 7) % 256).toByte)
-      val out = Media.decodeImage(Media.encodeImage(Image(w, h, rgb), "png"))
+      val out = Media.decodeImage("png", Media.encodeImage(Image(w, h, rgb), "png"))
       assert(out.width == w && out.height == h)
       assert(out.rgb.sameElements(rgb), s"pixels corrupted at ${w}x$h")
     }
@@ -302,7 +312,7 @@ class MultimodalSpec extends SparkFunSuite {
     val ihdr = be(w) ++ be(h) ++ Array[Byte](8, 2, 0, 0, 0)
     val png = Multimodal.PngHeader ++ chunk("IHDR", ihdr) ++
       chunk("IDAT", comp.take(n)) ++ chunk("IEND", Array.emptyByteArray)
-    val out = Media.decodeImage(png)
+    val out = Media.decodeImage("png", png)
     assert(out.rgb.sameElements(rgb),
       "filtered scanlines (Sub/Up/Average/Paeth) did not unfilter to the source")
   }
@@ -313,14 +323,14 @@ class MultimodalSpec extends SparkFunSuite {
     rejects(good.take(20), "png")  // inside IHDR
     rejects(good.take(good.length / 2), "png") // inside IDAT
     rejects(Multimodal.PngHeader ++ "just text behind a magic".getBytes, "png")
-    intercept[FormatException](Media.decodeImage("not a png".getBytes))
+    rejects("not a png".getBytes, "png")
   }
 
   test("Gif round-trips arbitrary RGB for every size 1..6 x 1..4") {
     for (w <- 1 to 6; h <- 1 to 4) {
       val rgb = Array.tabulate(w * h * 3)(i => ((i * 131 + 7) % 256).toByte)
       val bytes = Media.encodeImage(Image(w, h, rgb), "gif")
-      val out = Media.decodeImage(bytes)
+      val out = Media.decodeImage("gif", bytes)
       assert(out.width == w && out.height == h)
       assert(out.rgb.sameElements(rgb), s"pixels corrupted at ${w}x$h")
     }
@@ -342,7 +352,7 @@ class MultimodalSpec extends SparkFunSuite {
     val bytes = Media.encodeImage(Image(w, h, rgb), "gif")
     // two colors -> real compression must beat 1 byte/pixel handily
     assert(bytes.length < w * h / 2, s"LZW not compressing: ${bytes.length}")
-    val out = Media.decodeImage(bytes)
+    val out = Media.decodeImage("gif", bytes)
     assert(out.rgb.sameElements(rgb), "pixels corrupted through LZW growth/reset")
   }
 
@@ -356,18 +366,22 @@ class MultimodalSpec extends SparkFunSuite {
       Image(257, 1, Array.tabulate(257 * 3)(i =>
         (if (i % 3 == 0) i / 3 else if (i % 3 == 1) i / 3 / 256 else 0).toByte)),
       "gif"))
-    // decode: a PNG header whose decoded RGB exceeds one array is
-    // refused by name
-    val b = Media.encodeImage(Image(2, 2, Array.tabulate(12)(_.toByte)), "png")
+    // decode: a PNG header must be bounded even when w*h*3 alone fits
+    // one array (the JDK reader would take a 2 GB raster for it before
+    // failing on the missing data), and refused by name
+    val ihdrW = 1365; val ihdrH = 524288
+    val good = Media.encodeImage(Image(2, 2, Array.tabulate(12)(_.toByte)), "png")
+    // patch IHDR dims + recompute its CRC
+    val b = good.clone()
     def putBe(off: Int, v: Int): Unit = {
       b(off) = (v >>> 24).toByte; b(off + 1) = (v >>> 16).toByte
       b(off + 2) = (v >>> 8).toByte; b(off + 3) = v.toByte
     }
-    putBe(16, 1365); putBe(20, 1 << 20)
+    putBe(16, ihdrW); putBe(20, ihdrH)
     val crc = new java.util.zip.CRC32()
     crc.update(b, 12, 4 + 13)
     putBe(12 + 4 + 13, crc.getValue.toInt)
-    val ex = rejects(b, "png")
+    val ex = rejectsUnallocated(b, "png", good)
     assert(ex.getMessage.contains("implausible dimensions"))
   }
 
@@ -395,7 +409,7 @@ class MultimodalSpec extends SparkFunSuite {
     }
     assert(interlaced(off) == 0x2c && (interlaced(off + 9) & 0x40) != 0,
       "writer did not interlace")
-    assert(Media.decodeImage(interlaced).rgb.sameElements(big))
+    assert(Media.decodeImage("gif", interlaced).rgb.sameElements(big))
   }
 
   test("extractFeatures dispatches gif to the REAL decoder, with row fallback") {
@@ -448,7 +462,7 @@ class MultimodalSpec extends SparkFunSuite {
       Image(w, h, px.flatMap(v => Array(v, v, v))), "jpeg")
     for (bytes <- Seq(gray, color)) {
       assert((bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8)
-      val back = Media.decodeImage(bytes)
+      val back = Media.decodeImage("jpeg", bytes)
       assert(back.width === w && back.height === h)
       assert(JpegFixtures.samples(back, 1).toSeq === px.toSeq,
         "DC-only blocks must be lossless")
@@ -467,7 +481,7 @@ class MultimodalSpec extends SparkFunSuite {
     }
     val bytes = JpegFixtures.encode(w, h, 3, rgb, 0.95f)
     assert((bytes(sofAt(bytes, 0xc0) + 11) & 0xff) === 0x11, "Y not 1x1-sampled")
-    val back = Media.decodeImage(bytes)
+    val back = Media.decodeImage("jpeg", bytes)
     assert(back.width === w && back.height === h)
     val p = psnr(back.rgb, rgb)
     assert(p > 25.0, f"PSNR $p%.1f dB too low for q95 4:4:4")
@@ -483,10 +497,9 @@ class MultimodalSpec extends SparkFunSuite {
       rgb(i + 1) = (90 + x * 3 + y * 5).toByte
       rgb(i + 2) = (140 + x * 2 + y * 2).toByte
     }
-    // Media writes color JPEG as 4:2:0
-    val bytes = Media.encodeImage(Image(w, h, rgb), "jpeg", 0.95f)
+    val bytes = JpegFixtures.encode(w, h, 3, rgb, 0.95f, subsample = true)
     assert((bytes(sofAt(bytes, 0xc0) + 11) & 0xff) === 0x22, "Y not 2x2-sampled")
-    val back = Media.decodeImage(bytes)
+    val back = Media.decodeImage("jpeg", bytes)
     assert(back.width === w && back.height === h)
     val p = psnr(back.rgb, rgb)
     assert(p > 25.0, f"4:2:0 PSNR $p%.1f dB too low")
@@ -494,13 +507,17 @@ class MultimodalSpec extends SparkFunSuite {
     val full = JpegFixtures.encode(w, h, 3, rgb, 0.95f)
     assert(bytes.length < full.length,
       s"4:2:0 (${bytes.length}B) not smaller than 4:4:4 (${full.length}B)")
+    // Media writes color JPEG in this layout too, at quality 1.0
+    val media = Media.encodeImage(Image(w, h, rgb), "jpeg")
+    assert((media(sofAt(media, 0xc0) + 11) & 0xff) === 0x22, "Y not 2x2-sampled")
+    assert(psnr(Media.decodeImage("jpeg", media).rgb, rgb) > 25.0)
   }
 
   test("Jpeg: smooth gradient at quality 90 reconstructs closely") {
     val (w, h) = (32, 32)
     val px = Array.tabulate(w * h)(i => ((i % w) * 4 + (i / w) * 3).toByte)
     val back = JpegFixtures.samples(
-      Media.decodeImage(JpegFixtures.encode(w, h, 1, px, 0.9f)), 1)
+      Media.decodeImage("jpeg", JpegFixtures.encode(w, h, 1, px, 0.9f)), 1)
     var maxErr = 0
     for (i <- 0 until w * h)
       maxErr = math.max(maxErr, math.abs((back(i) & 0xff) - (px(i) & 0xff)))
@@ -518,7 +535,7 @@ class MultimodalSpec extends SparkFunSuite {
     assert(bytes.sliding(2).exists(p =>
       (p(0) & 0xff) == 0xff && (p(1) & 0xff) >= 0xd0 &&
         (p(1) & 0xff) <= 0xd7), "no RSTn in scan")
-    val back = Media.decodeImage(bytes)
+    val back = Media.decodeImage("jpeg", bytes)
     assert(back.width === w && back.height === h)
     // quality 100 + per-pixel gradient is NOT DC-only, so compare by
     // near-exactness, not equality
@@ -531,15 +548,13 @@ class MultimodalSpec extends SparkFunSuite {
     val rgb = Array.tabulate(w * h * 3)(i => (50 + (i / 3) % 97).toByte)
     val cBytes = JpegFixtures.encode(w, h, 3, rgb, 0.95f, subsample = true,
       restartInterval = 2)
-    val cBack = Media.decodeImage(cBytes)
+    val cBack = Media.decodeImage("jpeg", cBytes)
     assert(cBack.width === w && cBack.height === h)
     assert(psnr(cBack.rgb, rgb) > 25.0)
   }
 
   test("Jpeg.decode rejects non-JPEG, progressive markers, and truncation") {
-    intercept[FormatException] {
-      Media.decodeImage("definitely not a jpeg".getBytes)
-    }
+    rejects("definitely not a jpeg".getBytes, "jpeg")
     val px = Array.fill(8 * 8)(100.toByte)
     val good = JpegFixtures.encode(8, 8, 1, px, 0.75f)
     // flip SOF0 (FFC0) to SOF2 (FFC2): a sequential scan behind a
@@ -556,7 +571,7 @@ class MultimodalSpec extends SparkFunSuite {
     val progressive = JpegFixtures.encode(16, 16, 1, grad, 1f, progressive = true)
     assert(progressive.sliding(2).exists(p =>
       (p(0) & 0xff) == 0xff && (p(1) & 0xff) == 0xc2), "not progressive")
-    val back = JpegFixtures.samples(Media.decodeImage(progressive), 1)
+    val back = JpegFixtures.samples(Media.decodeImage("jpeg", progressive), 1)
     assert(back.indices.forall(i => math.abs((back(i) & 0xff) - (grad(i) & 0xff)) <= 2))
   }
 
