@@ -44,6 +44,12 @@ object FileManifest {
 
   def list(spark: SparkSession, root: String, versionTag: String): DataFrame = {
     import spark.implicits._
+    listRows(spark, root, versionTag).toDS().toDF()
+  }
+
+  /** The rows of [[list]], as the driver lists them. */
+  def listRows(spark: SparkSession, root: String,
+               versionTag: String): Seq[ManifestRow] = {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = scala.collection.mutable.ArrayBuffer.empty[ManifestRow]
     // Sidecars (_SUCCESS, _committed*, .*.crc) are writer bookkeeping,
@@ -83,7 +89,7 @@ object FileManifest {
           stdKeyStr(rootName), versionTag, sz, mt)
       } else walk(base)
     }
-    out.toSeq.toDS().toDF()
+    out.toSeq
   }
 
   /** Driver-side twin of `Cols.stdKey` for manifest construction. */
@@ -93,10 +99,6 @@ object FileManifest {
       .replaceAll("\\.[a-zA-Z0-9]+$", "")
       .replaceAll("[^a-zA-Z0-9]", "_")
       .toLowerCase
-
-  /** Tagged union of two manifests — `assess_changes.qmd:82-86`. */
-  def unionTagged(oldM: DataFrame, newM: DataFrame): DataFrame =
-    oldM.unionByName(newM)
 
   /** Old↔new matching on the standardized key: the reference does a
     * `pivot_wider` (`assess_changes.qmd:97-103`); the idiomatic Spark form

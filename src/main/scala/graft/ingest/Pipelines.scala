@@ -78,23 +78,24 @@ object Pipelines {
     * both version trees, file-level drift, then per-matched-pair row/
     * schema drift for pairs whose extensions agree (csv-csv or
     * xlsx-xlsx, `:120-122`), through [[SchemaDiff.pairCompare]].
-    * Returns (file_diff, pair_report).
+    * Both manifests are listed on the driver, so the pairs are matched
+    * there: every (old, new) combination of a `std_name`, as
+    * [[FileManifest.joinVersions]] gives. Returns (file_diff,
+    * pair_report).
     */
   def assessChanges(spark: SparkSession, oldDir: String,
                     newDir: String): (DataFrame, DataFrame) = {
-    val o = FileManifest.list(spark, oldDir, "old")
-    val n = FileManifest.list(spark, newDir, "new")
-    val fileDiff = FileManifest.fileDiff(o, n)
-    val csv = "(?i).*\\.csv$"
-    val xlsx = "(?i).*\\.xlsx$"
-    val pairs = FileManifest.joinVersions(o, n)
-      .filter(col("old_path").isNotNull && col("new_path").isNotNull)
-      .filter(
-        (col("old_path").rlike(csv) && col("new_path").rlike(csv)) ||
-          (col("old_path").rlike(xlsx) && col("new_path").rlike(xlsx)))
-      .select("std_name", "old_path", "new_path")
-      .collect() // metadata-scale: one row per matched FILE, not per record
-      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq
+    import spark.implicits._
+    val o = FileManifest.listRows(spark, oldDir, "old")
+    val n = FileManifest.listRows(spark, newDir, "new")
+    val fileDiff = FileManifest.fileDiff(o.toDF(), n.toDF())
+    def ext(path: String) = Seq(".csv", ".xlsx").find(path.toLowerCase.endsWith)
+    val newByName = n.groupBy(_.std_name)
+    val pairs = for {
+      a <- o
+      b <- newByName.getOrElse(a.std_name, Nil)
+      if ext(a.full_path).isDefined && ext(a.full_path) == ext(b.full_path)
+    } yield (a.std_name, a.full_path, b.full_path)
     (fileDiff, SchemaDiff.pairCompare(spark, pairs))
   }
 

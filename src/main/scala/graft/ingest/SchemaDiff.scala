@@ -39,18 +39,6 @@ object SchemaDiff {
       (col("old_type") =!= col("new_type")).as("type_changed"))
   }
 
-  /** Added/removed column lists as nullable arrays — NA-when-empty, never
-    * empty array, matching `assess_changes.qmd:150-158`.
-    */
-  def colSetDiff(spark: SparkSession, oldS: StructType, newS: StructType): DataFrame = {
-    val d = schemaDiff(spark, oldS, newS)
-    val added = d.filter(col("added")).agg(sort_array(collect_list("column")).as("a"))
-    val removed = d.filter(col("removed")).agg(sort_array(collect_list("column")).as("r"))
-    added.crossJoin(removed).select(
-      when(size(col("a")) > 0, col("a")).as("added_cols"),
-      when(size(col("r")) > 0, col("r")).as("removed_cols"))
-  }
-
   /** Schema and row count of every CSV file in `paths`: what a per-file
     * `spark.read.option("header", "true").option("inferSchema", "true")
     * .csv(path)` gives as `.schema` and `.count()`, in one Spark job for

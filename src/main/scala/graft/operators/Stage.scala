@@ -5,20 +5,19 @@ import org.apache.spark.sql.DataFrame
 
 /** Stage materialization for multi-branch operator plans.
   *
-  * Sketch operators (MinHash/SimHash/LSH/PQ) compute a narrow scalar
-  * frame that feeds several plan branches (banding + signature/code
-  * join-backs); without materialization every branch re-scans and
-  * re-hashes the full corpus. Round 1/2 used `persist()`, which leaks
-  * cached blocks into the caller's session until the GC-driven
-  * ContextCleaner gets around to them — the round-1 "84 s anomaly" and
-  * a standing hazard in any long-lived session.
+  * A **stage checkpoint** writes a narrow frame once to parquet and
+  * hands every consumer a fresh scan of that file. It earns its place
+  * where a frame feeds several plan branches over a wide source (the
+  * MinHash/SimHash/LSH/PQ sketch frames: banding plus signature/code
+  * join-backs would each re-scan and re-hash the corpus), or where it
+  * cuts the lineage of an iterative loop. Elsewhere a lazy plan is
+  * cheaper: the write runs a Spark job while the query is being built.
+  * `StagePolicySpec` lists every call site with its reason.
   *
-  * Round 3 replaces the cache with a **stage checkpoint**: write the
-  * scalar frame once to parquet, hand every branch a fresh scan of that
-  * file. This is exactly the production shape at 100 TB (checkpoint the
-  * signatures, not the text), costs no executor memory, keeps each
-  * invocation self-contained (no cross-query or cross-rep cache reuse),
-  * and the columnar scans are column-pruned per branch for free.
+  * Unlike `persist()`, a stage leaks no cached blocks into the caller's
+  * session and costs no executor memory; it is the production shape at
+  * 100 TB (checkpoint the signatures, not the text), keeps each
+  * invocation self-contained, and each branch's scan is column-pruned.
   *
   * Disk lifecycle: every stage directory is tracked. Local-tmp stages
   * (the default) are deleted by a JVM shutdown hook; `spark.graft.

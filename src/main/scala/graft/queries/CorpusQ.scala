@@ -670,29 +670,23 @@ object CorpusQ {
     // multiply is lossless) and all three moments (Σq_i, Σq_j, Σq_iq_j)
     // accumulate as order-free LONGs; the covariance then derives
     // through one fixed IEEE expression the oracle replays verbatim.
-    // One vec_id-keyed self-join of 8-row groups, group count bounded
-    // by labels × 36 cells.
+    // Each row expands to its own 36 (i ≤ j) coordinate pairs, so one
+    // embeddings scan feeds one aggregate: no vec_id self-join. Group
+    // count is bounded by labels × 36 cells.
     Q("embed_covar",
       (s, d) => {
-        // staged: the self-join consumes this frame TWICE (without it
-        // both branches rescan + re-explode). Dims 1-8 quantize once per
-        // row; a null embedding still yields 8 null-qv rows that count
-        // in n, as in the oracle (posexplode would drop them)
-        val q = graft.operators.Stage.materialize(
-          t(s, d, "embeddings").filter(col("label") < 3)
-            .select(col("vec_id"), col("label"), VecFns.gridQuantize(
-              slice(col("embedding"), 1, 8), 2097152.0).as("qa"))
-            .select(col("vec_id"), col("label"), explode(expr(
-              "transform(sequence(1, 8), i -> struct(i AS i, " +
-                "element_at(qa, i) AS qv))")).as("e"))
-            .select(col("vec_id"), col("label"),
-              col("e.i").as("i"), col("e.qv").as("qv")),
-          "covar_coords")
+        // Dims 1-8 quantize once per row. A null embedding still yields
+        // 36 null-valued pairs that count in n, as in the oracle's
+        // self-join of its 8 null-qv rows
+        val q = t(s, d, "embeddings").filter(col("label") < 3)
+          .select(col("label"), VecFns.gridQuantize(
+            slice(col("embedding"), 1, 8), 2097152.0).as("qa"))
+          .select(col("label"), expr("inline(flatten(transform(" +
+            "sequence(1, 8), i -> transform(sequence(i, 8), j -> " +
+            "struct(i AS i, j AS j, element_at(qa, i) AS qv, " +
+            "element_at(qa, j) AS qw)))))"))
         val nD = col("n").cast("double")
-        q.join(q.select(col("vec_id"), col("i").as("j"),
-            col("qv").as("qw")), Seq("vec_id"))
-          .filter(col("j") >= col("i"))
-          .groupBy("label", "i", "j")
+        q.groupBy("label", "i", "j")
           .agg(count(lit(1)).as("n"), sum("qv").as("si"),
             sum("qw").as("sj"), sum(col("qv") * col("qw")).as("sij"))
           .select(col("label"), col("i"), col("j"), col("n"),

@@ -1508,7 +1508,9 @@ object IngestQ {
     // sides broadcast when small, the big-big l_orderkey→orders check
     // shuffles on the join key exactly once; the bounded 4-row result
     // unions at the end. orphan_rate = one IEEE division of exact
-    // counts.
+    // counts. The planted fact frame is staged: it feeds three totals
+    // and three anti-joins over lineitem, and a one-pass left-join
+    // rewrite measured slower on the 10× copy (CHANGES.md).
     Q("dq_referential",
       (s, d) => {
         val li = graft.operators.Stage.materialize(

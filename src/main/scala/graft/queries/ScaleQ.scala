@@ -22,13 +22,14 @@ object ScaleQ {
 
   /** Canonical co-purchase supplier edge set — distinct (a < b) pairs
     * of suppliers sharing a sampled order (orderkey % 20, first 3
-    * lines) — staged once per (session, sf-dir) and shared by all five
-    * graph queries (triangles, jaccard, khop, bfs, cc). Factored so a
-    * sampling tweak cannot silently diverge one query's graph from the
-    * others', and so sibling queries stop re-deriving the self-join
-    * per invocation (the typeHourly/plantedDocs discipline). Each
-    * query's ORACLE still re-derives the identical edge set from raw
-    * lineitem — only the Spark side shares.
+    * lines) — staged once per (session, sf-dir) and shared by the
+    * eight graph queries (assort, bfs, cc, degree, jaccard, khop,
+    * label_prop, triangles). Factored so a sampling tweak cannot
+    * silently diverge one query's graph from the others'; staged so
+    * sibling queries do not re-derive the lineitem self-join (the
+    * eight, run in sequence after one `Stage.purge`, are slower lazy;
+    * CHANGES.md). Each query's ORACLE still re-derives the identical
+    * edge set from raw lineitem — only the Spark side shares.
     */
   private val coPurchaseCache =
     new TextQ.ModelCache[org.apache.spark.sql.DataFrame](4)
@@ -557,12 +558,13 @@ object ScaleQ {
     // volume — the per-day twin of dq_outlier's one-row whole-column
     // screen, and the audit that catches a dropped producer or a
     // replay storm as specific dates. Daily counts are a
-    // dimension-bounded aggregate; med/MAD over the day series come
-    // from the same exact iterative-histogram selections (driver
-    // literals, percentile_cont convention — the repo's no-global-
-    // window rule holds even on a 30-row series), and the day list
-    // filter is the robust |c − med| > 3·1.4826·mad rule with exact
-    // integer counts on both sides.
+    // dimension-bounded aggregate (one row per day of the corpus's
+    // time extent). The day series folds into ONE keyless-aggregate
+    // row; med and MAD are the middle-rank averages of its sorted
+    // counts and deviations (percentile_cont convention, no window),
+    // and the row explodes back to the days that pass the robust
+    // |c − med| > 3·1.4826·mad rule — one lazy plan, no driver action.
+    // No event → no row.
     Q("dq_volume_anomaly",
       (s, d) => {
         // the synthetic feed is uniform, so the anomalies are PLANTED
@@ -577,15 +579,24 @@ object ScaleQ {
           .filter(col("day") =!= to_date(lit("2024-01-20")) ||
             col("event_id") % 50 === 0)
           .unionByName(storm).unionByName(storm)
-        val days = graft.operators.Stage.materialize(
-          planted.groupBy("day").agg(count(lit(1)).as("n_events")),
-          "dq_vol_days")
-        val (med, mad) = graft.operators.RobustStats.medMad(
-          days, col("n_events"))
-        days.filter(abs(col("n_events") - lit(med)) >
-            lit(3.0) * lit(1.4826) * lit(mad))
-          .select(col("day"), col("n_events"),
-            lit(med).as("med"), lit(mad).as("mad"))
+        // avg of the one or two middle elements of a sorted array
+        def mid(xs: org.apache.spark.sql.Column) = {
+          val k = size(xs)
+          (element_at(xs, ((k + 1) / 2).cast("int")) +
+            element_at(xs, ((k + 2) / 2).cast("int"))) / lit(2.0)
+        }
+        planted.groupBy("day").agg(count(lit(1)).as("n_events"))
+          .agg(collect_list(struct(col("day"), col("n_events"))).as("ds"))
+          .filter(size(col("ds")) > 0)
+          .withColumn("med", mid(sort_array(
+            transform(col("ds"), r => r("n_events").cast("double")))))
+          .withColumn("mad", mid(sort_array(transform(col("ds"),
+            r => abs(r("n_events").cast("double") - col("med"))))))
+          .select(explode(col("ds")).as("r"), col("med"), col("mad"))
+          .filter(abs(col("r.n_events") - col("med")) >
+            lit(3.0) * lit(1.4826) * col("mad"))
+          .select(col("r.day").as("day"), col("r.n_events").as("n_events"),
+            col("med"), col("mad"))
       },
       Some("""WITH e0 AS (SELECT CAST(ts AS DATE) AS day, event_id
              |    FROM events),
@@ -625,7 +636,10 @@ object ScaleQ {
     // across nodes), hop-2 is sampled-join-sampled so the join is
     // fan-out² bounded per node, and the 1-hop set is excluded via
     // left-anti. Output per node: sampled 1-hop count and distinct
-    // exclusive 2-hop count.
+    // exclusive 2-hop count. The sampled frame is staged: it feeds both
+    // sides of the hop-2 join, the anti-join and n1, and lazy, each
+    // consumer re-runs the sampling window, which measured slower on
+    // the 10× copy (CHANGES.md).
     Q("graph_khop",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window

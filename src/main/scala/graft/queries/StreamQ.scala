@@ -74,10 +74,12 @@ object StreamQ {
   /** Dense per-type hourly count series (event_type, hb, v) — silent
     * hours participate as zeros (each type crossed with a broadcast
     * one-row (lo, hi) span and exploded over sequence(lo, hi), no
-    * driver action). Staged once per (session, sf-dir)
-    * and shared by ts_decompose / ts_theilsen (the plantedDocs
-    * discipline: two consumers must not rebuild the grid per
-    * invocation). The matching oracle prefix is [[typeHourlySql]].
+    * driver action). Staged once per (session, sf-dir) and shared by
+    * ts_acf_profile, ts_backtest, ts_decompose and ts_theilsen: the
+    * four, run in sequence after one `Stage.purge`, are slower with a
+    * lazy grid (CHANGES.md). The sparse counts are staged too: the
+    * span, the type list and the join-back all read them.
+    * The matching oracle prefix is [[typeHourlySql]].
     */
   private val typeHourlyCache = new graft.queries.TextQ.ModelCache[
     org.apache.spark.sql.DataFrame](4)
@@ -281,10 +283,10 @@ object StreamQ {
     // monitor that catches what a flat z-score screen (stream_anomaly)
     // miscalls when traffic has a daily cycle. Profile = (n, mean, sd)
     // per (event_type, hour); residual outliers compare each value
-    // against ITS OWN hour's moments. The narrow value frame is staged
-    // once and feeds both the profile aggregate and the join-back
-    // (repo staging convention); the profile side of the join is
-    // dimension-bounded (types × 24) so it broadcasts. The moments are
+    // against ITS OWN hour's moments. The narrow value frame feeds the
+    // profile aggregate and the join-back, each a pruned events scan;
+    // the profile is dimension-bounded (types × 24), so it broadcasts
+    // and rides the join-back's aggregate to the output. The moments are
     // computed from EXACT integer-cent sums (sum(c), sum(c²) as LONGs —
     // order-free, no float accumulation), then mean/sd derive through
     // one fixed left-to-right IEEE expression replayed verbatim by the
@@ -296,11 +298,9 @@ object StreamQ {
     // row in the round-8 local gate).
     Q("ts_seasonal",
       (s, d) => {
-        val e = graft.operators.Stage.materialize(
-          t(s, d, "events").filter(col("value").isNotNull)
-            .select(col("event_type"), hour(col("ts")).as("hr"),
-              graft.functions.Cols.cents(col("value")).as("c")),
-          "ts_seasonal_vals")
+        val e = t(s, d, "events").filter(col("value").isNotNull)
+          .select(col("event_type"), hour(col("ts")).as("hr"),
+            graft.functions.Cols.cents(col("value")).as("c"))
         val nD = col("n").cast("double")
         val prof = e.groupBy("event_type", "hr")
           .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
@@ -311,11 +311,10 @@ object StreamQ {
               (col("ss").cast("double") -
                 col("sc").cast("double") * col("sc").cast("double") / nD)
                 / (col("n") - 1).cast("double"), lit(0.0)))).as("sd_c"))
-        val outs = e.join(broadcast(prof), Seq("event_type", "hr"))
-          .groupBy("event_type", "hr")
+        e.join(broadcast(prof), Seq("event_type", "hr"))
+          .groupBy("event_type", "hr", "n", "mean_c", "sd_c")
           .agg(sum(when(abs(col("c").cast("double") - col("mean_c")) >
             lit(3.0) * col("sd_c"), 1L).otherwise(0L)).as("n_out"))
-        prof.join(outs, Seq("event_type", "hr"))
           .select(col("event_type"), col("hr"), col("n"),
             (floor(col("mean_c") * lit(100.0) + lit(0.5)) / lit(10000.0))
               .as("mean"),
@@ -411,37 +410,31 @@ object StreamQ {
     // contract, NOT a global window), averaged over the two middle
     // ranks exactly as the oracle replays; the whole-table iterative
     // histogram (RobustStats) is the wrong tool per-group, this shape
-    // is. Selection-by-rank keeps tie handling value-identical.
+    // is. Selection-by-rank keeps tie handling value-identical. Every
+    // window partitions by user_id, so one events scan and one
+    // exchange feed both selections and the final aggregate.
     Q("ts_mad",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         def r4(c: org.apache.spark.sql.Column) =
           floor(c * lit(10000.0) + lit(0.5)) / lit(10000.0)
-        // the narrow (user, value) frame feeds FOUR branches (two
-        // rank-selection passes + two join-backs): stage it so the
-        // wide source is read once, not four times
-        val vals = graft.operators.Stage.materialize(
-          t(s, d, "events").filter(col("value").isNotNull)
-            .select(col("user_id"), col("value").as("v")),
-          "ts_mad_vals")
         val wp = Window.partitionBy("user_id")
-        val r = vals
-          .withColumn("rn",
-            row_number().over(wp.orderBy(col("v"))))
-          .withColumn("nn", count(lit(1)).over(wp))
-        val med = r.filter(col("rn") === expr("(nn + 1) div 2") ||
-            col("rn") === expr("(nn + 2) div 2"))
-          .groupBy("user_id").agg(avg(col("v")).as("med"))
-        val dev = vals.join(med, "user_id")
+        // `as` = avg of x over the one or two middle ranks (2·rn − nn
+        // in [0, 2]) of the user's rows ordered by x: the per-user
+        // median, as the oracle's avg over rn = (nn+1) div 2, (nn+2) div 2
+        def median(x: String, as: String)(df: org.apache.spark.sql.DataFrame) =
+          df.withColumn("rn", row_number().over(wp.orderBy(col(x))))
+            .withColumn("nn", count(lit(1)).over(wp))
+            .withColumn(as, avg(when((col("rn") * 2 - col("nn"))
+              .between(0, 2), col(x))).over(wp))
+            .drop("rn", "nn")
+        // a null user_id drops, as from the oracle's joins on user_id
+        t(s, d, "events")
+          .filter(col("value").isNotNull && col("user_id").isNotNull)
+          .select(col("user_id"), col("value").as("v"))
+          .transform(median("v", "med"))
           .withColumn("dv", abs(col("v") - col("med")))
-        val r2 = dev
-          .withColumn("rn",
-            row_number().over(wp.orderBy(col("dv"))))
-          .withColumn("nn", count(lit(1)).over(wp))
-        val mad = r2.filter(col("rn") === expr("(nn + 1) div 2") ||
-            col("rn") === expr("(nn + 2) div 2"))
-          .groupBy("user_id").agg(avg(col("dv")).as("mad"))
-        dev.join(mad, "user_id")
+          .transform(median("dv", "mad"))
           .groupBy("user_id")
           .agg(count(lit(1)).as("n"),
             r4(min(col("med"))).as("med"),

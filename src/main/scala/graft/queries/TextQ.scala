@@ -60,21 +60,17 @@ object TextQ {
   /** Fitted IVF-PQ composite indexes — same fit-once discipline. */
   private[queries] val ivfPqCache = new ModelCache[Similarity.IvfPqModel](4)
 
-  /** Staged-once planted corpora, keyed per (session, sf-dir) — six
-    * queries (dedup_minhash/simhash/jaccard/cluster, text_novelty,
-    * corpus_split_safe) consume the same union; before round 8 each rebuilt
-    * it (two scans of documents per invocation × 3 gate runs ×
-    * `reps` bench reps). NOTE: `Stage.purge` deletes the staged file
+  /** Staged-once planted corpora, keyed per (session, sf-dir) — eight
+    * queries (dedup_minhash/simhash/jaccard/cluster/substr/best,
+    * text_novelty, corpus_split_safe) consume the same union, and the
+    * eight, run in sequence after one `Stage.purge`, are slower with a
+    * lazy union (CHANGES.md). NOTE: `Stage.purge` deletes the staged file
     * AND clears every ModelCache (the purge-listener registration in
     * the class body), so a purge in a long-lived session restages on
     * next access instead of handing out frames over deleted files.
     */
   private[queries] val plantedCache = new ModelCache[DataFrame](4)
 
-  /** documents ∪ one-token-perturbed copies of every 50th doc,
-    * materialized once per (session, corpus dir) and shared by every
-    * planted-corpus query.
-    */
   /** Fitted near-dup sketch/bucket stages — fit-once discipline for the
     * cosine near-dup machinery: `sim_neardup_cos` and `dedup_semantic`
     * run [[Similarity.nearDupPairs]] over the SAME planted corpus, and
@@ -119,6 +115,10 @@ object TextQ {
     Similarity.nearDupPairs(model, corpus, threshold)
   }
 
+  /** documents ∪ one-token-perturbed copies of every 50th doc,
+    * materialized once per (session, corpus dir) and shared by every
+    * planted-corpus query.
+    */
   private[queries] def plantedDocs(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     plantedCache.getOrFit(s, d, {
       val docs = t(s, d, "documents").select(col("doc_id"), col("text"))

@@ -52,13 +52,12 @@ object ZipCsv {
     * dropped by Spark's CSV-from-Dataset path).
     */
   def read(spark: SparkSession, path: String,
-           entryPattern: String = "(?i).*\\.csv$",
-           inferSchema: Boolean = true): DataFrame = {
+           entryPattern: String = "(?i).*\\.csv$"): DataFrame = {
     import spark.implicits._
     val ls = lines(spark, path, entryPattern).map(_._3)
     spark.read
       .option("header", "true")
-      .option("inferSchema", inferSchema.toString)
+      .option("inferSchema", "true")
       .csv(ls)
   }
 }

@@ -81,7 +81,7 @@ class IngestSpec extends SparkFunSuite {
     val (oldD, newD) = mkFixture()
     val o = FileManifest.list(spark, oldD.toString, "old")
     val n = FileManifest.list(spark, newD.toString, "new")
-    val piv = FileManifest.pivotDir(FileManifest.unionTagged(o, n))
+    val piv = FileManifest.pivotDir(o.unionByName(n))
       .select($"std_name", $"old", $"new")
       .as[(String, Option[String], Option[String])].collect().toSet
     val jv = FileManifest.joinVersions(o, n)
@@ -115,13 +115,6 @@ class IngestSpec extends SparkFunSuite {
     assert(added === removed)
   }
 
-  test("colSetDiff: NA-when-empty, never empty array") {
-    val s1 = Seq((1, "x")).toDF("a", "b").schema
-    val r = SchemaDiff.colSetDiff(spark, s1, s1)
-      .as[(Option[Seq[String]], Option[Seq[String]])].head()
-    assert(r === ((None, None)))
-  }
-
   test("pairCompare produces per-pair drift rows without collecting data") {
     val (oldD, newD) = mkFixture()
     val r = SchemaDiff.pairCompare(spark, Seq(
@@ -131,6 +124,17 @@ class IngestSpec extends SparkFunSuite {
       .head()
     assert(r._1 === "trade" && r._2 === 2L && r._3 === 3L && r._4 === 1L)
     assert(r._5 === None && r._6 === Some(Seq("c")) && r._7 === Some(Seq("b")))
+  }
+
+  test("pairCompare: identical schemas give null added/removed lists, " +
+       "never empty arrays") {
+    val (oldD, _) = mkFixture()
+    val f = oldD.resolve("filtered_Trade_V202301a.csv").toString
+    val r = SchemaDiff.pairCompare(spark, Seq(("trade", f, f)))
+      .select("added_cols", "removed_cols", "type_changed_cols")
+      .as[(Option[Seq[String]], Option[Seq[String]], Option[Seq[String]])]
+      .head()
+    assert(r === ((None, None, None)))
   }
 
   test("clean_prod: R-null not-in keeps NULL group rows; yearbook != drops them") {

@@ -46,28 +46,36 @@ object MediaRejectProbe {
           f"stub_us=${(t2 - t1) / 1e3 / rows}%.2f")
       }
     }
-    QueryNoopTimes.main(Array(dir, pairs.toString))
+    QueryNoopTimes.main(Array(dir, pairs.toString,
+      "multimodal_features,multimodal_hist"))
   }
 }
 
-/** Noop-sink wall time of `multimodal_features` and `multimodal_hist`,
-  * build included, in alternating order (`<sfDir> [pairs]`). It uses
-  * only the query registry, so this object alone also compiles at a
-  * commit without `Media`, for a parent/change comparison.
+/** Noop-sink wall time of registered queries, build included, in
+  * alternating order (`<sfDir> <pairs> <query,query,...>`). An item
+  * `a+b+c` times its queries in sequence as one run, so the consumers
+  * of one `ModelCache` entry share a single fit. Every run, the warm-up
+  * too, starts after `Stage.purge`, as each perfbench pass does, so no
+  * run times a cache hit left by an earlier run. It uses only the
+  * query registry and `Stage`, so this object alone also compiles at
+  * an older commit, for a parent/change comparison.
   */
 object QueryNoopTimes {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val pairs = args.lift(1).map(_.toInt).getOrElse(8)
+    val pairs = args(1).toInt
+    val names = args(2).split(",").toSeq
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", 4)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val names = Seq("multimodal_features", "multimodal_hist")
-    def run(q: String): Double = {
+    def run(item: String): Double = {
+      graft.operators.Stage.purge(spark)
       val t0 = System.nanoTime()
-      SparkEntry.queries(q)(spark, dir).write.format("noop")
-        .mode("overwrite").save()
+      item.split("\\+").foreach { q =>
+        SparkEntry.queries(q)(spark, dir).write.format("noop")
+          .mode("overwrite").save()
+      }
       (System.nanoTime() - t0) / 1e9
     }
     names.foreach(run) // warm

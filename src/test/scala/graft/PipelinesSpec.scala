@@ -106,6 +106,26 @@ class PipelinesSpec extends SparkFunSuite {
     assert(rows("trade") === (("trade", 1L, 2L, 1L, None, None, None)))
   }
 
+  test("EP2 assessChanges: pairs match on the driver, every combination " +
+       "of a repeated std_name, csv-csv and xlsx-xlsx only") {
+    val root = Files.createTempDirectory("ep2m")
+    val oldD = root.resolve("old"); val newD = root.resolve("new")
+    Files.createDirectories(oldD); Files.createDirectories(newD)
+    // "trade" twice on the old side: both pair with the new csv; the
+    // old .txt never pairs, the unmatched "gone" neither
+    Files.writeString(oldD.resolve("Trade_V202301.csv"), "a\n1\n")
+    Files.writeString(oldD.resolve("filtered_Trade_V202301.CSV"), "a\n1\n2\n")
+    Files.writeString(oldD.resolve("Trade_V202212.txt"), "a\n1\n")
+    Files.writeString(newD.resolve("Trade_V202401.csv"), "a\n1\n2\n3\n")
+    Files.writeString(oldD.resolve("Gone_V202301.csv"), "z\n0\n")
+    val (_, pc) = Pipelines.assessChanges(spark, oldD.toString, newD.toString)
+    assert(pc.select("std_name", "old_rows", "new_rows").as[(String, Long, Long)]
+      .collect().sorted.toSeq === Seq(("trade", 1L, 3L), ("trade", 2L, 3L)))
+    // the registered query's build: one csvProfiles job, no manifest join
+    val (_, jobs) = withJobCount(SparkEntry.queries("pair_compare")(spark, sfDir))
+    assert(jobs === 1, s"pair_compare ran $jobs build jobs")
+  }
+
   test("sink_report: markdown changelog over the EP2+EP3 frames") {
     val root = Files.createTempDirectory("rep")
     val oldD = root.resolve("old"); val newD = root.resolve("new")

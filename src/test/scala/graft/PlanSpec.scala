@@ -330,10 +330,13 @@ class PlanSpec extends SparkFunSuite {
       "pair-sort window leaked back into the ts_theilsen plan")
   }
 
-  test("embed_covar: quantized coords staged once; self-join not a rescan") {
+  test("embed_covar: one embeddings scan, no self-join") {
+    // each row generates its own 36 coordinate pairs: a vec_id
+    // self-join would scan and explode embeddings twice (or stage them)
     val p = plan("embed_covar")
-    assert(p.contains("graft_stage_covar_coords"),
-      "coord stage lost — the self-join would scan+explode embeddings twice")
+    val scans = p.linesIterator.count(_.contains("FileScan parquet"))
+    assert(scans == 1, s"$scans scans:\n$p")
+    assert(!p.contains("Join") && !p.contains("graft_stage"), p)
   }
 
   test("class_auc: no unpartitioned window (AUC via two-phase rank, not a sort)") {
