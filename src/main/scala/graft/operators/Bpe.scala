@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Byte-pair-encoding merge training — the tokenizer-learning step of
@@ -26,25 +26,33 @@ import org.apache.spark.sql.functions._
   * one narrow higher-order-function rewrite of the symbol strings;
   * each round's vocabulary is stage-checkpointed ([[Stage]]) to
   * truncate the iterative lineage. Vocabularies at or below
-  * `localVocabLimit` (default 100k words ≈ a few MB) instead collect
-  * once and train driver-side in microseconds — bit-identical results,
-  * asserted by spec.
+  * [[LocalVocabLimit]] words (≈ a few MB) instead collect once and
+  * train driver-side in microseconds — bit-identical results, asserted
+  * by spec.
+  *
+  * The vocabulary pass ([[vocabulary]]) and the per-document apply tail
+  * ([[docStats]]) serve all three subword trainers: BPE, [[WordPiece]]
+  * and [[Unigram]].
   */
 object Bpe {
+
+  /** Distinct-word count at or below which the subword trainers collect
+    * the vocabulary and train on the driver.
+    */
+  val LocalVocabLimit = 100000L
 
   /** Learn `numMerges` BPE merges from the corpus.
     *
     * @param docs corpus; tokenized as lowercase [a-z0-9]+ runs (the
     *             same convention as the tf-idf / perplexity operators)
     * @param localVocabLimit max distinct-word count for the driver-side
-    *             fast path; <= -1 reads `spark.graft.bpe.localVocabLimit`
-    *             (default 100000), 0 forces the distributed loop
+    *             fast path; 0 forces the distributed loop
     * @return (step, lhs, rhs, merged, pair_freq) — one row per learned
     *         merge, step 1-based; fewer than `numMerges` rows when the
     *         vocabulary runs out of adjacent pairs
     */
   def trainMerges(docs: DataFrame, textCol: String, numMerges: Int,
-                  localVocabLimit: Long = -1L): DataFrame = {
+                  localVocabLimit: Long = LocalVocabLimit): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val (_, merges, _) = trainCore(docs, textCol, numMerges, localVocabLimit)
@@ -66,7 +74,8 @@ object Bpe {
     *         documents keep a (0, 0, NULL) row
     */
   def subwordStats(docs: DataFrame, idCol: String, textCol: String,
-                   numMerges: Int, localVocabLimit: Long = -1L): DataFrame = {
+                   numMerges: Int,
+                   localVocabLimit: Long = LocalVocabLimit): DataFrame = {
     val (vocab, merges, finalSyms) = trainCore(docs, textCol, numMerges,
       localVocabLimit)
     // the distributed trainer already staged the fully-merged
@@ -78,12 +87,27 @@ object Bpe {
         df.select(col("w"), expr(mergeExpr(a, b, m)).as("syms"))
       }
     }
-    val sub = applied.select(col("w"),
+    docStats(docs, idCol, textCol, None)(_ => subwordCounts(applied))
+  }
+
+  /** (w, n_sub) from a (w, syms) table of space-joined symbols. */
+  private[operators] def subwordCounts(applied: DataFrame): DataFrame =
+    applied.select(col("w"),
       size(split(col("syms"), " ")).cast("long").as("n_sub"))
-    val tok = docs.select(col(idCol),
-      explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("w"))
-      .filter(col("w") =!= "")
-    val agg = tok.join(sub, "w")
+
+  /** The apply tail shared by the subword trainers: the corpus tokens
+    * (idCol, w) of length <= `maxWordLen` join `encode(tokens)`, a
+    * (w, n_sub) table, on the word; per document, the word count, the
+    * subword count and their floor-snapped ratio.
+    *
+    * @return (idCol, n_words, n_subwords, fertility); token-less
+    *         documents keep a (0, 0, NULL) row
+    */
+  private[operators] def docStats(docs: DataFrame, idCol: String,
+                                  textCol: String, maxWordLen: Option[Int])
+                                 (encode: DataFrame => DataFrame): DataFrame = {
+    val tok = words(docs, textCol, maxWordLen, col(idCol))
+    val agg = tok.join(encode(tok), "w")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("nw"), sum("n_sub").as("ns"))
     docs.select(col(idCol))
@@ -97,53 +121,72 @@ object Bpe {
           lit(10000.0)).as("fertility"))
   }
 
+  /** The corpus words: lowercase [a-z0-9]+ runs of `textCol`, one row
+    * per occurrence (next to `keep`), no longer than `maxWordLen`.
+    */
+  private def words(docs: DataFrame, textCol: String,
+                    maxWordLen: Option[Int], keep: Column*): DataFrame = {
+    val nonEmpty = col("w") =!= ""
+    docs.select(keep :+
+        explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("w"): _*)
+      .filter(maxWordLen.fold(nonEmpty)(n =>
+        nonEmpty && length(col("w")) <= n))
+  }
+
+  /** The vocabulary pass shared by the subword trainers, the ONE
+    * corpus-sized pass of each: word counts → a staged (w, freq) table.
+    * Its rows come back collected too when there are at most
+    * `localVocabLimit` of them (the driver-side trainers' input);
+    * `None` sends the caller to its distributed loop.
+    */
+  private[operators] def vocabulary(docs: DataFrame, textCol: String,
+                                    tag: String, localVocabLimit: Long,
+                                    maxWordLen: Option[Int] = None)
+      : (DataFrame, Option[Array[(String, Long)]]) = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val vocab = Stage.materialize(
+      words(docs, textCol, maxWordLen)
+        .groupBy("w").agg(count(lit(1)).as("freq")),
+      s"${tag}_vocab")
+    (vocab,
+      if (vocab.count() <= localVocabLimit)
+        Some(vocab.as[(String, Long)].collect())
+      else None)
+  }
+
   /** Shared trainer: staged vocabulary + the learned merge list. */
   private def trainCore(docs: DataFrame, textCol: String, numMerges: Int,
                         localVocabLimit: Long)
       : (DataFrame, Seq[(Int, String, String, String, Long)],
          Option[DataFrame]) = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val limit =
-      if (localVocabLimit >= 0L) localVocabLimit
-      else spark.conf.getOption("spark.graft.bpe.localVocabLimit")
-        .map(_.toLong).getOrElse(100000L)
-
-    // the ONE corpus-sized pass: token counts → (word, freq)
-    val words = Stage.materialize(
-      docs.select(explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy("w").agg(count(lit(1)).as("freq")),
-      "bpe_vocab")
-
-    if (words.count() <= limit) {
-      val vocab = words.as[(String, Long)].collect()
-      (words, localTrain(vocab, numMerges), None)
-    } else {
-      val (merges, finalSyms) = distributedTrain(words, numMerges)
-      (words, merges, Some(finalSyms))
+    vocabulary(docs, textCol, "bpe", localVocabLimit) match {
+      case (words, Some(vocab)) => (words, localTrain(vocab, numMerges), None)
+      case (words, None) =>
+        val (merges, finalSyms) = distributedTrain(words, numMerges)
+        (words, merges, Some(finalSyms))
     }
   }
 
   /** The greedy left-to-right merge scan as a SQL higher-order fold —
     * shared by the distributed trainer, the apply path, and the
     * WordPiece trainer (whose merge SCAN is identical; only the
-    * criterion differs); the DuckDB oracle lambda mirrors it term for
-    * term.
+    * criterion differs); the DuckDB oracle lambda mirrors the fold term
+    * for term. The fold is an interpreted lambda, so it runs only on
+    * words where `a b` are adjacent symbols; on any other word it would
+    * rebuild `syms` unchanged.
     */
-  private[graft] def mergeExprShared(a: String, b: String,
-                                     m: String): String = mergeExpr(a, b, m)
-
-  private def mergeExpr(a: String, b: String, m: String): String =
-    s"""aggregate(slice(split(syms, ' '), 2, size(split(syms, ' ')) - 1),
+  private[graft] def mergeExpr(a: String, b: String, m: String): String =
+    s"""CASE WHEN instr(concat(' ', syms, ' '), ' $a $b ') = 0 THEN syms
+       |ELSE aggregate(slice(split(syms, ' '), 2, size(split(syms, ' ')) - 1),
        |  element_at(split(syms, ' '), 1),
        |  (acc, x) -> CASE
        |    WHEN acc = '$a' AND x = '$b' THEN '$m'
        |    WHEN endswith(acc, concat(' ', '$a')) AND x = '$b'
        |      THEN concat(substring(acc, 1,
        |        length(acc) - length('$a') - 1), ' ', '$m')
-       |    ELSE concat(acc, ' ', x) END)""".stripMargin
+       |    ELSE concat(acc, ' ', x) END) END""".stripMargin
 
   /** Driver-side trainer over a bounded collected vocabulary. */
   private def localTrain(vocab: Array[(String, Long)],
@@ -196,19 +239,13 @@ object Bpe {
     out.toArray
   }
 
-  /** The adjacent-pair list of a symbol string — shared by the full
-    * count and the incremental delta recount.
-    * NB Spark's sequence(1, 0) is DESCENDING [1, 0], not empty —
-    * single-symbol words must short-circuit to an empty array.
+  /** The adjacent-pair list of a symbol string — shared by the BPE and
+    * WordPiece pair recounts. One regex pass: at the start and at each
+    * space, a lookahead captures the next two symbols (symbols never
+    * hold a space), so a single-symbol word yields an empty array.
     */
-  private[graft] def pairListExprShared: String = pairListExpr
-
-  private val pairListExpr: String =
-    """CASE WHEN size(split(syms, ' ')) < 2 THEN array()
-      |ELSE transform(sequence(1, size(split(syms, ' ')) - 1),
-      |  j -> concat(element_at(split(syms, ' '), j), ' ',
-      |              element_at(split(syms, ' '), j + 1))) END"""
-      .stripMargin
+  private[graft] val pairListExpr: String =
+    "regexp_extract_all(syms, '(?:^| )(?=([^ ]+ [^ ]+))', 1)"
 
   /** Distributed loop: per-round pair aggregate → TakeOrdered(1)
     * argmax → HOF rewrite, vocabulary staged per round. The greedy

@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.LongType
   * than the corpus that produced them (a dedup sweep of 10^9 docs may
   * yield 10^6 near-dup pairs). After the first canonicalization the
   * edge count is known (one aggregate); at or below
-  * `spark.graft.cc.localEdgeLimit` (default 1M ≈ 16 MB) the edges are
+  * [[LocalEdgeLimit]] edges (≈ 16 MB) the edges are
   * collected and contracted by driver-side union-find in milliseconds —
   * the same bounded count-then-choose pattern as Spark's broadcast
   * threshold. Above the limit the distributed loop runs; the staged
@@ -58,6 +58,11 @@ import org.apache.spark.sql.types.LongType
   */
 object ConnectedComponents {
 
+  /** Canonical edge count at or below which [[labels]] contracts the
+    * graph by driver-side union-find.
+    */
+  val LocalEdgeLimit = 1000000L
+
   /** Component labels for every node that appears in a non-self-loop
     * edge of `edges`.
     *
@@ -68,20 +73,13 @@ object ConnectedComponents {
     *              singleton labels must `coalesce(cluster, id)` after
     *              joining back (as `dedup_cluster` does).
     * @param localEdgeLimit max canonical edge count for the driver-side
-    *              union-find fast path; <= 0 forces the distributed
-    *              loop. Defaults to `spark.graft.cc.localEdgeLimit`
-    *              (1,000,000) when negative-one is passed.
+    *              union-find fast path; 0 forces the distributed loop
     * @return DataFrame (id, cluster) where cluster = min node id in the
     *         component; every labeled node appears exactly once
     */
   def labels(edges: DataFrame, aCol: String, bCol: String,
-             maxIter: Int = 25, localEdgeLimit: Long = -1L): DataFrame = {
-    val spark = edges.sparkSession
-    val localLimit =
-      if (localEdgeLimit >= 0L) localEdgeLimit
-      else spark.conf.getOption("spark.graft.cc.localEdgeLimit")
-        .map(_.toLong).getOrElse(1000000L)
-
+             maxIter: Int = 25,
+             localEdgeLimit: Long = LocalEdgeLimit): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
@@ -102,7 +100,7 @@ object ConnectedComponents {
     var fp = fingerprint(cur)
 
     val longIds = cur.schema.fields.forall(_.dataType == LongType)
-    if (longIds && fp._1 <= localLimit) return localLabels(cur)
+    if (longIds && fp._1 <= localEdgeLimit) return localLabels(cur)
 
     // per-node minimum over the adjacency: one exchange per star step
     val byA = Window.partitionBy("a")

@@ -59,11 +59,10 @@ object LabelProp {
     // stage-per-round shuffle-join loop runs unchanged.
     val n = e.agg(countDistinct("src")).head().getLong(0)
     val bcast = n <= PageRank.broadcastVertLimit
-    def pinLocal(df: DataFrame): DataFrame =
-      df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
     val lab0 = e.select(col("src").as("node")).distinct()
       .withColumn("lab", col("node"))
-    var lab = if (bcast) pinLocal(lab0) else Stage.materialize(lab0, "lp_round")
+    var lab =
+      if (bcast) PageRank.pinLocal(lab0) else Stage.materialize(lab0, "lp_round")
     for (_ <- 1 to rounds) {
       val labSide = if (bcast) broadcast(lab) else lab
       val votes = e.join(labSide.withColumnRenamed("node", "src"), "src")
@@ -83,7 +82,8 @@ object LabelProp {
         .join(if (bcast) broadcast(pick) else pick, Seq("node"), "left")
         .select(col("node"),
           coalesce(col("newlab"), col("lab")).as("lab"))
-      lab = if (bcast) pinLocal(next) else Stage.materialize(next, "lp_round")
+      lab =
+        if (bcast) PageRank.pinLocal(next) else Stage.materialize(next, "lp_round")
     }
     lab.groupBy(col("lab").as("community")).agg(count(lit(1)).as("size"))
   }

@@ -48,12 +48,27 @@ object PageRank {
 
   /** Vertex-count bound under which the per-round rank frame is
     * broadcast into the edge join (count-then-choose, same convention
-    * as ConnectedComponents.localEdgeLimit): |V| ≤ 2M rows is ≤ ~60 MB
+    * as ConnectedComponents.LocalEdgeLimit): |V| ≤ 2M rows is ≤ ~60 MB
     * broadcast — each round then scans the staged edges WITHOUT
     * shuffling them. Above the bound every round falls back to the
     * shuffle join that scales to any |V|.
     */
   val broadcastVertLimit: Long = 2000000L
+
+  /** Collect a frame of at most [[broadcastVertLimit]] rows into a
+    * driver LocalRelation — the per-round pin of the broadcast regime
+    * here and in [[LabelProp]].
+    *
+    * Driver-memory note (ADVICE r17): this materializes up to 2M rows as
+    * boxed GenericRows on the driver — transiently heavier than the
+    * compact internal-row collect a broadcast exchange performs
+    * (~hundreds of MB near the bound). The broadcast regime already
+    * requires the driver to hold the built relation, but deployments
+    * running near the bound on a small driver heap should lower
+    * broadcastVertLimit rather than raise driver memory for this collect.
+    */
+  private[operators] def pinLocal(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
 
   /** Shuffle-regime lineage-cut cadence: every `stageEvery`-th round's
     * rank frame is staged to parquet so the lazily-chained round plans
@@ -139,16 +154,6 @@ object PageRank {
     // changes). The shuffle-join regime (> 2M vertices) has no
     // per-round action, so rounds still chain lazily into one job with
     // the every-4th-round lineage cut.
-    // Driver-memory note (ADVICE r17): pinLocal materializes up to
-    // broadcastVertLimit (2M) rows as boxed GenericRows on the driver —
-    // transiently heavier than the compact internal-row collect a
-    // broadcast exchange performs (~hundreds of MB near the bound).
-    // The broadcast regime already requires the driver to hold the
-    // built relation, but deployments running near the 2M bound on a
-    // small driver heap should lower broadcastVertLimit rather than
-    // raise driver memory for this collect.
-    def pinLocal(df: DataFrame): DataFrame =
-      df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
     val stageEvery = {
       val raw = edgesIn.sparkSession.conf
         .get(StageEveryKey, DefaultStageEvery.toString)

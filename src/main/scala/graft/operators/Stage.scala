@@ -63,18 +63,24 @@ object Stage {
     out.result()
   }
 
+  /** Best-effort recursive delete of one tracked directory: local ones
+    * through java.nio, the rest through the Hadoop FileSystem.
+    */
+  private def delete(dir: String, isLocal: Boolean,
+                     conf: => org.apache.hadoop.conf.Configuration): Unit =
+    try {
+      if (isLocal) {
+        Files.walk(Path.of(dir)).sorted(java.util.Comparator.reverseOrder())
+          .forEach(f => { val _ = Files.deleteIfExists(f) })
+      } else {
+        val p = new org.apache.hadoop.fs.Path(dir)
+        val _ = p.getFileSystem(conf).delete(p, true)
+      }
+    } catch { case _: Throwable => }
+
   sys.addShutdownHook {
     tracked.forEach { case (dir, isLocal) =>
-      try {
-        if (isLocal) {
-          Files.walk(Path.of(dir)).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { val _ = Files.deleteIfExists(f) })
-        } else {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val _ = p.getFileSystem(new org.apache.hadoop.conf.Configuration())
-            .delete(p, true)
-        }
-      } catch { case _: Throwable => }
+      delete(dir, isLocal, new org.apache.hadoop.conf.Configuration())
     }
   }
 
@@ -89,17 +95,7 @@ object Stage {
   def purge(spark: org.apache.spark.sql.SparkSession): Unit = {
     var e = tracked.poll()
     while (e != null) {
-      val (dir, isLocal) = e
-      try {
-        if (isLocal) {
-          Files.walk(Path.of(dir)).sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => { val _ = Files.deleteIfExists(f) })
-        } else {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val _ = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .delete(p, true)
-        }
-      } catch { case _: Throwable => }
+      delete(e._1, e._2, spark.sparkContext.hadoopConfiguration)
       e = tracked.poll()
     }
     purgeListeners.forEach(f => f())

@@ -43,8 +43,8 @@ import org.apache.spark.sql.functions._
   * BOUNDED (<= seedMulti + alphabet, ~100 entries), so the per-round
   * driver traffic is the usage table (<= |V| rows), the same
   * metadata-scale count-then-choose posture as kmeans centroids.
-  * Word tables at or below `localVocabLimit` (default 100k) train
-  * driver-side in microseconds — bit-identical (the per-word Viterbi
+  * Word tables at or below `localVocabLimit` ([[Bpe.LocalVocabLimit]])
+  * train driver-side in microseconds — bit-identical (the per-word Viterbi
   * and the integer sums are the same pure function), asserted by
   * UnigramSpec like BpeSpec asserts the BPE fast path.
   */
@@ -60,7 +60,8 @@ object Unigram {
     *         its Viterbi usage count (freq-weighted; 0 when unused)
     */
   def train(docs: DataFrame, textCol: String, rounds: Int = 2,
-            cfg: Cfg = Cfg(), localVocabLimit: Long = -1L): DataFrame = {
+            cfg: Cfg = Cfg(),
+            localVocabLimit: Long = Bpe.LocalVocabLimit): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     trainCore(docs, textCol, rounds, cfg, localVocabLimit)._1
@@ -78,21 +79,9 @@ object Unigram {
       s"bad cfg: $cfg")
     val spark = docs.sparkSession
     import spark.implicits._
-    val limit =
-      if (localVocabLimit >= 0L) localVocabLimit
-      else spark.conf.getOption("spark.graft.unigram.localVocabLimit")
-        .map(_.toLong).getOrElse(100000L)
-
-    // the ONE corpus-sized pass: (word, freq), estimation-capped length
-    val words = Stage.materialize(
-      docs.select(explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("w"))
-        .filter(col("w") =!= "" && length(col("w")) <= cfg.maxWordLen)
-        .groupBy("w").agg(count(lit(1)).as("freq")),
-      "unigram_vocab")
-
-    val local: Option[Array[(String, Long)]] =
-      if (words.count() <= limit) Some(words.as[(String, Long)].collect())
-      else None
+    // (word, freq) of the estimation-capped words
+    val (words, local) = Bpe.vocabulary(docs, textCol, "unigram",
+      localVocabLimit, Some(cfg.maxWordLen))
 
     // ---- seed vocabulary -------------------------------------------
     val seedCounts: Array[(String, Long)] = local match {
@@ -186,7 +175,7 @@ object Unigram {
     */
   def subwordStats(docs: DataFrame, idCol: String, textCol: String,
                    rounds: Int = 2, cfg: Cfg = Cfg(),
-                   localVocabLimit: Long = -1L,
+                   localVocabLimit: Long = Bpe.LocalVocabLimit,
                    applyMaxWordLen: Int = 32): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
@@ -196,23 +185,12 @@ object Unigram {
     val vszF = vocabF.length.toLong
     val vmapF = vocabF.toMap
     val mpl = cfg.maxPieceLen
-    val tok = docs.select(col(idCol),
-        explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("w"))
-      .filter(col("w") =!= "" && length(col("w")) <= applyMaxWordLen)
-    val nsub = tok.select("w").distinct().as[String]
-      .map(w => (w, viterbi(w, vmapF, nF, vszF, mpl,
-        unkSingle = true).length.toLong))
-      .toDF("w", "n_sub")
-    val agg = tok.join(nsub, "w")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("nw"), sum("n_sub").as("ns"))
-    docs.select(col(idCol))
-      .join(agg, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nw"), lit(0L)).as("n_words"),
-        coalesce(col("ns"), lit(0L)).as("n_subwords"),
-        (floor(col("ns").cast("double") / col("nw").cast("double")
-          * lit(10000.0) + lit(0.5)) / lit(10000.0)).as("fertility"))
+    Bpe.docStats(docs, idCol, textCol, Some(applyMaxWordLen)) { tok =>
+      tok.select("w").distinct().as[String]
+        .map(w => (w, viterbi(w, vmapF, nF, vszF, mpl,
+          unkSingle = true).length.toLong))
+        .toDF("w", "n_sub")
+    }
   }
 
   /** The exact Viterbi best segmentation of one word under smoothed

@@ -39,13 +39,12 @@ import org.apache.spark.sql.functions._
   * corpus's 64 MB giant contributes ~6.7e7.)
   *
   * Scale shape (100 TB): identical to BPE's — the one corpus-sized
-  * pass is the word-frequency count; the distributed loop maintains
-  * the pair-count AND symbol-count tables INCREMENTALLY (delta
-  * re-counts touch only the words containing the merged pair, the
-  * r16 BPE trainer's posture), and the per-round argmax joins two
-  * bounded count tables and ships ONE row to the driver. Vocabularies
-  * at or below `localVocabLimit` (default 100k words) collect once
-  * and train driver-side — bit-identical, WordPieceSpec-asserted.
+  * pass is the word-frequency count ([[Bpe.vocabulary]]); each round of
+  * the distributed loop stages the word table once, recounts the pair
+  * AND symbol counts from it, joins the two to score every candidate
+  * and ships ONE row to the driver. Vocabularies at or below
+  * `localVocabLimit` ([[Bpe.LocalVocabLimit]] words) collect once and
+  * train driver-side — bit-identical, WordPieceSpec-asserted.
   */
 object WordPiece {
 
@@ -61,7 +60,7 @@ object WordPiece {
     *         vocabulary runs out of adjacent pairs.
     */
   def trainMerges(docs: DataFrame, textCol: String, numMerges: Int,
-                  localVocabLimit: Long = -1L): DataFrame = {
+                  localVocabLimit: Long = Bpe.LocalVocabLimit): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val (_, merges, _) = trainCore(docs, textCol, numMerges, localVocabLimit)
@@ -79,30 +78,17 @@ object WordPiece {
     *         documents keep a (0, 0, NULL) row
     */
   def subwordStats(docs: DataFrame, idCol: String, textCol: String,
-                   numMerges: Int, localVocabLimit: Long = -1L): DataFrame = {
+                   numMerges: Int,
+                   localVocabLimit: Long = Bpe.LocalVocabLimit): DataFrame = {
     val (vocab, merges, finalSyms) = trainCore(docs, textCol, numMerges,
       localVocabLimit)
     val applied = finalSyms.getOrElse {
       val base = vocab.select(col("w"), expr(seedExpr("w")).as("syms"))
       merges.foldLeft(base) { case (df, (_, a, b, m, _, _, _)) =>
-        df.select(col("w"), expr(Bpe.mergeExprShared(a, b, m)).as("syms"))
+        df.select(col("w"), expr(Bpe.mergeExpr(a, b, m)).as("syms"))
       }
     }
-    val sub = applied.select(col("w"),
-      size(split(col("syms"), " ")).cast("long").as("n_sub"))
-    val tok = docs.select(col(idCol),
-      explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("w"))
-      .filter(col("w") =!= "")
-    val agg = tok.join(sub, "w")
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("nw"), sum("n_sub").as("ns"))
-    docs.select(col(idCol))
-      .join(agg, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("nw"), lit(0L)).as("n_words"),
-        coalesce(col("ns"), lit(0L)).as("n_subwords"),
-        (floor(col("ns") / col("nw") * lit(10000.0) + lit(0.5)) /
-          lit(10000.0)).as("fertility"))
+    Bpe.docStats(docs, idCol, textCol, None)(_ => Bpe.subwordCounts(applied))
   }
 
   /** `a b c` → `a ##b ##c`: word-initial char unmarked, the rest
@@ -118,25 +104,11 @@ object WordPiece {
       : (DataFrame, Seq[(Int, String, String, String, Long, Long, Long)],
          Option[DataFrame]) = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val limit =
-      if (localVocabLimit >= 0L) localVocabLimit
-      else spark.conf.getOption("spark.graft.bpe.localVocabLimit")
-        .map(_.toLong).getOrElse(100000L)
-
-    val words = Stage.materialize(
-      docs.select(explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("w"))
-        .filter(col("w") =!= "")
-        .groupBy("w").agg(count(lit(1)).as("freq")),
-      "wp_vocab")
-
-    if (words.count() <= limit) {
-      val vocab = words.as[(String, Long)].collect()
-      (words, localTrain(vocab, numMerges), None)
-    } else {
-      val (merges, finalSyms) = distributedTrain(words, numMerges)
-      (words, merges, Some(finalSyms))
+    Bpe.vocabulary(docs, textCol, "wp", localVocabLimit) match {
+      case (words, Some(vocab)) => (words, localTrain(vocab, numMerges), None)
+      case (words, None) =>
+        val (merges, finalSyms) = distributedTrain(words, numMerges)
+        (words, merges, Some(finalSyms))
     }
   }
 
@@ -192,33 +164,32 @@ object WordPiece {
     out.result()
   }
 
-  /** Distributed loop with incremental pair AND symbol counts — the
-    * BPE r16 trainer's delta posture extended to the second count
-    * table the WordPiece criterion needs. Per round: argmax over the
-    * joined count tables (one row to the driver), rewrite only the
-    * words containing the merged pair, delta-update both tables from
-    * just those words (integer sums — bit-equal to a full recount).
+  /** Distributed loop: BPE's full-recount loop under the
+    * likelihood-ratio criterion, the same recount [[localTrain]] does on
+    * the driver. Per round: stage the word table (cutting the loop's
+    * lineage), recount pair and symbol counts from it, join the two to
+    * score every candidate pair, TakeOrdered(1) for the argmax (one row
+    * to the driver), then rewrite the words with the shared merge scan.
+    * Both aggregates map-side-combine to a few thousand rows before the
+    * shuffle, so a recount costs a scan of the staged table per count.
     */
   private def distributedTrain(words0: DataFrame, numMerges: Int)
       : (Seq[(Int, String, String, String, Long, Long, Long)], DataFrame) = {
-    var cur = Stage.materialize(words0.select(col("w"),
-      expr(seedExpr("w")).as("syms"), col("freq")), "wp_round")
-    var pairCounts = Stage.materialize(
-      cur.select(explode(expr(Bpe.pairListExprShared)).as("pair"), col("freq"))
-        .groupBy("pair").agg(sum("freq").as("f")),
-      "wp_paircounts")
-    var symCounts = Stage.materialize(
-      cur.select(explode(split(col("syms"), " ")).as("sym"), col("freq"))
-        .groupBy("sym").agg(sum("freq").as("c")),
-      "wp_symcounts")
+    var cur = words0.select(col("w"),
+      expr(seedExpr("w")).as("syms"), col("freq"))
     val out = Seq.newBuilder[(Int, String, String, String, Long, Long, Long)]
     var step = 1
     var done = false
     while (step <= numMerges && !done) {
-      val cand = pairCounts.filter(col("f") > 0)
+      val staged = Stage.materialize(cur, "wp_round")
+      val symCounts = staged
+        .select(explode(split(col("syms"), " ")).as("sym"), col("freq"))
+        .groupBy("sym").agg(sum("freq").as("c"))
+      val best = staged
+        .select(explode(expr(Bpe.pairListExpr)).as("pair"), col("freq"))
+        .groupBy("pair").agg(sum("freq").as("f"))
         .withColumn("lhs", split(col("pair"), " ").getItem(0))
         .withColumn("rhs", split(col("pair"), " ").getItem(1))
-      val best = cand
         .join(symCounts.withColumnRenamed("sym", "lhs")
           .withColumnRenamed("c", "cl"), "lhs")
         .join(symCounts.withColumnRenamed("sym", "rhs")
@@ -235,38 +206,9 @@ object WordPiece {
         val f = best(0).getLong(1)
         val cl = best(0).getLong(2); val cr = best(0).getLong(3)
         val Array(a, b) = pair.split(" ", 2)
-        val m = a + b.substring(2)
-        val hitCond = concat(lit(" "), col("syms"), lit(" "))
-          .contains(s" $a $b ")
-        val hitNew = Stage.materialize(cur.filter(hitCond)
-          .select(col("w"), expr(Bpe.mergeExprShared(a, b, m)).as("syms"),
-            col("freq")), "wp_hit")
-        val oldHit = cur.filter(hitCond)
-        val pairDelta = oldHit
-          .select(explode(expr(Bpe.pairListExprShared)).as("pair"),
-            (-col("freq")).as("freq"))
-          .unionByName(hitNew
-            .select(explode(expr(Bpe.pairListExprShared)).as("pair"),
-              col("freq")))
-        pairCounts = Stage.materialize(
-          pairCounts.unionByName(
-              pairDelta.groupBy("pair").agg(sum("freq").as("f")))
-            .groupBy("pair").agg(sum("f").as("f"))
-            .filter(col("f") =!= 0),
-          "wp_paircounts")
-        val symDelta = oldHit
-          .select(explode(split(col("syms"), " ")).as("sym"),
-            (-col("freq")).as("c"))
-          .unionByName(hitNew
-            .select(explode(split(col("syms"), " ")).as("sym"),
-              col("freq").as("c")))
-        symCounts = Stage.materialize(
-          symCounts.unionByName(symDelta.groupBy("sym").agg(sum("c").as("c")))
-            .groupBy("sym").agg(sum("c").as("c"))
-            .filter(col("c") =!= 0),
-          "wp_symcounts")
-        cur = Stage.materialize(
-          cur.filter(!hitCond).unionByName(hitNew), "wp_round")
+        val m = a + b.substring(2) // right side always carries '##'
+        cur = staged.select(col("w"),
+          expr(Bpe.mergeExpr(a, b, m)).as("syms"), col("freq"))
         out += ((step, a, b, m, f, cl, cr))
         step += 1
       }

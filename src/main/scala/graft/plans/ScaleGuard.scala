@@ -66,8 +66,8 @@ final case class GuardViolation(rule: String, detail: String) {
   *
   * Modes (`spark.graft.guard.mode`): `warn` (default — log and
   * continue), `error` (fail the query), `off`. The bound proof
-  * threshold is `spark.graft.guard.boundedRows` (default 1000 — the
-  * scale at which a broadcast cross product is still free).
+  * threshold is [[ScaleGuard.BoundedRows]] (1000 — the scale at which a
+  * broadcast cross product is still free).
   *
   * `ScaleGuard.validate(df)` exposes the same audit as a callable for
   * CI pipelines that want the violations list rather than log lines —
@@ -76,8 +76,7 @@ final case class GuardViolation(rule: String, detail: String) {
   */
 object ScaleGuard extends PredicateHelper {
   val ModeKey = "spark.graft.guard.mode"
-  val BoundedKey = "spark.graft.guard.boundedRows"
-  val DefaultBounded = 1000L
+  val BoundedRows = 1000L
   val GridCellsKey = "spark.graft.guard.grid.maxCells"
   // 2e9 cells ~= 16 GB of (user, hour) longs pre-compression: well
   // above every gate decade (sf0.1 grid ~1.1M cells, 100x ~108M) and
@@ -156,7 +155,7 @@ object ScaleGuard extends PredicateHelper {
   }
 
   def violations(plan: LogicalPlan,
-                 boundedMax: Long = DefaultBounded): Seq[GuardViolation] = {
+                 boundedMax: Long = BoundedRows): Seq[GuardViolation] = {
     def bounded(p: LogicalPlan): Boolean = p.maxRows.exists(_ <= boundedMax)
     val out = Seq.newBuilder[GuardViolation]
     plan.foreach {
@@ -266,7 +265,7 @@ object ScaleGuard extends PredicateHelper {
     * signature)` shape, caught at plan time.
     */
   def advisories(plan: LogicalPlan,
-                 boundedMax: Long = DefaultBounded): Seq[GuardViolation] = {
+                 boundedMax: Long = BoundedRows): Seq[GuardViolation] = {
     def bounded(p: LogicalPlan): Boolean = p.maxRows.exists(_ <= boundedMax)
     val out = Seq.newBuilder[GuardViolation]
     plan.foreach {
@@ -332,10 +331,7 @@ case class ScaleGuardRule(session: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val mode = session.conf.get(ScaleGuard.ModeKey, "warn")
     if (mode != "off") {
-      val boundedMax =
-        session.conf.get(ScaleGuard.BoundedKey,
-          ScaleGuard.DefaultBounded.toString).toLong
-      val vs = ScaleGuard.violations(plan, boundedMax)
+      val vs = ScaleGuard.violations(plan)
       if (vs.nonEmpty) {
         val msg = s"graft scale guard: ${vs.mkString("; ")}"
         if (mode == "error") throw new SparkException(msg)
@@ -344,7 +340,7 @@ case class ScaleGuardRule(session: SparkSession) extends Rule[LogicalPlan] {
       // advisories are heuristic: logged in every active mode, never
       // thrown (a deliberate, documented hot-key window must not fail
       // an error-mode pipeline — the warning forces the documentation)
-      val as = ScaleGuard.advisories(plan, boundedMax)
+      val as = ScaleGuard.advisories(plan)
       if (as.nonEmpty) logWarning(s"graft scale advisory: ${as.mkString("; ")}")
     }
     plan

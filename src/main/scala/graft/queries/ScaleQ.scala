@@ -841,7 +841,7 @@ object ScaleQ {
     // deterministic, so exact membership counts compare. The Spark
     // side is operators.ConnectedComponents (driver union-find fast
     // path at gate scale, alternating-star distributed loop above
-    // cc.localEdgeLimit — BASELINE.md records the measured crossover);
+    // its LocalEdgeLimit — BASELINE.md records the measured crossover);
     // the closure CTE is oracle-only machinery (quadratic in component
     // size — exactly what the star loop exists to avoid).
     Q("graph_cc",

@@ -1,22 +1,29 @@
 package graft
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.Bpe
+import graft.operators.{Bpe, WordPiece}
 
-/** BPE trainer scale probe: a synthetic vocabulary far above the
+/** Subword trainer scale probe: a synthetic vocabulary far above the
   * local fast-path limit forces the distributed loop, and the same
   * corpus trained through the forced-local path checks equality —
   * the spec-level parity assertion at a scale where the plans
   * actually diverge (staged rounds + TakeOrdered argmax vs an
-  * in-memory fold). Run: `sbt "test:runMain graft.BpeProbe"`.
+  * in-memory fold). One leg per trainer, BPE and WordPiece; each
+  * prints both times and requires identical merges. Runs on
+  * `local[N]` with N shuffle partitions, N = `SPARK_GRAFT_CPUS`, else
+  * the JVM's available processors.
+  *
+  * Run: `sbt "Test/runMain graft.BpeProbe"`.
   */
 object BpeProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors())
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    // ~1M distinct words, zipf-ish frequencies via repetition of the
+    // ~1.1M distinct words, zipf-ish frequencies via repetition of the
     // hot head: "docs" of deterministic pseudo-words
     val docs = spark.range(0, 1000000L).select(
       concat_ws(" ",
@@ -28,21 +35,24 @@ object BpeProbe {
         concat(lit("t"), col("id"))).as("text"))
     docs.persist().count()
 
-    var t0 = System.nanoTime()
-    val dist = Bpe.trainMerges(docs, "text", numMerges = 6,
-      localVocabLimit = 0L).collect().sortBy(_.getInt(0)).toSeq
-    val tDist = (System.nanoTime() - t0) / 1e9
-
-    t0 = System.nanoTime()
-    val local = Bpe.trainMerges(docs, "text", numMerges = 6,
-      localVocabLimit = Long.MaxValue).collect().sortBy(_.getInt(0)).toSeq
-    val tLocal = (System.nanoTime() - t0) / 1e9
-
-    val same = dist.map(_.toSeq) == local.map(_.toSeq)
-    println(f"BPE-PROBE vocab~1.1M merges=6 distributed=$tDist%6.1fs " +
-      f"local=$tLocal%6.1fs identical=$same")
-    dist.foreach(r => println(s"  merge ${r.toSeq.mkString(" ")}"))
-    require(same, "distributed and local paths diverged at probe scale")
+    def leg(name: String, train: Long => DataFrame): Unit = {
+      def timed(limit: Long) = {
+        val t0 = System.nanoTime()
+        val rows = train(limit).collect().sortBy(_.getInt(0)).toSeq
+        (rows.map(_.toSeq), (System.nanoTime() - t0) / 1e9)
+      }
+      val (dist, tDist) = timed(0L)
+      val (local, tLocal) = timed(Long.MaxValue)
+      val same = dist == local
+      println(f"$name-PROBE cpus=$cpus vocab~1.1M merges=6 " +
+        f"distributed=$tDist%6.1fs local=$tLocal%6.1fs identical=$same")
+      dist.foreach(r => println(s"  merge ${r.mkString(" ")}"))
+      require(same, s"$name: distributed and local paths diverged at probe scale")
+    }
+    leg("BPE", l => Bpe.trainMerges(docs, "text", numMerges = 6,
+      localVocabLimit = l))
+    leg("WORDPIECE", l => WordPiece.trainMerges(docs, "text",
+      numMerges = 6, localVocabLimit = l))
     spark.stop()
   }
 }

@@ -43,7 +43,7 @@ class StagePolicySpec extends AnyFunSuite {
       "the planted corpus serves eight dedup queries through a ModelCache",
     // operator level
     ("Bfs.scala", "s\"bfs_round_$k\"") -> "cuts the frontier loop's lineage per round",
-    ("Bpe.scala", "\"bpe_vocab\"") -> "the one corpus-sized pass; its (word, freq) feed the size check and the merge loop",
+    ("Bpe.scala", "s\"${tag}_vocab\"") -> "the subword trainers' one corpus-sized pass; its (word, freq) feed the size check and the training loop",
     ("Bpe.scala", "\"bpe_round\"") -> "cuts the merge loop's lineage per round",
     ("Classify.scala", "\"nb_wordcounts\"") -> "the class-word counts feed the class totals, the vocabulary size and the model table",
     ("ConnectedComponents.scala", "\"cc_edges\"") -> "one pass over the upstream pair generation before the star loop",
@@ -85,15 +85,7 @@ class StagePolicySpec extends AnyFunSuite {
     ("Skyline.scala", "\"skyline_sweep\"") -> "the range-partitioned levels feed the per-partition sweep and its offsets",
     ("Triangles.scala", "\"tri_edges\"") -> "the canonical edges feed the degrees, the orientation and the wedge closure",
     ("Triangles.scala", "\"tri_oriented\"") -> "both wedge sides scan the oriented edges",
-    ("Unigram.scala", "\"unigram_vocab\"") -> "the one corpus-sized pass; its (word, freq) feed the size check and the EM loop",
-    ("WordPiece.scala", "\"wp_vocab\"") -> "the one corpus-sized pass; its (word, freq) feed the size check and the merge loop",
-    ("WordPiece.scala", "\"wp_round\"") -> "the seed words of the merge loop",
-    ("WordPiece.scala", "\"wp_paircounts\"") -> "the seed pair counts of the merge loop",
-    ("WordPiece.scala", "\"wp_symcounts\"") -> "the seed symbol counts of the merge loop",
-    ("WordPiece.scala", "\"wp_hit\"") -> "the rewritten words feed the delta counts and the next round",
-    ("WordPiece.scala", "\"wp_paircounts\"") -> "cuts the pair-count table's lineage per round",
-    ("WordPiece.scala", "\"wp_symcounts\"") -> "cuts the symbol-count table's lineage per round",
-    ("WordPiece.scala", "\"wp_round\"") -> "cuts the word table's lineage per round",
+    ("WordPiece.scala", "\"wp_round\"") -> "cuts the merge loop's lineage per round; the pair and symbol recounts both read it",
   ).map { case (k, r) => k -> (if (k._1.endsWith("Q.scala")) r else s"$r $notMeasured") }
 
   /** `src` with every comment blanked out; string literals kept. */

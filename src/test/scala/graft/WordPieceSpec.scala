@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.WordPiece
+import graft.operators.{Stage, WordPiece}
 
 /** WordPiece training: hand-computed likelihood-ratio merges, the
   * `##` marking semantics, and driver-side vs distributed parity.
@@ -51,6 +51,17 @@ class WordPieceSpec extends SparkFunSuite {
       .as[M].collect().sortBy(_._1).toList
     assert(local == dist, s"local=$local dist=$dist")
     assert(local.nonEmpty)
+  }
+
+  test("distributed loop stages the word table once per round, nothing else") {
+    val docs = Seq("banana bandana cabana", "ban ban banana an an")
+      .toDF("text")
+    Stage.drainTimings()
+    val out = WordPiece.trainMerges(docs, "text", numMerges = 4,
+      localVocabLimit = 0L).as[M].collect()
+    assert(out.length == 4)
+    assert(Stage.drainTimings().map(_._1) ==
+      ("wp_vocab" +: Seq.fill(4)("wp_round")))
   }
 
   test("fuzz: 8 random corpora — distributed and local trainers agree") {
