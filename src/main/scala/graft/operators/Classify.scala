@@ -69,16 +69,20 @@ object Classify {
       .agg(count(lit(1)).as("c"))
     val staged = Stage.materialize(wc, "nb_wordcounts")
 
-    // class token totals + vocab size: tiny reductions of the staged
-    // aggregate (k rows / 1 row) — bounded driver collects by design
-    val cstat = staged.groupBy("cls").agg(sum("c").as("n_tok"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    require(cstat.size <= maxClasses,
-      s"${cstat.size} classes exceed maxClasses=$maxClasses")
+    // class token totals, document counts + vocab size: small
+    // reductions (k rows / 1 row) collected through limit(maxClasses
+    // + 1), so a wide class column fails the bound before its rows
+    // reach the driver
+    def perClass(df: DataFrame): Map[String, Long] = {
+      val rows = df.limit(maxClasses + 1).collect()
+      require(rows.length <= maxClasses,
+        s"more than maxClasses=$maxClasses classes")
+      rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    val cstat = perClass(staged.groupBy("cls").agg(sum("c").as("n_tok")))
     val vocab = staged.select(countDistinct("w")).head().getLong(0)
-    val nDocs = labeled.groupBy(col(classCol).as("cls"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val nDocs = perClass(labeled.groupBy(col(classCol).as("cls"))
+      .agg(count(lit(1)).as("n")))
     val classes = cstat.keys.toSeq.sorted
     val total = nDocs.values.sum.toDouble
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, LocalLimit,
   Sample, Sort}
 import org.apache.spark.sql.expressions.Window
@@ -27,13 +27,12 @@ import org.apache.spark.sql.types.{BooleanType, DateType, NumericType,
   *     a pure function of the ROW VALUES, so every plan branch and
   *     every re-evaluation agrees on it by construction (no partition
   *     ids pinned as data, no staged copy of the frame);
-  *  3. per-bucket row counts → prefix-sum offsets → broadcast back.
-  *     Callers that need n on the driver (ntile/topFraction) collect
-  *     the ≤ B count rows (metadata-scale, the same posture as AQE's
-  *     per-partition stats); the rank/running-total callers keep the
-  *     offsets IN-PLAN (bucket b's counts explode to every bucket
-  *     after it — ≤ B²/2 metadata rows — and a grouped sum is the
-  *     prefix), so those calls run zero driver actions beyond the
+  *  3. per-bucket row counts → prefix-sum offsets, IN-PLAN: bucket b's
+  *     counts explode to every bucket after it (≤ B²/2 metadata rows,
+  *     summed in one task) and a grouped sum is the prefix, broadcast
+  *     back. The total n that ntile/topFraction need rides on the same
+  *     offsets rows (each count also explodes to its own and earlier
+  *     buckets, ≤ B² rows). So no call runs a driver action beyond the
   *     boundary sample;
   *  4. `row_number()` over a window PARTITIONED by the bucket
   *     (parallel, one key range per bucket) + the bucket's offset
@@ -57,10 +56,11 @@ import org.apache.spark.sql.types.{BooleanType, DateType, NumericType,
   * routed to the staged fallback, which pins the frame once and is
   * immune.
   * Anything else (string/binary/struct leads) falls back to the
-  * pinned-partition-id form: range-shuffle, stage the frame once
-  * ([[Stage.materialize]] — boundaries come from sampling, so ids must
-  * be pinned before two downstream jobs read them), offsets from the
-  * staged counts. Same output, heavier I/O.
+  * pinned-partition-id form: range-shuffle into at most [[MaxBuckets]]
+  * partitions, stage the frame once ([[Stage.materialize]] —
+  * boundaries come from sampling, so ids must be pinned before two
+  * plan branches read them), then the same in-plan offsets keyed by
+  * the pinned id. Same output, heavier I/O.
   *
   * Balance caveat, now two-level (r18): buckets split on the leading
   * key first; a lead VALUE hot enough to be sampled for ≥ 2 quantile
@@ -84,10 +84,11 @@ import org.apache.spark.sql.types.{BooleanType, DateType, NumericType,
   */
 object GlobalRank {
 
-  /** Cap on the sampled bucket count (and so on the ranking stage's
-    * parallelism). The bucket expression is a binary-search `when`
-    * tree — log₂B comparisons evaluated per row, B literal nodes in
-    * the plan — so the cap keeps codegen method sizes sane when a
+  /** Cap on the bucket count (and so on the ranking stage's
+    * parallelism), sampled or range-partitioned. The bucket expression
+    * is a binary-search `when` tree — log₂B comparisons evaluated per
+    * row, B literal nodes in the plan — and the in-plan offsets explode
+    * to ≤ B²/2 metadata rows, so the cap keeps both sane when a
     * deployment runs tens of thousands of shuffle partitions.
     */
   val MaxBuckets = 1024
@@ -109,16 +110,29 @@ object GlobalRank {
     */
   val HotGroupFactor = 4.0
 
-  /** The hottest group's share of rows — ONE narrow map-side-partial
-    * aggregate (the count-then-choose detection pass).
+  /** Bound on [[withGroupedRank]]'s broadcast offsets frame, one row
+    * per (group, bucket): the bucket split engages only while
+    * groups × B stays at or under this many rows (a few MB of
+    * broadcast); above it the plain partitioned window runs instead.
     */
-  private def hotGroupShare(df: DataFrame,
-                            groupCols: Seq[String]): Double = {
+  val MaxGroupedOffsetRows: Long = 1L << 16
+
+  private val Reserved = Seq("__gr_pid", "__gr_off", "__gr_voff", "__gr_v",
+    "__gr_d", "__gr_d2", "__gr_b", "__gr_b2", "__gr_c", "__gr_s", "__gr_n")
+
+  /** The hottest group's share of rows and the number of groups — ONE
+    * narrow map-side-partial aggregate (the count-then-choose detection
+    * pass).
+    */
+  private def groupStats(df: DataFrame,
+                         groupCols: Seq[String]): (Double, Long) = {
     val r = df.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("__gr_c"))
-      .agg(max("__gr_c"), sum("__gr_c")).head()
-    if (r.isNullAt(0) || r.getLong(1) == 0L) 0.0
-    else r.getLong(0).toDouble / r.getLong(1)
+      .agg(max("__gr_c"), sum("__gr_c"), count(lit(1))).head()
+    val share =
+      if (r.isNullAt(0) || r.getLong(1) == 0L) 0.0
+      else r.getLong(0).toDouble / r.getLong(1)
+    (share, r.getLong(2))
   }
 
   /** `df` plus a `rankCol` (1-based, long) giving each row's exact
@@ -132,15 +146,15 @@ object GlobalRank {
   def withGlobalRank(df: DataFrame, sortCols: Seq[Column],
                      rankCol: String = "rank",
                      numPartitions: Int = 0): DataFrame =
-    ranked(df, sortCols, rankCol, numPartitions, None, "__gr_unused")._1
+    ranked(df, sortCols, rankCol, numPartitions, None, "__gr_unused")
 
   /** `df` plus a `bucketCol` (1-based, long) replaying EXACT
     * `ntile(buckets)` semantics over the global `sortCols` order: with
     * n rows, the first n % buckets buckets hold n/buckets + 1 rows,
     * the rest n/buckets — bit-identical to the window function, minus
-    * its single-partition sort. Bucket assignment is pure integer
-    * arithmetic over the global rank (`div`, no doubles — safe past
-    * 2^53 rows).
+    * its single-partition sort. n is the in-plan row count, and bucket
+    * assignment is pure integer column arithmetic over it and the
+    * global rank (`div`, no doubles — safe past 2^53 rows).
     */
   def withNtile(df: DataFrame, sortCols: Seq[Column], buckets: Int,
                 bucketCol: String = "bucket",
@@ -148,17 +162,16 @@ object GlobalRank {
     require(buckets >= 1, s"ntile needs >= 1 bucket, got $buckets")
     require(!df.columns.contains(bucketCol),
       s"input already has a '$bucketCol' column")
-    val (rankedDf, n) =
-      ranked(df, sortCols, "__gr_rank", numPartitions, None, "__gr_unused",
-        needCount = true)
-    val q = n / buckets
-    val rem = n % buckets
-    val cut = rem * (q + 1) // ranks 1..cut land in the q+1-sized buckets
-    val bucket = when(col("__gr_rank") <= cut,
-        expr(s"(__gr_rank - 1) div ${q + 1} + 1"))
-      .otherwise( // q = 0 only when n < buckets, where every rank <= cut
-        expr(s"$rem + (__gr_rank - 1 - $cut) div ${math.max(q, 1L)} + 1"))
-    rankedDf.withColumn(bucketCol, bucket.cast("long")).drop("__gr_rank")
+    val q = s"(__gr_n div $buckets)"
+    val rem = s"(__gr_n % $buckets)"
+    val cut = s"($rem * ($q + 1))" // ranks 1..cut land in q+1-sized buckets
+    // q = 0 only when n < buckets, where every rank <= cut
+    val bucket = expr(s"CASE WHEN __gr_rank <= $cut " +
+      s"THEN (__gr_rank - 1) div ($q + 1) + 1 " +
+      s"ELSE $rem + (__gr_rank - 1 - $cut) div greatest($q, 1) + 1 END")
+    ranked(df, sortCols, "__gr_rank", numPartitions, None, "__gr_unused",
+        withN = true)
+      .withColumn(bucketCol, bucket.cast("long")).drop("__gr_rank", "__gr_n")
   }
 
   /** EXACT top-fraction selection — the "keep the best p% by score"
@@ -166,18 +179,18 @@ object GlobalRank {
     * global rank under `sortCols` is <= round(frac * n). Exact where
     * an `approxQuantile` threshold is fuzzy at the boundary, and still
     * fully distributed (the only extra work over [[withGlobalRank]] is
-    * a codegen'd filter). `round` (not ceil) on the boundary: IEEE
-    * makes 0.1 * 500 land at 50.000000000000003, which `ceil` turns
-    * into an off-by-one surprise on BOTH engines.
+    * the in-plan n and a codegen'd filter). `round` (not ceil) on the
+    * boundary: IEEE makes 0.1 * 500 land at 50.000000000000003, which
+    * `ceil` turns into an off-by-one surprise on BOTH engines.
     */
   def topFraction(df: DataFrame, sortCols: Seq[Column], frac: Double,
                   rankCol: String = "rank",
                   numPartitions: Int = 0): DataFrame = {
     require(frac > 0.0 && frac <= 1.0, s"need 0 < frac <= 1, got $frac")
-    val (rankedDf, n) =
-      ranked(df, sortCols, rankCol, numPartitions, None, "__gr_unused",
-        needCount = true)
-    rankedDf.filter(col(rankCol) <= math.round(frac * n))
+    ranked(df, sortCols, rankCol, numPartitions, None, "__gr_unused",
+        withN = true)
+      .filter(col(rankCol) <= round(lit(frac) * col("__gr_n")).cast("long"))
+      .drop("__gr_n")
   }
 
   /** Exact PER-GROUP rank — `row_number()` over a window partitioned
@@ -190,30 +203,31 @@ object GlobalRank {
     * literal tree as the global rank), the window partitions by
     * (groupCols…, bucket) — a hot group's sort splits across all B
     * buckets — and each group's per-bucket counts prefix-sum IN-PLAN
-    * (the bounded explode-to-later-buckets trick, keyed by group) into
-    * the offsets that linearize in-bucket row numbers to the exact
-    * per-group rank. Bit-identical to the window for any per-group
-    * total ordering (include a tiebreak), by the same argument as the
-    * global fast path: equal lead values share a bucket, the in-bucket
-    * window re-sorts the full tuple, offsets are exact counts.
+    * (the same bounded explode-to-later-buckets offsets, keyed by
+    * group) into the offsets that linearize in-bucket row numbers to
+    * the exact per-group rank. Bit-identical to the window for any
+    * per-group total ordering (include a tiebreak), by the same
+    * argument as the global fast path: equal lead values share a
+    * bucket, the in-bucket window re-sorts the full tuple, offsets are
+    * exact counts.
     *
     * Count-then-choose (the PageRank/CC/theilSen convention): one
-    * narrow aggregate measures the hottest group's share first, and
-    * the split machinery only engages when that share exceeds
-    * [[HotGroupFactor]] bucket-widths (share > factor / B) — balanced
-    * groups keep the plain window and pay only the one detection pass
-    * (the bucketing adds ~3 narrow lineage evaluations that are pure
-    * overhead when no group funnels; the threshold is bucket-relative,
-    * so it tightens automatically as partition counts grow at scale).
+    * narrow aggregate measures the hottest group's share and the group
+    * count first, and the split machinery only engages when that share
+    * exceeds [[HotGroupFactor]] bucket-widths (share > factor / B) —
+    * balanced groups keep the plain window and pay only the one
+    * detection pass (the bucketing adds ~3 narrow lineage evaluations
+    * that are pure overhead when no group funnels; the threshold is
+    * bucket-relative, so it tightens automatically as partition counts
+    * grow at scale).
     *
     * Applicability mirrors the global fast path (numeric-embeddable
     * lead key, deterministic lineage); anything else falls back to the
     * plain partitioned window unchanged. The offsets side is
-    * groups × B metadata rows and is BROADCAST — `groupCols` must be
-    * dimension-bounded (the broadcast is the caller's smallness
-    * assertion, the ScaleGuard convention). Group columns join
-    * null-safely, so a null group ranks exactly as the window's
-    * null partition does.
+    * groups × B metadata rows and is BROADCAST, so the split also
+    * needs groups × B ≤ [[MaxGroupedOffsetRows]]; wider group columns
+    * keep the plain window. Group columns join null-safely, so a null
+    * group ranks exactly as the window's null partition does.
     */
   def withGroupedRank(df: DataFrame, groupCols: Seq[String],
                       sortCols: Seq[Column], rankCol: String = "rank",
@@ -221,72 +235,22 @@ object GlobalRank {
     require(groupCols.nonEmpty, "withGroupedRank needs group columns")
     val taken = df.columns.toSet
     require(!taken(rankCol), s"input already has a '$rankCol' column")
-    require((Seq("__gr_d", "__gr_b", "__gr_b2", "__gr_c", "__gr_off") ++
-      groupCols.map(g => s"__gr_g_$g")).forall(!taken(_)),
+    require((Reserved ++ groupCols.map(g => s"__gr_g_$g")).forall(!taken(_)),
       "input uses GlobalRank's reserved __gr_* names")
-    val spark = df.sparkSession
-    val p =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val plainWindow = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy(sortCols: _*)
+    val b = bucketCount(df, numPartitions)
+    def worthSplit: Boolean = {
+      val (share, groups) = groupStats(df, groupCols)
+      share * b > HotGroupFactor && groups * b <= MaxGroupedOffsetRows
+    }
     embedKey(df, sortCols.head) match {
-      case Some((keyed, nullsFirst, desc)) if deterministicLineage(df) &&
-          hotGroupShare(df, groupCols) * math.max(1,
-            math.min(p, MaxBuckets)) > HotGroupFactor =>
-        val b = math.max(1, math.min(p, MaxBuckets))
-        val keyedDf = df.withColumn("__gr_d", keyed)
-        val bs: Array[Double] =
-          if (b <= 1) Array.empty
-          else keyedDf.select(col("__gr_d"))
-            .stat.approxQuantile("__gr_d",
-              (1 until b).map(_.toDouble / b).toArray,
-              1.0 / math.max(1000, 4 * b))
-            .distinct.sorted
-        val k = bs.length
-        def tree(lo: Int, hi: Int): Column =
-          if (lo == hi) lit(lo)
-          else {
-            val mid = (lo + hi) / 2
-            when(col("__gr_d") > lit(bs(mid)), tree(mid + 1, hi))
-              .otherwise(tree(lo, mid))
-          }
-        val bucket =
-          when(col("__gr_d").isNull, lit(if (nullsFirst) 0 else k))
-            .when(isnan(col("__gr_d")), lit(if (desc) 0 else k))
-            .otherwise(if (k == 0) lit(0) else tree(0, k))
-        val bdf = keyedDf.withColumn("__gr_b", bucket).drop("__gr_d")
-        val wr = Window
-          .partitionBy(groupCols.map(col) :+ col("__gr_b"): _*)
-          .orderBy(sortCols: _*)
-        val inBucket =
-          bdf.withColumn(rankCol, row_number().over(wr).cast("long"))
-        val gCols = groupCols.map(col)
-        val counts = bdf
-          .groupBy(gCols :+ col("__gr_b"): _*)
-          .agg(count(lit(1)).as("__gr_c"))
-        // per-group prefix offsets, in-plan (groups × B metadata rows):
-        // bucket b's count contributes to every later bucket of ITS
-        // group; missing (group, bucket) offsets coalesce to 0
-        val offDf = counts.filter(col("__gr_b") < lit(k))
-          .select(gCols :+
-            explode(sequence(col("__gr_b") + lit(1), lit(k)))
-              .as("__gr_b") :+ col("__gr_c"): _*)
-          .groupBy(gCols :+ col("__gr_b"): _*)
-          .agg(sum("__gr_c").as("__gr_off"))
-          .withColumnsRenamed(
-            (groupCols.map(g => g -> s"__gr_g_$g") :+
-              ("__gr_b" -> "__gr_b2")).toMap)
-        val cond = groupCols.map(g => col(g) <=> col(s"__gr_g_$g"))
-          .reduce(_ && _) && col("__gr_b") === col("__gr_b2")
-        inBucket.join(broadcast(offDf), cond, "left")
-          .withColumn(rankCol,
-            col(rankCol) + coalesce(col("__gr_off"), lit(0L)))
-          .drop("__gr_b" +: "__gr_b2" +: "__gr_off" +:
-            groupCols.map(g => s"__gr_g_$g"): _*)
+      case Some(key) if deterministicLineage(df) && worthSplit =>
+        val (bdf, maxId) = bucketize(df, sortCols, key, b)
+        rankInBuckets(bdf, groupCols, "__gr_b", maxId, sortCols, rankCol,
+          None, withN = false)
       case _ =>
-        df.withColumn(rankCol,
-          row_number().over(plainWindow).cast("long"))
+        df.withColumn(rankCol, row_number().over(
+          Window.partitionBy(groupCols.map(col): _*).orderBy(sortCols: _*))
+          .cast("long"))
     }
   }
 
@@ -311,10 +275,10 @@ object GlobalRank {
     * rank order) — the primitive behind budgeted selection ("take
     * documents by descending quality until the token budget is
     * spent"). Same bucketed shape as [[withGlobalRank]]: the counts
-    * pass carries a per-bucket SUM next to the count, the driver
-    * prefix-sums both (≤ B rows), and the in-bucket window carries
-    * the value sum alongside row_number — still no global window, one
-    * extra long per offset row.
+    * pass carries a per-bucket SUM next to the count, the in-plan
+    * offsets prefix-sum both (≤ B²/2 metadata rows), and the in-bucket
+    * window carries the value sum alongside row_number — still no
+    * global window, one extra long per offset row.
     *
     * `valueCol` must be integral (LONG) — integer prefix sums are
     * order-free and bit-identical cross-engine, where a double's
@@ -322,29 +286,35 @@ object GlobalRank {
     *
     * Null contract: a null `valueCol` counts as 0 toward the running
     * total (it is coalesced at ingestion, so the per-bucket sums,
-    * the driver prefix-sum, and the in-bucket window all see the
-    * same non-null longs — a bucket of all-null values can no
-    * longer NPE the driver's `getLong`, and rank/total cannot
-    * desynchronize on null-skipping window sums).
+    * their prefix sums, and the in-bucket window all see the same
+    * non-null longs — rank/total cannot desynchronize on null-skipping
+    * window sums).
     */
   def withRunningTotal(df: DataFrame, sortCols: Seq[Column],
                        valueCol: Column, rankCol: String = "rank",
                        totalCol: String = "running_total",
                        numPartitions: Int = 0): DataFrame =
-    ranked(df, sortCols, rankCol, numPartitions, Some(valueCol), totalCol)._1
+    ranked(df, sortCols, rankCol, numPartitions, Some(valueCol), totalCol)
 
   // ---- shared machinery --------------------------------------------
 
-  /** Rank (and optionally running-total) `df`; returns the augmented
-    * frame and the exact total row count when `needCount` (known from
-    * the offsets pass — `withNtile`/`topFraction` need it on the
-    * driver; -1 otherwise, where the offsets stay in-plan and no
-    * driver action runs at build time).
+  /** B: the requested (or session) partition count, capped at
+    * [[MaxBuckets]].
+    */
+  private def bucketCount(df: DataFrame, numPartitions: Int): Int = {
+    val p =
+      if (numPartitions > 0) numPartitions
+      else df.sparkSession.sessionState.conf.numShufflePartitions
+    math.max(1, math.min(p, MaxBuckets))
+  }
+
+  /** Rank (and optionally running-total) `df`. With `withN` the frame
+    * also carries the total row count as `__gr_n`, for
+    * `withNtile`/`topFraction`.
     */
   private def ranked(df: DataFrame, sortCols: Seq[Column], rankCol: String,
                      numPartitions: Int, value: Option[Column],
-                     totalCol: String,
-                     needCount: Boolean = false): (DataFrame, Long) = {
+                     totalCol: String, withN: Boolean = false): DataFrame = {
     // withColumn REPLACES silently — a caller column named like the
     // rank output or the internal bucket/offset scratch would corrupt
     // the result without a trace
@@ -352,13 +322,15 @@ object GlobalRank {
     require(!taken(rankCol), s"input already has a '$rankCol' column")
     require(value.isEmpty || !taken(totalCol),
       s"input already has a '$totalCol' column")
-    require(Seq("__gr_pid", "__gr_off", "__gr_voff", "__gr_v", "__gr_d",
-        "__gr_d2", "__gr_b", "__gr_c", "__gr_s").forall(!taken(_)),
+    require(Reserved.forall(!taken(_)),
       "input uses GlobalRank's reserved __gr_* names")
-    val spark = df.sparkSession
-    val p =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
+    val b = bucketCount(df, numPartitions)
+    val base = value match {
+      case Some(v) =>
+        df.withColumn("__gr_v", coalesce(v.cast("long"), lit(0L)))
+      case None => df
+    }
+    val total = value.map(_ => totalCol)
     embedKey(df, sortCols.head) match {
       // determinism gate (r18, advisor item): the bucketed fast path
       // evaluates the input lineage up to three times (boundary sample,
@@ -372,10 +344,20 @@ object GlobalRank {
       // (PlanGuardSpec bans the rand() family repo-wide), so this is a
       // latent-hazard gate, not a plan change.
       case Some(key) if deterministicLineage(df) =>
-        rankedBucketed(df, sortCols, key, rankCol, p, value, totalCol,
-          needCount)
+        val (bdf, maxId) = bucketize(base, sortCols, key, b)
+        rankInBuckets(bdf, Nil, "__gr_b", maxId, sortCols, rankCol, total,
+          withN)
       case _ =>
-        rankedStaged(df, sortCols, rankCol, p, value, totalCol)
+        // pinned-partition-id fallback: range-shuffle on the full sort
+        // tuple and freeze each row's range-partition id AS DATA
+        // (boundaries come from sampling, so the id must be pinned
+        // before the offsets and ranking branches read the frame)
+        val ranged = Stage.materialize(
+          base.repartitionByRange(b, sortCols: _*)
+            .withColumn("__gr_pid", spark_partition_id()),
+          if (value.isDefined) "global_running_total" else "global_rank")
+        rankInBuckets(ranged, Nil, "__gr_pid", b - 1, sortCols, rankCol,
+          total, withN)
     }
   }
 
@@ -420,22 +402,15 @@ object GlobalRank {
     embedded.map(d => (if (desc) negate(d) else d, nullsFirst, desc))
   }
 
-  /** The sampled-boundary bucket path — see the object doc. */
-  private def rankedBucketed(df: DataFrame, sortCols: Seq[Column],
-                             key: (Column, Boolean, Boolean),
-                             rankCol: String, p: Int, value: Option[Column],
-                             totalCol: String,
-                             needCount: Boolean): (DataFrame, Long) = {
+  /** `df` plus the sampled-boundary bucket `__gr_b` (see the object
+    * doc) and the largest bucket id. Bucket ids follow the total order:
+    * every row of bucket i sorts before every row of bucket i + 1.
+    */
+  private def bucketize(df: DataFrame, sortCols: Seq[Column],
+                        key: (Column, Boolean, Boolean),
+                        b: Int): (DataFrame, Int) = {
     val (keyed, nullsFirst, desc) = key
-    val spark = df.sparkSession
-    import spark.implicits._
-    val b = math.max(1, math.min(p, MaxBuckets))
-    val withV = value match {
-      case Some(v) =>
-        df.withColumn("__gr_v", coalesce(v.cast("long"), lit(0L)))
-      case None => df
-    }
-    val keyedDf0 = withV.withColumn("__gr_d", keyed)
+    val keyedDf0 = df.withColumn("__gr_d", keyed)
     // bounded action 1: sample the boundaries (narrow, column-pruned
     // scan of the lead key; nulls and NaNs bucket by rule, not sample)
     // approxQuantile drops null and NaN itself — no pre-filter (a
@@ -519,165 +494,89 @@ object GlobalRank {
       }
     }
     val maxId = nextId - 1
-    def tree(lo: Int, hi: Int): Column =
-      if (lo == hi) lit(baseId(lo))
+    // binary search over sorted literal cuts: leaf i of `cuts` gets id(i)
+    def tree(c: Column, cuts: Array[Double], id: Int => Int, lo: Int,
+             hi: Int): Column =
+      if (lo == hi) lit(id(lo))
       else {
         val mid = (lo + hi) / 2
-        when(col("__gr_d") > lit(bs(mid)), tree(mid + 1, hi))
-          .otherwise(tree(lo, mid))
+        when(c > lit(cuts(mid)), tree(c, cuts, id, mid + 1, hi))
+          .otherwise(tree(c, cuts, id, lo, mid))
       }
-    def subTree(subBs: Array[Double], start: Int, lo: Int,
-                hi: Int): Column =
-      if (lo == hi) lit(start + lo)
-      else {
-        val mid = (lo + hi) / 2
-        when(col("__gr_d2") > lit(subBs(mid)),
-          subTree(subBs, start, mid + 1, hi))
-          .otherwise(subTree(subBs, start, lo, mid))
-      }
-    val baseExpr = if (k == 0) lit(0) else tree(0, k)
-    val withHot = hots.foldLeft(baseExpr) { case (acc, (v, subBs)) =>
-      val start = hotStart(v)
-      val (_, nf2, desc2) = secondKey.get
-      val last = start + subBs.length
-      val sub = when(col("__gr_d2").isNull, lit(if (nf2) start else last))
-        .when(isnan(col("__gr_d2")), lit(if (desc2) start else last))
-        .otherwise(
-          if (subBs.isEmpty) lit(start)
-          else subTree(subBs, start, 0, subBs.length))
-      when(col("__gr_d") === lit(v), sub).otherwise(acc)
-    }
     // null placement per the sort order's null ordering; NaN sorts
     // LARGEST in Spark, so it lands last ascending / first descending
     // (the embedding negates for desc but NaN survives negation)
-    val bucket =
-      when(col("__gr_d").isNull, lit(if (nullsFirst) 0 else maxId))
-        .when(isnan(col("__gr_d")), lit(if (desc) 0 else maxId))
-        .otherwise(withHot)
+    def rules(c: Column, nf: Boolean, ds: Boolean, first: Int, last: Int,
+              rest: Column): Column =
+      when(c.isNull, lit(if (nf) first else last))
+        .when(isnan(c), lit(if (ds) first else last))
+        .otherwise(rest)
+    val withHot = hots.foldLeft(tree(col("__gr_d"), bs, baseId(_), 0, k)) {
+      case (acc, (v, subBs)) =>
+        val start = hotStart(v)
+        val (_, nf2, desc2) = secondKey.get
+        val sub = rules(col("__gr_d2"), nf2, desc2, start,
+          start + subBs.length,
+          tree(col("__gr_d2"), subBs, start + _, 0, subBs.length))
+        when(col("__gr_d") === lit(v), sub).otherwise(acc)
+    }
+    val bucket = rules(col("__gr_d"), nullsFirst, desc, 0, maxId, withHot)
     val keyedDf =
       if (hots.nonEmpty) keyedDf0.withColumn("__gr_d2", secondKey.get._1)
       else keyedDf0
-    val bdf = keyedDf.withColumn("__gr_b", bucket)
-      .drop("__gr_d", "__gr_d2")
-    val wr = Window.partitionBy("__gr_b").orderBy(sortCols: _*)
-    val inBucket = value match {
-      case Some(_) =>
-        bdf.withColumn(rankCol, row_number().over(wr).cast("long"))
-          .withColumn(totalCol, sum("__gr_v")
-            .over(wr.rowsBetween(Window.unboundedPreceding, 0)))
-      case None =>
-        bdf.withColumn(rankCol, row_number().over(wr).cast("long"))
-    }
-    if (needCount) {
-      // bounded action 2: per-bucket counts (and value sums) -> driver
-      // (≤ b rows — metadata-scale, the AQE-stats posture). Only for
-      // callers that need n on the driver (ntile/topFraction).
-      val counts = (value match {
-        case Some(_) => bdf.groupBy("__gr_b")
-          .agg(count(lit(1)).as("c"), sum("__gr_v").as("s"))
-        case None => bdf.groupBy("__gr_b").agg(count(lit(1)).as("c"))
-      }).collect()
-      val cs = Array.fill(maxId + 1)(0L)
-      val ss = Array.fill(maxId + 1)(0L)
-      counts.foreach { r =>
-        cs(r.getInt(0)) = r.getLong(1)
-        if (value.isDefined) ss(r.getInt(0)) = r.getLong(2)
-      }
-      var accC = 0L
-      var accS = 0L
-      val offsets = (0 to maxId).map { i =>
-        val o = (i, accC, accS); accC += cs(i); accS += ss(i); o
-      }
-      val offDf = offsets.toDF("__gr_b", "__gr_off", "__gr_voff")
-      // offsets join AFTER the window: the bucketed exchange moves only
-      // the caller's columns + one int, not the offset longs
-      val joined = inBucket.join(broadcast(offDf), "__gr_b")
-        .withColumn(rankCol, col(rankCol) + col("__gr_off"))
-      val out = value match {
-        case Some(_) =>
-          joined.withColumn(totalCol, col(totalCol) + col("__gr_voff"))
-        case None => joined
-      }
-      (out.drop("__gr_b", "__gr_off", "__gr_voff", "__gr_v"), accC)
-    } else {
-      // offsets folded INTO the main query (r18, VERDICT item 6): when
-      // the caller does not need n on the driver, the per-bucket
-      // aggregate stays a plan subtree — each non-empty bucket b
-      // contributes its (count, sum) to every bucket AFTER it via a
-      // bounded explode(sequence(b+1, k)) (≤ B²/2 metadata rows), and
-      // one tiny grouped sum yields exactly the prefix offsets the
-      // collect computed. The broadcast LEFT join coalesces missing
-      // offsets (no non-empty predecessor) to 0. One driver round-trip
-      // fewer per call; the input-lineage pass count is unchanged.
-      val counts = value match {
-        case Some(_) => bdf.groupBy("__gr_b")
-          .agg(count(lit(1)).as("__gr_c"), sum("__gr_v").as("__gr_s"))
-        case None => bdf.groupBy("__gr_b")
-          .agg(count(lit(1)).as("__gr_c"), lit(0L).as("__gr_s"))
-      }
-      val offDf = counts.filter(col("__gr_b") < lit(maxId))
-        .select(explode(sequence(col("__gr_b") + lit(1), lit(maxId)))
-          .as("__gr_b"), col("__gr_c"), col("__gr_s"))
-        .groupBy("__gr_b")
-        .agg(sum("__gr_c").as("__gr_off"), sum("__gr_s").as("__gr_voff"))
-      val joined = inBucket.join(broadcast(offDf), Seq("__gr_b"), "left")
-        .withColumn(rankCol,
-          col(rankCol) + coalesce(col("__gr_off"), lit(0L)))
-      val out = value match {
-        case Some(_) => joined.withColumn(totalCol,
-          col(totalCol) + coalesce(col("__gr_voff"), lit(0L)))
-        case None => joined
-      }
-      (out.drop("__gr_b", "__gr_off", "__gr_voff", "__gr_v"), -1L)
-    }
+    (keyedDf.withColumn("__gr_b", bucket).drop("__gr_d", "__gr_d2"), maxId)
   }
 
-  /** Pinned-partition-id fallback for lead keys with no monotone
-    * numeric embedding: range-shuffle on the full sort tuple, freeze
-    * each row's range-partition id AS DATA (`spark_partition_id()` +
-    * [[Stage.materialize]] — boundaries come from sampling, so the id
-    * must be pinned before two downstream jobs read the frame), then
-    * the same offsets + partitioned-window arithmetic over the pid.
+  /** The one offsets implementation. `bdf` carries a bucket column
+    * (ids 0..maxId in total order within each `keys` group); rank (and
+    * running-total `__gr_v` into `totalCol`) within (keys…, bucket),
+    * then add each bucket's exclusive prefix offsets, computed IN-PLAN
+    * from the per-bucket counts: bucket b's count (and value sum)
+    * explodes to every later bucket of its group (≤ B²/2 metadata rows
+    * per group) and a grouped sum is the prefix. The offsets join
+    * AFTER the window (the bucketed exchange moves only the caller's
+    * columns + one int), broadcast and LEFT — a bucket with no
+    * non-empty predecessor has offset 0 — with keys matched
+    * null-safely. With `withN` (keyless only) each count also explodes
+    * to its own and every earlier bucket, so every offsets row carries
+    * the total row count as `__gr_n` through the same broadcast.
     */
-  private def rankedStaged(df: DataFrame, sortCols: Seq[Column],
-                           rankCol: String, p: Int, value: Option[Column],
-                           totalCol: String): (DataFrame, Long) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val base = value match {
-      case Some(v) =>
-        df.withColumn("__gr_v", coalesce(v.cast("long"), lit(0L)))
-      case None => df
+  private def rankInBuckets(bdf: DataFrame, keys: Seq[String],
+                            bucketCol: String, maxId: Int,
+                            sortCols: Seq[Column], rankCol: String,
+                            totalCol: Option[String],
+                            withN: Boolean): DataFrame = {
+    val wr = Window.partitionBy(keys.map(col) :+ col(bucketCol): _*)
+      .orderBy(sortCols: _*)
+    val withRank = bdf.withColumn(rankCol, row_number().over(wr).cast("long"))
+    val inBucket = totalCol.fold(withRank)(t => withRank.withColumn(t,
+      sum("__gr_v").over(wr.rowsBetween(Window.unboundedPreceding, 0))))
+    val counts = bdf.groupBy(keys.map(col) :+ col(bucketCol): _*)
+      .agg(count(lit(1)).as("__gr_c"),
+        (if (totalCol.isDefined) sum("__gr_v") else lit(0L)).as("__gr_s"))
+    // the last bucket's count lands on the sentinel maxId + 1, which no
+    // row joins: no filter over the counts, which Catalyst would push
+    // below the aggregate and so evaluate the bucket tree twice per row.
+    // Keyless, the ≤ B² exploded rows sum in ONE task (no second
+    // shuffle before the broadcast); per group they keep the exchange.
+    val earlier = col(bucketCol) < col("__gr_b2")
+    val offsets = (if (keys.isEmpty) counts.coalesce(1) else counts)
+      .select(keys.map(k => col(k).as(s"__gr_g_$k")) :+ col(bucketCol) :+
+        explode(sequence(if (withN) lit(0) else col(bucketCol) + 1,
+          lit(maxId + 1))).as("__gr_b2") :+
+        col("__gr_c") :+ col("__gr_s"): _*)
+      .groupBy((keys.map(k => s"__gr_g_$k") :+ "__gr_b2").map(col): _*)
+      .agg(sum(when(earlier, col("__gr_c"))).as("__gr_off"),
+        sum(when(earlier, col("__gr_s"))).as("__gr_voff"),
+        sum("__gr_c").as("__gr_n"))
+    val cond = keys.foldLeft(col(bucketCol) === col("__gr_b2")) { (c, k) =>
+      c && (col(k) <=> col(s"__gr_g_$k"))
     }
-    val ranged = Stage.materialize(
-      base.repartitionByRange(p, sortCols: _*)
-        .withColumn("__gr_pid", spark_partition_id()),
-      if (value.isDefined) "global_running_total" else "global_rank")
-    val parts = (value match {
-      case Some(_) => ranged.groupBy("__gr_pid")
-        .agg(count(lit(1)).as("c"), sum("__gr_v").as("s"))
-      case None => ranged.groupBy("__gr_pid").agg(count(lit(1)).as("c"))
-    }).collect()
-      .map(r => (r.getInt(0), r.getLong(1),
-        if (value.isDefined) r.getLong(2) else 0L))
-      .sortBy(_._1)
-    var accC = 0L
-    var accS = 0L
-    val offsets = parts.map { case (pid, c, s) =>
-      val o = (pid, accC, accS); accC += c; accS += s; o
-    }.toSeq
-    val offDf = offsets.toDF("__gr_pid", "__gr_off", "__gr_voff")
-    val wr = Window.partitionBy("__gr_pid").orderBy(sortCols: _*)
-    val withRank = ranged.join(broadcast(offDf), "__gr_pid")
-      .withColumn(rankCol,
-        row_number().over(wr).cast("long") + col("__gr_off"))
-    val out = value match {
-      case Some(_) =>
-        withRank.withColumn(totalCol, sum("__gr_v")
-          .over(wr.rowsBetween(Window.unboundedPreceding, 0))
-          + col("__gr_voff"))
-      case None => withRank
-    }
-    (out.drop("__gr_pid", "__gr_off", "__gr_voff", "__gr_v"), accC)
+    val joined = inBucket.join(broadcast(offsets), cond, "left")
+      .withColumn(rankCol, col(rankCol) + coalesce(col("__gr_off"), lit(0L)))
+    val out = totalCol.fold(joined)(t => joined.withColumn(t,
+      col(t) + coalesce(col("__gr_voff"), lit(0L))))
+    out.drop(Seq(bucketCol, "__gr_b2", "__gr_off", "__gr_voff", "__gr_v") ++
+      (if (withN) Nil else Seq("__gr_n")) ++ keys.map(k => s"__gr_g_$k"): _*)
   }
 }

@@ -70,22 +70,25 @@ object PageRank {
   private[operators] def pinLocal(df: DataFrame): DataFrame =
     df.sparkSession.createDataFrame(df.collectAsList(), df.schema)
 
-  /** Shuffle-regime lineage-cut cadence: every `stageEvery`-th round's
+  /** Shuffle-regime lineage-cut cadence: every `StageEvery`-th round's
     * rank frame is staged to parquet so the lazily-chained round plans
-    * stay bounded (a 100 TB round replay is a full edge pass). Default
-    * 4 was validated by the r18 fat-graph A/B
-    * (reports/PRCADENCE_r18.md): staging MORE often (2) pays parquet
-    * round-trips that buy nothing, staging less often (6/8 ≈ never at
-    * 5 iters) is a wash at 5 rounds but unbounds the plan for deeper
-    * runs. Scale deployments with slow stage storage can raise it.
+    * stay bounded (a 100 TB round replay is a full edge pass). 4 was
+    * chosen by the r18 fat-graph A/B (reports/PRCADENCE_r18.md):
+    * staging MORE often (2) pays parquet round-trips that buy nothing,
+    * staging less often (6/8 ≈ never at 5 iters) is a wash at 5 rounds
+    * but unbounds the plan for deeper runs.
     */
-  val StageEveryKey = "spark.graft.pagerank.stageEvery"
-  val DefaultStageEvery = 4
+  val StageEvery = 4
 
+  /** @param stageEvery the shuffle-regime lineage-cut cadence
+    *                   (default [[StageEvery]])
+    */
   def ranks(edgesIn: DataFrame, srcCol: String, dstCol: String,
             iters: Int = 5, damping: Double = 0.85,
-            undirected: Boolean = true): DataFrame = {
+            undirected: Boolean = true,
+            stageEvery: Int = StageEvery): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
+    require(stageEvery >= 1, s"stageEvery must be >= 1, got $stageEvery")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     // ids keep their INPUT type end-to-end (r12 — was cast("string")):
     // five rounds of join+aggregate shuffle the id on every exchange,
@@ -154,16 +157,6 @@ object PageRank {
     // changes). The shuffle-join regime (> 2M vertices) has no
     // per-round action, so rounds still chain lazily into one job with
     // the every-4th-round lineage cut.
-    val stageEvery = {
-      val raw = edgesIn.sparkSession.conf
-        .get(StageEveryKey, DefaultStageEvery.toString)
-      val v = try raw.toInt catch { case e: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"$StageEveryKey must be an integer, got '$raw'", e)
-      }
-      require(v >= 1, s"$StageEveryKey must be >= 1, got $v")
-      v
-    }
     // r18 (fat-graph cadence A/B, reports/PRCADENCE_r18.md): in the
     // shuffle regime the lazily-chained rounds evaluate ONCE in the
     // final job — a stage cut buys bounded plan depth, never fewer

@@ -232,11 +232,13 @@ object ScaleQ {
 
     // win_global_rank [EXT]: EXACT global row_number over the whole
     // table — the op behind "take the top-p% by score" curation cuts
-    // and percentile exports — via GlobalRank's two-phase distributed
-    // shape (range shuffle → frozen partition ids → metadata-scale
-    // offset scan → partitioned window). The oracle is the literal
-    // single-window SQL; parity IS the contract (GlobalRankSpec), and
-    // the Spark plan carries no unpartitioned window (PlanGuardSpec).
+    // and percentile exports — via GlobalRank's bucketed path (the
+    // numeric lead o_totalprice): sampled quantile boundaries → a
+    // literal bucket tree → bucket-partitioned window + in-plan prefix
+    // offsets of the per-bucket counts; no range shuffle, no stage. The
+    // oracle is the literal single-window SQL; parity IS the contract
+    // (GlobalRankSpec), and the Spark plan carries no unpartitioned
+    // window (PlanGuardSpec).
     Q("win_global_rank",
       (s, d) => graft.operators.GlobalRank.withGlobalRank(
           t(s, d, "orders")

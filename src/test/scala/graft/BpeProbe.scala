@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Bpe, WordPiece}
 
@@ -10,19 +10,13 @@ import graft.operators.{Bpe, WordPiece}
   * actually diverge (staged rounds + TakeOrdered argmax vs an
   * in-memory fold). One leg per trainer, BPE and WordPiece; each
   * prints both times and requires identical merges. Runs on
-  * `local[N]` with N shuffle partitions, N = `SPARK_GRAFT_CPUS`, else
-  * the JVM's available processors.
+  * [[ProbeSession]].
   *
   * Run: `sbt "Test/runMain graft.BpeProbe"`.
   */
 object BpeProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]").config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     // ~1.1M distinct words, zipf-ish frequencies via repetition of the
     // hot head: "docs" of deterministic pseudo-words
     val docs = spark.range(0, 1000000L).select(
@@ -44,7 +38,7 @@ object BpeProbe {
       val (dist, tDist) = timed(0L)
       val (local, tLocal) = timed(Long.MaxValue)
       val same = dist == local
-      println(f"$name-PROBE cpus=$cpus vocab~1.1M merges=6 " +
+      println(f"$name-PROBE cpus=${ProbeSession.cpus} vocab~1.1M merges=6 " +
         f"distributed=$tDist%6.1fs local=$tLocal%6.1fs identical=$same")
       dist.foreach(r => println(s"  merge ${r.mkString(" ")}"))
       require(same, s"$name: distributed and local paths diverged at probe scale")

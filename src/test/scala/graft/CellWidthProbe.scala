@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Grid-width sweep for the interval-overlap join
@@ -23,10 +23,7 @@ object CellWidthProbe {
     val widths = args.lift(2)
       .map(_.split(",").map(_.trim.toLong).toSeq)
       .getOrElse(Seq(1L, 2L, 3L, 4L, 8L, 16L, 32L, 64L))
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
 
     // join_overlap's frames, verbatim (queries/Relational.scala)
     val o = queries.t(spark, dir, "orders")

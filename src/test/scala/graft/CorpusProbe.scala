@@ -11,10 +11,7 @@ import graft.operators.Corpus
   */
 object CorpusProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     import spark.implicits._
     val base = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
       .select($"doc_id", $"text", $"source")

@@ -1,7 +1,9 @@
 package graft
 
+import scala.util.Random
+
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Stage}
 
 /** Dedup family (SURVEY.md §2 [EXT]): planted near-duplicates must be
   * found; disjoint documents must not pair; estimates must track exact
@@ -365,5 +367,96 @@ class DedupSpec extends SparkFunSuite {
       (id, tk.length.toLong, covered.size.toLong, spans, kept.mkString(" "))
     }
     assert(got == expect, got.take(3).mkString("\n"))
+  }
+
+  // ---- sketchHammingPairs: adversarial exact parity ----
+  // the 64-bit-sketch all-pairs core under the mega-clone-group shape
+  // (same-signature branch) and the cross-signature grid cover with
+  // nsub > 1 chunk blocks; truth is brute-force bitCount(xor) <=
+  // maxDist over every id pair, seeded so a failure reproduces
+
+  /** All-pairs truth: canonical (id_a < id_b, hamming). */
+  private def bruteHamming(rows: Seq[(Long, Long)], maxDist: Int): Set[(Long, Long, Int)] = {
+    val arr = rows.toArray
+    val out = Set.newBuilder[(Long, Long, Int)]
+    var i = 0
+    while (i < arr.length) {
+      var j = i + 1
+      while (j < arr.length) {
+        val h = java.lang.Long.bitCount(arr(i)._2 ^ arr(j)._2)
+        if (h <= maxDist) {
+          val (a, b) = (arr(i)._1, arr(j)._1)
+          out += ((math.min(a, b), math.max(a, b), h))
+        }
+        j += 1
+      }
+      i += 1
+    }
+    out.result()
+  }
+
+  private def hammingPairs(rows: Seq[(Long, Long)], maxDist: Int,
+                  maxBucketSize: Int): Set[(Long, Long, Int)] = {
+    val sk = Stage.materialize(rows.toDF("id", "sh"), "dedup_fuzz_sk")
+    Dedup.sketchHammingPairs(sk, maxDist, maxBucketSize)
+      .as[(Long, Long, Int)].collect().toSet
+  }
+
+  test("mega clone group (20x maxBucketSize): exact pair parity, no loss") {
+    // one exact-clone signature group FAR above the cap — the shape
+    // whose size count must not funnel through a single window task —
+    // plus background signatures within and beyond maxDist of it
+    val rnd = new Random(11)
+    val cloneSig = rnd.nextLong()
+    val cap = 50
+    val clones = (0 until 20 * cap).map(i => (i.toLong, cloneSig))
+    val near = (0 until 40).map { i => // 1-3 bits flipped: cross pairs
+      var s = cloneSig
+      (0 to rnd.nextInt(2)).foreach(_ => s ^= 1L << rnd.nextInt(64))
+      (10000L + i, s ^ (1L << rnd.nextInt(64)))
+    }
+    val far = (0 until 200).map(i => (20000L + i, rnd.nextLong()))
+    val rows = clones ++ near ++ far
+    val got = hammingPairs(rows, maxDist = 3, maxBucketSize = cap)
+    val want = bruteHamming(rows, maxDist = 3)
+    // sanity: the clone group alone contributes n(n-1)/2 hamming-0 pairs
+    val m = clones.size.toLong
+    assert(want.count(_._3 == 0) >= (m * (m - 1) / 2).toInt)
+    assert(got === want)
+  }
+
+  test("cross-signature grid cover (nsub > 1 chunk blocks): brute-force parity") {
+    // distinct signatures engineered to SHARE byte 0 (one oversized
+    // (chunk=0, key) block per trial, forcing the grid-cover path with
+    // nsub > 1 over distinct signatures), each signature cloned a few
+    // times so member expansion and same-signature pairs interleave
+    val rnd = new Random(1111)
+    for (trial <- 1 to 3) {
+      val sharedByte = rnd.nextInt(256).toLong
+      val nsigs = 150 + rnd.nextInt(100)
+      val seeds = (0 until nsigs).map { _ =>
+        // random high 56 bits, pinned low byte -> all collide in the
+        // chunk-0 block; some also collide in higher chunks by chance
+        (rnd.nextLong() & ~0xffL) | sharedByte
+      }
+      // planted near-neighbors: 1-7 bit flips in bits 8..63 keep the
+      // shared byte intact, so qualifying pairs live INSIDE the
+      // oversized grid-covered block — the recall the cover must keep
+      val neighbors = seeds.filter(_ => rnd.nextInt(3) == 0).map { s =>
+        (0 until 1 + rnd.nextInt(7)).foldLeft(s)((x, _) =>
+          x ^ (1L << (8 + rnd.nextInt(56))))
+      }
+      val sigs = (seeds ++ neighbors).distinct
+      var id = -1L
+      val rows = sigs.flatMap { s =>
+        (0 until 1 + rnd.nextInt(3)).map { _ => id += 1; (id, s) }
+      }
+      // cap of 20 << distinct-signature block size -> nsub >= 8 grid
+      val got = hammingPairs(rows, maxDist = 7, maxBucketSize = 20)
+      val want = bruteHamming(rows, maxDist = 7)
+      assert(want.exists(_._3 > 0), s"trial $trial: vacuous (no cross pairs)")
+      assert(got === want, s"trial $trial (${rows.size} rows, " +
+        s"${sigs.size} distinct sigs)")
+    }
   }
 }

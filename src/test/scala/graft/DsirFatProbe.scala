@@ -20,11 +20,7 @@ object DsirFatProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.lift(0).getOrElse("/tmp/sffat_r18")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
 
     def docs(): DataFrame = spark.read
       .parquet(s"$dir/documents.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Bounded hot-VALUE limit probe
@@ -23,10 +22,7 @@ object FatCellProbe {
     val sizesMb = args.headOption
       .map(_.split(",").map(_.trim.toInt).toSeq)
       .getOrElse(Seq(256, 512, 1024, 1536))
-    val spark = SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     import spark.implicits._
 
     def step(tag: String)(body: => Any): Unit = {

@@ -13,10 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object GlobalRankProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     import spark.implicits._
 
     def data(n: Long) = spark.range(n)

@@ -334,4 +334,66 @@ class GlobalRankSpec extends SparkFunSuite {
       "a limit over a global sort left the fast path")
     assert(!staged(df), "deterministic lineage left the fast path")
   }
+
+  test("withNtile and topFraction build with withGlobalRank's job count") {
+    // n rides on the in-plan offsets rows, so the only build-time jobs
+    // are the boundary samples every path runs
+    val df = data(1000)
+    val sort = Seq(col("k"), col("id"))
+    val (_, rankJobs) = withJobCount(
+      GlobalRank.withGlobalRank(df, sort, "r", numPartitions = 4))
+    val (nt, ntileJobs) = withJobCount(
+      GlobalRank.withNtile(df, sort, 7, "b", numPartitions = 4))
+    val (tf, fracJobs) = withJobCount(
+      GlobalRank.topFraction(df, sort, 0.3, "r", numPartitions = 4))
+    assert(rankJobs > 0, "the boundary sample runs at build time")
+    assert(ntileJobs == rankJobs, s"withNtile $ntileJobs vs $rankJobs")
+    assert(fracJobs == rankJobs, s"topFraction $fracJobs vs $rankJobs")
+    sameRows(nt, df.withColumn("b",
+      ntile(7).over(W.orderBy(sort: _*)).cast("long")))
+    assert(tf.count() == 300L)
+  }
+
+  test("the staged fallback runs no build job after its stage write") {
+    // a string lead stages the range-partitioned frame once; the
+    // offsets (and ntile's n) stay in the plan over the staged scan,
+    // so the build runs exactly the jobs of that stage write
+    import graft.operators.Stage
+    val df = data(400).select(
+      concat(lit("k"), pmod(col("k"), lit(5)).cast("string")).as("s"),
+      col("id"))
+    val sort = Seq(col("s"), col("id"))
+    val (_, writeJobs) = withJobCount(Stage.materialize(
+      df.repartitionByRange(4, sort: _*)
+        .withColumn("__gr_pid", spark_partition_id()), "gr_spec_write"))
+    val (r, rankJobs) = withJobCount(
+      GlobalRank.withGlobalRank(df, sort, "r", numPartitions = 4))
+    val (nt, ntileJobs) = withJobCount(
+      GlobalRank.withNtile(df, sort, 6, "b", numPartitions = 4))
+    assert(rankJobs == writeJobs, s"withGlobalRank $rankJobs vs $writeJobs")
+    assert(ntileJobs == writeJobs, s"withNtile $ntileJobs vs $writeJobs")
+    sameRows(r, df.withColumn("r",
+      row_number().over(W.orderBy(sort: _*)).cast("long")))
+    sameRows(nt, df.withColumn("b",
+      ntile(6).over(W.orderBy(sort: _*)).cast("long")))
+  }
+
+  test("withGroupedRank: many groups plus one hot group keep the window, " +
+       "no offsets broadcast") {
+    // half the rows in one group, the rest over ~1500 small groups:
+    // the hot share asks for the split, but groups × B (64 buckets)
+    // passes MaxGroupedOffsetRows, so the plain window ranks instead
+    val df = spark.range(6000).select(col("id"),
+      when(pmod(col("id"), lit(2)) === 0, lit("hot"))
+        .otherwise(concat(lit("g"), pmod(col("id"), lit(3001)))).as("g"),
+      pmod(xxhash64(col("id"), lit(5)), lit(100L)).as("hk"))
+    val got = GlobalRank.withGroupedRank(df, Seq("g"),
+      Seq(col("hk"), col("id")), "r", numPartitions = 64)
+    sameRows(got, df.withColumn("r", row_number()
+      .over(W.partitionBy("g").orderBy(col("hk"), col("id"))).cast("long")))
+    val joins = got.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }
+    assert(joins.isEmpty, s"${joins.size} offsets join(s) planned")
+  }
 }

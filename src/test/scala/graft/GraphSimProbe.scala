@@ -12,10 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object GraphSimProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
 
     // ~m edges over m/8 vertices: expected degree ~16, max wedge
     // fan-in bounded by the hash spread

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** A/B probe for the r14 SHA-256 clone-key's full-corpus hash-pass
@@ -31,10 +31,7 @@ object HashPassProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf100x")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     val docs = queries.t(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .filter(col("text").isNotNull)

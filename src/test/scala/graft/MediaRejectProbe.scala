@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.multimodal.{FormatException, Media, Multimodal}
 
 /** Cost of the per-row rejection path behind `Multimodal.extractFeatures`
@@ -8,7 +7,7 @@ import graft.multimodal.{FormatException, Media, Multimodal}
   *
   * 3 of 5 `multimodal_features` rows carry a PNG/JPEG/GIF magic in front
   * of plain text: each is handed to the JDK reader, rejected, and
-  * degraded to the byte stub. Two measurements in one local[4] session:
+  * degraded to the byte stub. Two measurements:
   *   - per format, `rows` such payloads through `Media.decodeImage`
   *     (every one must throw FormatException) against the same rows
   *     through `decodeStub` alone: µs per rejected row;
@@ -48,43 +47,5 @@ object MediaRejectProbe {
     }
     QueryNoopTimes.main(Array(dir, pairs.toString,
       "multimodal_features,multimodal_hist"))
-  }
-}
-
-/** Noop-sink wall time of registered queries, build included, in
-  * alternating order (`<sfDir> <pairs> <query,query,...>`). An item
-  * `a+b+c` times its queries in sequence as one run, so the consumers
-  * of one `ModelCache` entry share a single fit. Every run, the warm-up
-  * too, starts after `Stage.purge`, as each perfbench pass does, so no
-  * run times a cache hit left by an earlier run. It uses only the
-  * query registry and `Stage`, so this object alone also compiles at
-  * an older commit, for a parent/change comparison.
-  */
-object QueryNoopTimes {
-  def main(args: Array[String]): Unit = {
-    val dir = args(0)
-    val pairs = args(1).toInt
-    val names = args(2).split(",").toSeq
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def run(item: String): Double = {
-      graft.operators.Stage.purge(spark)
-      val t0 = System.nanoTime()
-      item.split("\\+").foreach { q =>
-        SparkEntry.queries(q)(spark, dir).write.format("noop")
-          .mode("overwrite").save()
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    names.foreach(run) // warm
-    for (pair <- 1 to pairs) {
-      val order = if (pair % 2 == 1) names else names.reverse
-      order.foreach { q =>
-        println(f"[noop] $dir pair=$pair $q wall=${run(q)}%.3fs")
-      }
-    }
-    spark.stop()
   }
 }

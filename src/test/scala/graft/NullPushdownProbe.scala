@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** One-look plan probe for the r15 null-contract filters
   * (`Test/runMain graft.NullPushdownProbe [sfDir]`): the wellFormed /
@@ -14,10 +13,7 @@ import org.apache.spark.sql.SparkSession
 object NullPushdownProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     def pushed(name: String): Unit = {
       val df = SparkEntry.queries(name)(spark, dir)
       val scans = df.queryExecution.executedPlan.toString.split("\n")

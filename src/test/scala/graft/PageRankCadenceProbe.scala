@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 /** r18 (VERDICT r17 item 5): A/B the PageRank SHUFFLE-JOIN regime's
   * lineage-cut cadence on a fat graph — the >2M-vertex path the r17
   * broadcast-round pinning does not touch. Rounds chain lazily; every
-  * `spark.graft.pagerank.stageEvery`-th round is staged to bound plan
-  * depth. Question: does staging every 2nd round (more parquet
-  * round-trips, shorter replays) or every 6th/8th (no stage at 5
-  * iters, deepest plans) beat the shipped 4?
+  * `stageEvery`-th round is staged to bound plan depth (passed to
+  * `PageRank.ranks`). Question: does staging every 2nd round (more
+  * parquet round-trips, shorter replays) or every 6th/8th (no stage at
+  * 5 iters, deepest plans) beat the shipped `PageRank.StageEvery` = 4?
   *
   * Manual: sbt "Test/runMain graft.PageRankCadenceProbe [nVerts] [reps]".
   * Graph: ~nVerts distinct vertices (default 3M — above
@@ -22,11 +22,7 @@ object PageRankCadenceProbe {
   def main(args: Array[String]): Unit = {
     val n = args.lift(0).map(_.toLong).getOrElse(3000000L)
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     import spark.implicits._
 
     def edges(): DataFrame = spark.range(4L * n).select(
@@ -35,17 +31,14 @@ object PageRankCadenceProbe {
 
     (1 to reps).foreach { _ =>
       Seq(2, 4, 6, 8).foreach { c =>
-        spark.conf.set(graft.operators.PageRank.StageEveryKey, c.toString)
         val t0 = System.nanoTime()
         val s = graft.operators.PageRank
-          .ranks(edges(), "src", "dst", iters = 5)
+          .ranks(edges(), "src", "dst", iters = 5, stageEvery = c)
           .agg(sum("rank")).head().getDouble(0)
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[prcadence] stageEvery=$c $secs%8.2f s (ranksum=$s%.4f)")
       }
     }
-    spark.conf.set(graft.operators.PageRank.StageEveryKey,
-      graft.operators.PageRank.DefaultStageEvery.toString)
     spark.stop()
   }
 }

@@ -21,11 +21,7 @@ object PrMirrorProbe {
     val reps = args.lift(0).map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
       "/root/testdata/sf0.1")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
 
     def base(): DataFrame = queries.t(spark, sfDir, "lineitem")
       .join(queries.t(spark, sfDir, "orders"),

@@ -12,10 +12,7 @@ import org.apache.spark.sql.functions._
   */
 object RobustStatsProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
 
     def data(n: Long) = spark.range(n)
       .select((pmod(xxhash64(col("id")), lit(1000003)).cast("double") +

@@ -8,11 +8,8 @@ import org.apache.spark.sql.functions._
   */
 object RuntimeFilterProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.autoBroadcastJoinThreshold", -1) // 100 TB regime
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") // 100 TB regime
     import spark.implicits._
 
     val li = spark.read.parquet("/root/testdata/sf0.1/lineitem.parquet")

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * the recorded shape instead of just printing a table the reader has
   * to eyeball:
   *
-  *  - GlobalRank 10M → 50M rows: every stage is parallel (range shuffle,
-  *    per-partition window, broadcast offsets), so 5× the rows must cost
+  *  - GlobalRank 10M → 50M rows: every stage is parallel (boundary sample,
+  *    bucket-partitioned window, in-plan broadcast offsets), so 5× the rows must cost
   *    ≤ 5× × 1.5 slack. Exact parity vs the single-partition window is
   *    asserted at 1M first.
   *  - RobustStats 10M → 100M rows: the pass count is FIXED (~2-3
@@ -32,10 +32,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleGate {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     import spark.implicits._
 
     def timed[A](body: => A): (A, Double) = {

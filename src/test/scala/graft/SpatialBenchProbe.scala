@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement probe for the radius-join grid geometry
@@ -26,10 +25,7 @@ object SpatialBenchProbe {
     val dir = args.headOption.getOrElse("/tmp/sfrep100")
     val reps = args.lift(1).map(_.toInt).getOrElse(2)
     val ks = args.lift(2).getOrElse("1,2").split(",").map(_.trim.toInt)
-    val spark = SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ProbeSession()
     import graft.operators.Sampling.contentHash
     def coord(c: org.apache.spark.sql.Column, seed: Long) =
       pmod(contentHash(c, seed, portable = true), lit(1000000L))

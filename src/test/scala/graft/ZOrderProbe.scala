@@ -12,13 +12,9 @@ import org.apache.spark.sql.functions._
   */
 object ZOrderProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      // one row group per ~small block so pruning granularity is visible
-      .config("spark.hadoop.parquet.block.size", 64 * 1024)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // one row group per ~small block so pruning granularity is visible
+    val spark = ProbeSession(
+      "spark.hadoop.parquet.block.size" -> (64 * 1024).toString)
 
     val base = spark.read.parquet("/root/testdata/sf0.1/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"),
