@@ -92,73 +92,37 @@ object Dedup {
     val sigs = Stage.materialize(df.select(
       col(idCol).as("id"),
       minhashSignature(col(textCol), k, n, seed).as("sig")), "minhash_sigs")
-
-    // (band, bucket, id) — the only thing that shuffles in candidate gen
-    val banded = sigs.select(
-      col("id"),
-      posexplode(Shim.column(BandHashes(Shim.expression(col("sig")), bands, rowsPerBand))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-
-    // Guardrail: a band-bucket larger than maxBucketSize would self-join
-    // n² in one task. Members are split into ceil(n/maxBucketSize)
-    // deterministic hash sub-buckets and pairs generate only within a
-    // sub-bucket — per-task work bounded by maxBucketSize² with no
-    // whole-bucket recall cliff: the salt hashes (id, band), so a pair
-    // split apart in one band lands together with fresh probability in
-    // every other band (an id-only salt would split the pair the SAME
-    // way in all 16 bands and quietly lose ~(1-1/nsub) of mega-bucket
-    // recall).
-    val capped = saltOversized(banded, Seq("band", "bucket"), "id",
-      maxBucketSize)
-
-    val pairs = capped.select(col("band"), col("bucket"), col("sub"),
-        col("id").as("id_a"))
-      .join(capped.select(col("band"), col("bucket"), col("sub"),
-        col("id").as("id_b")),
-        Seq("band", "bucket", "sub"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct() // score each pair once, not once per colliding band
-
-    pairs
-      .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-      .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        sigSimilarity(col("sig_a"), col("sig_b")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    selfPairs(sigs, "sig", col("sig"), bands, rowsPerBand, maxBucketSize,
+      "est_jaccard", threshold)(sigSimilarity)
   }
 
-  /** Exact-clone collapse (round 12, re-keyed round 13): (membership,
-    * reps) where `membership` = (id, rep) with rep = min id over
-    * identical-text rows and `reps` = one (rep, text) row per distinct
-    * text. Both frames are staged: membership is a narrow two-long
-    * frame feeding several branches; reps bounds every downstream
-    * sketch/band/join by text DIVERSITY, not corpus size.
+  /** Exact-clone collapse: (membership, reps) where `membership` =
+    * (id, rep) with rep = min id over identical-text rows and `reps` =
+    * one (rep, text) row per distinct text. Both frames are staged:
+    * membership is a narrow two-long frame feeding several branches;
+    * reps bounds every downstream sketch/band/join by text DIVERSITY,
+    * not corpus size.
     *
-    * Shuffle keying (round 13, re-keyed round 14): grouping and the
-    * membership join key on the 256-bit content hash
-    * `unhex(sha2(text, 256))` — 32 bytes — instead of the raw text
-    * (round 12 shuffled the corpus's heaviest column through BOTH
-    * exchanges). Text now crosses the wire exactly once, inside the
-    * partially-aggregated groupBy (one row per hash key per map task —
-    * bounded by per-mapper diversity, never corpus rows), and the
-    * membership join carries nothing but (hkey, id). Equality
-    * semantics are hash-equality. Round 13 keyed on md5; an untrusted
-    * web corpus can contain CHOSEN-PREFIX md5 collisions (two distinct
-    * documents constructed to share a digest would silently merge into
-    * one clone group — the random-collision n²/2^129 argument does not
-    * cover an adversary), so round 14 moved to SHA-256, where no
-    * collision is publicly known and construction is infeasible. Same
-    * shuffle shape: a fixed-width 32-byte key still beats megabyte
-    * texts on the wire by orders of magnitude.
+    * Shuffle keying: grouping and the membership join key on the
+    * 256-bit content hash `unhex(sha2(text, 256))` — 32 bytes — not on
+    * the raw text, so the corpus's heaviest column does not cross both
+    * exchanges. Text crosses the wire once, inside the partially
+    * aggregated groupBy (one row per hash key per map task — bounded by
+    * per-mapper diversity, never corpus rows), and the membership join
+    * carries nothing but (hkey, id). Equality semantics are
+    * hash-equality. The hash is SHA-256 rather than md5: an untrusted
+    * web corpus can contain chosen-prefix md5 collisions (two distinct
+    * documents built to share a digest would silently merge into one
+    * clone group, which the random-collision argument does not cover),
+    * while no SHA-256 collision is publicly known. A fixed-width
+    * 32-byte key still beats megabyte texts on the wire by orders of
+    * magnitude.
     *
     * NULL texts: SQL equality never equates NULLs, so null-text rows
-    * are NOT clones of each other — each is its own singleton
-    * (id, id) membership row, excluded from `reps` (a null sketch
-    * can never pair). Round 12's equi-join on text silently DROPPED
-    * them from membership, breaking the "(id, cluster) for EVERY
-    * input document" contract downstream.
+    * are NOT clones of each other — each is its own singleton (id, id)
+    * membership row, excluded from `reps` (a null sketch can never
+    * pair). Membership so keeps the "(id, cluster) for EVERY input
+    * document" contract downstream.
     */
   def textGroups(df: DataFrame, idCol: String,
       textCol: String): (DataFrame, DataFrame) = {
@@ -198,8 +162,7 @@ object Dedup {
     * LSH work scales with text diversity while the quadratic clone-pair
     * blow-up is confined to output-bounded equi-join expansions — the
     * 100× bench measured the doc-level path's banded self-join paying
-    * ~25M candidate rows per clone decade (the r10 SimHash lesson,
-    * now applied to the MinHash family too).
+    * ~25M candidate rows per clone decade.
     */
   def minhashPairsDistinct(df: DataFrame, idCol: String, textCol: String,
       bands: Int = 16, rowsPerBand: Int = 4, n: Int = 3,
@@ -208,38 +171,24 @@ object Dedup {
     val (membership, reps) = textGroups(df, idCol, textCol)
     val repPairs = minhashPairs(reps, "rep", "text", bands, rowsPerBand,
       n, threshold, seed, maxBucketSize)
-    // cross-group: every member of rep_a pairs with every member of
-    // rep_b at the reps' est — two equi-joins, row count = output size
-    val cross = repPairs
-      .join(membership.select(col("rep").as("id_a"), col("id").as("m_a")),
-        "id_a")
-      .join(membership.select(col("rep").as("id_b"), col("id").as("m_b")),
-        "id_b")
-      .select(least(col("m_a"), col("m_b")).as("id_a"),
-        greatest(col("m_a"), col("m_b")).as("id_b"), col("est_jaccard"))
-    // intra-group: identical signatures agree on every band and every
-    // minimum — est is exactly 1.0 and recall is certain, so the pairs
+    // identical signatures agree on every band and every minimum — est
+    // is exactly 1.0 and recall is certain, so the intra-group pairs
     // enumerate directly (output-inherent quadratic, no banding pass)
-    val m = membership.select(col("rep"), col("id"))
-    val intra = m
-      .join(m.withColumnRenamed("id", "id2"), Seq("rep"))
-      .filter(col("id") < col("id2"))
-      .select(col("id").as("id_a"), col("id2").as("id_b"),
+    expandClones(repPairs, membership, "est_jaccard")(
+      _.select(col("id").as("id_a"), col("id2").as("id_b"),
         lit(1.0).as("est_jaccard"))
-      .filter(lit(1.0) >= lit(threshold))
-    cross.unionByName(intra)
+        .filter(lit(1.0) >= lit(threshold)))
   }
 
   /** Near-dup component labels over the MinHash pair graph, clone-
-    * collapsed: CC runs on the tiny rep-pair graph UNION one star edge
-    * per non-representative document (id → its rep) — the same
-    * components as doc-level pairs (every clone group is connected
-    * through its rep; groups connect through rep pairs) with LINEARLY
-    * many edges, where materializing doc-level pairs grows ~mult² per
-    * clone group (the 100× bench's cc_edges stage: 91 s of
-    * corpus_split_safe's 96 s). Returns (id, cluster) for EVERY input
-    * document, cluster = min doc id of the component (singletons map to
-    * themselves) — the contract dedup_cluster/corpus_split_safe/
+    * collapsed: CC runs on the rep-pair graph only, and every document
+    * takes its rep's label — the same components as doc-level pairs
+    * (every clone group is connected through its rep; groups connect
+    * through rep pairs) without materializing doc-level pairs, which
+    * grow ~mult² per clone group (the 100× bench's cc_edges stage: 91 s
+    * of corpus_split_safe's 96 s). Returns (id, cluster) for EVERY
+    * input document, cluster = min doc id of the component (singletons
+    * map to themselves) — the contract dedup_cluster/corpus_split_safe/
     * dedup_best share.
     */
   def minhashClusters(df: DataFrame, idCol: String, textCol: String,
@@ -249,21 +198,18 @@ object Dedup {
     val (membership, reps) = textGroups(df, idCol, textCol)
     val repPairs = minhashPairs(reps, "rep", "text", bands, rowsPerBand,
       n, threshold, seed, maxBucketSize).select("id_a", "id_b")
-    // r17 (optimization): CC over the REP-PAIR graph only — the r12-r16
-    // form unioned in one star edge per non-representative document, so
-    // CC's canonicalize/distinct/materialize/fingerprint (and, above the
-    // local edge limit, every large-star/small-star round) ran over a
-    // CORPUS-sized edge list. The star edges are redundant for the
-    // label: rep = min id of its clone group (textGroups), so the
-    // component minimum over doc ids equals the component minimum over
-    // the member groups' reps — labeling the rep graph and mapping
-    // members through (id, rep) gives the identical (id, cluster) set.
-    // CC input drops from O(corpus) to O(pair graph); the member
-    // expansion is one equi-join of membership against the (tiny,
-    // pair-bounded) rep labels — broadcast under AQE — instead of a
-    // corpus×corpus id join. Reps outside the pair graph keep
-    // cluster = rep via the left-join coalesce (their component is
-    // exactly their clone group, whose minimum is the rep itself).
+    // No star edge (id → rep) enters CC: rep = min id of its clone group
+    // (textGroups), so the component minimum over doc ids equals the
+    // component minimum over the member groups' reps, and labeling the
+    // rep graph then mapping members through (id, rep) gives the
+    // identical (id, cluster) set. CC's input is the pair graph, not a
+    // corpus-sized edge list (which would run its canonicalize,
+    // distinct, stage write and every large-star/small-star round over
+    // the corpus). The member expansion is one equi-join of membership
+    // against the pair-bounded rep labels — broadcast under AQE. Reps
+    // outside the pair graph keep cluster = rep via the left-join
+    // coalesce (their component is exactly their clone group, whose
+    // minimum is the rep itself).
     val labels = ConnectedComponents.labels(repPairs, "id_a", "id_b")
     membership
       .join(labels.withColumnRenamed("id", "rep"), Seq("rep"), "left")
@@ -276,14 +222,14 @@ object Dedup {
     * doc, so it rides along with the (chunk, key) shuffle for free and
     * pairs are Hamming-filtered before the dedup shuffle.
     *
-    * Candidate generation runs over DISTINCT signatures, not documents
-    * (round-10, forced by the 10x replicated-corpus bench: the doc-level
-    * chunk join measured 308x the 1x time, because exact-duplicate clone
-    * groups inflate every block quadratically while adding ZERO new
-    * signatures). Chunk-block join work is therefore bounded by
-    * signature DIVERSITY — a corpus of a billion docs over a million
-    * distinct signatures pays the quadratic blocking cost of a million.
-    * Documents re-enter only in two output-bounded expansions:
+    * Candidate generation runs over DISTINCT signatures, not documents:
+    * exact-duplicate clone groups inflate every block quadratically
+    * while adding ZERO new signatures (on the 10x replicated-corpus
+    * bench the doc-level chunk join measured 308x the 1x time). Chunk-
+    * block join work is therefore bounded by signature DIVERSITY — a
+    * corpus of a billion docs over a million distinct signatures pays
+    * the quadratic blocking cost of a million. Documents re-enter only
+    * in two output-bounded expansions:
     *
     *  - same-signature pairs (hamming 0, the exact-duplicate clusters):
     *    a self-join keyed on the signature, grid-covered above
@@ -297,11 +243,8 @@ object Dedup {
     * Unlike the probabilistic MinHash bands (where a salt split re-rolls
     * per band), the pigeonhole guarantee is DETERMINISTIC and the oracle
     * asserts exact all-pairs output — so the oversize-bucket guardrail
-    * must not lose cross-sub pairs. Oversized blocks therefore use a
-    * grid cover: each member with home sub s replicates into every
-    * unordered cell {s, j}, so members with homes s and t always meet in
-    * cell {min(s,t), max(s,t)}. Zero recall loss; a cell holds members
-    * of at most two subs, bounding per-task pair work at ~4·cap².
+    * must not lose cross-sub pairs: oversized blocks use the grid cover
+    * ([[gridCover]]), which loses no pair.
     */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxDist: Int = 7, maxBucketSize: Int = 1000): DataFrame = {
@@ -337,15 +280,8 @@ object Dedup {
     // AQE usually broadcasts it.
     val groupSizes = sk.groupBy("sh").agg(count(lit(1)).as("n"))
       .filter(col("n") > 1L)
-    val grouped = sk
-      .join(groupSizes, Seq("sh"))
-      .withColumn("nsub", ceil(col("n") / maxBucketSize).cast("long"))
-      .withColumn("home",
-        when(col("nsub") <= 1L, lit(0L))
-          .otherwise(pmod(xxhash64(col("id")), col("nsub"))))
-      .withColumn("j", explode(sequence(lit(0L), col("nsub") - 1L)))
-      .withColumn("c1", least(col("home"), col("j")))
-      .withColumn("c2", greatest(col("home"), col("j")))
+    val grouped = gridCover(sk.join(groupSizes, Seq("sh")), col("n"),
+      maxBucketSize, col("id"))
     val same = grouped
       .select(col("sh"), col("c1"), col("c2"), col("id").as("id_a"),
         col("home").as("home_a"))
@@ -353,8 +289,7 @@ object Dedup {
         col("id").as("id_b"), col("home").as("home_b")),
         Seq("sh", "c1", "c2"))
       .filter(col("id_a") < col("id_b"))
-      .filter(col("c1") === least(col("home_a"), col("home_b")) &&
-        col("c2") === greatest(col("home_a"), col("home_b")))
+      .filter(canonicalCell)
       .select(col("id_a"), col("id_b"), lit(0).cast("integer").as("hamming"))
     // --- cross-signature candidates over the DISTINCT signature table
     val uniq = sk.select(col("sh")).distinct()
@@ -367,22 +302,14 @@ object Dedup {
     // NOTE: unlike the MinHash band buckets, the chunk keyspace is only
     // 256 values wide — at corpus scale EVERY (chunk, key) block is
     // populated and many exceed the cap, so the oversize-only
-    // aggregate+broadcast plan (saltOversized) degenerates to a
+    // aggregate+broadcast plan ([[oversizeSubs]]) degenerates to a
     // broadcast of most blocks plus a third pass over the chunked
     // stream (measured 0.9 s → 1.5 s at sf0.1). The inline count
     // window stays the right plan here: one exchange over ≤ 2048
     // groups, counts computed in the same pass the join will reuse.
-    val capped = chunked
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("chunk", "key")))
-      .withColumn("nsub", ceil(col("n") / maxBucketSize).cast("long"))
-      .withColumn("home",
-        when(col("nsub") <= 1L, lit(0L))
-          .otherwise(pmod(xxhash64(col("sh"), col("chunk")), col("nsub"))))
-      // grid cover {home, j}: sequence is ascending here (nsub >= 1)
-      .withColumn("j", explode(sequence(lit(0L), col("nsub") - 1L)))
-      .withColumn("c1", least(col("home"), col("j")))
-      .withColumn("c2", greatest(col("home"), col("j")))
-      .drop("n", "nsub", "j")
+    val capped = gridCover(chunked.withColumn("n",
+        count(lit(1)).over(Window.partitionBy("chunk", "key"))),
+      col("n"), maxBucketSize, col("sh"), col("chunk")).drop("n")
     val a = capped.select(col("chunk"), col("key"), col("c1"), col("c2"),
       col("sh").as("sh_a"), col("home").as("home_a"))
     val b = capped.select(col("chunk"), col("key"), col("c1"), col("c2"),
@@ -401,13 +328,10 @@ object Dedup {
       // each qualifying signature pair is emitted exactly ONCE, so no
       // dedup shuffle is needed afterwards: (1) of the up-to-8 agreeing
       // chunks, only the FIRST emits (both sketches are in-row); (2) of
-      // the grid cells both members share, only the canonical
-      // {home_a, home_b} cell emits (same-home pairs co-occur in every
-      // {home, j} cell).
+      // the grid cells both members share, only the canonical one emits
       .filter(col("chunk") ===
         firstAgreeingChunk(col("sh_a").bitwiseXOR(col("sh_b"))))
-      .filter(col("c1") === least(col("home_a"), col("home_b")) &&
-        col("c2") === greatest(col("home_a"), col("home_b")))
+      .filter(canonicalCell)
       .select(col("sh_a"), col("sh_b"),
         bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).as("hamming"))
       .filter(col("hamming") <= maxDist)
@@ -432,12 +356,7 @@ object Dedup {
                     textCol: String, n: Int = 3): DataFrame = {
     val sets = Stage.materialize(docs.select(col(idCol).as("id"),
       shingleHashes(col(textCol), n).as("sh")), "jaccard_sets")
-    pairs
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        Shim.column(SortedJaccard(Shim.expression(col("sh_a")),
-          Shim.expression(col("sh_b")))).as("jaccard"))
+    scoreSelf(pairs, sets, "sh", "jaccard", None)(sortedJaccard)
   }
 
   /** Cross-corpus MinHash contamination check — the train/test-overlap
@@ -449,16 +368,13 @@ object Dedup {
     * shuffle; each surviving (left_id, right_id) pair is signature-
     * scored once.
     *
-    * Mega-bucket guardrail: a training-side band-bucket larger than
-    * `maxBucketSize` (boilerplate-heavy corpora share every band) is
-    * split into ceil(n/maxBucketSize) deterministic hash sub-buckets,
-    * and the (tiny) benchmark side is REPLICATED across all sub-buckets
-    * of that bucket — so unlike the self-join variant, the cross path
-    * loses NO recall to salting: every co-bucketed (train, bench) pair
-    * still meets in exactly the train row's sub-bucket, while per-task
-    * join work stays bounded by maxBucketSize · |bench ∩ bucket|.
-    * (Round 2 dropped oversized buckets entirely — a silent recall
-    * cliff exactly where contamination is densest.)
+    * Mega-bucket guardrail ([[saltedCrossCandidates]]): a training-side
+    * band-bucket larger than `maxBucketSize` (boilerplate-heavy corpora
+    * share every band) is split into hash sub-buckets and the (tiny)
+    * benchmark side is REPLICATED across them, so unlike the self-join
+    * variant the cross path loses NO recall to salting — dropping
+    * oversized buckets instead would be a silent recall cliff exactly
+    * where contamination is densest.
     *
     * At 100 TB: the benchmark side is typically tiny — its banded frame
     * broadcast-joins against the training side's, making candidate
@@ -470,26 +386,12 @@ object Dedup {
                         threshold: Double = 0.5, seed: Long = 42L,
                         maxBucketSize: Int = 1000): DataFrame = {
     val k = bands * rowsPerBand
-    def banded(df: DataFrame, side: String) = {
-      val sigs = Stage.materialize(df.select(col(idCol).as(s"${side}_id"),
+    def sigs(df: DataFrame, side: String) =
+      Stage.materialize(df.select(col(idCol).as(s"${side}_id"),
         minhashSignature(col(textCol), k, n, seed).as(s"${side}_sig")),
         s"cross_${side}_sigs")
-      val bd = sigs.select(col(s"${side}_id"),
-        posexplode(Shim.column(BandHashes(
-          Shim.expression(col(s"${side}_sig")), bands, rowsPerBand))))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bucket")
-      (sigs, bd)
-    }
-    val (lSigs, lBand) = banded(left, "left")
-    val (rSigs, rBand) = banded(right, "right")
-    val pairs = saltedCrossCandidates(lBand, rBand, maxBucketSize)
-    pairs
-      .join(lSigs, "left_id")
-      .join(rSigs, "right_id")
-      .select(col("left_id"), col("right_id"),
-        sigSimilarity(col("left_sig"), col("right_sig")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
+    crossPairs(sigs(left, "left"), sigs(right, "right"), identity, bands,
+      rowsPerBand, maxBucketSize, "est_jaccard", threshold)(sigSimilarity)
   }
 
   /** A persisted MinHash band index over a corpus: the staged
@@ -514,12 +416,8 @@ object Dedup {
     val sigs = Stage.materialize(corpus.select(col(idCol).as("corpus_id"),
       minhashSignature(col(textCol), k, n, seed).as("corpus_sig")),
       "mh_index_sigs")
-    val banded = Stage.materialize(sigs.select(col("corpus_id"),
-      posexplode(Shim.column(BandHashes(
-        Shim.expression(col("corpus_sig")), bands, rowsPerBand))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket"),
-      "mh_index_bands")
+    val banded = Stage.materialize(bandBuckets(sigs, col("corpus_sig"),
+      bands, rowsPerBand, col("corpus_id")), "mh_index_bands")
     MinhashIndex(bands, rowsPerBand, n, seed, sigs, banded)
   }
 
@@ -538,78 +436,12 @@ object Dedup {
       minhashSignature(col(textCol), k, index.n, index.seed)
         .as("batch_sig")),
       "mh_probe_sigs")
-    val bBand = bSigs.select(col("batch_id"),
-      posexplode(Shim.column(BandHashes(
-        Shim.expression(col("batch_sig")), index.bands, index.rowsPerBand))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-    val pairs = saltedCrossCandidates(
-      index.banded.withColumnRenamed("corpus_id", "left_id"),
-      bBand.withColumnRenamed("batch_id", "right_id"), maxBucketSize)
-    pairs
-      .join(index.sigs.withColumnRenamed("corpus_id", "left_id"), "left_id")
-      .join(bSigs.withColumnRenamed("batch_id", "right_id"), "right_id")
-      .select(col("left_id").as("corpus_id"), col("right_id").as("batch_id"),
-        sigSimilarity(col("corpus_sig"), col("batch_sig")).as("est_jaccard"))
-      .filter(col("est_jaccard") >= threshold)
-  }
-
-  /** Self-join mega-bucket salt, as an oversize-only aggregate +
-    * broadcast join-back (same plan family as [[saltedCrossCandidates]]
-    * and FuzzyJoin): `sub = xxhash64(id, blockCols.head) % nsub` for
-    * members of blocks larger than `maxBucketSize`, 0 otherwise.
-    *
-    * Round 4 computed the block size with `count().over(Window
-    * .partitionBy(blockCols))` — a full shuffle + SORT of every banded
-    * row, duplicated in BOTH self-join branches. Here the size scan is
-    * a map-side-combinable aggregate whose post-filter output (only the
-    * rare oversized blocks) broadcasts, so the main stream picks up
-    * `sub` in a narrow pass and the only wide exchange left is the
-    * self-join's own.
-    */
-  private def saltOversized(banded: DataFrame, blockCols: Seq[String],
-                            idCol: String, maxBucketSize: Int): DataFrame = {
-    val bc = blockCols.map(col)
-    val subPlan = banded.groupBy(bc: _*)
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > maxBucketSize)
-      .select(bc :+ ceil(col("bn") / maxBucketSize).cast("long").as("nsub"): _*)
-    banded.join(broadcast(subPlan), blockCols, "left")
-      .withColumn("sub",
-        when(col("nsub").isNull, lit(0L))
-          .otherwise(pmod(xxhash64(col(idCol), col(blockCols.head)),
-            col("nsub"))))
-      .drop("nsub")
-  }
-
-  /** Shared cross-corpus candidate generation with the mega-bucket
-    * guardrail: the big (left/train) side salts oversized buckets into
-    * hash sub-buckets, the tiny (right/bench) side replicates across
-    * them, so the cross path loses NO recall to salting. The sub-bucket
-    * plan is filtered to OVERSIZED buckets only before broadcasting —
-    * by construction those are rare, so the broadcast stays
-    * metadata-scale even when the train side has billions of distinct
-    * buckets (broadcasting every bucket's count would be ~bands×|train|
-    * rows — a driver OOM at the operator's own design target).
-    */
-  private def saltedCrossCandidates(lBand: DataFrame, rBand: DataFrame,
-                                    maxBucketSize: Int): DataFrame = {
-    val subPlan = lBand.groupBy("band", "bucket")
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > maxBucketSize)
-      .select(col("band"), col("bucket"),
-        ceil(col("bn") / maxBucketSize).cast("long").as("nsub"))
-    val lSalted = lBand.join(broadcast(subPlan), Seq("band", "bucket"), "left")
-      .withColumn("sub",
-        when(col("nsub").isNull, lit(0L))
-          .otherwise(pmod(xxhash64(col("left_id"), col("band")), col("nsub"))))
-      .select("band", "bucket", "sub", "left_id")
-    val rSalted = rBand.join(broadcast(subPlan), Seq("band", "bucket"), "left")
-      .withColumn("sub",
-        explode(sequence(lit(0L), coalesce(col("nsub") - 1L, lit(0L)))))
-      .select("band", "bucket", "sub", "right_id")
-    lSalted.join(rSalted, Seq("band", "bucket", "sub"))
-      .select("left_id", "right_id").distinct()
+    crossPairs(index.sigs, bSigs, identity, index.bands, index.rowsPerBand,
+        maxBucketSize, "est_jaccard", threshold,
+        Some(index.banded.withColumnRenamed("corpus_id", "left_id")))(
+        sigSimilarity)
+      .withColumnRenamed("left_id", "corpus_id")
+      .withColumnRenamed("right_id", "batch_id")
   }
 
   /** Candidate → exact-verify → threshold near-dup pipeline over one
@@ -631,11 +463,10 @@ object Dedup {
 
   /** The staged (id, shingle-hash-set) posting frame [[verifiedPairs]]
     * consumes — ONE tokenize/shingle pass over the corpus, written to a
-    * stage file. Factored out (round 13) so a session running the
-    * verify pipeline repeatedly over the SAME corpus (bench reps, a
-    * long-lived service) fits the postings once and replays
-    * [[verifiedPairsOfSets]] from the staged scan, instead of paying
-    * the corpus scan + hash inside a random rep — the
+    * stage file. A session running the verify pipeline repeatedly over
+    * the SAME corpus (bench reps, a long-lived service) fits the
+    * postings once and replays [[verifiedPairsOfSets]] from the staged
+    * scan, instead of paying the corpus scan + hash per call — the
     * NearDupModel/ModelCache discipline applied to the jaccard family.
     */
   def fitShingleSets(df: DataFrame, idCol: String, textCol: String,
@@ -645,33 +476,33 @@ object Dedup {
 
   /** [[verifiedPairsOfSets]]' clone-collapsed twin — the
     * distinct-text discipline ([[minhashPairsDistinct]]) applied to
-    * the EXACT-verify pipeline. The r14 targeted 100× bench measured
-    * the doc-level path at 150 s steady-state: with ~100 verbatim
-    * clones per text, every band bucket holds whole clone groups, the
-    * banded self-join emits ~clone² candidate rows, and the verify
-    * join drags both ~1.3 kB shingle arrays across the exchange for
-    * every one of the ~25M doc pairs. Collapsed: band + verify once
-    * per DISTINCT text over `repSets` (jaccard is a pure function of
-    * the two texts), then expand to doc pairs at the output boundary
-    * via narrow (rep → id) equi-joins. Intra-group pairs take the
-    * rep's SELF-jaccard (SortedJaccard(sh, sh): 1.0 for any non-empty
+    * the EXACT-verify pipeline. The doc-level path measured 150 s
+    * steady-state on the 100× bench: with ~100 verbatim clones per
+    * text, every band bucket holds whole clone groups, the banded
+    * self-join emits ~clone² candidate rows, and the verify join drags
+    * both ~1.3 kB shingle arrays across the exchange for every one of
+    * the ~25M doc pairs. Collapsed: band + verify once per DISTINCT
+    * text over `repSets` (jaccard is a pure function of the two texts),
+    * then expand to doc pairs at the output boundary via narrow
+    * (rep → id) equi-joins. Intra-group pairs take the rep's
+    * SELF-jaccard (SortedJaccard(sh, sh): 1.0 for any non-empty
     * shingle set, 0.0 for the empty set — exactly the value the
     * doc-level path computes for two identical docs, so degenerate
     * texts filter identically). Null-text docs are singleton groups in
     * `membership` and pair with nothing, matching the doc-level path's
     * null-signature behavior.
     *
-    * Parity scope (r15, ADVICE): exact pair-set parity with the
-    * doc-level path holds while every CLONE GROUP fits
-    * `maxBucketSize`. Above it the two paths intentionally diverge —
-    * the doc-level path's oversize salting ([[saltOversized]]) splits
-    * same-text clones across sub-buckets and can DROP intra-clone
-    * pairs, while the collapsed path emits every intra-group pair via
-    * `selfJ` regardless of group size (strictly better recall; the
-    * group never enters a band bucket, so no salt can split it).
-    * R12FuzzSpec pins both regimes: parity at mult=5, and the
-    * collapsed path's full C(n,2) intra-pair emission on a clone
-    * group > maxBucketSize where the doc-level path under-emits.
+    * Parity scope: exact pair-set parity with the doc-level path holds
+    * while every CLONE GROUP fits `maxBucketSize`. Above it the two
+    * paths intentionally diverge — the doc-level path's oversize
+    * salting ([[selfCandidates]]) splits same-text clones across
+    * sub-buckets and can DROP intra-clone pairs, while the collapsed
+    * path emits every intra-group pair regardless of group size
+    * (strictly better recall; the group never enters a band bucket, so
+    * no salt can split it). DedupSpec pins both regimes: parity at
+    * mult=5, and the collapsed path's full C(n,2) intra-pair emission
+    * on a clone group > maxBucketSize where the doc-level path
+    * under-emits.
     *
     * @param membership (id, rep) from [[textGroups]]
     * @param repSets    (id = rep, sh) from [[fitShingleSets]] over the
@@ -683,24 +514,12 @@ object Dedup {
       maxBucketSize: Int = 1000): DataFrame = {
     val repPairs = verifiedPairsOfSets(repSets, bands, rowsPerBand,
       finalThreshold, seed, maxBucketSize)
-    val cross = repPairs
-      .join(membership.select(col("rep").as("id_a"), col("id").as("m_a")),
-        "id_a")
-      .join(membership.select(col("rep").as("id_b"), col("id").as("m_b")),
-        "id_b")
-      .select(least(col("m_a"), col("m_b")).as("id_a"),
-        greatest(col("m_a"), col("m_b")).as("id_b"), col("jaccard"))
     val selfJ = repSets.select(col("id").as("rep"),
-        Shim.column(SortedJaccard(Shim.expression(col("sh")),
-          Shim.expression(col("sh")))).as("jaccard"))
+        sortedJaccard(col("sh"), col("sh")).as("jaccard"))
       .filter(col("jaccard") >= finalThreshold)
-    val m = membership.select(col("rep"), col("id"))
-    val intra = m
-      .join(m.withColumnRenamed("id", "id2"), Seq("rep"))
-      .filter(col("id") < col("id2"))
-      .join(selfJ, Seq("rep"))
-      .select(col("id").as("id_a"), col("id2").as("id_b"), col("jaccard"))
-    cross.unionByName(intra)
+    expandClones(repPairs, membership, "jaccard")(
+      _.join(selfJ, Seq("rep"))
+        .select(col("id").as("id_a"), col("id2").as("id_b"), col("jaccard")))
   }
 
   /** [[verifiedPairs]] over an ALREADY-FITTED posting frame from
@@ -709,31 +528,10 @@ object Dedup {
   def verifiedPairsOfSets(sets: DataFrame,
                           bands: Int = 16, rowsPerBand: Int = 4,
                           finalThreshold: Double = 0.5, seed: Long = 42L,
-                          maxBucketSize: Int = 1000): DataFrame = {
-    val k = bands * rowsPerBand
-    val banded = sets.select(col("id"),
-      posexplode(Shim.column(BandHashes(Shim.expression(
-        minhashSignatureOfSets(col("sh"), k, seed)), bands, rowsPerBand))))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
-    val capped = saltOversized(banded, Seq("band", "bucket"), "id",
-      maxBucketSize)
-    val pairs = capped.select(col("band"), col("bucket"), col("sub"),
-        col("id").as("id_a"))
-      .join(capped.select(col("band"), col("bucket"), col("sub"),
-        col("id").as("id_b")),
-        Seq("band", "bucket", "sub"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    pairs
-      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        Shim.column(SortedJaccard(Shim.expression(col("sh_a")),
-          Shim.expression(col("sh_b")))).as("jaccard"))
-      .filter(col("jaccard") >= finalThreshold)
-  }
+                          maxBucketSize: Int = 1000): DataFrame =
+    selfPairs(sets, "sh",
+      minhashSignatureOfSets(col("sh"), bands * rowsPerBand, seed), bands,
+      rowsPerBand, maxBucketSize, "jaccard", finalThreshold)(sortedJaccard)
 
   /** Cross-corpus candidate → exact-verify → threshold contamination
     * pipeline (the verified twin of `crossMinhashPairs`), tokenizing
@@ -747,28 +545,227 @@ object Dedup {
                          finalThreshold: Double = 0.5, seed: Long = 42L,
                          maxBucketSize: Int = 1000): DataFrame = {
     val k = bands * rowsPerBand
-    def staged(df: DataFrame, side: String) = {
-      val sets = Stage.materialize(df.select(col(idCol).as(s"${side}_id"),
+    def sets(df: DataFrame, side: String) =
+      Stage.materialize(df.select(col(idCol).as(s"${side}_id"),
         shingleHashes(col(textCol), n).as(s"${side}_sh")),
         s"crossv_${side}_sets")
-      val bd = sets.select(col(s"${side}_id"),
-        posexplode(Shim.column(BandHashes(Shim.expression(
-          minhashSignatureOfSets(col(s"${side}_sh"), k, seed)),
-          bands, rowsPerBand))))
-        .withColumnRenamed("pos", "band")
-        .withColumnRenamed("col", "bucket")
-      (sets, bd)
-    }
-    val (lSets, lBand) = staged(left, "left")
-    val (rSets, rBand) = staged(right, "right")
-    val pairs = saltedCrossCandidates(lBand, rBand, maxBucketSize)
-    pairs
-      .join(lSets, "left_id")
-      .join(rSets, "right_id")
-      .select(col("left_id"), col("right_id"),
-        Shim.column(SortedJaccard(Shim.expression(col("left_sh")),
-          Shim.expression(col("right_sh")))).as("jaccard"))
-      .filter(col("jaccard") >= finalThreshold)
+    crossPairs(sets(left, "left"), sets(right, "right"),
+      minhashSignatureOfSets(_, k, seed), bands, rowsPerBand,
+      maxBucketSize, "jaccard", finalThreshold)(sortedJaccard)
+  }
+
+  // ---- The LSH blocking core: every MinHash pair path above runs
+  // banding → candidates → score join-back through these; FuzzyJoin
+  // and Similarity share the mega-bucket guards. ----
+
+  private def sortedJaccard(a: Column, b: Column): Column =
+    Shim.column(SortedJaccard(Shim.expression(a), Shim.expression(b)))
+
+  /** (keep..., band, bucket): one row per band of the MinHash signature
+    * `sig`, the bucket being the band's hash. (band, bucket) is the LSH
+    * block key; only it and the kept columns shuffle in candidate
+    * generation.
+    */
+  private[graft] def bandBuckets(df: DataFrame, sig: Column, bands: Int,
+      rowsPerBand: Int, keep: Column*): DataFrame =
+    df.select(keep :+ posexplode(Shim.column(BandHashes(
+        Shim.expression(sig), bands, rowsPerBand))): _*)
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bucket")
+
+  /** Sub-blocks of a block of `n` members at `cap` members each,
+    * ceil(n / cap). A cap below 1 is rejected by name here: ceil(n / 0)
+    * is a division error inside a job under ANSI, and null without it,
+    * where a grid cover then silently drops every row of the block.
+    */
+  private def subBlocks(n: Column, cap: Int, capName: String): Column = {
+    require(cap >= 1, s"$capName must be >= 1, got $cap")
+    ceil(n / cap).cast("long")
+  }
+
+  /** The sub-block plan of a blocked frame: (blockCols..., nsub) for
+    * ONLY the blocks of more than `cap` rows, sized by a map-side
+    * combinable aggregate and broadcast. Oversized blocks are rare, so
+    * the broadcast stays metadata-scale at any block-key cardinality
+    * (every block's count would be ~bands×|corpus| rows), and the main
+    * stream picks up its sub-block in a narrow pass. After the left
+    * join a block absent from the plan has a null `nsub`: one sub-block.
+    */
+  private[operators] def oversizeSubs(blocked: DataFrame,
+      blockCols: Seq[String], cap: Int,
+      capName: String = "maxBucketSize"): DataFrame = {
+    val bc = blockCols.map(col)
+    broadcast(blocked.groupBy(bc: _*)
+      .agg(count(lit(1)).as("bn"))
+      .filter(col("bn") > cap)
+      .select(bc :+ subBlocks(col("bn"), cap, capName).as("nsub"): _*))
+  }
+
+  /** A member's hash sub-block, after a left join to [[oversizeSubs]]:
+    * the hash of `salt` mod nsub in an oversized block, else 0.
+    */
+  private[operators] def subOf(salt: Column*): Column =
+    when(col("nsub").isNull, lit(0L))
+      .otherwise(pmod(xxhash64(salt: _*), col("nsub")))
+
+  /** Every sub-block of a member's block, after a left join to
+    * [[oversizeSubs]] — the replicated side of a salted join.
+    */
+  private[operators] def allSubs: Column =
+    explode(sequence(lit(0L), coalesce(col("nsub") - 1L, lit(0L))))
+
+  /** The grid cover of a blocked frame whose blocks have `n` members:
+    * a block splits into nsub = ceil(n / cap) subs, each member takes a
+    * home sub by hashing `salt`, and replicates into every unordered
+    * cell {home, j}, j < nsub, adding columns (home, c1, c2). Members
+    * with homes s and t always meet in cell {min(s,t), max(s,t)}, so a
+    * pair join on (block..., c1, c2) loses NO pair to the cap, and a
+    * cell holds members of at most two subs, bounding per-task pair
+    * work at ~4·cap². A block within the cap is one cell. The pair join
+    * keeps only [[canonicalCell]]: same-home members share every cell.
+    * Callers count `n` their own way (join-back, window), as measured
+    * at each site.
+    */
+  private[operators] def gridCover(blocked: DataFrame, n: Column, cap: Int,
+      salt: Column*): DataFrame =
+    blocked.withColumn("nsub", subBlocks(n, cap, "maxBucketSize"))
+      .withColumn("home",
+        when(col("nsub") <= 1L, lit(0L))
+          .otherwise(pmod(xxhash64(salt: _*), col("nsub"))))
+      // sequence is ascending here (nsub >= 1)
+      .withColumn("j", explode(sequence(lit(0L), col("nsub") - 1L)))
+      .withColumn("c1", least(col("home"), col("j")))
+      .withColumn("c2", greatest(col("home"), col("j")))
+      .drop("nsub", "j")
+
+  /** The one grid cell where a pair of a [[gridCover]] join (columns
+    * home_a, home_b) is emitted.
+    */
+  private[operators] def canonicalCell: Column =
+    col("c1") === least(col("home_a"), col("home_b")) &&
+      col("c2") === greatest(col("home_a"), col("home_b"))
+
+  /** Self candidates of a banded (id, band, bucket) frame: (id_a, id_b),
+    * id_a < id_b, each pair once (score each pair once, not once per
+    * colliding band). A band-bucket larger than `maxBucketSize` would
+    * self-join n² in one task, so its members split into hash
+    * sub-buckets and pair only within one: per-task work is bounded by
+    * maxBucketSize² with no whole-bucket recall cliff. The salt hashes
+    * (id, band), so a pair split apart in one band lands together with
+    * fresh probability in every other band (an id-only salt would
+    * split the pair the SAME way in all bands and quietly lose
+    * ~(1-1/nsub) of mega-bucket recall).
+    */
+  private def selfCandidates(banded: DataFrame,
+                             maxBucketSize: Int): DataFrame = {
+    val capped = banded
+      .join(oversizeSubs(banded, Seq("band", "bucket"), maxBucketSize),
+        Seq("band", "bucket"), "left")
+      .withColumn("sub", subOf(col("id"), col("band")))
+    def side(id: String) =
+      capped.select(col("band"), col("bucket"), col("sub"), col("id").as(id))
+    side("id_a").join(side("id_b"), Seq("band", "bucket", "sub"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .distinct()
+  }
+
+  /** Cross candidates (left_id, right_id), each once, of two banded
+    * sides: the big (left/train) side salts oversized buckets into hash
+    * sub-buckets and the tiny (right/bench) side replicates across
+    * them, so every co-bucketed pair still meets in exactly the left
+    * row's sub-bucket — the cross path loses NO recall to salting,
+    * while per-task join work stays bounded by maxBucketSize ·
+    * |right ∩ bucket|.
+    */
+  private def saltedCrossCandidates(lBand: DataFrame, rBand: DataFrame,
+                                    maxBucketSize: Int): DataFrame = {
+    val subs = oversizeSubs(lBand, Seq("band", "bucket"), maxBucketSize)
+    val lSalted = lBand.join(subs, Seq("band", "bucket"), "left")
+      .withColumn("sub", subOf(col("left_id"), col("band")))
+      .select("band", "bucket", "sub", "left_id")
+    val rSalted = rBand.join(subs, Seq("band", "bucket"), "left")
+      .withColumn("sub", allSubs)
+      .select("band", "bucket", "sub", "right_id")
+    lSalted.join(rSalted, Seq("band", "bucket", "sub"))
+      .select("left_id", "right_id").distinct()
+  }
+
+  /** Score join-back: `pairs` with each side's sketch joined back by
+    * id — `a` and `b` are (id, sketch) frames whose id columns name the
+    * pair's columns — as (a id, b id, `name` = score(sketch a, sketch
+    * b)), rows scoring under `threshold` dropped.
+    */
+  private def scorePairs(pairs: DataFrame, a: DataFrame, b: DataFrame,
+      name: String, threshold: Option[Double])(
+      score: (Column, Column) => Column): DataFrame = {
+    val Array(ia, sa) = a.columns
+    val Array(ib, sb) = b.columns
+    val scored = pairs.join(a, ia).join(b, ib)
+      .select(col(ia), col(ib), score(col(sa), col(sb)).as(name))
+    threshold.fold(scored)(t => scored.filter(col(name) >= t))
+  }
+
+  /** [[scorePairs]] of (id_a, id_b) pairs over one (id, `x`) frame. */
+  private def scoreSelf(pairs: DataFrame, sk: DataFrame, x: String,
+      name: String, threshold: Option[Double])(
+      score: (Column, Column) => Column): DataFrame = {
+    def side(s: String) =
+      sk.select(col("id").as(s"id_$s"), col(x).as(s"${x}_$s"))
+    scorePairs(pairs, side("a"), side("b"), name, threshold)(score)
+  }
+
+  /** The self path over a staged (id, `x`) sketch frame: band `sig` (the
+    * frame's MinHash signature), [[selfCandidates]], score join-back.
+    */
+  private def selfPairs(sk: DataFrame, x: String, sig: Column, bands: Int,
+      rowsPerBand: Int, maxBucketSize: Int, name: String,
+      threshold: Double)(score: (Column, Column) => Column): DataFrame =
+    scoreSelf(selfCandidates(
+        bandBuckets(sk, sig, bands, rowsPerBand, col("id")), maxBucketSize),
+      sk, x, name, Some(threshold))(score)
+
+  /** The cross path over two staged (id, sketch) frames, output as
+    * (left_id, right_id, `name`): band each side by `sig` of its sketch
+    * (or take the left side's staged (left_id, band, bucket) postings,
+    * `lBand`), [[saltedCrossCandidates]], score join-back. An id is
+    * renamed where it is read, so banding keeps the staged column.
+    */
+  private def crossPairs(l: DataFrame, r: DataFrame, sig: Column => Column,
+      bands: Int, rowsPerBand: Int, maxBucketSize: Int, name: String,
+      threshold: Double, lBand: Option[DataFrame] = None)(
+      score: (Column, Column) => Column): DataFrame = {
+    def id(sk: DataFrame, as: String) =
+      if (sk.columns(0) == as) col(as) else col(sk.columns(0)).as(as)
+    def band(sk: DataFrame, as: String) = bandBuckets(sk,
+      sig(col(sk.columns(1))), bands, rowsPerBand, id(sk, as))
+    def keyed(sk: DataFrame, as: String) =
+      sk.select(id(sk, as), col(sk.columns(1)))
+    scorePairs(saltedCrossCandidates(lBand.getOrElse(band(l, "left_id")),
+        band(r, "right_id"), maxBucketSize),
+      keyed(l, "left_id"), keyed(r, "right_id"), name, Some(threshold))(score)
+  }
+
+  /** Clone expansion of rep pairs (id_a, id_b, `name`): every member of
+    * rep_a pairs with every member of rep_b at the reps' score (two
+    * equi-joins, row count = output size), and the members of one clone
+    * group pair among themselves through `intra`, which scores the
+    * (rep, id, id2) rows, id < id2, as (id_a, id_b, `name`).
+    */
+  private def expandClones(repPairs: DataFrame, membership: DataFrame,
+      name: String)(intra: DataFrame => DataFrame): DataFrame = {
+    val cross = repPairs
+      .join(membership.select(col("rep").as("id_a"), col("id").as("m_a")),
+        "id_a")
+      .join(membership.select(col("rep").as("id_b"), col("id").as("m_b")),
+        "id_b")
+      .select(least(col("m_a"), col("m_b")).as("id_a"),
+        greatest(col("m_a"), col("m_b")).as("id_b"), col(name))
+    val m = membership.select(col("rep"), col("id"))
+    val same = m
+      .join(m.withColumnRenamed("id", "id2"), Seq("rep"))
+      .filter(col("id") < col("id2"))
+    cross.unionByName(intra(same))
   }
 
   /** Exact dedup: keep the minimum id per distinct key expression. */
@@ -881,7 +878,8 @@ object Dedup {
     *
     * Scale shape (100 TB): token and gram streams are NARROW rows —
     * grams build from `n-1` lead() windows per doc partition (never by
-    * re-slicing the doc's token array, the r14 fat-OOM lesson), and
+    * re-slicing the doc's token array, which runs a fat doc out of
+    * memory), and
     * duplicate detection is STAGED like dedup_jaccard: a first pass
     * shuffles only (xxhash64(gram), doc) — 16 bytes/position — and
     * only hash-candidate positions (>= minDocs docs share the hash)
@@ -926,11 +924,10 @@ object Dedup {
       .select(col(idCol), col("p"), xxhash64(col("g")).as("h"))
     // stage 1: 8-byte hash prefilter — g is hashed and DROPPED before
     // any exchange, so the corpus-sized shuffles carry (h, id) and
-    // (h, id, p) scalars only. r17 (r16 verdict watch item): the old
-    // grams⋈candH join carried the materialized n-token gram STRING
-    // per position (~n× corpus bytes); on a high-duplication corpus
-    // candH outgrows the broadcast threshold and those strings would
-    // have shuffled. Surviving positions regenerate their grams below.
+    // (h, id, p) scalars only: a join carrying the n-token gram STRING
+    // per position (~n× corpus bytes) would shuffle those strings once
+    // candH outgrows the broadcast threshold on a high-duplication
+    // corpus. Surviving positions regenerate their grams below.
     val candH = grams.select(col("h"), col(idCol)).distinct()
       .groupBy("h").agg(count(lit(1)).as("nd"))
       .filter(col("nd") >= minDocs).select("h")

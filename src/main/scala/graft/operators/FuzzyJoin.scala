@@ -69,17 +69,12 @@ object FuzzyJoin {
         blockCol.as("blk"), length(textCol).as("len")),
       "fuzzy_base")
 
-    // Sub-salt plan: ONLY the oversized blocks (rare by construction),
-    // broadcast to both sides — same shape as Dedup's cross-candidate
-    // guardrail. A per-row count window here would shuffle the whole
-    // input by blk just to learn sizes; the filtered aggregate moves
-    // one count per block and the broadcast stays metadata-scale even
-    // when the block-key cardinality is huge.
-    val subPlan = broadcast(base.groupBy("blk")
-      .agg(count(lit(1)).as("bn"))
-      .filter(col("bn") > maxBlockSize)
-      .select(col("blk"), ceil(col("bn") / maxBlockSize).cast("long")
-        .as("nsub")))
+    // Sub-salt plan: ONLY the oversized blocks, broadcast to both sides
+    // (Dedup.oversizeSubs, the MinHash cross path's guard). A per-row
+    // count window here would shuffle the whole input by blk just to
+    // learn sizes.
+    val subPlan = Dedup.oversizeSubs(base, Seq("blk"), maxBlockSize,
+      "maxBlockSize")
 
     // Collapse identical texts BEFORE pair enumeration: records group
     // into (block, sub, text) key-lists, candidate generation and the
@@ -99,9 +94,7 @@ object FuzzyJoin {
     // join key (blk, sub) makes the groupBys and the join share ONE
     // exchange per side (subset-key clustering satisfies both).
     def grouped(side: String) = base.join(subPlan, Seq("blk"), "left")
-      .withColumn("sub",
-        when(col("nsub").isNull, lit(0L))
-          .otherwise(pmod(xxhash64(col("k")), col("nsub"))))
+      .withColumn("sub", Dedup.subOf(col("k")))
       .repartition(col("blk"), col("sub"))
       .groupBy("blk", "sub", "nsub", "txt", "len")
       .agg(collect_list("k").as(s"${side}_ks"))
@@ -110,8 +103,7 @@ object FuzzyJoin {
       .select(col("blk"), col("sub"), col("txt").as("a_txt"),
         col("len").as("a_len"), col("a_ks"))
     val b = grouped("b")
-      .withColumn("rsub",
-        explode(sequence(lit(0L), coalesce(col("nsub") - 1, lit(0L)))))
+      .withColumn("rsub", Dedup.allSubs)
       .select(col("blk"), col("rsub").as("sub"), col("txt").as("b_txt"),
         col("len").as("b_len"), col("b_ks"))
 

@@ -452,14 +452,11 @@ object Similarity {
     * Skew guard: a bucket larger than `maxBucketSize` would do an n²
     * self-join in one task (the classic LSH mega-bucket pathology —
     * thousands of near-identical embeddings sharing every bucket).
-    * Oversized buckets use the simhashPairs grid cover (round-10; the
-    * earlier same-sub-only split lost 105 of 95,800 cos≈1.0 pairs at
-    * the 10x replicated corpus — near-identical vectors live ONLY in
-    * mega-buckets, so "resurfaces via another table" fails exactly
-    * there): each member with home sub s replicates into every
-    * unordered cell {s, j}, so members with homes s and t always meet
-    * in cell {min(s,t), max(s,t)}. Zero candidate loss from capping;
-    * per-task pair work stays bounded at ~4·cap². Total work inside a
+    * Oversized buckets use the grid cover (`Dedup.gridCover`), which
+    * loses no candidate to the cap: a same-sub-only split lost 105 of
+    * 95,800 cos≈1.0 pairs on the 10x replicated corpus, because
+    * near-identical vectors live ONLY in mega-buckets, so "resurfaces
+    * via another table" fails exactly there. Total work inside a
     * mega-bucket is Θ(n²) scalar hamming checks — the price of exact
     * recall there — spread over (n/cap)² tasks, and the Hamming
     * prefilter kills the non-qualifying majority while still scalar.
@@ -512,20 +509,11 @@ object Similarity {
       posexplode(col("bkts")))
       .select(col("vec_id"), col("sig"),
         col("pos").as("table"), col("col").as("bucket"))
-    // grid cover {home, j} per oversized bucket (see scaladoc): home
-    // is salted by (vec_id, table) so the cover stays decorrelated
-    // across tables; normal-size buckets keep one cell (nsub = 1)
-    val capped = b.withColumn("n",
-      count(lit(1)).over(Window.partitionBy("table", "bucket")))
-      .withColumn("nsub", ceil(col("n") / maxBucketSize).cast("long"))
-      .withColumn("home",
-        when(col("nsub") <= 1L, lit(0L))
-          .otherwise(pmod(xxhash64(col("vec_id"), col("table")),
-            col("nsub"))))
-      .withColumn("j", explode(sequence(lit(0L), col("nsub") - 1L)))
-      .withColumn("c1", least(col("home"), col("j")))
-      .withColumn("c2", greatest(col("home"), col("j")))
-      .drop("n", "nsub", "j")
+    // grid cover per oversized bucket (see scaladoc): home is salted by
+    // (vec_id, table) so the cover stays decorrelated across tables
+    val capped = Dedup.gridCover(b.withColumn("n",
+        count(lit(1)).over(Window.partitionBy("table", "bucket"))),
+      col("n"), maxBucketSize, col("vec_id"), col("table")).drop("n")
     // both self-join sides read this scalar-only frame; a parquet stage
     // checkpoint (Stage.materialize) avoids re-bucketing the corpus
     // without leaking cached blocks into the caller's session
@@ -577,12 +565,10 @@ object Similarity {
         col("c2"), col("vec_id").as("id_b"), col("sig").as("sb"),
         col("home").as("home_b")),
         Seq("table", "bucket", "c1", "c2"))
-      .filter(col("id_a") < col("id_b") &&
-        col("c1") === least(col("home_a"), col("home_b")) &&
-        col("c2") === greatest(col("home_a"), col("home_b")) &&
+      .filter(col("id_a") < col("id_b") && Dedup.canonicalCell &&
         hamming(col("sa"), col("sb")) <= hammingCut)
       .select("id_a", "id_b")
-    // Deterministic dense-core channel (round-10, forced by the 10x
+    // Deterministic dense-core channel (forced by the 10x
     // replicated-corpus sweep): 105 of 95,800 cos≈1.0 pairs were lost
     // because a near-identical pair's connecting segment can straddle a
     // bucket hyperplane in EVERY table — probabilistic tables cannot

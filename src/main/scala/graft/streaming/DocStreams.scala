@@ -91,15 +91,11 @@ object DocStreams {
                      maxBucketSize: Int = 1000): Dataset[Match] = {
     import spark.implicits._
     val k = bands * rowsPerBand
-    val banded = docs.select(col(idCol).as("id"),
-        Dedup.minhashSignature(col(textCol), k).as("sig"))
-      .select(col("id"), col("sig"),
-        posexplode(org.apache.spark.sql.graftshim.Shim.column(
-          graft.expressions.BandHashes(
-            org.apache.spark.sql.graftshim.Shim.expression(col("sig")),
-            bands, rowsPerBand))))
-      .select(col("pos").as("band"), col("col").as("bucket"),
+    val sigs = docs.select(col(idCol).as("id"),
+      Dedup.minhashSignature(col(textCol), k).as("sig"))
+    val banded = Dedup.bandBuckets(sigs, col("sig"), bands, rowsPerBand,
         col("id"), col("sig"))
+      .select("band", "bucket", "id", "sig")
       .as[(Int, Long, Long, Array[Long])]
 
     val keyed = banded.groupByKey { case (band, bucket, _, _) => (band, bucket) }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.Random
+
 import org.apache.spark.sql.functions._
 import graft.functions.Cols
 
@@ -83,5 +85,59 @@ class ColsSpec extends SparkFunSuite {
     val jvm = Seq(123.45, -123.45, 0.125, -0.125, 9999.99, -999.99,
       0.005, 0.004999).map(x => math.floor(x * 100 + 0.5).toLong)
     assert(jvm == got, jvm.mkString(","))
+  }
+
+  // sumCents over >10^6 two-decimal summands per cell: the Spark
+  // partial-aggregate tree (any partitioning) returns bit-identical
+  // doubles equal to a sequential BigDecimal fold of the same values,
+  // so the sum is plan-independent and engine-exact, where a plain
+  // sum(double)'s last ulp depends on the aggregation tree's shape. The
+  // data is generated distributed (seeded xxhash64 cents), so real
+  // partial aggregation runs across partitions; the driver only folds
+  // the collected values for the truth.
+  test("sumCents: 10^6+ summands/cell, bit-exact vs sequential " +
+       "BigDecimal fold, invariant across repartitionings") {
+    val rnd = new Random(20260815L)
+    for (trial <- 0 until 2) {
+      val seed = rnd.nextLong()
+      val n = 2200000L // 2 cells x 1.1M summands
+      // cents in [-10^8, 10^8): values up to +-$1M with exactly 2
+      // decimals; c/100.0 then round(v*100) round-trips exactly at
+      // this magnitude (|c| << 2^51)
+      val base = spark.range(n)
+        .withColumn("g", (col("id") % 2).cast("int"))
+        .withColumn("cents",
+          pmod(xxhash64(col("id"), lit(seed)), lit(200000000L))
+            - lit(100000000L))
+        .withColumn("v", col("cents") / lit(100.0))
+        .select("g", "v")
+
+      def run(parts: Int): Map[Int, Double] =
+        base.repartition(parts)
+          .groupBy("g").agg(Cols.sumCents(col("v")).as("s"))
+          .as[(Int, Double)].collect().toMap
+
+      val byPlan = Seq(1, 13, 64).map(run)
+      // independent sequential truth: BigDecimal fold of the
+      // 2-decimal values, ONE final division like the convention
+      val truth = base.as[(Int, Double)].collect()
+        .groupBy(_._1)
+        .map { case (g, rows) =>
+          val centsSum = rows.foldLeft(BigDecimal(0)) { (acc, r) =>
+            acc + BigDecimal(math.round(r._2 * 100), 2)
+          }
+          g -> ((centsSum * 100).toLongExact / 100.0)
+        }
+
+      for (plan <- byPlan; (g, s) <- plan) {
+        assert(java.lang.Double.doubleToLongBits(s) ==
+               java.lang.Double.doubleToLongBits(truth(g)),
+          s"trial $trial seed $seed cell $g: sumCents=$s truth=${truth(g)}")
+      }
+      // plan-independence stated directly: all three partitionings
+      // produced the identical bit pattern per cell
+      assert(byPlan.distinct.size == 1,
+        s"trial $trial seed $seed: partitioning changed the sum: $byPlan")
+    }
   }
 }

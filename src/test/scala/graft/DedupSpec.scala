@@ -459,4 +459,186 @@ class DedupSpec extends SparkFunSuite {
         s"${sigs.size} distinct sigs)")
     }
   }
+
+  test("minhashPairsDistinct / minhashClusters: exact parity with the " +
+       "doc-level path on a clone-heavy corpus") {
+    import graft.operators.ConnectedComponents
+    // clone-heavy fixture: sf0.001 planted docs x5 verbatim clones with
+    // offset ids — the shape that made doc-level banding quadratic
+    val base = queries.t(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    // three NULL-text docs ride along — the clone collapse must keep
+    // them as self-singleton membership rows (SQL equality never
+    // equates NULLs), not drop them from membership
+    val clones = ReplicateCorpus.fanOut(spark, base, "documents",
+        Seq("doc_id"), mult = 5, skew = 0)
+      .unionByName(Seq(9000000001L, 9000000002L, 9000000003L).toDF("doc_id")
+        .withColumn("text", lit(null).cast("string")))
+    val tau = 0.35
+
+    val docPairs = Dedup.minhashPairs(clones, "doc_id", "text",
+      threshold = tau).select("id_a", "id_b", "est_jaccard")
+    val distPairs = Dedup.minhashPairsDistinct(clones, "doc_id", "text",
+      threshold = tau).select("id_a", "id_b", "est_jaccard")
+    assert(docPairs.exceptAll(distPairs).isEmpty &&
+           distPairs.exceptAll(docPairs).isEmpty,
+      "pair sets (incl. est) must be identical")
+
+    val docLabels = {
+      val labels = ConnectedComponents.labels(
+        docPairs.select("id_a", "id_b"), "id_a", "id_b")
+      clones.select(col("doc_id").as("id"))
+        .join(labels, Seq("id"), "left")
+        .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
+    }
+    val distLabels = Dedup.minhashClusters(clones, "doc_id", "text",
+      threshold = tau)
+    assert(docLabels.exceptAll(distLabels).isEmpty &&
+           distLabels.exceptAll(docLabels).isEmpty,
+      "component labels must be identical")
+    // the null-text docs are present, each its own singleton cluster
+    val nullClusters = distLabels.filter(col("id") >= 9000000001L)
+      .as[(Long, Long)].collect().toMap
+    assert(nullClusters ==
+      Map(9000000001L -> 9000000001L, 9000000002L -> 9000000002L,
+          9000000003L -> 9000000003L),
+      s"null-text docs must self-cluster, got $nullClusters")
+  }
+
+  test("verifiedPairsDistinct: exact parity (incl. jaccard values) with " +
+       "the doc-level verified path on a clone-heavy corpus") {
+    // same clone-heavy fixture as the minhash parity test, plus
+    // null-text riders (must never pair — singleton membership) and a
+    // pair of EMPTY-text clones (ShingleHashes emits ONE whole-text
+    // shingle for <= n tokens, so the doc-level contract pairs them at
+    // jaccard 1.0 — the collapsed intra path must reproduce that, not
+    // drop them)
+    val base = queries.t(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    val clones = ReplicateCorpus.fanOut(spark, base, "documents",
+        Seq("doc_id"), mult = 5, skew = 0)
+      .unionByName(Seq(9000000001L, 9000000002L).toDF("doc_id")
+        .withColumn("text", lit(null).cast("string")))
+      .unionByName(Seq(9000000003L, 9000000004L).toDF("doc_id")
+        .withColumn("text", lit("")))
+
+    val docPairs = Dedup.verifiedPairs(clones, "doc_id", "text",
+      finalThreshold = 0.5).select("id_a", "id_b", "jaccard")
+    val (membership, reps) = Dedup.textGroups(clones, "doc_id", "text")
+    val distPairs = Dedup.verifiedPairsDistinct(membership,
+        Dedup.fitShingleSets(reps, "rep", "text"), finalThreshold = 0.5)
+      .select("id_a", "id_b", "jaccard")
+    assert(docPairs.exceptAll(distPairs).isEmpty &&
+           distPairs.exceptAll(docPairs).isEmpty,
+      "verified pair sets (incl. exact jaccard) must be identical")
+    // sanity: the clone corpus actually produces intra-group pairs
+    assert(distPairs.filter(col("jaccard") === 1.0).count() > 0)
+    // null-text docs never pair; the empty-text clone pair IS emitted
+    // at exactly 1.0 (the whole-text-shingle contract), on both paths
+    val riders = distPairs.filter(col("id_a") >= 9000000001L)
+      .as[(Long, Long, Double)].collect().toList
+    assert(riders == List((9000000003L, 9000000004L, 1.0)),
+      s"degenerate riders: $riders")
+  }
+
+  test("verifiedPairsDistinct: clone group > maxBucketSize — collapsed " +
+       "path emits ALL C(n,2) intra pairs where doc-level salting drops " +
+       "some (intended divergence, Dedup.scala parity-scope contract)") {
+    // 100 verbatim clones of one text with maxBucketSize = 5: every
+    // band bucket holds the whole group (identical minhash rows), so
+    // the self-candidate salting splits it into ~20 hash sub-buckets
+    // per band and
+    // the doc-level self-join only pairs ids that co-land in SOME
+    // band's sub-bucket (P ≈ 1-(19/20)^16 ≈ 0.56 per pair —
+    // deterministic here: fixed ids, fixed seed). The collapsed path
+    // never bands the group at all — one rep, selfJ jaccard 1.0, and
+    // the intra expansion emits every pair.
+    val n = 100
+    val text = "the quick brown fox jumps over the lazy dog while " +
+      "the sun sets slowly behind the tall green hills tonight"
+    val clones = (1 to n).map(i => (i.toLong, text)).toDF("doc_id", "text")
+    val cap = 5
+
+    val docPairs = Dedup.verifiedPairs(clones, "doc_id", "text",
+      finalThreshold = 0.5, maxBucketSize = cap)
+    val (membership, reps) = Dedup.textGroups(clones, "doc_id", "text")
+    val distPairs = Dedup.verifiedPairsDistinct(membership,
+      Dedup.fitShingleSets(reps, "rep", "text"),
+      finalThreshold = 0.5, maxBucketSize = cap)
+
+    val all = n.toLong * (n - 1) / 2
+    assert(distPairs.count() == all,
+      s"collapsed path must emit all $all intra-clone pairs")
+    assert(distPairs.filter(col("jaccard") =!= 1.0).count() == 0)
+    val docCount = docPairs.count()
+    assert(docCount < all,
+      s"doc-level path expected to under-emit under oversize salting " +
+        s"(got $docCount of $all — if equal, the divergence contract " +
+        s"in Dedup.verifiedPairsDistinct's scaladoc no longer holds)")
+  }
+
+  test("a bucket cap below 1 fails by name, also with ANSI off") {
+    import graft.operators.{FuzzyJoin, Similarity}
+    // with ANSI off ceil(n / 0) is null rather than an error, and a grid
+    // cover then drops every row of the block without a word
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    def rejects(cap: String)(run: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](run)
+      assert(e.getMessage.contains(cap), e.getMessage)
+    }
+    try {
+      rejects("maxBucketSize")(Dedup.simhashPairs(corpus, "doc_id", "text",
+        maxBucketSize = 0).collect())
+      rejects("maxBucketSize")(Dedup.minhashPairs(corpus, "doc_id", "text",
+        maxBucketSize = 0).collect())
+      rejects("maxBucketSize")(Dedup.crossMinhashPairs(corpus, corpus,
+        "doc_id", "text", maxBucketSize = 0).collect())
+      rejects("maxBlockSize")(FuzzyJoin.selfPairs(corpus, col("doc_id"),
+        col("text"), lit(1), 2, maxBlockSize = 0).collect())
+      val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+        .select($"vec_id", $"embedding").limit(50)
+      rejects("maxBucketSize")(Similarity.cosineNearDupPairs(emb, dim = 64,
+        threshold = 0.99, maxBucketSize = 0).collect())
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("cross paths lose no pair to salting: the bench side replicates") {
+    // 30 identical train docs share every band-bucket; at cap 1 each of
+    // those buckets splits into 30 sub-buckets, and a bench copy must
+    // still meet every train clone through its replicated rows
+    val train = ((0L until 30L).map((_, base)) ++ Seq(
+      (100L, "completely different text about spark query engines and " +
+        "distributed columnar execution at terabyte scale with shuffles")))
+      .toDF("doc_id", "text")
+    val bench = Seq(
+      (1000L, base),
+      (1001L, base + " extra"),
+      (1002L, "entirely novel benchmark question about astronomy and " +
+        "the formation of spiral galaxies in the early universe epochs")
+    ).toDF("doc_id", "text")
+    val idx = Dedup.buildMinhashIndex(train, "doc_id", "text")
+    val paths = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "crossMinhashPairs" -> (cap => Dedup.crossMinhashPairs(train, bench,
+        "doc_id", "text", maxBucketSize = cap)),
+      "crossVerifiedPairs" -> (cap => Dedup.crossVerifiedPairs(train, bench,
+        "doc_id", "text", maxBucketSize = cap)),
+      "probeMinhashIndex" -> (cap => Dedup.probeMinhashIndex(idx, bench,
+        "doc_id", "text", maxBucketSize = cap)))
+    val want = for (t <- 0L until 30L; b <- Seq(1000L, 1001L)) yield (t, b)
+    for ((name, run) <- paths) {
+      def pairs(cap: Int) = {
+        val df = run(cap)
+        df.select(df.columns(0), df.columns(1)).as[(Long, Long)]
+          .collect().toSet
+      }
+      val loose = pairs(1000)
+      assert(want.toSet.subsetOf(loose), s"$name: ${loose.size} pairs")
+      assert(pairs(1) === loose, name)
+    }
+  }
 }
