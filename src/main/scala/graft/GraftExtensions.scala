@@ -87,7 +87,8 @@ object GraftExtensions {
       graft.operators.ZOrder.zvalueExpr(Seq(a(0), a(1)), intLit(a(2)))),
     // NearestCentroid / PqEncode / PqAdcDist carry centroid matrices in
     // the expression instance — not SQL-literal-able; their surface is
-    // Similarity.fitIvf/probeIvf and fitPq/probePq.
+    // VecFns.nearestCentroid / pqEncode / pqAdcDist, used by the IVF,
+    // PQ and IVF-PQ fit/probe pairs in Similarity and by Cluster.kmeans.
   )
 
   /** Runtime registration on an existing session. */

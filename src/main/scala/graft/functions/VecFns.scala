@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftshim.Shim
-import graft.expressions.{CosineSim, DotProduct, FirstAgreeIndex, GridQuantize, HyperplaneBuckets, NearestGridCentroid, RandomProjection}
+import graft.expressions.{CosineSim, DotProduct, FirstAgreeIndex, GridQuantize, HyperplaneBuckets, NearestCentroid, NearestGridCentroid, PqAdcDist, PqEncode, RandomProjection}
 
 /** Vector math over `ArrayType` embedding columns, backed by native
   * Catalyst expressions (graft.expressions.VectorExprs): one primitive
@@ -57,4 +57,25 @@ object VecFns {
     */
   def nearestGridCentroid(q: Column, model: Column): Column =
     Shim.column(NearestGridCentroid(Shim.expression(q), Shim.expression(model)))
+
+  /** 0-based index of the nearest of `centers` by squared L2; ties to
+    * the lowest index (expressions.NearestCentroid). The matrix rides in
+    * the expression, so it is not expressible in SQL.
+    */
+  def nearestCentroid(v: Column, centers: Array[Array[Float]]): Column =
+    Shim.column(NearestCentroid(Shim.expression(v), centers))
+
+  /** PQ code of the L2-normalized vector: per contiguous subspace, the
+    * index of the nearest `codebooks(s)` centroid, array<int> of length
+    * m (expressions.PqEncode).
+    */
+  def pqEncode(v: Column, codebooks: Array[Array[Array[Float]]]): Column =
+    Shim.column(PqEncode(Shim.expression(v), codebooks))
+
+  /** Asymmetric (ADC) squared L2 between the L2-normalized query `q` and
+    * the reconstruction of PQ `code` (expressions.PqAdcDist).
+    */
+  def pqAdcDist(q: Column, code: Column,
+                codebooks: Array[Array[Array[Float]]]): Column =
+    Shim.column(PqAdcDist(Shim.expression(q), Shim.expression(code), codebooks))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shim
+import graft.functions.VecFns
 
 /** Distributed Lloyd k-means over the FULL embedding corpus — the
   * curation-side clustering step (cluster-balanced sampling, SemDeDup
@@ -63,8 +63,7 @@ object Cluster {
 
     def assigned(cs: Array[Array[Float]]): DataFrame =
       clean.select(col(idCol), col(vecCol),
-        Shim.column(graft.expressions.NearestCentroid(
-          Shim.expression(col(vecCol)), cs)).as("cluster_id"))
+        VecFns.nearestCentroid(col(vecCol), cs).as("cluster_id"))
 
     for (_ <- 1 to iters) {
       val upd = assigned(centers)

@@ -1,26 +1,39 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.VecFns
 
-/** Approximate-nearest-neighbor search over embedding columns
-  * (SURVEY.md §2 [EXT] similarity search).
+/** Nearest-neighbor search over embedding columns (SURVEY.md §2 [EXT]
+  * similarity search).
   *
-  * Two paths:
-  *  - `bruteTopK`: exact cosine top-k via broadcast of the (small) query
-  *    set against the full corpus — the correctness baseline. The corpus
-  *    never shuffles its vectors; only (qid, vec_id, sim) scalars reach
-  *    the ranking shuffle.
-  *  - `lshTopK`: random-hyperplane LSH bucketing; queries only compare
-  *    against corpus vectors sharing a bucket in any of `tables` hash
-  *    tables. The query side is broadcast, so candidate generation is a
-  *    narrow map over the corpus; cosine is computed in-pipeline and only
-  *    (qid, vec_id, sim) scalars are shuffled for dedup + ranking.
+  * Five top-k searches, each (qid, vec_id, sim, rank) ranked on
+  * (raw sim desc, vec_id asc), and one near-duplicate pair path:
+  *  - `bruteTopK` (and the banded `bruteHardNegatives`): exact cosine of
+  *    every broadcast query against the full corpus — the correctness
+  *    baseline;
+  *  - `lshTopK`: random-hyperplane LSH; a query compares only against
+  *    corpus vectors sharing a bucket in any of `tables` hash tables;
+  *  - `fitIvf`/`probeIvf`: k-means coarse cells, a query scans its
+  *    `nprobe` nearest cells;
+  *  - `fitPq`/`probePq`: product-quantized codes, an ADC shortlist per
+  *    query, exact rerank of the shortlist;
+  *  - `fitIvfPq`/`probeIvfPq`: both restrictions, ADC over the codes of
+  *    the `nprobe` nearest cells, exact rerank;
+  *  - `fitNearDup`/`nearDupPairs` (`cosineNearDupPairs` one-shot): every
+  *    corpus pair at cosine >= a threshold.
   *
-  * Cosine/bucket math is native codegen'd Catalyst expressions
-  * (graft.expressions.VectorExprs) — one primitive loop per row.
+  * The searches share one probe core: the query frame (`queryFrame`),
+  * the per-query rank (`perQuery`) behind the top-k tail (`topK`), the
+  * coarse-cell probe (`cellCandidates`) and the ADC shortlist
+  * (`adcShortlist`). The query side is always broadcast, so the corpus
+  * never shuffles its vectors; only scalars (or a bounded shortlist)
+  * reach the ranking shuffle.
+  *
+  * Cosine/bucket/quantizer math is native codegen'd Catalyst expressions
+  * (graft.expressions.VectorExprs via `VecFns`) — one primitive loop per
+  * row.
   */
 object Similarity {
 
@@ -37,8 +50,44 @@ object Similarity {
     * (both engines happen to sort nulls last) rather than by
     * contract.
     */
-  private def nonNullVec(df: DataFrame, vecCol: String = "embedding"): DataFrame =
-    df.filter(col(vecCol).isNotNull)
+  private def nonNullVec(df: DataFrame): DataFrame =
+    df.filter(col("embedding").isNotNull)
+
+  /** The non-null corpus as (vec_id, embedding): what every index fits
+    * and the brute scan reads.
+    */
+  private def vectors(corpus: DataFrame): DataFrame =
+    nonNullVec(corpus).select(col("vec_id"), col("embedding"))
+
+  /** The non-null queries as (qid, qvec): the query side of every probe. */
+  private def queryFrame(queries: DataFrame): DataFrame =
+    nonNullVec(queries).select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+
+  /** (qid, vec_id, sim_raw): exact cosine of each candidate's query
+    * vector against its corpus vector column `vec`.
+    */
+  private def cosineScored(cands: DataFrame, vec: String = "embedding"): DataFrame =
+    cands.select(col("qid"), col("vec_id"),
+      VecFns.cosine(col("qvec"), col(vec)).as("sim_raw"))
+
+  /** The first `n` rows of each query by `order`, numbered in `rk` —
+    * the one rank window behind the top-k tail, the cell probe and the
+    * ADC shortlist (Catalyst plans it as a WindowGroupLimit).
+    */
+  private def perQuery(df: DataFrame, rk: String, n: Int,
+                       order: Column*): DataFrame =
+    df.withColumn(rk, row_number().over(
+        Window.partitionBy("qid").orderBy(order: _*)))
+      .filter(col(rk) <= n)
+
+  /** The top-k tail of every search: rank (qid, vec_id, sim_raw) on
+    * (raw sim desc, vec_id asc), keep `k` per query, round only the
+    * emitted value.
+    */
+  private def topK(scored: DataFrame, k: Int, roundTo: Int): DataFrame =
+    perQuery(scored, "rk", k, col("sim_raw").desc, col("vec_id").asc)
+      .select(col("qid"), col("vec_id"),
+        round(col("sim_raw"), roundTo).as("sim"), col("rk"))
 
   /** Exact top-k by cosine: every query vector against every corpus
     * vector. `queries` must be small enough to broadcast.
@@ -53,30 +102,17 @@ object Similarity {
   /** Shared brute scorer behind [[bruteTopK]] and
     * [[bruteHardNegatives]]: broadcast-query cross scan, self-pair
     * exclusion, optional raw-cosine band filter ahead of the rank
-    * window, deterministic (sim desc, vec_id asc) tie-break. One
-    * definition so the two public shapes cannot drift apart.
+    * window. One definition so the two public shapes cannot drift apart.
     */
   private def rankedCosine(corpus: DataFrame, queries: DataFrame, k: Int,
                            roundTo: Int,
                            band: Option[(Double, Double)]): DataFrame = {
-    val q = broadcast(nonNullVec(queries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec")))
-    val scored0 = nonNullVec(corpus)
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(q)
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        VecFns.cosine(col("qvec"), col("embedding")).as("sim_raw"))
-    val scored = band match {
-      case Some((lo, hi)) =>
-        scored0.filter(col("sim_raw") >= lo && col("sim_raw") <= hi)
-      case None => scored0
-    }
-    val w = Window.partitionBy("qid")
-      .orderBy(col("sim_raw").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("qid"), col("vec_id"),
-        round(col("sim_raw"), roundTo).as("sim"), col("rk"))
+    val scored = cosineScored(vectors(corpus)
+      .crossJoin(broadcast(queryFrame(queries)))
+      .filter(col("qid") =!= col("vec_id")))
+    topK(band.fold(scored) { case (lo, hi) =>
+      scored.filter(col("sim_raw") >= lo && col("sim_raw") <= hi)
+    }, k, roundTo)
   }
 
   /** Hard-negative mining for contrastive training data: the top-k
@@ -127,16 +163,10 @@ object Similarity {
 
     val qb = broadcast(bucketed(queries, "qid", "qvec", "qbks"))
     val cb = bucketed(corpus, "vec_id", "cvec", "cbks")
-    val scored = cb.join(qb, Seq("table", "bucket"))
+    topK(cosineScored(cb.join(qb, Seq("table", "bucket"))
       .filter(col("qid") =!= col("vec_id") &&
-        VecFns.firstAgree(col("qbks"), col("cbks")) === col("table"))
-      .select(col("qid"), col("vec_id"),
-        VecFns.cosine(col("qvec"), col("cvec")).as("sim_raw"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("sim_raw").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("qid"), col("vec_id"), round(col("sim_raw"), roundTo).as("sim"),
-        col("rk"))
+        VecFns.firstAgree(col("qbks"), col("cbks")) === col("table")),
+      "cvec"), k, roundTo)
   }
 
   /** Bounded seeded training sample, collected to the driver — the
@@ -156,20 +186,36 @@ object Similarity {
     train.select(col("embedding")).as[Array[Float]].collect()
   }
 
-  /** Project a sample onto the unit sphere — PQ codebooks train in the
-    * same space PqEncode/PqAdcDist score in (they normalize internally).
+  /** The coarse quantizer of the IVF indexes: `nlist` KMeansLite
+    * centroids over the sample, as the model's (cell, centroid) rows and
+    * the `cell` column that assigns a corpus vector to its nearest one.
     */
-  private def unitize(sample: Array[Array[Float]]): Array[Array[Float]] =
-    sample.map { v =>
+  private def coarseCells(sample: Array[Array[Float]], nlist: Int,
+                          seed: Long): (Seq[(Int, Array[Float])], Column) = {
+    val centers = KMeansLite.fit(sample, nlist, seed)
+    (centers.indices.zip(centers),
+      VecFns.nearestCentroid(col("embedding"), centers).as("cell"))
+  }
+
+  /** The corpus a PQ index encodes: `m` contiguous subspaces must tile
+    * `dim`, checked before any job runs.
+    */
+  private def pqVectors(corpus: DataFrame, dim: Int, m: Int): DataFrame = {
+    require(dim % m == 0, s"m=$m must divide dim=$dim")
+    vectors(corpus)
+  }
+
+  /** Per-subspace codebooks over the sample projected onto the unit
+    * sphere — PQ codebooks train in the same space PqEncode/PqAdcDist
+    * score in (they normalize internally). Subspaces train
+    * independently, parallel across driver cores.
+    */
+  private def trainCodebooks(sample: Array[Array[Float]], dim: Int, m: Int,
+                             kSub: Int, seed: Long): Array[Array[Array[Float]]] = {
+    val unit = sample.map { v =>
       val nrm = math.sqrt(v.foldLeft(0.0)((a, x) => a + x.toDouble * x))
       if (nrm == 0.0) v else v.map(x => (x / nrm).toFloat)
     }
-
-  /** Per-subspace codebooks over a unit-sphere sample — subspaces train
-    * independently, parallel across driver cores.
-    */
-  private def trainCodebooks(unit: Array[Array[Float]], dim: Int, m: Int,
-                             kSub: Int, seed: Long): Array[Array[Array[Float]]] = {
     val dsub = dim / m
     val codebooks = new Array[Array[Array[Float]]](m)
     java.util.stream.IntStream.range(0, m).parallel().forEach { s =>
@@ -180,25 +226,50 @@ object Similarity {
     codebooks
   }
 
-  /** Shared ranking tail: join raw embeddings back for ONLY the
-    * shortlist rows, rank by exact cosine, keep top k per query.
+  /** The coarse-cell probe: rank the broadcast centroids per query by
+    * cosine, keep the `nprobe` nearest cells, and join the index `table`
+    * (one `cell` per corpus row) on them. No dedup is needed:
+    * NearestCentroid puts each corpus vector in exactly one cell and the
+    * probed (qid, cell) set is distinct, so each (qid, vec_id) arrives
+    * at most once — an aggregate here would be a wasted full shuffle of
+    * the candidate stream. Self pairs are dropped.
     */
-  private def exactRerank(shortlist: DataFrame, corpus: DataFrame,
-                          k: Int, roundTo: Int): DataFrame = {
-    val exact = shortlist
-      .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        VecFns.cosine(col("qvec"), col("embedding")).as("sim_raw"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("sim_raw").desc, col("vec_id").asc)
-    exact.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("qid"), col("vec_id"),
-        round(col("sim_raw"), roundTo).as("sim"), col("rk"))
+  private def cellCandidates(table: DataFrame,
+                             centers: Seq[(Int, Array[Float])],
+                             queries: DataFrame, nprobe: Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    val centersDf = broadcast(centers.toDF("cell", "centroid"))
+    val qcells = perQuery(queryFrame(queries).crossJoin(centersDf)
+        .select(col("qid"), col("qvec"), col("cell"),
+          VecFns.cosine(col("qvec"), col("centroid")).as("csim")),
+        "crk", nprobe, col("csim").desc, col("cell").asc)
+      .select("qid", "qvec", "cell")
+    table.join(broadcast(qcells), Seq("cell"))
+      .filter(col("qid") =!= col("vec_id"))
+  }
+
+  /** The PQ search tail: ADC-score each (query, code) candidate, keep
+    * the `rerank` closest per query on (adc asc, vec_id asc), then join
+    * the raw embeddings back for ONLY that shortlist and take the exact
+    * cosine top-k. The rerank join touches rerank·|queries| vectors
+    * regardless of corpus size.
+    */
+  private def adcShortlist(cands: DataFrame, codebooks: Array[Array[Array[Float]]],
+                           corpus: DataFrame, k: Int, rerank: Int,
+                           roundTo: Int): DataFrame = {
+    val shortlist = perQuery(cands.select(col("qid"), col("qvec"), col("vec_id"),
+        VecFns.pqAdcDist(col("qvec"), col("code"), codebooks).as("adc")),
+        "ark", rerank, col("adc").asc, col("vec_id").asc)
+      .select("qid", "qvec", "vec_id")
+    topK(cosineScored(shortlist
+      .join(corpus.select(col("vec_id"), col("embedding")), Seq("vec_id"))),
+      k, roundTo)
   }
 
   /** IVF (inverted-file) approximate top-k — the other standard ANN
     * scale path beside LSH: k-means coarse quantizer over the corpus
-    * (MLlib KMeans, seeded → deterministic), corpus vectors inverted by
+    * (seeded → deterministic), corpus vectors inverted by
     * nearest-centroid cell, queries probe their `nprobe` nearest cells
     * only. Cost ≈ corpus · nprobe / nlist per query vs. brute force.
     *
@@ -210,8 +281,7 @@ object Similarity {
     * A fitted IVF index: the inverted file (vec_id, embedding, cell),
     * staged to parquet so probes scan the index rather than re-assigning
     * the corpus, plus the (metadata-scale) centroid table. Fit ONCE per
-    * corpus, probe many times — per-query k-means training was round 2's
-    * scale defect.
+    * corpus, probe many times.
     */
   final case class IvfModel(cells: DataFrame,
                             centers: Seq[(Int, Array[Float])])
@@ -224,24 +294,18 @@ object Similarity {
     *
     * Training is DRIVER-SIDE (`KMeansLite` over the collected sample —
     * metadata-scale by construction, `maxTrainRows` bounds the collect):
-    * round 2 used a distributed iterative fit whose per-iteration
-    * cluster jobs dominated the query's cost. The only distributed work
-    * is one corpus count, the sample scan, and the assignment map.
+    * a distributed iterative fit's per-iteration jobs would dominate the
+    * query's cost. The only distributed work is one corpus count, the
+    * sample scan, and the assignment map.
     */
   def fitIvf(corpus: DataFrame, nlist: Int = 16, seed: Long = 42L,
              maxTrainRows: Long = 100000L): IvfModel = {
-    val featured = nonNullVec(corpus)
-      .select(col("vec_id"), col("embedding"))
-    val sample = boundedSample(featured, maxTrainRows, seed)
-    val centers = KMeansLite.fit(sample, nlist, seed)
+    val featured = vectors(corpus)
+    val (centers, cell) =
+      coarseCells(boundedSample(featured, maxTrainRows, seed), nlist, seed)
     val cells = Stage.materialize(featured.select(
-      col("vec_id"), col("embedding"),
-      org.apache.spark.sql.graftshim.Shim.column(
-        graft.expressions.NearestCentroid(
-          org.apache.spark.sql.graftshim.Shim.expression(col("embedding")),
-          centers)).as("cell")),
-      "ivf_cells")
-    IvfModel(cells, centers.zipWithIndex.map { case (c, i) => (i, c) }.toSeq)
+      col("vec_id"), col("embedding"), cell), "ivf_cells")
+    IvfModel(cells, centers)
   }
 
   /** Probe a fitted IVF index: rank centroids per query, search only the
@@ -249,43 +313,9 @@ object Similarity {
     * the cell join shuffles candidate scalars only.
     */
   def probeIvf(model: IvfModel, queries: DataFrame, k: Int,
-               nprobe: Int = 4, roundTo: Int = 6): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centersDf = broadcast(model.centers.toDF("cell", "centroid"))
-    val qcells = nonNullVec(queries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      .crossJoin(centersDf)
-      .select(col("qid"), col("qvec"), col("cell"),
-        VecFns.cosine(col("qvec"), col("centroid")).as("csim"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("csim").desc, col("cell").asc)))
-      .filter(col("crk") <= nprobe)
-      .select("qid", "qvec", "cell")
-    // no dedup needed: NearestCentroid puts each corpus vector in exactly
-    // one cell and qcells is distinct per (qid, cell), so the cell join
-    // emits each (qid, vec_id) at most once — an aggregate here would be
-    // a wasted full shuffle of the candidate stream
-    val scored = model.cells.join(broadcast(qcells), Seq("cell"))
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("vec_id"),
-        VecFns.cosine(col("qvec"), col("embedding")).as("sim_raw"))
-    val w = Window.partitionBy("qid")
-      .orderBy(col("sim_raw").desc, col("vec_id").asc)
-    scored.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("qid"), col("vec_id"), round(col("sim_raw"), roundTo).as("sim"),
-        col("rk"))
-  }
-
-  /** One-shot fit + probe, for callers that genuinely search a corpus
-    * once. Anything issuing repeated queries should `fitIvf` once and
-    * `probeIvf` per batch.
-    */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-              nlist: Int = 16, nprobe: Int = 4, seed: Long = 42L,
-              roundTo: Int = 6, maxTrainRows: Long = 100000L): DataFrame =
-    probeIvf(fitIvf(corpus, nlist, seed, maxTrainRows), queries, k,
-      nprobe, roundTo)
+               nprobe: Int = 4, roundTo: Int = 6): DataFrame =
+    topK(cosineScored(
+      cellCandidates(model.cells, model.centers, queries, nprobe)), k, roundTo)
 
   /** A fitted product-quantization index: per-subspace codebooks
     * (metadata-scale — m·k·dsub floats) and the staged code table
@@ -307,54 +337,24 @@ object Similarity {
     */
   def fitPq(corpus: DataFrame, dim: Int, m: Int = 8, kSub: Int = 256,
             seed: Long = 42L, maxTrainRows: Long = 100000L): PqModel = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val featured = nonNullVec(corpus)
-      .select(col("vec_id"), col("embedding"))
+    val featured = pqVectors(corpus, dim, m)
     val codebooks = trainCodebooks(
-      unitize(boundedSample(featured, maxTrainRows, seed)), dim, m, kSub, seed)
+      boundedSample(featured, maxTrainRows, seed), dim, m, kSub, seed)
     val codes = Stage.materialize(featured.select(col("vec_id"),
-      org.apache.spark.sql.graftshim.Shim.column(
-        graft.expressions.PqEncode(
-          org.apache.spark.sql.graftshim.Shim.expression(col("embedding")),
-          codebooks)).as("code")),
-      "pq_codes")
+      VecFns.pqEncode(col("embedding"), codebooks).as("code")), "pq_codes")
     PqModel(codebooks, codes)
   }
 
   /** Probe a PQ index: ADC-score every code against each (broadcast)
-    * query — reading only the compact code table — shortlist the
-    * `rerank` closest per query, then join the raw embeddings back for
-    * ONLY the shortlist and rank by exact cosine. The rerank join
-    * touches rerank·|queries| vectors regardless of corpus size, so
-    * recall comes almost free while the corpus-wide scan stays on
-    * codes.
+    * query — reading only the compact code table — then the
+    * `adcShortlist` rerank, so recall comes almost free while the
+    * corpus-wide scan stays on codes.
     */
   def probePq(model: PqModel, corpus: DataFrame, queries: DataFrame,
-              k: Int, rerank: Int = 64, roundTo: Int = 6): DataFrame = {
-    val q = broadcast(nonNullVec(queries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec")))
-    val shortlist = model.codes.crossJoin(q)
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("qvec"), col("vec_id"),
-        org.apache.spark.sql.graftshim.Shim.column(
-          graft.expressions.PqAdcDist(
-            org.apache.spark.sql.graftshim.Shim.expression(col("qvec")),
-            org.apache.spark.sql.graftshim.Shim.expression(col("code")),
-            model.codebooks)).as("adc"))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc").asc, col("vec_id").asc)))
-      .filter(col("ark") <= rerank)
-      .select("qid", "qvec", "vec_id")
-    exactRerank(shortlist, corpus, k, roundTo)
-  }
-
-  /** One-shot PQ fit + probe (see fitPq/probePq). */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
-             m: Int = 8, kSub: Int = 256, rerank: Int = 64,
-             seed: Long = 42L, roundTo: Int = 6,
-             maxTrainRows: Long = 100000L): DataFrame =
-    probePq(fitPq(corpus, dim, m, kSub, seed, maxTrainRows), corpus,
-      queries, k, rerank, roundTo)
+              k: Int, rerank: Int = 64, roundTo: Int = 6): DataFrame =
+    adcShortlist(model.codes.crossJoin(broadcast(queryFrame(queries)))
+      .filter(col("qid") =!= col("vec_id")),
+      model.codebooks, corpus, k, rerank, roundTo)
 
   /** A fitted IVF-PQ composite index: coarse centroids (metadata-scale),
     * per-subspace codebooks (metadata-scale), and ONE staged table
@@ -377,65 +377,25 @@ object Similarity {
   def fitIvfPq(corpus: DataFrame, dim: Int, nlist: Int = 16, m: Int = 8,
                kSub: Int = 256, seed: Long = 42L,
                maxTrainRows: Long = 100000L): IvfPqModel = {
-    require(dim % m == 0, s"m=$m must divide dim=$dim")
-    val featured = nonNullVec(corpus)
-      .select(col("vec_id"), col("embedding"))
+    val featured = pqVectors(corpus, dim, m)
     val sample = boundedSample(featured, maxTrainRows, seed)
-    val centers = KMeansLite.fit(sample, nlist, seed)
-    val codebooks = trainCodebooks(unitize(sample), dim, m, kSub, seed)
-    val table = Stage.materialize(featured.select(
-      col("vec_id"),
-      org.apache.spark.sql.graftshim.Shim.column(
-        graft.expressions.NearestCentroid(
-          org.apache.spark.sql.graftshim.Shim.expression(col("embedding")),
-          centers)).as("cell"),
-      org.apache.spark.sql.graftshim.Shim.column(
-        graft.expressions.PqEncode(
-          org.apache.spark.sql.graftshim.Shim.expression(col("embedding")),
-          codebooks)).as("code")),
-      "ivfpq_table")
-    IvfPqModel(centers.zipWithIndex.map { case (c, i) => (i, c) }.toSeq,
-      codebooks, table)
+    val (centers, cell) = coarseCells(sample, nlist, seed)
+    val codebooks = trainCodebooks(sample, dim, m, kSub, seed)
+    val table = Stage.materialize(featured.select(col("vec_id"), cell,
+      VecFns.pqEncode(col("embedding"), codebooks).as("code")), "ivfpq_table")
+    IvfPqModel(centers, codebooks, table)
   }
 
-  /** Probe the composite index: rank centroids per query (broadcast
-    * metadata), ADC-score codes in ONLY the nprobe nearest cells,
-    * shortlist `rerank` per query, then exact-rerank the shortlist
-    * against the raw embeddings. Cost shape: the corpus-side scan is
-    * (nprobe/nlist)·|codes|; the rerank join touches rerank·|queries|
-    * vectors regardless of corpus size.
+  /** Probe the composite index: ADC-score codes in ONLY the `nprobe`
+    * nearest cells (`cellCandidates`), then the `adcShortlist` rerank. Cost shape: the corpus-side scan is (nprobe/nlist)·|codes|;
+    * the rerank join touches rerank·|queries| vectors regardless of
+    * corpus size.
     */
   def probeIvfPq(model: IvfPqModel, corpus: DataFrame, queries: DataFrame,
                  k: Int, nprobe: Int = 4, rerank: Int = 64,
-                 roundTo: Int = 6): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val centersDf = broadcast(model.centers.toDF("cell", "centroid"))
-    val qcells = nonNullVec(queries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-      .crossJoin(centersDf)
-      .select(col("qid"), col("qvec"), col("cell"),
-        VecFns.cosine(col("qvec"), col("centroid")).as("csim"))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("qid").orderBy(col("csim").desc, col("cell").asc)))
-      .filter(col("crk") <= nprobe)
-      .select("qid", "qvec", "cell")
-    // each corpus vector sits in exactly one cell and qcells is distinct
-    // per (qid, cell) — no dedup aggregate needed (probeIvf's rule)
-    val shortlist = model.table.join(broadcast(qcells), Seq("cell"))
-      .filter(col("qid") =!= col("vec_id"))
-      .select(col("qid"), col("qvec"), col("vec_id"),
-        org.apache.spark.sql.graftshim.Shim.column(
-          graft.expressions.PqAdcDist(
-            org.apache.spark.sql.graftshim.Shim.expression(col("qvec")),
-            org.apache.spark.sql.graftshim.Shim.expression(col("code")),
-            model.codebooks)).as("adc"))
-      .withColumn("ark", row_number().over(
-        Window.partitionBy("qid").orderBy(col("adc").asc, col("vec_id").asc)))
-      .filter(col("ark") <= rerank)
-      .select("qid", "qvec", "vec_id")
-    exactRerank(shortlist, corpus, k, roundTo)
-  }
+                 roundTo: Int = 6): DataFrame =
+    adcShortlist(cellCandidates(model.table, model.centers, queries, nprobe),
+      model.codebooks, corpus, k, rerank, roundTo)
 
   /** Embedding-cosine near-duplicate pairs over one corpus: LSH buckets →
     * within-bucket candidate pairs (deduplicated with a distinct() over

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.ByteArrayInputStream
+import java.io.{ByteArrayInputStream, InputStream}
 import java.util.zip.ZipInputStream
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,15 +34,24 @@ object ZipCsv {
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (zipPath, bytes) =>
-        val zis = new ZipInputStream(new ByteArrayInputStream(bytes))
-        Iterator.continually(zis.getNextEntry)
-          .takeWhile(_ != null)
-          .filter(e => !e.isDirectory && e.getName.matches(entryPattern))
-          .flatMap { e =>
-            val name = e.getName
-            scala.io.Source.fromInputStream(zis, "UTF-8").getLines()
-              .map(l => (zipPath, name, l)).toSeq
-          }
+        entryLines(zipPath, new ByteArrayInputStream(bytes), entryPattern)
+      }
+  }
+
+  /** The lines of one archive's matching entries, decoded lazily: a
+    * line is read when it is pulled, and each entry is drained before
+    * `getNextEntry` advances past it.
+    */
+  private[graft] def entryLines(zipPath: String, archive: InputStream,
+                                entryPattern: String): Iterator[(String, String, String)] = {
+    val zis = new ZipInputStream(archive)
+    Iterator.continually(zis.getNextEntry)
+      .takeWhile(_ != null)
+      .filter(e => !e.isDirectory && e.getName.matches(entryPattern))
+      .flatMap { e =>
+        val name = e.getName
+        scala.io.Source.fromInputStream(zis, "UTF-8").getLines()
+          .map(l => (zipPath, name, l))
       }
   }
 

@@ -89,6 +89,8 @@ object DocStreams {
                      bands: Int = 16, rowsPerBand: Int = 4,
                      threshold: Double = 0.35,
                      maxBucketSize: Int = 1000): Dataset[Match] = {
+    // a cap below 1 keeps no predecessor, so every match would vanish
+    require(maxBucketSize >= 1, s"maxBucketSize must be >= 1, got $maxBucketSize")
     import spark.implicits._
     val k = bands * rowsPerBand
     val sigs = docs.select(col(idCol).as("id"),

@@ -601,6 +601,8 @@ class DedupSpec extends SparkFunSuite {
         .select($"vec_id", $"embedding").limit(50)
       rejects("maxBucketSize")(Similarity.cosineNearDupPairs(emb, dim = 64,
         threshold = 0.99, maxBucketSize = 0).collect())
+      rejects("maxBucketSize")(graft.streaming.DocStreams.nearDupMatches(
+        spark, corpus, maxBucketSize = 0).collect())
     } finally before match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)

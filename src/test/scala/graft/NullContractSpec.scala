@@ -136,6 +136,24 @@ class NullContractSpec extends SparkFunSuite {
       Similarity.probePq(mClean, nn, nn.filter(col("vec_id") < 6),
         k = 3, rerank = 16, roundTo = 5),
       "pq fit+probe")
+    val ivfNull = Similarity.fitIvf(emb, nlist = 4)
+    val ivfClean = Similarity.fitIvf(nn, nlist = 4)
+    sameRows(
+      Similarity.probeIvf(ivfNull, emb.filter(col("vec_id") < 12), k = 3,
+        nprobe = 2, roundTo = 6),
+      Similarity.probeIvf(ivfClean, nn.filter(col("vec_id") < 12), k = 3,
+        nprobe = 2, roundTo = 6),
+      "ivf fit+probe")
+    val ivfPqNull = Similarity.fitIvfPq(emb, dim = 8, nlist = 4, m = 4,
+      kSub = 16)
+    val ivfPqClean = Similarity.fitIvfPq(nn, dim = 8, nlist = 4, m = 4,
+      kSub = 16)
+    sameRows(
+      Similarity.probeIvfPq(ivfPqNull, emb, emb.filter(col("vec_id") < 12),
+        k = 3, nprobe = 2, rerank = 16, roundTo = 5),
+      Similarity.probeIvfPq(ivfPqClean, nn, nn.filter(col("vec_id") < 12),
+        k = 3, nprobe = 2, rerank = 16, roundTo = 5),
+      "ivf-pq fit+probe")
     // kmeans: null vectors excluded; cluster sizes sum to non-null n
     val km = Cluster.kmeans(emb, "vec_id", "embedding", k = 3, iters = 2)
     val total = km.select("cluster_id", "n").distinct()

@@ -103,7 +103,8 @@ class SimilaritySpec extends SparkFunSuite {
     val q = emb.filter($"vec_id" < 5)
     val brute = Similarity.bruteTopK(emb, q, k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    def run() = Similarity.ivfTopK(emb, q, k = 5, nlist = 8, nprobe = 4)
+    def run() = Similarity.probeIvf(Similarity.fitIvf(emb, nlist = 8), q,
+      k = 5, nprobe = 4)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     val ivf = run()
     val recall = (brute & ivf).size.toDouble / brute.size
@@ -116,7 +117,8 @@ class SimilaritySpec extends SparkFunSuite {
     val q = emb.filter($"vec_id" < 5)
     val brute = Similarity.bruteTopK(emb, q, k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
-    def run() = Similarity.pqTopK(emb, q, k = 5, dim = 64)
+    def run() = Similarity.probePq(Similarity.fitPq(emb, dim = 64), emb, q,
+      k = 5)
       .select("qid", "vec_id").as[(Long, Long)].collect().toSet
     val pq = run()
     val recall = (brute & pq).size.toDouble / brute.size
